@@ -160,16 +160,6 @@ _CODECS = {
 }
 
 
-def compress_value(data: bytes, codec: str = "lz4") -> bytes:
-    return _CODECS[codec][0](data)
-
-
-def decompress_value(
-    data: bytes, codec: str = "lz4", max_size: int = DEFAULT_MAX_DECOMPRESSED
-) -> bytes:
-    return _CODECS[codec][1](data, max_size)
-
-
 def make_compress_udf(codec: str = "lz4"):
     comp = _CODECS[codec][0]
 

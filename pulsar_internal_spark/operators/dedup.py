@@ -111,12 +111,6 @@ def shingles_of(words, n: int = 3):
     )
 
 
-def word_shingles(text_col: str = "text", n: int = 3):
-    """Shingles straight from a text column — convenience for single-use
-    contexts; hot paths stage ``tokenized`` first (see ``shingles_of``)."""
-    return shingles_of(tokenized(text_col), n)
-
-
 def _digest_chunk(slot: int):
     """Arity-1 lambda factory: a 2-arg lambda would make Spark pass the
     array index as the second argument (higher-order-function arity

@@ -749,6 +749,49 @@ def _ahash_schema(id_col: str) -> StructType:
     )
 
 
+def _copy_aware_group(doc_id: int, groups: int) -> int:
+    """The image generators' group identity — see attach_group_images_wide."""
+    return (doc_id // 1_000_000_000 * 9973 + doc_id) % groups
+
+
+def _attach_group_payloads(df: DataFrame, id_col: str, payload) -> DataFrame:
+    """The attach_group_* skeleton: one ``payload(doc_id)`` byte string
+    per document, Arrow-batched. The inner function keeps the name
+    ``gen`` because plans print it (``MapInPandas gen(...)``)."""
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids = list(pdf[id_col])
+            payloads = [payload(int(doc_id)) for doc_id in ids]
+            yield pd.DataFrame({id_col: ids, "payload": payloads})
+
+    return df.select(id_col).mapInPandas(gen, _group_payload_schema(id_col))
+
+
+def _decode_or_drop(
+    df: DataFrame, payload_col: str, id_col: str, fingerprint, errors: tuple
+) -> DataFrame:
+    """The fingerprint-decoder skeleton: ``fingerprint(payload_bytes)``
+    per row as ``ahash``. A payload raising one of ``errors`` is DROPPED
+    (one row of evidence lost, never a failed job — the multimodal
+    family's standing policy). The inner function keeps the name
+    ``decode`` because plans print it (``MapInPandas decode(...)``)."""
+
+    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids, hashes = [], []
+            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
+                try:
+                    h = fingerprint(bytes(payload))
+                except errors:
+                    continue  # format corruption: drop the row
+                ids.append(doc_id)
+                hashes.append(h)
+            yield pd.DataFrame({id_col: ids, "ahash": hashes})
+
+    return df.mapInPandas(decode, _ahash_schema(id_col))
+
+
 def attach_group_images(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -766,25 +809,19 @@ def attach_group_images(
     recompute every pixel from sha256 arithmetic alone."""
     if image_format not in ("bmp", "png"):
         raise ValueError(f"unsupported image_format: {image_format}")
+    maker = make_png if image_format == "png" else make_bmp
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        maker = make_png if image_format == "png" else make_bmp
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id in pdf[id_col]:
-                # copy-aware group identity — see attach_group_images_wide
-                g = (int(doc_id) // 1_000_000_000 * 9973 + int(doc_id)) % groups
-                px = bytearray(
-                    hashlib.sha256(f"img:{g}".encode()).digest()
-                    + hashlib.sha256(f"img2:{g}".encode()).digest()[:16]
-                )
-                idx = g % 48
-                px[idx] = (px[idx] + int(doc_id) % 3) % 256
-                ids.append(doc_id)
-                payloads.append(maker(4, 4, bytes(px)))
-            yield pd.DataFrame({id_col: ids, "payload": payloads})
+    def image(doc_id: int) -> bytes:
+        g = _copy_aware_group(doc_id, groups)
+        px = bytearray(
+            hashlib.sha256(f"img:{g}".encode()).digest()
+            + hashlib.sha256(f"img2:{g}".encode()).digest()[:16]
+        )
+        idx = g % 48
+        px[idx] = (px[idx] + doc_id % 3) % 256
+        return maker(4, 4, bytes(px))
 
-    return df.select(id_col).mapInPandas(gen, _group_payload_schema(id_col))
+    return _attach_group_payloads(df, id_col, image)
 
 
 def attach_group_images_wide(
@@ -826,24 +863,19 @@ def attach_group_images_wide(
     (doc_id < 1e9) the term is 0, so driver-scale results are
     byte-identical."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id in pdf[id_col]:
-                g = (int(doc_id) // 1_000_000_000 * 9973 + int(doc_id)) % groups
-                px = bytearray(
-                    b"".join(
-                        hashlib.sha256(f"img8:{g}:{t}".encode()).digest()
-                        for t in range(6)
-                    )
-                )
-                idx = g % 192
-                px[idx] = (px[idx] + int(doc_id) % 3) % 256
-                ids.append(doc_id)
-                payloads.append(make_bmp(8, 8, bytes(px)))
-            yield pd.DataFrame({id_col: ids, "payload": payloads})
+    def image(doc_id: int) -> bytes:
+        g = _copy_aware_group(doc_id, groups)
+        px = bytearray(
+            b"".join(
+                hashlib.sha256(f"img8:{g}:{t}".encode()).digest()
+                for t in range(6)
+            )
+        )
+        idx = g % 192
+        px[idx] = (px[idx] + doc_id % 3) % 256
+        return make_bmp(8, 8, bytes(px))
 
-    return df.select(id_col).mapInPandas(gen, _group_payload_schema(id_col))
+    return _attach_group_payloads(df, id_col, image)
 
 
 def ahash_bits(pixels: bytes, n_px: int) -> int:
@@ -873,25 +905,17 @@ def image_ahash(
     break exact content hashing. Arrow-batched; per-payload-byte cost.
     A corrupt payload is DROPPED (one row of evidence lost, never a
     failed job — the multimodal family's standing policy)."""
+    import struct
+    import zlib
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-        import zlib
+    def fingerprint(data: bytes) -> int:
+        img = parse_bmp(data) if data[:2] == b"BM" else parse_png(data)
+        return ahash_bits(img["pixels"], img["width"] * img["height"])
 
-        for pdf in batches:
-            ids, hashes = [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                data = bytes(payload)
-                try:
-                    img = parse_bmp(data) if data[:2] == b"BM" else parse_png(data)
-                    h = ahash_bits(img["pixels"], img["width"] * img["height"])
-                except (ValueError, zlib.error, struct.error, IndexError):
-                    continue  # format corruption: drop the row
-                ids.append(doc_id)
-                hashes.append(h)
-            yield pd.DataFrame({id_col: ids, "ahash": hashes})
-
-    return df.mapInPandas(decode, _ahash_schema(id_col))
+    return _decode_or_drop(
+        df, payload_col, id_col, fingerprint,
+        (ValueError, zlib.error, struct.error, IndexError),
+    )
 
 
 def attach_group_audio(
@@ -905,28 +929,20 @@ def attach_group_audio(
     perturbation (sample ``group % 17`` += ``doc_id % 3``, int16
     wraparound) — real RIFF/WAVE bytes, sha256-derivable by an
     independent oracle."""
+    import struct
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    def wav(doc_id: int) -> bytes:
+        g = doc_id % groups
+        raw = (
+            hashlib.sha256(f"aud:{g}".encode()).digest()
+            + hashlib.sha256(f"aud2:{g}".encode()).digest()[:2]
+        )
+        samples = [struct.unpack_from("<h", raw, 2 * i)[0] for i in range(17)]
+        j = g % 17
+        samples[j] = ((samples[j] + doc_id % 3 + 32768) % 65536) - 32768
+        return make_wav(samples, sample_rate=8000)
 
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id in pdf[id_col]:
-                g = int(doc_id) % groups
-                raw = (
-                    hashlib.sha256(f"aud:{g}".encode()).digest()
-                    + hashlib.sha256(f"aud2:{g}".encode()).digest()[:2]
-                )
-                samples = [
-                    struct.unpack_from("<h", raw, 2 * i)[0] for i in range(17)
-                ]
-                j = g % 17
-                samples[j] = ((samples[j] + int(doc_id) % 3 + 32768) % 65536) - 32768
-                ids.append(doc_id)
-                payloads.append(make_wav(samples, sample_rate=8000))
-            yield pd.DataFrame({id_col: ids, "payload": payloads})
-
-    return df.select(id_col).mapInPandas(gen, _group_payload_schema(id_col))
+    return _attach_group_payloads(df, id_col, wav)
 
 
 def audio_fingerprint_bits(samples: list[int]) -> int:
@@ -946,23 +962,14 @@ def audio_fingerprint(
     """Decode WAV payloads (real RIFF chunk walk) and emit the 16-bit
     difference fingerprint as ``ahash`` — named to feed straight into
     dedup.hamming_banded_pairs. Arrow-batched."""
+    import struct
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    def fingerprint(data: bytes) -> int:
+        return audio_fingerprint_bits(parse_wav(data)["samples"])
 
-        for pdf in batches:
-            ids, hashes = [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    wav = parse_wav(bytes(payload))
-                    h = audio_fingerprint_bits(wav["samples"])
-                except (ValueError, struct.error):
-                    continue  # format corruption: drop the row
-                ids.append(doc_id)
-                hashes.append(h)
-            yield pd.DataFrame({id_col: ids, "ahash": hashes})
-
-    return df.mapInPandas(decode, _ahash_schema(id_col))
+    return _decode_or_drop(
+        df, payload_col, id_col, fingerprint, (ValueError, struct.error)
+    )
 
 
 def attach_group_video(
@@ -978,26 +985,21 @@ def attach_group_video(
     Real RIFF/AVI bytes; every pixel is sha256-derivable by an
     independent oracle."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id in pdf[id_col]:
-                g = int(doc_id) % groups
-                frames = []
-                for j in range(4):
-                    px = bytearray(
-                        hashlib.sha256(f"vid:{g}:{j}".encode()).digest()
-                        + hashlib.sha256(f"vid2:{g}:{j}".encode()).digest()[:16]
-                    )
-                    if j == g % 4:
-                        idx = g % 48
-                        px[idx] = (px[idx] + int(doc_id) % 3) % 256
-                    frames.append(bytes(px))
-                ids.append(doc_id)
-                payloads.append(make_avi(4, 4, frames, fps=10))
-            yield pd.DataFrame({id_col: ids, "payload": payloads})
+    def avi(doc_id: int) -> bytes:
+        g = doc_id % groups
+        frames = []
+        for j in range(4):
+            px = bytearray(
+                hashlib.sha256(f"vid:{g}:{j}".encode()).digest()
+                + hashlib.sha256(f"vid2:{g}:{j}".encode()).digest()[:16]
+            )
+            if j == g % 4:
+                idx = g % 48
+                px[idx] = (px[idx] + doc_id % 3) % 256
+            frames.append(bytes(px))
+        return make_avi(4, 4, frames, fps=10)
 
-    return df.select(id_col).mapInPandas(gen, _group_payload_schema(id_col))
+    return _attach_group_payloads(df, id_col, avi)
 
 
 def video_fingerprint(
@@ -1012,23 +1014,17 @@ def video_fingerprint(
     the sketch. Feeds dedup.hamming_banded_pairs with bits=60,
     band_bits=15 (one band per frame: near-dup videos match on any
     unedited frame)."""
+    import struct
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
+    def fingerprint(data: bytes) -> int:
+        vid = parse_avi(data)
+        n_px = vid["width"] * vid["height"]
+        fp = 0
+        for j, fr in enumerate(vid["frames"][:4]):
+            fp |= (ahash_bits(fr, n_px) & 0x7FFF) << (15 * j)
+        return fp
 
-        for pdf in batches:
-            ids, hashes = [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    vid = parse_avi(bytes(payload))
-                    n_px = vid["width"] * vid["height"]
-                    fp = 0
-                    for j, fr in enumerate(vid["frames"][:4]):
-                        fp |= (ahash_bits(fr, n_px) & 0x7FFF) << (15 * j)
-                except (ValueError, struct.error, IndexError):
-                    continue  # format corruption: drop the row
-                ids.append(doc_id)
-                hashes.append(fp)
-            yield pd.DataFrame({id_col: ids, "ahash": hashes})
-
-    return df.mapInPandas(decode, _ahash_schema(id_col))
+    return _decode_or_drop(
+        df, payload_col, id_col, fingerprint,
+        (ValueError, struct.error, IndexError),
+    )

@@ -54,24 +54,6 @@ from .dedup import banded_signatures
 STORE_SCHEMA = "id BIGINT, band_idx INT, band_key STRING, batch_id INT"
 
 
-def _read_parquet_or_none(spark: SparkSession, path: str) -> DataFrame | None:
-    """Plain parquet read that treats ONLY path-absence as 'nothing
-    yet'. Any other analysis failure (schema lost, empty dir from a
-    corrupt sink) must propagate. Since round 8 the streaming sinks are
-    generation stores too (they gained compaction/retention — VERDICT
-    r7 #6), so sink reads go through _read_store; this primitive
-    remains for the legacy flat-sink detection in _read_sink."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        err = getattr(e, "getErrorClass", lambda: None)() or str(e)
-        if "PATH_NOT_FOUND" in err or "Path does not exist" in str(e):
-            return None
-        raise
-
-
 def _read_store(spark: SparkSession, store_path: str) -> DataFrame | None:
     """Read a generation store via its pointer: None = no committed
     generation yet (first batch). A pointer that references a missing

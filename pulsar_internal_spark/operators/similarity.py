@@ -215,22 +215,6 @@ def _projections(vec_col, weights_2d):
     )
 
 
-def hyperplane_signature(vec_col, num_planes: int = 16, dim: int = 64):
-    """Deterministic sign-LSH signature as a bit string.
-
-    Plane p's weight for dimension d is derived from sha256(f"{p}:{d}") —
-    mapped to ±1. sign(dot(v, plane)) per plane -> '0'/'1' chars.
-    Deterministic, engine-independent, no UDF.
-    """
-    projs = _projections(vec_col, _plane_matrix(num_planes, dim))
-    return F.array_join(
-        F.transform(
-            projs, lambda p: F.when(p >= 0, F.lit("1")).otherwise(F.lit("0"))
-        ),
-        "",
-    )
-
-
 def embedding_banded_signatures(
     df: DataFrame,
     id_col: str = "vec_id",

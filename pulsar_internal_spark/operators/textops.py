@@ -33,19 +33,6 @@ def _marker_hits_on(norm_col, markers: tuple[str, ...]):
     return F.regexp_count(norm_col, F.lit(pat))
 
 
-def lang_id(text_col: str = "text"):
-    """Predicted language = argmax of marker-hit counts, 'und' if all 0.
-    Deterministic tie-break: language name ascending.
-
-    Single-column-expression form; the hot path is ``lang_id_from`` over
-    a STAGED hits array (this form re-normalizes the text once per
-    marker-set reference)."""
-    scores = [
-        (lang, _marker_hits(text_col, m)) for lang, m in sorted(LANG_MARKERS.items())
-    ]
-    return _argmax_lang(scores)
-
-
 def lang_hits(norm_col):
     """Array of per-language marker-hit counts over a staged normalized
     text column, in sorted-language order — compute once, consume many."""

@@ -714,6 +714,73 @@ def asof_latest_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _reach_cte(edges: str, src: str = "id_a", dst: str = "id_b") -> str:
+    """DuckDB twin of graph.connected_components over the ``edges``
+    relation: symmetrize, seed every node with its own label, and take
+    the recursive transitive closure ``reach(id, l)`` — MIN(l) per id is
+    the component label. Tractable at oracle scale, quadratic at ours,
+    which is why the iterative operator exists. The enclosing query
+    declares WITH RECURSIVE on its first CTE."""
+    return f"""sym AS (
+      SELECT {src} AS a, {dst} AS b FROM {edges}
+      UNION SELECT {dst}, {src} FROM {edges}
+    ), nodes AS (SELECT DISTINCT a AS id FROM sym),
+    reach(id, l) AS (
+      SELECT id, id FROM nodes
+      UNION
+      SELECT s.a, r.l FROM sym s JOIN reach r ON s.b = r.id
+    )"""
+
+
+def _components_cte(edges: str) -> str:
+    """_reach_cte over (id_a, id_b) pairs plus the component labels
+    ``comp(id, cluster_id)``."""
+    return _reach_cte(edges) + """,
+    comp AS (SELECT id, MIN(l) AS cluster_id FROM reach GROUP BY id)"""
+
+
+def _verdict_sql(table: str, alias: str, id_col: str) -> str:
+    """DuckDB twin of _cluster_verdicts: one verdict row per ``table``
+    row from the ``comp`` labels, singletons labelled by their own id."""
+    label = f"COALESCE(c.cluster_id, {alias}.{id_col})"
+    return f"""
+    SELECT {alias}.{id_col},
+           {label} AS cluster_id,
+           {alias}.{id_col} = {label} AS keep,
+           CAST(COUNT(*) OVER (PARTITION BY {label})
+                AS BIGINT) AS n_members
+    FROM {table} {alias} LEFT JOIN comp c ON c.id = {alias}.{id_col}
+    """
+
+
+def _cluster_verdicts(corpus: DataFrame, id_col: str, pairs: DataFrame) -> DataFrame:
+    """Cluster-emission tail shared by every keeper query: connected
+    components over the (id_a, id_b) pair graph, left-joined back to
+    the corpus so EVERY row gets a verdict — (id, cluster_id, keep,
+    n_members), singletons keep themselves, keep = min id per cluster
+    (the CC label), so the pruned corpus is `WHERE keep`. No broadcast
+    hint on the join: the clustered set is corpus-fraction sized at
+    high duplication rates — let AQE pick the strategy."""
+    from ..operators.graph import connected_components
+
+    comp = connected_components(
+        pairs.select("id_a", "id_b"), src="id_a", dst="id_b", edges_canonical=True
+    )
+    labeled = corpus.select(id_col).join(
+        comp.withColumnRenamed("id", id_col), id_col, "left"
+    ).select(
+        id_col,
+        F.coalesce("cluster_id", id_col).alias("cluster_id"),
+    )
+    w = Window.partitionBy("cluster_id")
+    return labeled.select(
+        id_col,
+        "cluster_id",
+        (F.col(id_col) == F.col("cluster_id")).alias("keep"),
+        F.count(F.lit(1)).over(w).cast("long").alias("n_members"),
+    )
+
+
 def _minute_cooccurrence_edges(events: DataFrame) -> DataFrame:
     """Canonical (src < dst, distinct) user co-occurrence edges: users
     with events in the same minute bucket. Shared by the components and
@@ -739,15 +806,9 @@ def _minute_cooccurrence_edges(events: DataFrame) -> DataFrame:
       FROM events a JOIN events b
         ON date_trunc('minute', a.ts) = date_trunc('minute', b.ts)
        AND a.user_id < b.user_id
-    ), sym AS (
-      SELECT src AS a, dst AS b FROM edges
-      UNION SELECT dst, src FROM edges
-    ), nodes AS (SELECT DISTINCT a AS id FROM sym),
-    reach(id, l) AS (
-      SELECT id, id FROM nodes
-      UNION
-      SELECT s.a, r.l FROM sym s JOIN reach r ON s.b = r.id
-    )
+    ), """
+    + _reach_cte("edges", "src", "dst")
+    + """
     SELECT id, MIN(l) AS cluster_id FROM reach GROUP BY id
     """,
 )
@@ -1862,8 +1923,9 @@ def near_dup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.filter(F.col("jaccard") >= 0.5)
 
 
-@_register(
-    "near_dup_clusters",
+# Components of the exact-jaccard-verified (>= 0.5) minhash pair graph,
+# shared by near_dup_clusters and dedup_keep_best.
+_JACCARD_COMPONENTS_CTE = (
     _SHINGLE_CTE.replace("WITH toks", "WITH RECURSIVE toks", 1)
     + r"""
     , dsh AS (SELECT doc_id, list_distinct(shingles) AS s FROM sh)
@@ -1873,16 +1935,15 @@ def near_dup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE ROUND(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
                   / (CASE WHEN len(list_distinct(a.s || b.s)) = 0 THEN 1
                           ELSE len(list_distinct(a.s || b.s)) END), 6) >= 0.5
-    ), sym AS (
-      SELECT id_a AS a, id_b AS b FROM pairs
-      UNION SELECT id_b, id_a FROM pairs
-    ), nodes AS (SELECT DISTINCT a AS id FROM sym),
-    reach(id, l) AS (
-      SELECT id, id FROM nodes
-      UNION
-      SELECT s.a, r.l FROM sym s JOIN reach r ON s.b = r.id
-    ),
-    comp AS (SELECT id, MIN(l) AS cluster_id FROM reach GROUP BY id)
+    ), """
+    + _components_cte("pairs")
+)
+
+
+@_register(
+    "near_dup_clusters",
+    _JACCARD_COMPONENTS_CTE
+    + """
     SELECT id AS doc_id, cluster_id,
            CAST(COUNT(*) OVER (PARTITION BY cluster_id) AS BIGINT) AS n_members
     FROM comp
@@ -1913,25 +1974,8 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "dedup_keep_best",
-    _SHINGLE_CTE.replace("WITH toks", "WITH RECURSIVE toks", 1)
-    + r"""
-    , dsh AS (SELECT doc_id, list_distinct(shingles) AS s FROM sh)
-    , pairs AS (
-      SELECT c.id_a, c.id_b
-      FROM cand c JOIN dsh a ON c.id_a = a.doc_id JOIN dsh b ON c.id_b = b.doc_id
-      WHERE ROUND(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-                  / (CASE WHEN len(list_distinct(a.s || b.s)) = 0 THEN 1
-                          ELSE len(list_distinct(a.s || b.s)) END), 6) >= 0.5
-    ), sym AS (
-      SELECT id_a AS a, id_b AS b FROM pairs
-      UNION SELECT id_b, id_a FROM pairs
-    ), nodes AS (SELECT DISTINCT a AS id FROM sym),
-    reach(id, l) AS (
-      SELECT id, id FROM nodes
-      UNION
-      SELECT s.a, r.l FROM sym s JOIN reach r ON s.b = r.id
-    ),
-    comp AS (SELECT id, MIN(l) AS cluster_id FROM reach GROUP BY id),
+    _JACCARD_COMPONENTS_CTE
+    + r""",
     qfeats AS (
       SELECT doc_id,
              CASE WHEN length(trim(text)) = 0 THEN 0
@@ -2224,24 +2268,9 @@ def embedding_near_dup_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     "semantic_dedup_keepers",
     "WITH RECURSIVE "
     + _lsh_verified_pairs_cte()
-    + r""",
-    sym AS (
-      SELECT id_a AS a, id_b AS b FROM vpairs
-      UNION SELECT id_b, id_a FROM vpairs
-    ), nodes AS (SELECT DISTINCT a AS id FROM sym),
-    reach(id, l) AS (
-      SELECT id, id FROM nodes
-      UNION
-      SELECT s.a, r.l FROM sym s JOIN reach r ON s.b = r.id
-    ),
-    comp AS (SELECT id, MIN(l) AS cluster_id FROM reach GROUP BY id)
-    SELECT e.vec_id,
-           COALESCE(c.cluster_id, e.vec_id) AS cluster_id,
-           e.vec_id = COALESCE(c.cluster_id, e.vec_id) AS keep,
-           CAST(COUNT(*) OVER (PARTITION BY COALESCE(c.cluster_id, e.vec_id))
-                AS BIGINT) AS n_members
-    FROM embeddings e LEFT JOIN comp c ON c.id = e.vec_id
-    """,
+    + ",\n    "
+    + _components_cte("vpairs")
+    + _verdict_sql("embeddings", "e", "vec_id"),
 )
 def semantic_dedup_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SEMANTIC dedup over embeddings (SemDeDup, Abbas et al. 2023,
@@ -2262,27 +2291,8 @@ def semantic_dedup_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
     has headroom — the narrow 2 x 6-plane banding saturates its 128
     buckets at the 100x fixture (measured: disk exhaustion in the
     verify join); the scale default is semantic_dedup_keepers_wide."""
-    from ..operators.graph import connected_components
-
-    emb = _t(spark, sf_dir, "embeddings")
-    pairs = embedding_near_dup(spark, sf_dir).select("id_a", "id_b")
-    comp = connected_components(
-        pairs, src="id_a", dst="id_b", edges_canonical=True
-    )
-    # no broadcast hint: the clustered-vector set is corpus-fraction
-    # sized at high duplication rates — let AQE pick the strategy
-    labeled = emb.select("vec_id").join(
-        comp.withColumnRenamed("id", "vec_id"), "vec_id", "left"
-    ).select(
-        "vec_id",
-        F.coalesce("cluster_id", "vec_id").alias("cluster_id"),
-    )
-    w = Window.partitionBy("cluster_id")
-    return labeled.select(
-        "vec_id",
-        "cluster_id",
-        (F.col("vec_id") == F.col("cluster_id")).alias("keep"),
-        F.count(F.lit(1)).over(w).cast("long").alias("n_members"),
+    return _cluster_verdicts(
+        _t(spark, sf_dir, "embeddings"), "vec_id", embedding_near_dup(spark, sf_dir)
     )
 
 
@@ -2290,24 +2300,9 @@ def semantic_dedup_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
     "semantic_dedup_keepers_wide",
     "WITH RECURSIVE "
     + _lsh_verified_pairs_cte(12, 8)
-    + r""",
-    sym AS (
-      SELECT id_a AS a, id_b AS b FROM vpairs
-      UNION SELECT id_b, id_a FROM vpairs
-    ), nodes AS (SELECT DISTINCT a AS id FROM sym),
-    reach(id, l) AS (
-      SELECT id, id FROM nodes
-      UNION
-      SELECT s.a, r.l FROM sym s JOIN reach r ON s.b = r.id
-    ),
-    comp AS (SELECT id, MIN(l) AS cluster_id FROM reach GROUP BY id)
-    SELECT e.vec_id,
-           COALESCE(c.cluster_id, e.vec_id) AS cluster_id,
-           e.vec_id = COALESCE(c.cluster_id, e.vec_id) AS keep,
-           CAST(COUNT(*) OVER (PARTITION BY COALESCE(c.cluster_id, e.vec_id))
-                AS BIGINT) AS n_members
-    FROM embeddings e LEFT JOIN comp c ON c.id = e.vec_id
-    """,
+    + ",\n    "
+    + _components_cte("vpairs")
+    + _verdict_sql("embeddings", "e", "vec_id"),
 )
 def semantic_dedup_keepers_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     """semantic_dedup_keepers on the WIDE banding (round 9) — the
@@ -2320,25 +2315,10 @@ def semantic_dedup_keepers_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     This pairs-stay-internal + verdict-rows emission is the same shape
     as image_near_dup_wide_keepers — nothing pair-grained crosses the
     output boundary, output is linear in N."""
-    from ..operators.graph import connected_components
-
-    emb = _t(spark, sf_dir, "embeddings")
-    pairs = embedding_near_dup_wide(spark, sf_dir).select("id_a", "id_b")
-    comp = connected_components(
-        pairs, src="id_a", dst="id_b", edges_canonical=True
-    )
-    labeled = emb.select("vec_id").join(
-        comp.withColumnRenamed("id", "vec_id"), "vec_id", "left"
-    ).select(
+    return _cluster_verdicts(
+        _t(spark, sf_dir, "embeddings"),
         "vec_id",
-        F.coalesce("cluster_id", "vec_id").alias("cluster_id"),
-    )
-    w = Window.partitionBy("cluster_id")
-    return labeled.select(
-        "vec_id",
-        "cluster_id",
-        (F.col("vec_id") == F.col("cluster_id")).alias("keep"),
-        F.count(F.lit(1)).over(w).cast("long").alias("n_members"),
+        embedding_near_dup_wide(spark, sf_dir),
     )
 
 
@@ -2645,6 +2625,39 @@ def _ivf_oracle_sql(k: int = 5, nprobe: int = 3) -> str:
     """
 
 
+def _ann_topk(spark: SparkSession, sf_dir: str, qfilter, serve) -> DataFrame:
+    """Serving tail of the frozen-quantizer ANN queries: the query set
+    is the corpus rows matching ``qfilter()``, ``serve(corpus, queries)``
+    scores them, and the result is projected to (query_id, neighbor_id,
+    cos_sim, rank::long)."""
+    emb = _t(spark, sf_dir, "embeddings")
+    out = serve(emb, emb.filter(qfilter()))
+    return out.select(
+        "query_id", "neighbor_id", "cos_sim", F.col("rank").cast("long").alias("rank")
+    )
+
+
+def _fractionq_spark():
+    """The fraction-Q query set (1% of the corpus); Column construction
+    needs a live SparkContext — keep it lazy."""
+    return F.col("vec_id") % 100 == 0
+
+
+def _pq_serve(emb: DataFrame, queries_df: DataFrame) -> DataFrame:
+    from ..operators.pq_frozen import CODEBOOKS
+
+    return sim_ops.pq_fixed_topk(emb, queries_df, CODEBOOKS, k=5, shortlist=50)
+
+
+def _ivfpq_serve(emb: DataFrame, queries_df: DataFrame) -> DataFrame:
+    from ..operators.ivf_frozen import CENTROIDS
+    from ..operators.pq_frozen import CODEBOOKS
+
+    return sim_ops.ivfpq_fixed_topk(
+        emb, queries_df, CENTROIDS, CODEBOOKS, k=5, nprobe=3, shortlist=50
+    )
+
+
 @_register("ivf_cosine_topk", _ivf_oracle_sql())
 def ivf_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN serving (SURVEY.md §7 Phase 4): coarse cells from the
@@ -2660,11 +2673,9 @@ def ivf_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps its own recall gate in tests/test_operators.py."""
     from ..operators.ivf_frozen import CENTROIDS
 
-    emb = _t(spark, sf_dir, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") % 100 == 0)
-    out = sim_ops.ivf_fixed_topk(emb, queries_df, CENTROIDS, k=5, nprobe=3)
-    return out.select(
-        "query_id", "neighbor_id", "cos_sim", F.col("rank").cast("long").alias("rank")
+    return _ann_topk(
+        spark, sf_dir, _fractionq_spark,
+        lambda emb, q: sim_ops.ivf_fixed_topk(emb, q, CENTROIDS, k=5, nprobe=3),
     )
 
 
@@ -2781,14 +2792,7 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     encode, ADC and re-rank end-to-end. Final cos_sim values are EXACT
     (re-ranked), so quantization error affects candidate selection
     only, never reported similarities."""
-    from ..operators.pq_frozen import CODEBOOKS
-
-    emb = _t(spark, sf_dir, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") % 100 == 0)
-    out = sim_ops.pq_fixed_topk(emb, queries_df, CODEBOOKS, k=5, shortlist=50)
-    return out.select(
-        "query_id", "neighbor_id", "cos_sim", F.col("rank").cast("long").alias("rank")
-    )
+    return _ann_topk(spark, sf_dir, _fractionq_spark, _pq_serve)
 
 
 def _ivfpq_oracle_sql(
@@ -2943,17 +2947,7 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     reported cos_sim values are exact. Value-oracle-checked end-to-end
     (_ivfpq_oracle_sql replays assignment, encoding, probing, ADC and
     re-rank over the same frozen literals)."""
-    from ..operators.ivf_frozen import CENTROIDS
-    from ..operators.pq_frozen import CODEBOOKS
-
-    emb = _t(spark, sf_dir, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") % 100 == 0)
-    out = sim_ops.ivfpq_fixed_topk(
-        emb, queries_df, CENTROIDS, CODEBOOKS, k=5, nprobe=3, shortlist=50
-    )
-    return out.select(
-        "query_id", "neighbor_id", "cos_sim", F.col("rank").cast("long").alias("rank")
-    )
+    return _ann_topk(spark, sf_dir, _fractionq_spark, _ivfpq_serve)
 
 
 _FIXEDQ_SQL = "vec_id % 100 = 0 AND vec_id < 2000"
@@ -2978,15 +2972,7 @@ def pq_adc_topk_fixedq(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed Q isolates: the scan is 20 x N codes-only rows, linear per
     decade. This is the variant the two-decade scale artifact records
     for the PQ tier (SURVEY.md round-8 section)."""
-    from ..operators.pq_frozen import CODEBOOKS
-
-    emb = _t(spark, sf_dir, "embeddings")
-    out = sim_ops.pq_fixed_topk(
-        emb, emb.filter(_fixedq_spark()), CODEBOOKS, k=5, shortlist=50
-    )
-    return out.select(
-        "query_id", "neighbor_id", "cos_sim", F.col("rank").cast("long").alias("rank")
-    )
+    return _ann_topk(spark, sf_dir, _fixedq_spark, _pq_serve)
 
 
 @_register("ivfpq_topk_fixedq", _ivfpq_oracle_sql(qfilter=_FIXEDQ_SQL))
@@ -2997,22 +2983,7 @@ def ivfpq_topk_fixedq(spark: SparkSession, sf_dir: str) -> DataFrame:
     in measurable form: nprobe/num_cells of the corpus scanned at
     8 bytes per vector, linear per decade (SURVEY.md round-8
     section)."""
-    from ..operators.ivf_frozen import CENTROIDS
-    from ..operators.pq_frozen import CODEBOOKS
-
-    emb = _t(spark, sf_dir, "embeddings")
-    out = sim_ops.ivfpq_fixed_topk(
-        emb,
-        emb.filter(_fixedq_spark()),
-        CENTROIDS,
-        CODEBOOKS,
-        k=5,
-        nprobe=3,
-        shortlist=50,
-    )
-    return out.select(
-        "query_id", "neighbor_id", "cos_sim", F.col("rank").cast("long").alias("rank")
-    )
+    return _ann_topk(spark, sf_dir, _fixedq_spark, _ivfpq_serve)
 
 
 def _ivfpq_recall_oracle_sql() -> str:
@@ -3550,6 +3521,37 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _perceptual_pairs(
+    spark: SparkSession,
+    sf_dir: str,
+    attach,
+    fingerprint,
+    groups: int,
+    bits: int,
+    band_bits: int,
+) -> DataFrame:
+    """One perceptual rung: manufacture each document's near-duplicate
+    media payload (``attach``, one of multimodal.attach_group_*), decode
+    it to an ``ahash`` fingerprint (``fingerprint``), and find pairs
+    within Hamming distance 2 by the banded equi-join
+    (dedup.hamming_banded_pairs: ``bits`` split into ``band_bits``-wide
+    bands, pigeonhole-exact while 2 < bits / band_bits). A new rung is
+    one call with its own generator, decoder and banding."""
+    ensure_shipped(spark)
+    docs = spread(_t(spark, sf_dir, "documents"))
+    hashes = fingerprint(attach(docs, groups=groups))
+    return dedup_ops.hamming_banded_pairs(
+        hashes, hash_col="ahash", id_col="doc_id", bits=bits,
+        band_bits=band_bits, max_hamming=2,
+    )
+
+
+def _corpus_groups(sf_dir: str) -> int:
+    """Near-dup cluster count of the scaled perceptual rungs: constant
+    ~125-doc clusters at every SF (see image_near_dup_scaled)."""
+    return max(40, table_rows(sf_dir, "documents") // 125)
+
+
 @_register(
     "image_near_dup",
     """
@@ -3610,12 +3612,8 @@ def image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs/OPERATIONS.md "Sizing perceptual fingerprints"."""
     from ..operators import multimodal as mm
 
-    ensure_shipped(spark)
-    docs = spread(_t(spark, sf_dir, "documents"))
-    hashes = mm.image_ahash(mm.attach_group_images(docs, groups=40))
-    return dedup_ops.hamming_banded_pairs(
-        hashes, hash_col="ahash", id_col="doc_id", bits=16, band_bits=4,
-        max_hamming=2,
+    return _perceptual_pairs(
+        spark, sf_dir, mm.attach_group_images, mm.image_ahash, 40, 16, 4
     )
 
 
@@ -3689,13 +3687,9 @@ def image_near_dup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Sizing perceptual fingerprints"."""
     from ..operators import multimodal as mm
 
-    ensure_shipped(spark)
-    docs = spread(_t(spark, sf_dir, "documents"))
-    groups = max(40, table_rows(sf_dir, "documents") // 125)
-    hashes = mm.image_ahash(mm.attach_group_images(docs, groups=groups))
-    return dedup_ops.hamming_banded_pairs(
-        hashes, hash_col="ahash", id_col="doc_id", bits=16, band_bits=4,
-        max_hamming=2,
+    return _perceptual_pairs(
+        spark, sf_dir, mm.attach_group_images, mm.image_ahash,
+        _corpus_groups(sf_dir), 16, 4,
     )
 
 
@@ -3741,9 +3735,10 @@ _WIDE_AHASH_CTE = """gm AS (
       FROM gr
     )"""
 
-
-@_register(
-    "image_near_dup_wide",
+# Both bandings of the wide tier (4 x 16 and 3 x 21 bits) share one oracle
+# each for pairs and for verdict rows: pigeonhole exactness makes the
+# banding invisible in the result.
+_WIDE_PAIRS_ORACLE = (
     "WITH "
     + _WIDE_AHASH_CTE
     + """
@@ -3751,7 +3746,25 @@ _WIDE_AHASH_CTE = """gm AS (
            CAST(bit_count(xor(a.ahash, b.ahash)) AS BIGINT) AS hamming
     FROM ah a JOIN ah b ON a.doc_id < b.doc_id
     WHERE bit_count(xor(a.ahash, b.ahash)) <= 2
-    """,
+    """
+)
+_WIDE_KEEPERS_ORACLE = (
+    "WITH RECURSIVE "
+    + _WIDE_AHASH_CTE
+    + """,
+    pairs AS (
+      SELECT a.doc_id AS id_a, b.doc_id AS id_b
+      FROM ah a JOIN ah b ON a.doc_id < b.doc_id
+      WHERE bit_count(xor(a.ahash, b.ahash)) <= 2
+    ), """
+    + _components_cte("pairs")
+    + _verdict_sql("documents", "d", "doc_id")
+)
+
+
+@_register(
+    "image_near_dup_wide",
+    _WIDE_PAIRS_ORACLE,
 )
 def image_near_dup_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The WIDE-fingerprint perceptual tier (round 8) — the form that
@@ -3773,42 +3786,15 @@ def image_near_dup_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale ladder)."""
     from ..operators import multimodal as mm
 
-    ensure_shipped(spark)
-    docs = spread(_t(spark, sf_dir, "documents"))
-    groups = max(40, table_rows(sf_dir, "documents") // 125)
-    hashes = mm.image_ahash(mm.attach_group_images_wide(docs, groups=groups))
-    return dedup_ops.hamming_banded_pairs(
-        hashes, hash_col="ahash", id_col="doc_id", bits=64, band_bits=16,
-        max_hamming=2,
+    return _perceptual_pairs(
+        spark, sf_dir, mm.attach_group_images_wide, mm.image_ahash,
+        _corpus_groups(sf_dir), 64, 16,
     )
 
 
 @_register(
     "image_near_dup_wide_keepers",
-    "WITH RECURSIVE "
-    + _WIDE_AHASH_CTE
-    + r""",
-    pairs AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM ah a JOIN ah b ON a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.ahash, b.ahash)) <= 2
-    ), sym AS (
-      SELECT id_a AS a, id_b AS b FROM pairs
-      UNION SELECT id_b, id_a FROM pairs
-    ), nodes AS (SELECT DISTINCT a AS id FROM sym),
-    reach(id, l) AS (
-      SELECT id, id FROM nodes
-      UNION
-      SELECT s.a, r.l FROM sym s JOIN reach r ON s.b = r.id
-    ),
-    comp AS (SELECT id, MIN(l) AS cluster_id FROM reach GROUP BY id)
-    SELECT d.doc_id,
-           COALESCE(c.cluster_id, d.doc_id) AS cluster_id,
-           d.doc_id = COALESCE(c.cluster_id, d.doc_id) AS keep,
-           CAST(COUNT(*) OVER (PARTITION BY COALESCE(c.cluster_id, d.doc_id))
-                AS BIGINT) AS n_members
-    FROM documents d LEFT JOIN comp c ON c.id = d.doc_id
-    """,
+    _WIDE_KEEPERS_ORACLE,
 )
 def image_near_dup_wide_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CLUSTER-EMISSION form of wide perceptual dedup (round 9, VERDICT
@@ -3829,51 +3815,14 @@ def image_near_dup_wide_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
     posture: pair frames exist only between the banded equi-join and
     the first CC aggregate; the final exchanges are keyed by doc_id /
     cluster_id, so nothing pair-grained crosses the output boundary."""
-    from ..operators.graph import connected_components
-
-    docs = _t(spark, sf_dir, "documents")
-    pairs = image_near_dup_wide(spark, sf_dir).select("id_a", "id_b")
-    comp = connected_components(
-        pairs, src="id_a", dst="id_b", edges_canonical=True
-    )
-    labeled = docs.select("doc_id").join(
-        comp.withColumnRenamed("id", "doc_id"), "doc_id", "left"
-    ).select(
-        "doc_id",
-        F.coalesce("cluster_id", "doc_id").alias("cluster_id"),
-    )
-    w = Window.partitionBy("cluster_id")
-    return labeled.select(
-        "doc_id",
-        "cluster_id",
-        (F.col("doc_id") == F.col("cluster_id")).alias("keep"),
-        F.count(F.lit(1)).over(w).cast("long").alias("n_members"),
-    )
-
-
-def _image_xwide_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import multimodal as mm
-
-    ensure_shipped(spark)
-    docs = spread(_t(spark, sf_dir, "documents"))
-    groups = max(40, table_rows(sf_dir, "documents") // 125)
-    hashes = mm.image_ahash(mm.attach_group_images_wide(docs, groups=groups))
-    return dedup_ops.hamming_banded_pairs(
-        hashes, hash_col="ahash", id_col="doc_id", bits=63, band_bits=21,
-        max_hamming=2,
+    return _cluster_verdicts(
+        _t(spark, sf_dir, "documents"), "doc_id", image_near_dup_wide(spark, sf_dir)
     )
 
 
 @_register(
     "image_near_dup_xwide",
-    "WITH "
-    + _WIDE_AHASH_CTE
-    + """
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           CAST(bit_count(xor(a.ahash, b.ahash)) AS BIGINT) AS hamming
-    FROM ah a JOIN ah b ON a.doc_id < b.doc_id
-    WHERE bit_count(xor(a.ahash, b.ahash)) <= 2
-    """,
+    _WIDE_PAIRS_ORACLE,
 )
 def image_near_dup_xwide(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THIRD-DECADE banding of the wide perceptual tier (round 10): the
@@ -3895,35 +3844,17 @@ def image_near_dup_xwide(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pair budget. Lineage: the perceptual scale ladder (SURVEY.md §2
     aHash row / round-8 section), fingerprint semantics per
     image_near_dup (script.hpp:74-133 memoized-hash pattern)."""
-    return _image_xwide_pairs(spark, sf_dir)
+    from ..operators import multimodal as mm
+
+    return _perceptual_pairs(
+        spark, sf_dir, mm.attach_group_images_wide, mm.image_ahash,
+        _corpus_groups(sf_dir), 63, 21,
+    )
 
 
 @_register(
     "image_near_dup_xwide_keepers",
-    "WITH RECURSIVE "
-    + _WIDE_AHASH_CTE
-    + r""",
-    pairs AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM ah a JOIN ah b ON a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.ahash, b.ahash)) <= 2
-    ), sym AS (
-      SELECT id_a AS a, id_b AS b FROM pairs
-      UNION SELECT id_b, id_a FROM pairs
-    ), nodes AS (SELECT DISTINCT a AS id FROM sym),
-    reach(id, l) AS (
-      SELECT id, id FROM nodes
-      UNION
-      SELECT s.a, r.l FROM sym s JOIN reach r ON s.b = r.id
-    ),
-    comp AS (SELECT id, MIN(l) AS cluster_id FROM reach GROUP BY id)
-    SELECT d.doc_id,
-           COALESCE(c.cluster_id, d.doc_id) AS cluster_id,
-           d.doc_id = COALESCE(c.cluster_id, d.doc_id) AS keep,
-           CAST(COUNT(*) OVER (PARTITION BY COALESCE(c.cluster_id, d.doc_id))
-                AS BIGINT) AS n_members
-    FROM documents d LEFT JOIN comp c ON c.id = d.doc_id
-    """,
+    _WIDE_KEEPERS_ORACLE,
 )
 def image_near_dup_xwide_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """image_near_dup_wide_keepers over the 3 x 21-bit banding — the
@@ -3934,25 +3865,8 @@ def image_near_dup_xwide_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
     result); only the candidate volume differs, which is the point.
     Lineage: SURVEY.md §2 aHash row (perceptual scale ladder), cluster
     emit per dedup_keep_best (script.hpp:74-133 lineage)."""
-    from ..operators.graph import connected_components
-
-    docs = _t(spark, sf_dir, "documents")
-    pairs = _image_xwide_pairs(spark, sf_dir).select("id_a", "id_b")
-    comp = connected_components(
-        pairs, src="id_a", dst="id_b", edges_canonical=True
-    )
-    labeled = docs.select("doc_id").join(
-        comp.withColumnRenamed("id", "doc_id"), "doc_id", "left"
-    ).select(
-        "doc_id",
-        F.coalesce("cluster_id", "doc_id").alias("cluster_id"),
-    )
-    w = Window.partitionBy("cluster_id")
-    return labeled.select(
-        "doc_id",
-        "cluster_id",
-        (F.col("doc_id") == F.col("cluster_id")).alias("keep"),
-        F.count(F.lit(1)).over(w).cast("long").alias("n_members"),
+    return _cluster_verdicts(
+        _t(spark, sf_dir, "documents"), "doc_id", image_near_dup_xwide(spark, sf_dir)
     )
 
 
@@ -4018,12 +3932,8 @@ def audio_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     verdict rows (image_near_dup_wide_keepers), not pairs."""
     from ..operators import multimodal as mm
 
-    ensure_shipped(spark)
-    docs = spread(_t(spark, sf_dir, "documents"))
-    fp = mm.audio_fingerprint(mm.attach_group_audio(docs, groups=40))
-    return dedup_ops.hamming_banded_pairs(
-        fp, hash_col="ahash", id_col="doc_id", bits=16, band_bits=4,
-        max_hamming=2,
+    return _perceptual_pairs(
+        spark, sf_dir, mm.attach_group_audio, mm.audio_fingerprint, 40, 16, 4
     )
 
 
@@ -4096,12 +4006,8 @@ def video_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern), not pairs."""
     from ..operators import multimodal as mm
 
-    ensure_shipped(spark)
-    docs = spread(_t(spark, sf_dir, "documents"))
-    fp = mm.video_fingerprint(mm.attach_group_video(docs, groups=40))
-    return dedup_ops.hamming_banded_pairs(
-        fp, hash_col="ahash", id_col="doc_id", bits=60, band_bits=15,
-        max_hamming=2,
+    return _perceptual_pairs(
+        spark, sf_dir, mm.attach_group_video, mm.video_fingerprint, 40, 60, 15
     )
 
 

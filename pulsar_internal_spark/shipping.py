@@ -26,10 +26,6 @@ def package_root() -> str:
     return os.path.dirname(os.path.abspath(__file__))
 
 
-def repo_root() -> str:
-    return os.path.dirname(package_root())
-
-
 def build_zip() -> str:
     """Zip the package (top-level dir = pulsar_internal_spark) so the
     zip itself is a valid sys.path entry."""

@@ -600,8 +600,12 @@ def test_semantic_dedup_keepers_plan_shape(spark, sf_dir):
     assert "BatchEvalPython" not in plan, plan
 
 
-def test_image_near_dup_wide_keepers_plan_shape(spark, sf_dir):
-    """The cluster-emission form of wide perceptual dedup (round 9) must
+@pytest.mark.parametrize(
+    "name", ["image_near_dup_wide_keepers", "image_near_dup_xwide_keepers"]
+)
+def test_image_near_dup_wide_keepers_plan_shape(spark, sf_dir, name):
+    """The cluster-emission form of wide perceptual dedup (round 9), at
+    either banding of the 63-bit hash (4 x 16 or 3 x 21 bits), must
     keep pair frames INTERNAL: pairs exist only between the banded
     Hamming equi-join and the connected-components aggregate (the CC
     engine stages its frontier, cutting the pair lineage), so the final
@@ -610,7 +614,7 @@ def test_image_near_dup_wide_keepers_plan_shape(spark, sf_dir):
     At the 100x fixture the pair list is 34.7M rows while the verdict
     output is 500k; this shape is WHY the keeper form is the scale
     default."""
-    plan = _plan(spark, sf_dir, "image_near_dup_wide_keepers")
+    plan = _plan(spark, sf_dir, name)
     assert "CartesianProduct" not in plan, plan
     assert "BatchEvalPython" not in plan, plan
     # pair columns never appear in the final (post-CC) plan: the staged

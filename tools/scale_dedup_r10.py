@@ -166,29 +166,12 @@ def wide_pairs(planes: int):
 
 def wide_keepers(planes: int):
     def run(spark, sf_dir):
-        from pulsar_internal_spark.operators.graph import connected_components
         from pulsar_internal_spark.sources.tables import load_table
 
-        from pyspark.sql import Window
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        pairs = Q._lsh_verified_pairs(
-            spark, sf_dir, planes_per_band=planes, num_bands=8
-        ).select("id_a", "id_b")
-        comp = connected_components(
-            pairs, src="id_a", dst="id_b", edges_canonical=True
-        )
-        labeled = emb.select("vec_id").join(
-            comp.withColumnRenamed("id", "vec_id"), "vec_id", "left"
-        ).select(
-            "vec_id", F.coalesce("cluster_id", "vec_id").alias("cluster_id")
-        )
-        w = Window.partitionBy("cluster_id")
-        return labeled.select(
+        return Q._cluster_verdicts(
+            load_table(spark, sf_dir, "embeddings"),
             "vec_id",
-            "cluster_id",
-            (F.col("vec_id") == F.col("cluster_id")).alias("keep"),
-            F.count(F.lit(1)).over(w).cast("long").alias("n_members"),
+            Q._lsh_verified_pairs(spark, sf_dir, planes_per_band=planes, num_bands=8),
         )
 
     return run
