@@ -4,7 +4,8 @@
 ONE JSON line under 1900 chars: {"metric": ..., "value": N, "unit":
 "sec", "n_queries": N, "mean": ..., "median": ..., "queries":
 {<slowest that fit>}, "queries_truncated": bool, "sf": ...}. The FULL
-per-query map is written to BENCH_local.json (same totals).
+per-query map is written to BENCH_local.json in the working directory
+(same totals).
 
 Timing = full plan execution into the `noop` sink (forces evaluation of
 every column, no driver collect, no disk write). One warmup query first
@@ -32,6 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pulsar_internal_spark.plans.queries import QUERIES  # noqa: E402
 from pulsar_internal_spark.session import get_spark  # noqa: E402
 from pulsar_internal_spark.staging import release_staged  # noqa: E402
+from tools.measure import materialize, reserve_stdout, warm  # noqa: E402
 
 # Drift controls: pinned trivial fixed-cost queries (single scan +
 # narrow projection, no round ever touches their plans) surfaced
@@ -51,10 +53,6 @@ CONTROL_REF_SECS = {
 }
 
 
-def _materialize(df) -> None:
-    df.write.mode("overwrite").format("noop").save()
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
@@ -64,83 +62,27 @@ def main() -> None:
         sf_num = sf
 
     # Machine-parsable contract: the JSON result must be the ONLY line on
-    # stdout. The py4j-launched JVM inherits this process's fd 1 and writes
-    # startup noise ("WARNING: Using incubator modules", Ivy resolution,
-    # log4j banner) there, so dup the real stdout away for the result line
-    # and point fd 1 at stderr BEFORE the JVM spawns.
-    real_stdout = os.fdopen(os.dup(1), "w")
-    os.dup2(2, 1)
-    sys.stdout = sys.stderr
+    # stdout (tools/measure.reserve_stdout keeps JVM startup noise off it)
+    real_stdout = reserve_stdout()
 
     spark = get_spark(app_name="pulsar_internal_spark_bench")
     spark.sparkContext.setLogLevel("ERROR")
-
-    # warmup: JVM + codegen + parquet footer reads, plus the lazily
-    # initialized subsystems whose startup would otherwise be billed to
-    # whichever query alphabetically hits them first — the Python UDF
-    # worker pool (blake2 pays ~2 s of worker spawn + package shipping)
-    # and the IVF serving plan's large codegen unit (argmin over the
-    # frozen centroid literals; since round 7 the query serves frozen
-    # constants, so MLlib class loading is no longer on any query path)
-    _materialize(QUERIES["class_filter_scan"](spark, sf_dir))
-    # events-table scan path (nanos->timestamp) warms separately
-    _materialize(QUERIES["distinct_users_by_type"](spark, sf_dir))
-    warm_sf = os.environ.get("SPARK_GRAFT_WARM_SF_DIR", "/root/testdata/sf0.001")
-    if not os.path.isdir(warm_sf):
-        warm_sf = sf_dir
-    _materialize(QUERIES["blake2_lookalike_nation"](spark, warm_sf))
-    _materialize(QUERIES["ivf_cosine_topk"](spark, warm_sf))
-    # the shingle/HOF expression family (tokenize -> transform/element_at
-    # n-grams -> explode/join) JIT-compiles some of the largest codegen
-    # units in the suite (~5-13 s of first-hit compile at sf0.1, billed
-    # to whichever n-gram query runs first alphabetically) — warm it at
-    # sf0.001 like the UDF pool and MLlib classes above
-    _materialize(QUERIES["benchmark_contamination"](spark, warm_sf))
-    _materialize(QUERIES["near_dup_jaccard"](spark, warm_sf))
-    # the iterative components engine compiles a distinct plan per
-    # round (propagate + hop + checkpoint) — first hit pays ~2-3 s of
-    # codegen across the loop; warm the whole chain at sf0.001
-    _materialize(QUERIES["near_dup_clusters"](spark, warm_sf))
-    # the WIDE sign-LSH banding (96-plane literal matrix -> 8 band
-    # projections) and the IVF+PQ serving plan (encode argmin + probed
-    # ADC folds) are the two largest Catalyst-analysis + codegen units
-    # the suite builds — a cold session pays ~10-20 s of JVM JIT on
-    # whichever of their queries runs first (measured round 11:
-    # embedding_near_dup_wide cold build 12.2 s + exec 8.1 s vs 2.3 s
-    # warm, same session). Warm both families at sf0.001 like the
-    # n-gram/codegen warmups above
-    _materialize(QUERIES["embedding_near_dup_wide"](spark, warm_sf))
-    _materialize(QUERIES["ivfpq_topk"](spark, warm_sf))
-    # mapInPandas-over-binary is a distinct worker path from scalar
-    # pandas UDFs (Arrow record batches + decode-module imports in every
-    # worker) — first hit costs ~3-6 s; warm it at sf0.001
-    _materialize(QUERIES["multimodal_real_decode"](spark, warm_sf))
-    # spawn the FULL Python worker pool: a few-partition pandas UDF warm
-    # leaves most of the 32 per-partition workers cold, and the first
-    # wide mapInPandas query would pay ~2 s of worker spawn for them
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _warm_ident(s):
-        return s
-
-    cpus = spark.sparkContext.defaultParallelism
-    _materialize(
-        spark.range(0, cpus * 4, 1, cpus).select(_warm_ident("id"))
-    )
+    # JVM, codegen and worker-pool startup must not be billed to the
+    # first query that hits them (tools/measure.warm names each cost)
+    warm(spark, sf_dir)
 
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     samples: dict[str, list[float]] = {name: [] for name in QUERIES}
     for _ in range(n_runs):
         for name in sorted(QUERIES):
             t0 = time.perf_counter()
-            _materialize(QUERIES[name](spark, sf_dir))
+            materialize(QUERIES[name](spark, sf_dir))
             samples[name].append(time.perf_counter() - t0)
             # staged frames are eager localCheckpoints — without a
             # release the block manager accumulates every measured
             # query's intermediates across the whole suite and later
-            # queries run storage-starved (see scale_bench
-            # _release_persisted for the measured pathology)
+            # queries run storage-starved (see tools/measure.settle
+            # for the measured pathology)
             release_staged(spark)
 
     # statistics.median averages the middle pair for even run counts —
@@ -199,10 +141,7 @@ def main() -> None:
     # one clean line on the real stdout + a disk artifact for offline diffing
     real_stdout.write(line + "\n")
     real_stdout.flush()
-    artifact = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_local.json"
-    )
-    with open(artifact, "w") as f:
+    with open("BENCH_local.json", "w") as f:
         f.write(json.dumps(full) + "\n")
 
 

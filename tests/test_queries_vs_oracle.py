@@ -97,7 +97,8 @@ def test_every_query_documents_its_lineage():
 def test_bench_contract(tmp_path):
     """bench.py must emit ONE JSON line with the driver-contract shape.
     Runs at sf0.001 in a subprocess (fresh JVM) to prove the script
-    works standalone."""
+    works standalone; it runs in tmp_path, where bench.py writes its
+    artifact and Spark its warehouse, so the repo is never touched."""
     import json
     import os
     import subprocess
@@ -110,13 +111,14 @@ def test_bench_contract(tmp_path):
     # enough and keeps the subprocess inside the timeout even when the
     # suite runs concurrently with other sessions
     env["SPARK_GRAFT_BENCH_RUNS"] = "1"
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out = subprocess.run(
-        [sys.executable, "bench.py"],
+        [sys.executable, os.path.join(repo, "bench.py")],
         capture_output=True,
         text=True,
         timeout=480,
         env=env,
-        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        cwd=tmp_path,
     )
     assert out.returncode == 0, out.stderr[-2000:]
     # the contract is ONE line on stdout, parseable as-is: the driver runs
@@ -132,8 +134,7 @@ def test_bench_contract(tmp_path):
     assert set(d["queries"]) <= set(QUERIES)
     assert d["sf"] == 0.001
     # the disk artifact carries the FULL per-query map with the same total
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(repo, "BENCH_local.json")) as f:
+    with open(tmp_path / "BENCH_local.json") as f:
         full = json.load(f)
     assert set(full["queries"]) == set(QUERIES)
     assert full["value"] == d["value"]
@@ -144,7 +145,7 @@ def test_bench_contract(tmp_path):
 
 def test_rule_resized_lsh_banding_matches_oracle(spark, sf_dir):
     """The capacity rule (OPERATIONS.md) prescribes re-sizing
-    planes_per_band per decade; tools/scale_dedup_r10.py runs the
+    planes_per_band per decade; tools/scale_dedup.py runs the
     resized knob at sf100. The parameterization must stay
     oracle-exact at ANY knob, not just the registered 2x6 / 8x12
     forms — pin a third point (8x16, the rule's sf100-at-target-

@@ -61,7 +61,7 @@ from tools.cluster_bench import (  # noqa: E402
     MASTER_PORT,
     MASTER_UI,
 )
-from tools.scale_bench import StageMetrics, _materialize, _mb  # noqa: E402
+from tools.measure import RETENTION, measure, settle  # noqa: E402
 
 GB = 1 << 30
 FREE_DISK_ABORT_GB = float(os.environ.get("SPARK_GRAFT_CSCALE_MIN_FREE_GB", "8"))
@@ -100,11 +100,11 @@ class ScratchPoller(threading.Thread):
                 self.baseline[k] = _du_bytes(d)
                 self.peaks[k] = 0
 
-    def window_peaks_mb(self) -> dict[str, float]:
+    def window_peaks(self) -> dict[str, int]:
         # one final sample so short windows are never missed
         self._sample()
         with self.lock:
-            return {k: _mb(self.peaks[k]) for k in self.dirs}
+            return dict(self.peaks)
 
     def _sample(self) -> None:
         free = shutil.disk_usage("/").free
@@ -208,7 +208,6 @@ def main() -> None:
 
         from pulsar_internal_spark.session import get_spark
         from pulsar_internal_spark.shipping import ensure_shipped
-        from pulsar_internal_spark.staging import release_staged
 
         exec_mem = str(max(4, int(mem.rstrip("g")) - 4)) + "g"
         spark = get_spark(
@@ -220,12 +219,7 @@ def main() -> None:
                 "spark.cores.max": str(2 * cores),
                 "spark.driver.host": "127.0.0.1",
                 "spark.pyspark.python": sys.executable,
-                # StageMetrics reads the status REST API (get_spark
-                # disables the UI by default); retention raised so the
-                # cumulative sums never evict mid-run (scale_bench note)
-                "spark.ui.enabled": "true",
-                "spark.ui.retainedStages": "100000",
-                "spark.ui.retainedJobs": "100000",
+                **RETENTION,
             },
         )
         spark.sparkContext.setLogLevel("ERROR")
@@ -236,42 +230,27 @@ def main() -> None:
         spark.conf.set("spark.pulsar.stage.level", stage_lvl)
         result["topology"]["stage_level"] = stage_lvl
         ensure_shipped(spark)
-        sm = StageMetrics(spark)
         poller = ScratchPoller(spark, scratch)
         poller.start()
 
         def run_one(key: str, df_fn, sf_label: str) -> None:
             poller.reset_window()
-            before = sm.snapshot()
             t0 = time.perf_counter()
-            status = "ok"
-            err = None
+            row: dict = {"sf": sf_label, "status": "ok", "error": None}
             try:
-                _materialize(df_fn())
+                row.update(measure(spark, df_fn, 1))
             except Exception as e:  # measured abort is an artifact row
-                status = "aborted_disk_guard" if poller.aborted else "error"
-                err = str(e).split("\n")[0][:300]
-            wall = round(time.perf_counter() - t0, 3)
-            d = sm.diff(before)
-            peaks = poller.window_peaks_mb()
-            tot = sum(peaks.values()) or 1.0
-            result["queries"][key] = {
-                "sf": sf_label,
-                "status": status,
-                "error": err,
-                "secs": wall,
-                "shuffle_mb": _mb(d["shuffle_bytes"]),
-                "input_mb": _mb(d["input_bytes"]),
-                "spill_mb": _mb(d["spill_bytes"]),
-                "disk_spill_mb": _mb(d["disk_spill_bytes"]),
-                "scratch_peak_mb": peaks,
-                "scratch_split": {
-                    k: round(v / tot, 3) for k, v in peaks.items()
-                },
-                "min_free_disk_gb_during": round(poller.min_free_gb, 1),
-            }
-            release_staged(spark)
-            print(key, json.dumps(result["queries"][key]), flush=True)
+                row["status"] = "aborted_disk_guard" if poller.aborted else "error"
+                row["error"] = str(e).split("\n")[0][:300]
+                row["secs_min"] = round(time.perf_counter() - t0, 3)
+                settle(spark)
+            peaks = poller.window_peaks()
+            tot = sum(peaks.values()) or 1
+            row["scratch_peak_bytes"] = peaks
+            row["scratch_split"] = {k: round(v / tot, 3) for k, v in peaks.items()}
+            row["min_free_disk_gb_during"] = round(poller.min_free_gb, 1)
+            result["queries"][key] = row
+            print(key, json.dumps(row), flush=True)
 
         if "scrub_sf10" not in skip:
             from pulsar_internal_spark.plans.queries import QUERIES

@@ -8,9 +8,9 @@ was an inference from seconds. Round 8 closes both gaps the r7 verdict
 named (#1, #2, #3):
 
 - WORK metrics, not just wall time: per query per sf this records
-  shuffle-write bytes, scan input bytes and memory/disk spill, sampled
-  from the Spark status REST API (cumulative completed-stage sums,
-  diffed around each materialization). A wall factor now decomposes
+  the work counters of tools/measure.py (jobs, stages, tasks, input,
+  shuffle and spill bytes, read from Spark's status store for the
+  jobs of each timed window). A wall factor now decomposes
   mechanically into (work growth) x (overhead amortization): linear
   work shows shuffle_factor ~= data factor with wall factor below it;
   super-linear work shows shuffle_factor ABOVE the data factor
@@ -32,15 +32,14 @@ super-linear growth that amortization was masking — diagnose, don't
 explain away. Factors are per-decade (sf1.0/sf0.1 and sf10/sf1.0), both
 over 10x data steps, so they are directly comparable.
 
-Methodology matches bench.py (noop-sink materialization, warmups for
-JVM/codegen/UDF-pool/MLlib) with three bench-specific hardenings, each
-earned by a measured failure (see _release_persisted and fresh_session):
-staged-frame release + GC + worker-pool re-warm between timed windows,
-one session per pass, and wall factors from the MIN of the interleaved
-passes (CPU-steal is additive noise; raw per-pass seconds are recorded
-as secs_all). Byte metrics are per-pass MEDIANs — engine-deterministic,
-and AQE can re-plan, so bytes are sampled per pass, not assumed
-constant.
+Methodology is tools/measure.py (bench.py's noop-sink materialization
+and warm-ups) with three hardenings, each earned by a measured failure
+(see measure.settle and fresh_session): staged-frame release + GC +
+worker-pool re-warm between timed windows, one session per pass, and
+wall factors from the MIN of the interleaved passes (CPU-steal is
+additive noise; raw per-pass seconds are recorded as secs_all). Work
+counters are per-pass MEDIANs — engine-deterministic, and AQE can
+re-plan, so they are sampled per pass, not assumed constant.
 
 Round 9 closes the two loose ends the r8 verdict named: the five
 largest first-decade shuffle transitions (35-81x) join SECOND_DECADE so
@@ -62,16 +61,13 @@ from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
-import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from perfbench.ledger import COUNTERS  # noqa: E402
 from pulsar_internal_spark.plans.queries import QUERIES  # noqa: E402
-from pulsar_internal_spark.session import get_spark  # noqa: E402
-from pulsar_internal_spark.staging import release_staged  # noqa: E402
+from tools.measure import sample, session, summarize  # noqa: E402
 
 # The heaviest queries from the r6/r7 benches (everything >= ~1.5 s at
 # sf0.1), two classic-join controls (q3/q9) as a linear yardstick, and —
@@ -163,102 +159,6 @@ SECOND_DECADE = [
     "semantic_dedup_keepers_wide",
 ]
 
-UI_PORT = 4077
-
-
-class StageMetrics:
-    """Cumulative completed-stage metric sums from the status REST API.
-
-    The UI's AppStatusStore keeps per-stage totals for the life of the
-    app; summing over ALL stages and diffing around a query gives that
-    query's work. Retention is raised far above what a full run creates
-    (see extra_conf below) so eviction can't shrink the cumulative sum
-    mid-run (which would show up as a negative diff — asserted against).
-    """
-
-    FIELDS = {
-        "shuffle_bytes": "shuffleWriteBytes",
-        "input_bytes": "inputBytes",
-        "spill_bytes": "memoryBytesSpilled",
-        "disk_spill_bytes": "diskBytesSpilled",
-    }
-
-    def __init__(self, spark) -> None:
-        # read the BOUND ui url from the live context rather than
-        # assuming UI_PORT: one-session-per-pass restarts Spark each
-        # pass, and if the previous pass's UI socket lingers Spark
-        # silently rebinds to port+1 — a hardcoded port would then 404
-        # every snapshot mid-run
-        base = spark.sparkContext.uiWebUrl
-        app_id = spark.sparkContext.applicationId
-        self.url = f"{base}/api/v1/applications/{app_id}/stages"
-
-    def snapshot(self) -> dict[str, int]:
-        with urllib.request.urlopen(self.url, timeout=30) as r:
-            stages = json.loads(r.read())
-        out = dict.fromkeys(self.FIELDS, 0)
-        for st in stages:
-            for k, field in self.FIELDS.items():
-                out[k] += st.get(field, 0) or 0
-        return out
-
-    def diff(self, before: dict[str, int]) -> dict[str, int]:
-        after = self.snapshot()
-        d = {k: after[k] - before[k] for k in before}
-        neg = {k: v for k, v in d.items() if v < 0}
-        assert not neg, f"stage eviction corrupted cumulative sums: {neg}"
-        return d
-
-
-def _materialize(df) -> None:
-    df.write.mode("overwrite").format("noop").save()
-
-
-def _release_persisted(spark) -> None:
-    """Unpersist every persisted RDD (the staged frames are eager
-    localCheckpoints, so each measured query leaves its intermediates
-    pinned in the block manager). Without this the session accumulates
-    the WHOLE RUN's staged frames — multi-GB at sf10 — and later
-    queries run with storage-starved execution memory: measured as
-    pq_adc_topk at sf0.1 degrading 5.9 s (pass 1) -> 27.1 s (pass 2)
-    in-bench while a clean-session loop of the same query holds a flat
-    ~3.9 s. Queries never reuse another query's staged frames, so
-    releasing between measurements is free."""
-    release_staged(spark)
-    # settle before the next timed window: unpersist is async, and a
-    # 48g heap full of a giant query's garbage otherwise bills its GC
-    # to whichever measurement runs next (pass-2 sf0.1 numbers 3x
-    # pass-1 for queries scheduled right after the sf10 runs — an
-    # ASYMMETRIC inflation that deflates that query's scale factor).
-    spark.sparkContext._jvm.System.gc()
-    # ...and restore the Python worker pool: memory pressure from a
-    # 13-GB-spill query reaps idle pandas-UDF workers, and the NEXT
-    # mapInPandas query pays the ~4-6 s pool respawn inside its timed
-    # window (audio_near_dup measured 6.5-10.5 s in-bench vs 1.6-2.3 s
-    # isolated — it follows the sf10 spill giant; image_near_dup right
-    # after it was clean because audio had already respawned the pool).
-    # Cost when the pool is alive: ~100 ms. The pandas_udf is created
-    # FRESH per call, never cached across sessions: a UserDefinedFunction
-    # binds its _judf to the first session's SparkContext, and
-    # one-session-per-pass stops/recreates the context — reuse after
-    # spark.stop() would wrap dead accumulator/broadcast refs. The wrap
-    # cost is negligible next to the warm job itself.
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _ident(s):
-        return s
-
-    cpus = spark.sparkContext.defaultParallelism
-    _materialize(
-        spark.range(0, cpus * 4, 1, cpus).select(_ident("id"))
-    )
-
-
-def _mb(b: int) -> float:
-    return round(b / (1024 * 1024), 2)
-
-
 def main() -> None:
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sf_dirs = {
@@ -286,37 +186,7 @@ def main() -> None:
         cleanup backlogs) — measured as a pass-3 executor OOM on the
         13-GB-spill sf10 query that passes 1-2 ran fine, even with the
         per-measurement unpersist+GC settle in place."""
-        spark = get_spark(
-            app_name="pulsar_internal_spark_scale_bench",
-            extra_conf={
-                # status REST API is the work-metrics source (r7 verdict #2)
-                "spark.ui.enabled": "true",
-                "spark.ui.port": str(UI_PORT),
-                # one pass creates a few thousand stages; keep every one
-                # so cumulative sums never shrink under the differ
-                "spark.ui.retainedStages": "100000",
-                "spark.ui.retainedJobs": "100000",
-            },
-        )
-        spark.sparkContext.setLogLevel("ERROR")
-        # same warmup set as bench.py: JVM, codegen units for the
-        # n-gram/HOF family, the UDF worker pool, MLlib classes, the CC
-        # loop, and the mapInPandas decode path
-        warm = "/root/testdata/sf0.001"
-        for q in (
-            "class_filter_scan",
-            "distinct_users_by_type",
-            "blake2_lookalike_nation",
-            "ivf_cosine_topk",
-            "benchmark_contamination",
-            "near_dup_jaccard",
-            "near_dup_clusters",
-            "multimodal_real_decode",
-            "pq_adc_topk",
-        ):
-            _materialize(QUERIES[q](spark, warm))
-        _release_persisted(spark)
-        return spark, StageMetrics(spark)
+        return session("pulsar_internal_spark_scale_bench")
 
     def plan(name: str) -> list[str]:
         sfs = ["sf0.1", "sf1.0"]
@@ -324,12 +194,12 @@ def main() -> None:
             sfs.append("sf10")
         return sfs
 
-    samples: dict[str, dict[str, dict[str, list]]] = {
-        n: {sf: {"secs": [], "bytes": []} for sf in plan(n)} for n in HEAVY
+    samples: dict[str, dict[str, list]] = {
+        n: {sf: [] for sf in plan(n)} for n in HEAVY
     }
     initial_partitions = None
     for r in range(n_runs):
-        spark, metrics = fresh_session()
+        spark = fresh_session()
         # record the round-9 input-scaled partitioning conf in the
         # artifact: spill numbers are only comparable across rounds
         # with the partitioning regime they ran under
@@ -339,19 +209,11 @@ def main() -> None:
         for name in HEAVY:
             line = [f"pass {r + 1}/{n_runs} {name}:"]
             for sf in plan(name):
-                before = metrics.snapshot()
-                t0 = time.perf_counter()
-                _materialize(QUERIES[name](spark, sf_dirs[sf]))
-                secs = time.perf_counter() - t0
-                samples[name][sf]["secs"].append(secs)
-                samples[name][sf]["bytes"].append(metrics.diff(before))
-                line.append(f"{sf}={secs:.2f}s")
-                _release_persisted(spark)
+                s = sample(spark, lambda: QUERIES[name](spark, sf_dirs[sf]))
+                samples[name][sf].append(s)
+                line.append(f"{sf}={s['secs']:.2f}s")
             print(" ".join(line), file=sys.stderr, flush=True)
         spark.stop()
-
-    def med(vals: list[float]) -> float:
-        return statistics.median(vals)
 
     # WALL factors are computed from the MIN of the interleaved passes,
     # not the median: this shared host lands multi-second CPU-steal
@@ -362,7 +224,7 @@ def main() -> None:
     # cost at each SF — and an inflated small-SF denominator would
     # FLATTER the factor, which is the dishonest direction for a scale
     # proof. Every pass's raw seconds are recorded (secs_all) so any
-    # other statistic can be recomputed from the artifact. Byte metrics
+    # other statistic can be recomputed from the artifact. Work counters
     # are medians: they are engine-deterministic, not steal-sensitive.
     out: dict = {
         "runs": n_runs,
@@ -373,31 +235,19 @@ def main() -> None:
         "queries": {},
     }
     for name in HEAVY:
-        q: dict = {
-            "secs": {},
-            "secs_all": {},
-            "shuffle_mb": {},
-            "input_mb": {},
-            "spill_mb": {},
-        }
-        for sf, s in samples[name].items():
-            q["secs"][sf] = round(min(s["secs"]), 3)
-            q["secs_all"][sf] = [round(x, 3) for x in s["secs"]]
-            for key, field in (
-                ("shuffle_mb", "shuffle_bytes"),
-                ("input_mb", "input_bytes"),
-                ("spill_mb", "spill_bytes"),
-            ):
-                q[key][sf] = _mb(med([b[field] for b in s["bytes"]]))
-            disk = med([b["disk_spill_bytes"] for b in s["bytes"]])
-            if disk:
-                q.setdefault("disk_spill_mb", {})[sf] = _mb(disk)
+        q: dict = {"secs": {}, "secs_all": {}, **{k: {} for k in COUNTERS}}
+        for sf, ss in samples[name].items():
+            cell = summarize(ss)
+            q["secs"][sf] = cell["secs_min"]
+            q["secs_all"][sf] = cell["secs_all"]
+            for k in COUNTERS:
+                q[k][sf] = cell[k]
         for fk, a, b in (("factor_10x", "sf0.1", "sf1.0"), ("factor_100x", "sf1.0", "sf10")):
             if b in q["secs"] and q["secs"][a] > 0:
                 q[fk] = round(q["secs"][b] / q["secs"][a], 2)
-                if q["shuffle_mb"][a] > 0:
+                if q["shuffle_write_bytes"][a] > 0:
                     q["shuffle_" + fk] = round(
-                        q["shuffle_mb"][b] / q["shuffle_mb"][a], 2
+                        q["shuffle_write_bytes"][b] / q["shuffle_write_bytes"][a], 2
                     )
         out["queries"][name] = q
     for sf in ("sf0.1", "sf1.0", "sf10"):

@@ -1,5 +1,6 @@
 #!/usr/bin/env python
-"""Third decade for the HEAVY dedup tier — writes SCALE_r10.json.
+"""The heavy dedup tier one decade up: scout, decide, measure —
+resumable.
 
 Rounds 7/8/9 each falsified one "it's linear" assumption at the next
 decade (fixture time-bucket densification; fingerprint banding
@@ -21,22 +22,38 @@ that at sf100 (5M docs / 2M vectors) the operational way:
    registered sf10-sized knob is EXPECTED to be refused at sf100,
    that's the capacity rule working — and the tool steps
    planes_per_band up (each +1 halves occupancy and candidate volume)
-   until the prediction fits, recording every step.
-3. **Run what fits, record work metrics** (same StageMetrics
-   methodology as tools/scale_bench.py: noop sink, staged release +
-   GC settle, min wall / median bytes).
+   until the prediction fits, recording every step. The image tier is
+   gated the same way on scouted candidates
+   (SPARK_GRAFT_IMAGE_CAND_BUDGET, default 1.5e9).
+3. **Run what fits, record work counters** (tools/measure.py: noop
+   sink, staged release + GC settle, min wall / median counters).
 
-Workloads: image_near_dup_wide_keepers (fixed 4x16-bit banding — its
-sf100 scout is the interesting number: the N^2/2^16 random-collision
-term is hamming-filtered BEFORE any exchange, so candidates != shuffle
-here; recorded for the mechanism), embedding_near_dup_wide +
-semantic_dedup_keepers_wide at the rule-resized plane count,
-substring_scrub, and the BUCKETED incremental substring spans
-(2-batch split, catalog table — the cadence default since round 10).
+Workloads: embedding_near_dup_wide + semantic_dedup_keepers_wide at the
+registered and the rule-resized plane count; image_near_dup_wide_keepers
+(fixed 4x16-bit banding) and image_near_dup_xwide_keepers (3x21-bit);
+substring_scrub; and the BUCKETED incremental substring spans (2-batch
+split, catalog table — the cadence default since round 10) in its
+per-batch-release form.
+
+The image rows run under the coprime grouping
+`((doc_id // 1e9) * 9973 + doc_id) % gmod` (operators/multimodal.py,
+round 11). The round-10 additive form `(doc_id // 1e9 + doc_id) % gmod`
+was diagonal-biased at sf100 — copy indexes (<= 4999) only reached
+group ids 0..~6k of 40,000, so buckets held up to 2,000 docs and every
+scout measured the fixture, not the operator. Coprime cluster size is
+scale-invariant (~125 docs/group at every decade); the 4x16 banding is
+still EXPECTED to be refused at sf100 — its N^2 x bands / 2^16
+random-collision term is grouping-independent. SCALE_r10.json (its
+scouts record the biased fixture) and SCALE_r11.json are the committed
+records of the two rounds that ran this workflow.
 
 Fixtures: tools/gen_scale_fixture.py --factor 100/1000 --out
 .scale/sf10 / .scale/sf100 --tables documents,embeddings,events
-Run: SPARK_GRAFT_DRIVER_MEM=48g python tools/scale_dedup_r10.py
+Run: SPARK_GRAFT_DRIVER_MEM=48g python tools/scale_dedup.py
+Env: SPARK_GRAFT_DEDUP_SFS (default "sf10,sf100", dirs under .scale/),
+SPARK_GRAFT_BENCH_RUNS (default 1), SPARK_GRAFT_SCALE_OUT (artifact,
+default SCALE_dedup.json; an existing artifact is resumed),
+SPARK_GRAFT_DEDUP_SKIP ("name:sf,..."), SPARK_GRAFT_PAIRS_PARTITIONS.
 """
 
 from __future__ import annotations
@@ -44,25 +61,17 @@ from __future__ import annotations
 import json
 import math
 import os
-import statistics
 import sys
-import time
 import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from perfbench.ledger import COUNTERS  # noqa: E402
 from pulsar_internal_spark.plans import queries as Q  # noqa: E402
 from pulsar_internal_spark.plans.queries import QUERIES  # noqa: E402
-from pulsar_internal_spark.session import get_spark  # noqa: E402
-from pulsar_internal_spark.staging import release_staged  # noqa: E402
-from tools.scale_bench import (  # noqa: E402
-    StageMetrics,
-    _materialize,
-    _mb,
-    _release_persisted,
-)
+from tools.measure import sample, session, settle, summarize  # noqa: E402
 
 GB = 1 << 30
 TARGET_OCCUPANCY = 49  # the r9 wide tier's measured occupancy at sf10
@@ -178,26 +187,43 @@ def wide_keepers(planes: int):
 
 
 def spans_bucketed(spark, sf_dir):
-    """The registered incremental_substring_spans workload (2-batch
-    doc-id split) on the BUCKETED catalog store — the round-10 cadence
-    default. Returns the unioned span frame; the per-call table is
-    dropped by the caller via the returned name on spark._scale_tmp."""
+    """The registered 2-batch bucketed spans workload in its CADENCE
+    shape: each batch's spans are staged EAGERLY and the batch's
+    staged k-gram occurrence frame is released before the next batch
+    — exactly what the streaming twin does per micro-batch (emit the
+    spans sink, release_staged). Keeping BOTH batches' staged k-gram
+    frames alive until the final union materializes (the round-10
+    form) cannot fit sf100: ~2 x 21 GB of staged occurrence blocks +
+    the 15 GB catalog table + the append shuffles concurrently —
+    measured 100% disk on the box's ~74 GB of scratch (the round-11
+    first attempt). Peak scratch here is ONE batch's k-grams + table +
+    shuffle; the spans frames are interval rows, negligible. The
+    catalog table (kg_scale_*) is dropped by the caller."""
     from pulsar_internal_spark.operators import span_store as SS
     from pulsar_internal_spark.sources.tables import load_table
+    from pulsar_internal_spark.staging import (
+        persistent_rdd_ids,
+        release_staged,
+        stage,
+    )
 
     docs = load_table(spark, sf_dir, "documents")
     table = f"kg_scale_{uuid.uuid4().hex[:10]}"
-    spark._scale_tmp = table
     mx = docs.agg(F.max("doc_id")).collect()[0][0]
     cut = mx // 2
-    parts = [
-        SS.incremental_substring_spans_bucketed(
-            spark, docs.filter(F.col("doc_id") <= cut), table, batch_id=0
-        ),
-        SS.incremental_substring_spans_bucketed(
-            spark, docs.filter(F.col("doc_id") > cut), table, batch_id=1
-        ),
+    batches = [
+        docs.filter(F.col("doc_id") <= cut),
+        docs.filter(F.col("doc_id") > cut),
     ]
+    parts = []
+    for bid, b in enumerate(batches):
+        b0 = persistent_rdd_ids(spark)
+        raw = SS.incremental_substring_spans_bucketed(
+            spark, b, table, batch_id=bid
+        )
+        b1 = persistent_rdd_ids(spark)          # b1 - b0 = this batch's kg
+        parts.append(stage(raw))                 # eager: spans computed NOW
+        release_staged(spark, keep=b0 | (persistent_rdd_ids(spark) - b1))
     out = parts[0].unionByName(parts[1])
     return out.select(
         "doc_id",
@@ -216,23 +242,30 @@ def main() -> None:
             sys.exit(f"{sf} fixture missing at {d} (gen_scale_fixture.py)")
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "1"))
     budget = float(os.environ.get("SPARK_GRAFT_SHUFFLE_BUDGET_GB", "40")) * GB
+    cand_budget = float(os.environ.get("SPARK_GRAFT_IMAGE_CAND_BUDGET", "1.5e9"))
+    skips = os.environ.get("SPARK_GRAFT_DEDUP_SKIP", "").split(",")
 
-    spark = get_spark(
-        app_name="pulsar_internal_spark_scale_dedup_r10",
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.retainedStages": "100000",
-            "spark.ui.retainedJobs": "100000",
-        },
+    spark = session(
+        "pulsar_internal_spark_scale_dedup",
+        # staged frames at this tier are tens of GB (the sf100
+        # candidate-pair frame); the deserialized default OOMed a 48g
+        # heap on re-read (BlockManager pulling a disk block back as row
+        # objects) — disk_only keeps staged blocks off the heap
+        # entirely, heap stays execution-only
+        {"spark.pulsar.stage.level": "disk_only"},
     )
-    spark.sparkContext.setLogLevel("ERROR")
-    warm = "/root/testdata/sf0.001"
-    for q in ("class_filter_scan", "near_dup_jaccard", "multimodal_real_decode"):
-        _materialize(QUERIES[q](spark, warm))
-    _release_persisted(spark)
-    metrics = StageMetrics(spark)
+    # SPARK_GRAFT_PAIRS_PARTITIONS > 0 pins the banded pair-producing
+    # stages' task count (spark.pulsar.pairs.partitions — see
+    # SPILL_DIAG_imgxwide_sf100_pairs512.json: sf100 xwide keepers
+    # 1,482.8 -> 667.1 s, 95.6 GB spill -> zero, at =512). Default off
+    # so rows stay comparable with earlier artifacts unless asked.
+    pairs_partitions = os.environ.get("SPARK_GRAFT_PAIRS_PARTITIONS", "0")
+    if int(pairs_partitions or 0) > 0:
+        spark.conf.set("spark.pulsar.pairs.partitions", pairs_partitions)
 
-    path = os.path.join(repo, "SCALE_r10.json")
+    path = os.path.join(
+        repo, os.environ.get("SPARK_GRAFT_SCALE_OUT", "SCALE_dedup.json")
+    )
     if os.path.exists(path):
         # RESUME: rows already measured (and scouts already taken) are
         # kept and skipped — a crashed pass (the sf100 image keepers
@@ -240,78 +273,72 @@ def main() -> None:
         # its own row, never the finished decade
         with open(path) as f:
             out = json.load(f)
-        out.setdefault("scouts", {})
-        out.setdefault("decisions", {})
-        out.setdefault("queries", {})
     else:
         out = {
             "runs": n_runs,
             "wall_stat": "min of passes; secs_all = raw passes",
             "budget_gb": budget / GB,
             "target_occupancy": TARGET_OCCUPANCY,
+            "image_candidate_budget": cand_budget,
+            "stage_level": "disk_only",
             "scouts": {},
             "decisions": {},
             "queries": {},
         }
 
-    def measure(name: str, run, sf: str, sf_dir: str) -> None:
-        rec = out["queries"].setdefault(
-            name,
-            {"secs": {}, "secs_all": {}, "shuffle_mb": {}, "input_mb": {},
-             "spill_mb": {}, "disk_spill_mb": {}},
-        )
-        if sf in rec["secs"]:
-            print(f"skip {name} {sf}: already measured", flush=True)
-            return
-        skips = os.environ.get("SPARK_GRAFT_DEDUP_SKIP", "")
-        if f"{name}:{sf}" in skips.split(","):
-            print(f"skip {name} {sf}: SPARK_GRAFT_DEDUP_SKIP", flush=True)
-            return
-        secs, byts = [], []
-        for _ in range(n_runs):
-            before = metrics.snapshot()
-            t0 = time.perf_counter()
-            _materialize(run(spark, sf_dir))
-            secs.append(round(time.perf_counter() - t0, 3))
-            byts.append(metrics.diff(before))
-            tmp = getattr(spark, "_scale_tmp", None)
-            if tmp:
-                spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-                spark._scale_tmp = None
-            _release_persisted(spark)
-        med = {k: statistics.median(b[k] for b in byts) for k in byts[0]}
-        rec["secs"][sf] = min(secs)
-        rec["secs_all"][sf] = secs
-        rec["shuffle_mb"][sf] = _mb(med["shuffle_bytes"])
-        rec["input_mb"][sf] = _mb(med["input_bytes"])
-        rec["spill_mb"][sf] = _mb(med["spill_bytes"])
-        rec["disk_spill_mb"][sf] = _mb(med["disk_spill_bytes"])
-        print(name, sf, {k: rec[k][sf] for k in ("secs", "shuffle_mb", "spill_mb", "disk_spill_mb")}, flush=True)
+    def save() -> None:
         with open(path, "w") as f:
             json.dump(out, f, indent=1)
 
+    def measure_row(name: str, run, sf: str, sf_dir: str) -> None:
+        rec = out["queries"].setdefault(name, {"secs": {}, "secs_all": {}})
+        if sf in rec["secs"]:
+            print(f"skip {name} {sf}: already measured", flush=True)
+            return
+        if f"{name}:{sf}" in skips:
+            print(f"skip {name} {sf}: SPARK_GRAFT_DEDUP_SKIP", flush=True)
+            return
+        samples = []
+        for _ in range(n_runs):
+            samples.append(sample(spark, lambda: run(spark, sf_dir)))
+            for t in spark.catalog.listTables():
+                if t.name.startswith("kg_scale_"):
+                    spark.sql(f"DROP TABLE IF EXISTS {t.name}")
+        cell = summarize(samples)
+        rec["secs"][sf] = cell["secs_min"]
+        rec["secs_all"][sf] = cell["secs_all"]
+        for k in COUNTERS:
+            rec.setdefault(k, {})[sf] = cell[k]
+        print(name, sf, cell, flush=True)
+        save()
+
+    def scout(scouts: dict, key: str, fn) -> dict:
+        if key not in scouts:
+            scouts[key] = fn()
+            settle(spark)
+            save()
+        return scouts[key]
+
     # bytes/candidate from the PREVIOUS decade's measured run of the
     # same plan shape — refreshed per sf below once a run lands
-    bytes_per_cand = {"lsh": 370.0, "image": None}
+    lsh_bytes_per_cand = 370.0
 
     for sf, d in sf_dirs.items():
-        n_vec = spark.read.parquet(os.path.join(d, "embeddings.parquet")).count()
-
-        # ---- embeddings: scout registered knob + rule knob, step to fit
-        reg = 12
-        ruled = rule_planes(n_vec)
         scouts = out["scouts"].setdefault(sf, {})
         decisions = out["decisions"].setdefault(sf, {})
+
+        # ---- embeddings: scout rule knob, step to fit
+        n_vec = spark.read.parquet(os.path.join(d, "embeddings.parquet")).count()
+        reg = 12
+        ruled = rule_planes(n_vec)
         tried = []
         chosen = None
         planes = ruled
-        for attempt in range(4):
-            key = f"lsh_{planes}p"
-            if key not in scouts:
-                scouts[key] = scout_lsh_candidates(spark, d, planes)
-                _release_persisted(spark)
-            pred = scouts[key]["candidates"] * bytes_per_cand["lsh"]
-            scouts[key]["predicted_pair_exchange_gb"] = round(pred / GB, 2)
+        for _ in range(4):
+            lsh = scout(scouts, f"lsh_{planes}p",
+                        lambda: scout_lsh_candidates(spark, d, planes))
+            pred = lsh["candidates"] * lsh_bytes_per_cand
+            lsh["predicted_pair_exchange_gb"] = round(pred / GB, 2)
             tried.append({"planes": planes, "predicted_gb": round(pred / GB, 2)})
             if pred <= budget:
                 chosen = planes
@@ -319,11 +346,9 @@ def main() -> None:
             planes += 1
         # the REGISTERED sf10 knob: scout it too, so the artifact shows
         # why it does or does not run at this decade
-        if f"lsh_{reg}p" not in scouts:
-            scouts[f"lsh_{reg}p"] = scout_lsh_candidates(spark, d, reg)
-            _release_persisted(spark)
-        reg_pred = scouts[f"lsh_{reg}p"]["candidates"] * bytes_per_cand["lsh"]
-        scouts[f"lsh_{reg}p"]["predicted_pair_exchange_gb"] = round(reg_pred / GB, 2)
+        lsh = scout(scouts, f"lsh_{reg}p", lambda: scout_lsh_candidates(spark, d, reg))
+        reg_pred = lsh["candidates"] * lsh_bytes_per_cand
+        lsh["predicted_pair_exchange_gb"] = round(reg_pred / GB, 2)
         decisions["embedding_wide"] = {
             "registered_planes": reg,
             "registered_runs": bool(reg_pred <= budget),
@@ -331,21 +356,17 @@ def main() -> None:
             "steps": tried,
             "chosen_planes": chosen,
         }
-        with open(path, "w") as f:
-            json.dump(out, f, indent=1)
+        save()
 
         if reg_pred <= budget:
-            measure("embedding_near_dup_wide", QUERIES["embedding_near_dup_wide"], sf, d)
-            measure("semantic_dedup_keepers_wide", QUERIES["semantic_dedup_keepers_wide"], sf, d)
-            got = out["queries"]["embedding_near_dup_wide"]["shuffle_mb"][sf]
-            cands = scouts[f"lsh_{reg}p"]["candidates"]
-            if cands:
-                bytes_per_cand["lsh"] = max(
-                    bytes_per_cand["lsh"], got * 1048576 / cands
-                )
+            for name in ("embedding_near_dup_wide", "semantic_dedup_keepers_wide"):
+                measure_row(name, QUERIES[name], sf, d)
+            got = out["queries"]["embedding_near_dup_wide"].get("shuffle_write_bytes", {})
+            if got.get(sf) and lsh["candidates"]:
+                lsh_bytes_per_cand = max(lsh_bytes_per_cand, got[sf] / lsh["candidates"])
         if chosen is not None and chosen != reg:
-            measure(f"embedding_near_dup_wide{chosen}", wide_pairs(chosen), sf, d)
-            measure(f"semantic_dedup_keepers_wide{chosen}", wide_keepers(chosen), sf, d)
+            measure_row(f"embedding_near_dup_wide{chosen}", wide_pairs(chosen), sf, d)
+            measure_row(f"semantic_dedup_keepers_wide{chosen}", wide_keepers(chosen), sf, d)
 
         # ---- image tier: scout BOTH bandings, refuse the saturated
         # one. The first sf100 attempt ran the 4x16 form unguarded and
@@ -355,47 +376,33 @@ def main() -> None:
         # candidate count (the hamming filter drops random collisions
         # before any exchange, but the distinct + CC volume still
         # tracks candidates on this fixture).
-        cand_budget = float(
-            os.environ.get("SPARK_GRAFT_IMAGE_CAND_BUDGET", "1.5e9")
-        )
-        if "image_wide" not in scouts:
-            scouts["image_wide"] = scout_image_candidates(spark, d, 16)
-            _release_persisted(spark)
-        if "image_xwide" not in scouts:
-            scouts["image_xwide"] = scout_image_candidates(spark, d, 21)
-            _release_persisted(spark)
+        wide = scout(scouts, "image_wide", lambda: scout_image_candidates(spark, d, 16))
+        xwide = scout(scouts, "image_xwide", lambda: scout_image_candidates(spark, d, 21))
         decisions["image"] = {
-            "wide_4x16_runs": scouts["image_wide"]["candidates"] <= cand_budget,
-            "xwide_3x21_runs": scouts["image_xwide"]["candidates"] <= cand_budget,
+            "wide_4x16_runs": wide["candidates"] <= cand_budget,
+            "xwide_3x21_runs": xwide["candidates"] <= cand_budget,
             "candidate_budget": cand_budget,
         }
-        with open(path, "w") as f:
-            json.dump(out, f, indent=1)
+        save()
         if decisions["image"]["wide_4x16_runs"]:
-            measure(
-                "image_near_dup_wide_keepers",
-                QUERIES["image_near_dup_wide_keepers"], sf, d,
-            )
+            name = "image_near_dup_wide_keepers"
+            measure_row(name, QUERIES[name], sf, d)
         if decisions["image"]["xwide_3x21_runs"]:
-            measure(
-                "image_near_dup_xwide_keepers",
-                QUERIES["image_near_dup_xwide_keepers"], sf, d,
-            )
+            name = "image_near_dup_xwide_keepers"
+            measure_row(name, QUERIES[name], sf, d)
 
         # ---- substring tier
-        measure("substring_scrub", QUERIES["substring_scrub"], sf, d)
-        measure("incremental_substring_spans_bucketed", spans_bucketed, sf, d)
+        measure_row("substring_scrub", QUERIES["substring_scrub"], sf, d)
+        measure_row("incremental_substring_spans_bucketed", spans_bucketed, sf, d)
 
     for name, rec in out["queries"].items():
-        if len(rec["secs"]) == 2 and "sf10" in rec["secs"] and "sf100" in rec["secs"]:
+        if "sf10" in rec["secs"] and "sf100" in rec["secs"]:
             if rec["secs"]["sf10"]:
                 rec["factor_10x"] = round(rec["secs"]["sf100"] / rec["secs"]["sf10"], 2)
-            if rec["shuffle_mb"]["sf10"]:
-                rec["shuffle_factor_10x"] = round(
-                    rec["shuffle_mb"]["sf100"] / rec["shuffle_mb"]["sf10"], 2
-                )
-    with open(path, "w") as f:
-        json.dump(out, f, indent=1)
+            shuffle = rec.get("shuffle_write_bytes", {})
+            if shuffle.get("sf10") and "sf100" in shuffle:
+                rec["shuffle_factor_10x"] = round(shuffle["sf100"] / shuffle["sf10"], 2)
+    save()
     print("wrote", path)
     spark.stop()
 

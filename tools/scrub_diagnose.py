@@ -38,7 +38,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pulsar_internal_spark.plans.queries import QUERIES  # noqa: E402
 from pulsar_internal_spark.session import get_spark  # noqa: E402
 from pulsar_internal_spark.staging import release_staged  # noqa: E402
-from tools.scale_bench import _materialize  # noqa: E402
+from tools.measure import materialize  # noqa: E402
 
 _SIZE = {
     "B": 1, "KiB": 1 << 10, "MiB": 1 << 20, "GiB": 1 << 30, "TiB": 1 << 40,
@@ -178,7 +178,7 @@ def main() -> None:
         execs = _sql_executions(spark)
         last_id = max((e.get("id", -1) for e in execs), default=-1)
         t0 = time.perf_counter()
-        _materialize(QUERIES["substring_scrub"](spark, d))
+        materialize(QUERIES["substring_scrub"](spark, d))
         wall = round(time.perf_counter() - t0, 3)
         rec = exchanges_for_latest(spark, last_id)
         rec["wall_secs"] = wall

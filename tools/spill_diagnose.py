@@ -32,8 +32,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pulsar_internal_spark.plans.queries import QUERIES  # noqa: E402
-from pulsar_internal_spark.session import get_spark  # noqa: E402
-from tools.scale_bench import StageMetrics, _materialize, _mb  # noqa: E402
+from tools.measure import measure, session  # noqa: E402
 from tools.scrub_diagnose import (  # noqa: E402
     _graph_context,
     _parse_size,
@@ -75,9 +74,9 @@ def spilling_stages(spark, after_stage_id: int) -> list[dict]:
                 "num_tasks": st.get("numTasks"),
                 "spill_bytes": st.get("memoryBytesSpilled", 0),
                 "disk_spill_bytes": st.get("diskBytesSpilled", 0),
-                "shuffle_write_mb": _mb(st.get("shuffleWriteBytes", 0)),
-                "shuffle_read_mb": _mb(st.get("shuffleReadBytes", 0)),
-                "input_mb": _mb(st.get("inputBytes", 0)),
+                "shuffle_write_bytes": st.get("shuffleWriteBytes", 0),
+                "shuffle_read_bytes": st.get("shuffleReadBytes", 0),
+                "input_bytes": st.get("inputBytes", 0),
             }
         )
     out.sort(key=lambda s: -s["spill_bytes"])
@@ -142,35 +141,27 @@ def main() -> None:
         repo,
         os.environ.get("SPARK_GRAFT_SPILL_OUT", "SPILL_DIAG.json"),
     )
+    # the SQL REST reader lists the first 1,000 executions, so keep
+    # only the latest 1,000
     extra = {
         "spark.ui.enabled": "true",
-        "spark.ui.retainedStages": "100000",
-        "spark.ui.retainedJobs": "100000",
         "spark.sql.ui.retainedExecutions": "1000",
     }
     for kv in os.environ.get("SPARK_GRAFT_SPILL_CONF", "").split(","):
         if "=" in kv:
             k, v = kv.split("=", 1)
             extra[k.strip()] = v.strip()
-    spark = get_spark(
-        app_name="pulsar_internal_spark_spill_diag", extra_conf=extra
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("pulsar_internal_spark_spill_diag", extra)
     lvl = os.environ.get("SPARK_GRAFT_STAGE_LEVEL")
     if lvl:
         spark.conf.set("spark.pulsar.stage.level", lvl)
 
-    metrics = StageMetrics(spark)
     execs = _sql_executions(spark)
     last_id = max((e.get("id", -1) for e in execs), default=-1)
     last_stage = max(
         (s["stage_id"] for s in spilling_stages(spark, -1)), default=-1
     )
-    before = metrics.snapshot()
-    t0 = time.perf_counter()
-    _materialize(QUERIES[qname](spark, sf_dir))
-    wall = round(time.perf_counter() - t0, 3)
-    work = metrics.diff(before)
+    work = measure(spark, lambda: QUERIES[qname](spark, sf_dir), 1)
     nodes = spilling_nodes(spark, last_id)
     nodes.sort(key=lambda n: -n["spill_bytes"])
     stages = spilling_stages(spark, last_stage)
@@ -180,30 +171,13 @@ def main() -> None:
         "extra_conf": {
             k: v for k, v in extra.items() if not k.startswith("spark.ui")
         },
-        "wall_secs": wall,
-        "shuffle_mb": _mb(work["shuffle_bytes"]),
-        "spill_mb": _mb(work["spill_bytes"]),
-        "disk_spill_mb": _mb(work["disk_spill_bytes"]),
-        "spilling_nodes": [
-            {
-                **n,
-                "spill_mb": _mb(n["spill_bytes"]),
-                "disk_spill_mb": _mb(n["disk_spill_bytes"] or 0),
-            }
-            for n in nodes
-        ],
-        "spilling_stages": [
-            {
-                **s,
-                "spill_mb": _mb(s["spill_bytes"]),
-                "disk_spill_mb": _mb(s["disk_spill_bytes"]),
-            }
-            for s in stages
-        ],
+        **work,
+        "spilling_nodes": nodes,
+        "spilling_stages": stages,
     }
     with open(out_path, "w") as f:
         json.dump(out, f, indent=1)
-    print(f"wall {wall}s spill {_mb(work['spill_bytes'])} MB")
+    print(f"wall {work['secs_min']}s spill {work['spill_bytes'] / 1048576:.1f} MB")
     for n in nodes[:12]:
         print(
             f"  {n['spill_bytes']/1048576:10.1f} MB  {n['node']}"
@@ -213,7 +187,8 @@ def main() -> None:
         print(
             f"  stage {s['stage_id']:>4} {s['spill_bytes']/1048576:10.1f} MB"
             f" (disk {s['disk_spill_bytes']/1048576:.0f})"
-            f" wr={s['shuffle_write_mb']:.0f} rd={s['shuffle_read_mb']:.0f}"
+            f" wr={s['shuffle_write_bytes'] / 1048576:.0f}"
+            f" rd={s['shuffle_read_bytes'] / 1048576:.0f}"
             f"  {s['name'][:70]}"
         )
     print("wrote", out_path)

@@ -5,8 +5,8 @@ STREAM_r09.json.
 Batch-vs-streaming EQUIVALENCE is tested for every store, but the
 ingest-side COST at production cadence was unmeasured: what a
 micro-batch append actually costs as the store grows, and what sink
-compaction actually buys on read cost. This bench measures both, with
-the scale_bench work-metric methodology (status REST API diffs).
+compaction actually buys on read cost. This bench measures both, each
+operation one tools/measure.py window (wall + work counters).
 
 Workload — "ten days of the same feed", derived from the sf10 scale
 fixture (its copies are key-shifted decorrelated replicas, so each
@@ -17,7 +17,7 @@ batch is new content, not replays):
   decorrelated copies;
 - embeddings: 200k vectors into 10 batches of 20k the same way.
 
-Per batch it records wall seconds + shuffle/input/spill bytes for:
+Per batch it records wall seconds + shuffle-write/input bytes for:
 
 - `append_signature_batch` (MinHash signing + banded store append) and
   the batch's `candidates_for_batch` consume side;
@@ -64,17 +64,11 @@ from pyspark.sql import functions as F  # noqa: E402
 from pulsar_internal_spark.operators import signature_store as sig  # noqa: E402
 from pulsar_internal_spark.operators import span_store as spans  # noqa: E402
 from pulsar_internal_spark.operators import similarity as sim  # noqa: E402
-from pulsar_internal_spark.session import get_spark  # noqa: E402
-from pulsar_internal_spark.staging import release_staged  # noqa: E402
-from tools.scale_bench import StageMetrics  # noqa: E402
+from tools.measure import measure, session  # noqa: E402
 
 STRIDE = 1_000_000_000  # gen_scale_fixture.py's copy stride
 N_BATCHES = 10
 SINK_BATCHES = 120
-
-
-def _materialize(df) -> None:
-    df.write.mode("overwrite").format("noop").save()
 
 
 def _count_parquet_files(root: str) -> int:
@@ -82,16 +76,6 @@ def _count_parquet_files(root: str) -> int:
     for _, _, files in os.walk(root):
         n += sum(1 for f in files if f.endswith(".parquet"))
     return n
-
-
-def timed(metrics: StageMetrics, fn):
-    before = metrics.snapshot()
-    t0 = time.perf_counter()
-    out = fn()
-    secs = round(time.perf_counter() - t0, 3)
-    d = metrics.diff(before)
-    mb = {k: round(v / 1048576, 2) for k, v in d.items()}
-    return out, secs, mb
 
 
 def main() -> None:
@@ -104,23 +88,7 @@ def main() -> None:
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work)
 
-    spark = get_spark(
-        app_name="pulsar_internal_spark_stream_bench",
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.port": "4077",
-            "spark.ui.retainedStages": "100000",
-            "spark.ui.retainedJobs": "100000",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    metrics = StageMetrics(spark)
-    # warm the JVM/codegen/UDF pool like the other benches so batch 0
-    # isn't billed the session startup
-    from pulsar_internal_spark.plans.queries import QUERIES
-
-    for q in ("class_filter_scan", "near_dup_jaccard", "ivf_cosine_topk"):
-        _materialize(QUERIES[q](spark, "/root/testdata/sf0.001"))
+    spark = session("pulsar_internal_spark_stream_bench")
 
     docs = spark.read.parquet(f"{sf10}/documents.parquet")
     emb = spark.read.parquet(f"{sf10}/embeddings.parquet")
@@ -134,29 +102,30 @@ def main() -> None:
         "source": sf10,
     }
 
+    # every operation is one measured window; the settle after each one
+    # releases the staged k-gram frame spans_for_batch pins, or ten
+    # batches pin ~3.5 GB of dead blocks and later batches pay
+    # eviction/GC inside their measurements
+
     # ---------------- signature store: append + consume per batch
     sig_store = os.path.join(work, "sig_store")
     rows = []
     for b in range(N_BATCHES):
         batch = docs.withColumn("_b", batch_col).filter(F.col("_b") == b).drop("_b")
-        _, append_s, append_mb = timed(
-            metrics,
-            lambda: sig.append_signature_batch(
-                spark, batch, sig_store, batch_id=b
-            ),
+        append = measure(
+            spark,
+            lambda: sig.append_signature_batch(spark, batch, sig_store, batch_id=b),
+            1,
         )
-        _, cand_s, cand_mb = timed(
-            metrics,
-            lambda: _materialize(sig.candidates_for_batch(spark, sig_store, b)),
-        )
+        cand = measure(spark, lambda: sig.candidates_for_batch(spark, sig_store, b), 1)
         rows.append(
             {
                 "batch": b,
-                "append_s": append_s,
-                "candidates_s": cand_s,
-                "append_shuffle_mb": append_mb["shuffle_bytes"],
-                "candidates_shuffle_mb": cand_mb["shuffle_bytes"],
-                "candidates_input_mb": cand_mb["input_bytes"],
+                "append_s": append["secs_min"],
+                "candidates_s": cand["secs_min"],
+                "append_shuffle_write_bytes": append["shuffle_write_bytes"],
+                "candidates_shuffle_write_bytes": cand["shuffle_write_bytes"],
+                "candidates_input_bytes": cand["input_bytes"],
             }
         )
         print("sig", rows[-1], file=sys.stderr, flush=True)
@@ -167,33 +136,24 @@ def main() -> None:
     rows = []
     for b in range(N_BATCHES):
         batch = docs.withColumn("_b", batch_col).filter(F.col("_b") == b).drop("_b")
-        _, append_s, append_mb = timed(
-            metrics,
-            lambda: spans.append_kgram_batch(
-                spark, batch, span_store_path, batch_id=b
-            ),
+        append = measure(
+            spark,
+            lambda: spans.append_kgram_batch(spark, batch, span_store_path, batch_id=b),
+            1,
         )
-        _, spans_s, spans_mb = timed(
-            metrics,
-            lambda: _materialize(
-                spans.spans_for_batch(spark, batch, span_store_path, b)
-            ),
+        emitted = measure(
+            spark, lambda: spans.spans_for_batch(spark, batch, span_store_path, b), 1
         )
         rows.append(
             {
                 "batch": b,
-                "append_s": append_s,
-                "spans_s": spans_s,
-                "append_shuffle_mb": append_mb["shuffle_bytes"],
-                "spans_shuffle_mb": spans_mb["shuffle_bytes"],
-                "spans_input_mb": spans_mb["input_bytes"],
+                "append_s": append["secs_min"],
+                "spans_s": emitted["secs_min"],
+                "append_shuffle_write_bytes": append["shuffle_write_bytes"],
+                "spans_shuffle_write_bytes": emitted["shuffle_write_bytes"],
+                "spans_input_bytes": emitted["input_bytes"],
             }
         )
-        # spans_for_batch stages its signed k-gram frame (the returned
-        # span frame reads it); release between batches, OUTSIDE the
-        # timed windows, or ten batches pin ~3.5 GB of dead blocks and
-        # later batches pay eviction/GC inside their measurements
-        release_staged(spark)
         print("span", rows[-1], file=sys.stderr, flush=True)
     out["span_store"] = rows
 
@@ -202,36 +162,38 @@ def main() -> None:
 
     ivf_path = os.path.join(work, "ivf_index")
     b0 = emb.withColumn("_b", vbatch_col).filter(F.col("_b") == 0).drop("_b")
-    _, build_s, build_mb = timed(
-        metrics,
+    built = measure(
+        spark,
         lambda: sim.build_ivf_index(
             b0, ivf_path, num_centroids=16, codebooks=CODEBOOKS,
             health_sample_mod=16,
         ),
+        1,
     )
     rows = [
         {
             "batch": 0,
-            "build_s": build_s,
-            "shuffle_mb": build_mb["shuffle_bytes"],
-            "input_mb": build_mb["input_bytes"],
+            "build_s": built["secs_min"],
+            "shuffle_write_bytes": built["shuffle_write_bytes"],
+            "input_bytes": built["input_bytes"],
         }
     ]
     print("ivf", rows[-1], file=sys.stderr, flush=True)
     for b in range(1, N_BATCHES):
         batch = emb.withColumn("_b", vbatch_col).filter(F.col("_b") == b).drop("_b")
-        _, append_s, append_mb = timed(
-            metrics,
+        append = measure(
+            spark,
             lambda: sim.ivf_index_append(
                 spark, batch, ivf_path, batch_id=b, health_sample_mod=16
             ),
+            1,
         )
         rows.append(
             {
                 "batch": b,
-                "append_s": append_s,
-                "shuffle_mb": append_mb["shuffle_bytes"],
-                "input_mb": append_mb["input_bytes"],
+                "append_s": append["secs_min"],
+                "shuffle_write_bytes": append["shuffle_write_bytes"],
+                "input_bytes": append["input_bytes"],
             }
         )
         print("ivf", rows[-1], file=sys.stderr, flush=True)
@@ -253,33 +215,25 @@ def main() -> None:
         sig._sink_write_batch(frame, sink)
     feed_s = round(time.perf_counter() - feed_t0, 3)
 
-    def read_all():
-        _materialize(sig.read_candidates_sink(spark, sink))
-
     files_before = _count_parquet_files(sink)
     # 3 timed reads, min — reads are steal-sensitive and tiny
-    before_reads = []
-    for _ in range(3):
-        _, s, _mb = timed(metrics, read_all)
-        before_reads.append(s)
-    _, compact_s, _mb = timed(
-        metrics,
+    before = measure(spark, lambda: sig.read_candidates_sink(spark, sink), 3)
+    compact = measure(
+        spark,
         lambda: sig.compact_sink_batches(spark, sink, upto_batch=SINK_BATCHES - 2),
+        1,
     )
     files_after = _count_parquet_files(sink)
-    after_reads = []
-    for _ in range(3):
-        _, s, _mb = timed(metrics, read_all)
-        after_reads.append(s)
+    after = measure(spark, lambda: sig.read_candidates_sink(spark, sink), 3)
     out["sink_compaction"] = {
         "sink_batches": SINK_BATCHES,
         "feed_s_total": feed_s,
         "parquet_files_before": files_before,
         "parquet_files_after": files_after,
-        "read_s_before": round(min(before_reads), 3),
-        "read_s_after": round(min(after_reads), 3),
-        "reads_all": {"before": before_reads, "after": after_reads},
-        "compact_s": compact_s,
+        "read_s_before": before["secs_min"],
+        "read_s_after": after["secs_min"],
+        "reads_all": {"before": before["secs_all"], "after": after["secs_all"]},
+        "compact_s": compact["secs_min"],
         "watermark": SINK_BATCHES - 2,
     }
     print("sink", out["sink_compaction"], file=sys.stderr, flush=True)
