@@ -9,31 +9,36 @@ min-label propagation plus pointer jumping:
     per round:
       1. propagate: label(v) <- min over {label(v)} ∪ {label(u): u ~ v}
          — ONE join (edges against labels) unioned with the labels
-         frame itself, then ONE keyed MIN aggregate (round 11: the
-         former shape spent a second join re-attaching the neighbor
-         minima to the labels frame; the union form computes the same
-         min in the aggregate, one exchange fewer per round)
+         frame itself, then ONE keyed MIN aggregate. Round 1 starts
+         from label = id and needs neither: it is one aggregate of the
+         symmetric edge list, least(a, min(b)) per node a.
       2. hop: label(v) <- label(label(v))              -- pointer jumping
 
 Propagation alone needs O(diameter) rounds; the hop step contracts
-label chains so convergence is O(log n) rounds. Each round
-stages via staging.stage (lineage would otherwise compound per round — the
-same discipline as operators/tree.descendants); on a cluster swap for
+label chains. Each round stages via staging.stage (lineage would
+otherwise compound per round — the same discipline as
+operators/tree.descendants); on a cluster swap for
 spark.pulsar.stage.mode=reliable (staging.stage).
 
 Convergence is detected with a monotone checksum: labels only ever
-decrease, so sum(label) strictly decreases on any change. Round 11:
-the checksum rides the staging action as an ``observe`` metric
-(CollectMetrics evaluates inside the localCheckpoint job), so a round
-costs NO separate driver aggregate job — measured 72 -> 51 jobs on
-the embedding pair graph at sf0.1, labels byte-identical. (A
-double-hop variant was measured too: it did NOT cut rounds on the
-bucket-clique graphs this engine feeds CC — 7 rounds either way —
-and added a join per round; rejected.)
+decrease, so sum(label) strictly decreases on any change. The checksum
+rides the staging action as an ``observe`` metric (CollectMetrics
+evaluates inside the localCheckpoint job), so a round costs no separate
+driver aggregate job; the last round is the one that finds the checksum
+unchanged. (A double-hop variant was measured: it did NOT cut rounds
+on the bucket-clique graphs this engine feeds CC — 7 rounds either way
+— and added a join per round; rejected.)
+
+Job budget: staging the symmetric edge list also counts its rows (an
+``observe`` metric), which bounds the number of nodes. When the
+node-sized frames fit under ``spark.sql.autoBroadcastJoinThreshold``,
+both joins of a round broadcast them, so a round is four jobs
+(broadcast labels, aggregate shuffle, broadcast for the hop, staging)
+and round 1 three. Otherwise they are keyed shuffle joins.
 
 At 100 TB: state per round is one (node, label) pair per node and the
 symmetric edge list; every step is a keyed join/aggregate (no driver
-collect except the O(1) checksum per round).
+collect except the O(1) checksum and row count).
 """
 
 from __future__ import annotations
@@ -64,28 +69,41 @@ def connected_components(
     )
     if not edges_canonical:
         sym = sym.distinct()
-    sym = sym.transform(stage)
-    labels = (
-        sym.select(F.col("a").alias("id")).distinct().withColumn("label", F.col("id"))
-    ).transform(stage)
+    # sym has at least one row per node, so its row count bounds the
+    # node-sized frames. The planner cannot see their size (a staged
+    # frame keeps the static estimate of the plan that built it) and
+    # would shuffle sym and the labels in every round.
+    n_sym = Observation()
+    sym = stage(sym.observe(n_sym, F.count(F.lit(1)).alias("n")))
+    threshold = (
+        sym.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    )
+    small = 0 <= n_sym.get["n"] * sym._jdf.schema().defaultSize() <= threshold
+    node_sized = F.broadcast if small else (lambda df: df)
 
+    labels = None
     prev_sum = None
     converged = False
     for _ in range(max_iter):
         # 1. propagate: min label over self + neighbors, as ONE keyed
-        #    aggregate over (labels ∪ joined neighbor labels) — the
-        #    self rows make the left-join re-attach of the old shape
-        #    unnecessary (identical result, one exchange fewer)
-        nbr = sym.join(labels, sym["b"] == labels["id"]).select(
-            F.col("a").alias("id"), "label"
-        )
-        prop = (
-            labels.unionByName(nbr)
-            .groupBy("id")
-            .agg(F.min("label").alias("label"))
-        )
+        #    aggregate; with label = id (round 1) that is least(a, min(b))
+        if labels is None:
+            prop = (
+                sym.groupBy("a")
+                .agg(F.least(F.col("a"), F.min("b")).alias("label"))
+                .withColumnRenamed("a", "id")
+            )
+        else:
+            nbr = sym.join(node_sized(labels), sym["b"] == labels["id"]).select(
+                F.col("a").alias("id"), "label"
+            )
+            prop = (
+                labels.unionByName(nbr)
+                .groupBy("id")
+                .agg(F.min("label").alias("label"))
+            )
         # 2. hop: label(v) <- label(label(v)) (pointer jumping)
-        parent = prop.select(
+        parent = node_sized(prop).select(
             F.col("id").alias("p_id"), F.col("label").alias("p_label")
         )
         hopped = prop.join(parent, prop["label"] == parent["p_id"], "left").select(

@@ -8,9 +8,10 @@ table (child -> parent FK); orphans are a LEFT ANTI self-join; descendants
 are an iterative broadcast-join loop (frontier expansion).
 
 Scale posture: anti/semi joins shuffle on the FK — correct and AQE-sized.
-The descendants loop broadcasts only the *frontier* (small by construction
-when traversing from a single root); depth is bounded, and each iteration
-is one job so lineage stays shallow (checkpoint if depth grows).
+The descendants loop broadcasts the reached set (small by construction
+when traversing from a few roots) and never shuffles: a round is one
+broadcast job plus one staging job, the staging cuts the lineage, and
+depth is bounded.
 """
 
 from __future__ import annotations
@@ -115,46 +116,58 @@ def descendants(
 ) -> DataFrame:
     """All transitive children of ``roots`` over the edge table —
     `game:GetDescendants()` (miscellaneous.hpp:192-196) as iterative
-    frontier-expansion joins. Returns (id, depth).
+    breadth-first expansion joins. Returns (id, depth): every reached
+    id once, at its minimum depth; roots at depth 0.
 
-    The frontier is broadcast each round (small relative to edges);
-    the loop stops early when a round adds no rows.
+    One staged (id, depth) state carries the traversal. Round k
+    broadcasts it, LEFT SEMI joins the edges to it on the parent, drops
+    the children it already holds (LEFT ANTI against the SAME broadcast)
+    and stages it with the rest appended at depth k. Every child of a
+    depth < k-1 parent was reached in an earlier round, so what is left
+    are the new children of the depth k-1 slice; cycles cannot revisit
+    an id. No round shuffles: a child with several parents in the slice
+    (or a repeated root) is appended once per edge, at one depth, and a
+    DISTINCT over the one-partition result collapses the copies. The
+    new-row count rides the staging job as an ``observe`` metric; a
+    round that finds none ends the loop. Exiting at ``max_depth`` while
+    still finding rows warns (RuntimeWarning): the result may be
+    truncated.
     """
-    # Each round's frontier is materialized with an eager staging.stage:
-    # without it, round k's plan re-derives rounds 1..k-1 (the union/join
-    # lineage compounds), and the final materialization re-runs the whole
-    # loop again. With it, every edge-scan + join runs exactly once. On a
-    # cluster set spark.pulsar.stage.mode=reliable if executors may be lost.
-    frontier = (
-        roots.select(F.col(root_col).alias("id")).distinct().transform(stage)
+    # Each round's state is materialized with an eager staging.stage:
+    # without it, round k's plan re-derives rounds 1..k-1 and the final
+    # materialization re-runs the whole loop. On a cluster set
+    # spark.pulsar.stage.mode=reliable if executors may be lost.
+    e = edges.select(
+        F.col(child_col).alias("id"), F.col(parent_col).alias("_parent")
     )
-    parts = [frontier.withColumn("depth", F.lit(0))]
-    seen_ids = frontier
+    state = roots.select(F.col(root_col).alias("id"), F.lit(0).alias("depth"))
     for depth in range(1, max_depth + 1):
-        # the empty-frontier stop rides the staging materialization as
-        # an observe metric (round 11) — isEmpty() was a separate job
-        # per round
-        _n = Observation()
-        nxt = stage(
-            edges.join(
-                F.broadcast(frontier),
-                edges[parent_col] == frontier["id"],
-                "inner",
-            )
-            .select(F.col(child_col).alias("id"))
-            .distinct()
-            .join(seen_ids, "id", "left_anti")
-            .observe(_n, F.count(F.lit(1)).alias("n"))
+        # One copy of a reached id per edge that reached it: on a tree
+        # that branches, at most about twice the widest frontier.
+        reached = F.broadcast(state)
+        found = (
+            e.join(reached, e["_parent"] == reached["id"], "left_semi")
+            .join(reached, "id", "left_anti")
+            .select("id", F.lit(depth).alias("depth"))
         )
+        _n = Observation()
+        # The state is broadcast, so it is driver-sized: read back as one
+        # partition (coalesce: narrow, no job) it keeps the union from
+        # adding the edge scan's partitions to it every round.
+        state = stage(
+            state.unionByName(found.observe(_n, F.count(F.lit(1)).alias("n")))
+        ).coalesce(1)
         if _n.get["n"] == 0:
-            break
-        parts.append(nxt.withColumn("depth", F.lit(depth)))
-        seen_ids = seen_ids.unionByName(nxt)
-        frontier = nxt
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+            return state.distinct()
+    import warnings
+
+    warnings.warn(
+        f"descendants hit max_depth={max_depth} while still reaching new "
+        "ids; the result may be truncated — raise max_depth",
+        RuntimeWarning,
+        stacklevel=2,
+    )
+    return state.distinct()
 
 
 def zorder_code(a, b, bits: int = 8):

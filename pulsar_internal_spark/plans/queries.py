@@ -4283,10 +4283,10 @@ def envelope_header_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def descendants_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`game:GetDescendants` / `getactors` recursive traversal
-    (miscellaneous.hpp:185-221): iterative frontier-expansion broadcast
+    (miscellaneous.hpp:185-221): iterative breadth-first broadcast
     joins over a region -> nation -> customer edge table, from two roots.
-    Each round broadcasts only the frontier; stops when a round adds
-    nothing."""
+    Each round broadcasts the reached set and stages it with the new
+    children appended; stops when a round adds nothing."""
     nation = _t(spark, sf_dir, "nation")
     customer = _t(spark, sf_dir, "customer")
     region = _t(spark, sf_dir, "region")

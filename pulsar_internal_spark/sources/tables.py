@@ -8,6 +8,14 @@ Scale notes: reads are plain ``spark.read.parquet`` so partition pruning,
 predicate pushdown and column pruning all apply; nothing here collects to
 the driver. At 100 TB the same call reads a partitioned directory tree —
 callers never assume single-file layout.
+
+Schema memo: a bare ``spark.read.parquet`` runs one footer-reading
+Spark job per call to infer the schema. ``load_table`` keeps the schema
+Spark inferred on the first read of a table file and reads it again with
+``spark.read.schema(...)``, which submits no job. The memo is keyed on
+the file's identity (path, and size and mtime of every file under it),
+so a rewritten table is re-inferred, and on the parquet confs that shape
+inference, so a session with other settings never sees a stale schema.
 """
 
 from __future__ import annotations
@@ -15,6 +23,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLE_NAMES: tuple[str, ...] = (
     "region",
@@ -30,9 +39,46 @@ TABLE_NAMES: tuple[str, ...] = (
 )
 
 
+# Confs that change what parquet schema inference returns.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+)
+
+_schemas: dict[tuple, StructType] = {}
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple | None:
+    """Identity of a table file (or of every file under a table
+    directory) plus the inference confs in effect; None for a path that
+    does not exist (the read then fails with Spark's own error)."""
+    if not os.path.exists(path):
+        return None
+    if os.path.isdir(path):
+        files = sorted(
+            os.path.join(root, f)
+            for root, _, names in os.walk(path)
+            for f in names
+        )
+    else:
+        files = [path]
+    stats = []
+    for f in files:
+        st = os.stat(f)
+        stats.append((f, st.st_size, st.st_mtime_ns))
+    confs = tuple(spark.conf.get(c) for c in _SCHEMA_CONFS)
+    return path, tuple(stats), confs
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table. Accepts either ``<dir>/<name>.parquet``
-    (driver layout) or a partitioned directory ``<dir>/<name>/``."""
+    (driver layout) or a partitioned directory ``<dir>/<name>/``.
+    Only the first read of a given file infers its schema (module
+    docstring)."""
     file_path = os.path.join(sf_dir, f"{name}.parquet")
     dir_path = os.path.join(sf_dir, name)
     path = file_path if os.path.exists(file_path) else dir_path
@@ -41,7 +87,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # factory sets it, but the driver hands entry()/queries() a
         # session of ITS OWN — be self-sufficient on foreign sessions.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    key = _schema_key(spark, path)
+    schema = _schemas.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        if key:
+            _schemas[key] = df.schema
+    else:
+        df = spark.read.schema(schema).parquet(path)
     # With spark.sql.legacy.parquet.nanosAsLong, TIMESTAMP(NANOS) columns
     # surface as LongType nanos; normalize to TimestampType by truncating
     # to micros (identical to DuckDB's ns -> us conversion). Applies only

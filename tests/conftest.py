@@ -21,3 +21,20 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+def jobs_submitted(spark, fn) -> int:
+    """Spark jobs ``fn()`` submits, counted from the status tracker under
+    a job group of their own (the jobs AQE submits from its own threads,
+    broadcasts included, inherit the group)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-submitted-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))

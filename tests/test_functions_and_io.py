@@ -353,6 +353,29 @@ def test_stage_selectivity_multiple_stages_one_plan(spark, sf_dir):
     assert out2.get["n_rows"] == n
 
 
+def test_load_table_memoizes_inferred_schema(spark, tmp_path):
+    """The second load_table of one file infers no schema (no Spark
+    job); rewriting the file with other columns is seen on the next
+    load."""
+    import pandas as pd
+
+    from pulsar_internal_spark.sources.tables import load_table
+    from tests.conftest import jobs_submitted
+
+    sf = str(tmp_path)
+    path = os.path.join(sf, "region.parquet")
+    pd.DataFrame({"r_regionkey": [1], "r_name": ["a"]}).to_parquet(path)
+    first = load_table(spark, sf, "region")
+    assert first.columns == ["r_regionkey", "r_name"]
+    assert jobs_submitted(spark, lambda: load_table(spark, sf, "region")) == 0
+    assert load_table(spark, sf, "region").collect() == first.collect()
+
+    pd.DataFrame({"k": [2], "v": [3.5], "s": ["x"]}).to_parquet(path)
+    again = load_table(spark, sf, "region")
+    assert dict(again.dtypes) == {"k": "bigint", "v": "double", "s": "string"}
+    assert [tuple(r) for r in again.collect()] == [(2, 3.5, "x")]
+
+
 def test_spread_passes_streaming_df_through(spark, tmp_path):
     """spread() must not probe .rdd on a streaming DataFrame (that
     conversion is unsupported) — it passes the stream through."""

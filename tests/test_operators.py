@@ -133,6 +133,57 @@ def test_descendants_terminates_on_cycle(spark):
     assert out == {"a": 0, "b": 1, "c": 2, "d": 2}
 
 
+def test_descendants_minimum_depth_once(spark):
+    """Diamond DAG: d is reached at depth 1 (from r) and at depth 2
+    (through a); root s is also a child of r. Every id appears once,
+    at its minimum depth, and a root stays at depth 0."""
+    edges = spark.createDataFrame(
+        [("a", "r"), ("b", "r"), ("d", "r"), ("d", "a"), ("e", "d"),
+         ("e", "b"), ("s", "r"), ("f", "s"), ("g", "e")],
+        ["child_id", "parent_id"],
+    )
+    roots = spark.createDataFrame([("r",), ("s",), ("s",)], ["id"])
+    rows = tree_ops.descendants(edges, roots).collect()
+    assert len(rows) == len({r.id for r in rows})
+    assert {r.id: r.depth for r in rows} == {
+        "r": 0, "s": 0, "a": 1, "b": 1, "d": 1, "f": 1, "e": 2, "g": 3,
+    }
+
+
+def test_descendants_warns_at_max_depth(spark):
+    """A 5-node chain cut at max_depth=3 warns that the traversal was
+    still finding rows, and returns the depths it reached."""
+    edges = spark.createDataFrame(
+        [("b", "a"), ("c", "b"), ("d", "c"), ("e", "d")],
+        ["child_id", "parent_id"],
+    )
+    roots = spark.createDataFrame([("a",)], ["id"])
+    with pytest.warns(RuntimeWarning, match="max_depth=3"):
+        out = tree_ops.descendants(edges, roots, max_depth=3)
+    assert {r.id: r.depth for r in out.collect()} == {
+        "a": 0, "b": 1, "c": 2, "d": 3,
+    }
+
+
+@pytest.mark.parametrize(
+    "name, jobs", [("descendants_tree", 7), ("user_cooccurrence_components", 15)]
+)
+def test_iterative_query_job_count(spark, sf_dir, name, jobs):
+    """Spark jobs of one warm run (build plus noop materialization) of
+    the benchmark's iterative queries, read from the status tracker:
+    2 per descendants round, 4 per components round after the first,
+    no schema-inference job. Pinned so a change cannot add per-round
+    jobs back unnoticed; the count does not depend on the core count."""
+    from pulsar_internal_spark.plans.queries import QUERIES
+    from tests.conftest import jobs_submitted
+
+    def run():
+        QUERIES[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
+
+    run()  # first hit: schema inference, codegen
+    assert jobs_submitted(spark, run) == jobs
+
+
 def test_reindex_dense_across_partitions(spark):
     df = spark.range(0, 1000).repartition(13).selectExpr("id AS k")
     indexed = tree_ops.reindex(df, ["k"])
