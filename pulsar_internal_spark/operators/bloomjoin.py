@@ -65,26 +65,21 @@ __all__ = [
     "bloom_split",
     "prune_history",
     "should_prune",
-    "STORE_BITS_CONF",
 ]
 
-# Store-level switch for the incremental-store history prunes (the
-# second application of this module, after the triangle wedge
-# exchange): the arriving batch is the SMALL side by construction, so
-# its bitmap is tiny, and the accumulated history — whose per-batch
-# re-shuffle is the linear-in-history ingest cost STREAM_r09 measured
-# on the path stores — is the probe that gets pruned before its
-# exchange. 0 disables.
-STORE_BITS_CONF = "spark.pulsar.store.bloomBitsPerKey"
-
-# The prune carries a fixed per-batch tax (sizing count + bitmap build
-# + broadcast) that shallow histories never repay — the measured
-# shuffle crossover at cadence is ~3-4 batches (STREAM_r09 vs
-# STREAM_r09_bloom). Every store call site knows its history depth in
-# BATCHES for free (the arriving batch_id), so the prune self-disables
-# below this depth instead of taxing demo stores, correctness runs,
-# and freshly-bootstrapped production stores.
-STORE_MIN_HISTORY_CONF = "spark.pulsar.store.bloomMinHistoryBatches"
+# The incremental-store history prunes (the second application of this
+# module, after the triangle wedge exchange): the arriving batch is the
+# SMALL side by construction, so its bitmap is tiny, and the accumulated
+# history — whose per-batch re-shuffle is the linear-in-history ingest
+# cost STREAM_r09 measured on the path stores — is the probe that gets
+# pruned before its exchange. The prune carries a fixed per-batch tax
+# (sizing count + bitmap build + broadcast) that shallow histories never
+# repay — the measured shuffle crossover at cadence is ~3-4 batches
+# (STREAM_r09 vs STREAM_r09_bloom). Every store call site knows its
+# history depth in BATCHES for free (the arriving batch_id), so the
+# prune self-disables below this depth instead of taxing demo stores,
+# correctness runs, and freshly-bootstrapped production stores.
+STORE_MIN_HISTORY_BATCHES = 4
 
 # Floor on the bitmap size: 2^16 bits = 1024 words. Below this the
 # bitmap is noise-sized anyway and a power-of-two floor keeps the mask
@@ -126,8 +121,7 @@ def bloom_prune(
     Guarantees: result is a subset of ``probe`` (same schema, no
     reorder of columns) and a superset of
     ``probe.join(build, keys, "left_semi")``. With ``bits_per_key <= 0``
-    the prune is disabled and ``probe`` is returned unchanged (the
-    conf-off escape hatch).
+    the prune is disabled and ``probe`` is returned unchanged.
 
     ``n_keys``: build-side row count if the caller already knows it
     (e.g. a staged frame whose count is a cached-block scan); when
@@ -267,39 +261,26 @@ def prune_history(
     LEFT ANTI case, where a pruned history row could only have failed
     to eliminate a batch row it never equals.
 
-    Governed by ``spark.pulsar.store.bloomBitsPerKey`` (default 8,
-    0 disables). Column names must match on both sides, which holds at
-    every store call site. ``batch`` is counted for bitmap sizing —
-    callers pass staged (materialized) frames, so that count is a
-    cached-block scan.
+    Uses :func:`bloom_prune`'s default 8 bits per key. Column names
+    must match on both sides, which holds at every store call site.
+    ``batch`` is counted for bitmap sizing — callers pass staged
+    (materialized) frames, so that count is a cached-block scan.
 
     ``history_batches``: the store's history depth in batches (the
     arriving batch_id — call sites know it for free). Below
-    ``spark.pulsar.store.bloomMinHistoryBatches`` (default 4, the
-    measured shuffle crossover at cadence) the prune is skipped: the
-    fixed bitmap tax exceeds what a shallow history's exchange can
-    save. Pass None to prune unconditionally."""
-    spark = history.sparkSession
-    if not should_prune(spark, history_batches):
+    ``STORE_MIN_HISTORY_BATCHES`` (the measured shuffle crossover at
+    cadence) the prune is skipped: the fixed bitmap tax exceeds what a
+    shallow history's exchange can save. Pass None to prune
+    unconditionally."""
+    if not should_prune(history_batches):
         return history
-    return bloom_prune(
-        history,
-        batch,
-        keys,
-        keys,
-        bits_per_key=int(spark.conf.get(STORE_BITS_CONF, "8")),
-    )
+    return bloom_prune(history, batch, keys, keys)
 
 
-def should_prune(spark, history_batches: Optional[int]) -> bool:
-    """Whether :func:`prune_history` will engage under the session's
-    store confs at this history depth. Callers that want to stage the
-    batch frame ONLY when the prune will read it twice more (sizing
-    count + bitmap build) gate the staging on this — so below the
-    crossover depth, plans AND staging stay byte-identical to the
-    pre-prune code."""
-    if int(spark.conf.get(STORE_BITS_CONF, "8")) <= 0:
-        return False
-    if history_batches is None:
-        return True
-    return history_batches >= int(spark.conf.get(STORE_MIN_HISTORY_CONF, "4"))
+def should_prune(history_batches: Optional[int]) -> bool:
+    """Whether :func:`prune_history` will engage at this history depth.
+    Callers that want to stage the batch frame ONLY when the prune will
+    read it twice more (sizing count + bitmap build) gate the staging on
+    this — so below the crossover depth, plans AND staging stay
+    byte-identical to the pre-prune code."""
+    return history_batches is None or history_batches >= STORE_MIN_HISTORY_BATCHES

@@ -23,45 +23,21 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import spread
 from ..staging import stage as stage_frame
-from .bloomjoin import bloom_prune, bloom_split
+from .bloomjoin import bloom_prune
 
-# Gated Bloom prunes for the substring scrub/spans anchor layer (the
+# Gated Bloom prune for the substring scrub/spans anchor layer (the
 # round-11 treatment of the family's broadcast->SMJ transition,
-# SCRUB_DIAG.json / BASELINE.md round 11): once `dup`/`cov` outgrow the
-# broadcast threshold, all three joins flip to SortMergeJoin at once and
-# the full k-gram and token-position frames start shuffling — 2.2 GB of
-# brand-new exchange at sf10, ~22 GB at sf100. Most k-grams are NOT
-# cross-doc duplicated and most token positions are NOT covered, so a
-# Bloom bitmap over the small side prunes/bypasses the probe exchanges
-# down to the true-match fraction (+~12% FPR at 8 bits). Below
-# SCRUB_MIN_KG_ROWS the joins broadcast and the probe never shuffles, so
-# the prune would be pure tax — the gate keeps small-SF plans
-# byte-identical to the ungated form (EXPLAIN pins stay stable at the
-# generator's sf0.01).
-SCRUB_BITS_CONF = "spark.pulsar.scrub.bloomBitsPerKey"
-SCRUB_MIN_KG_CONF = "spark.pulsar.scrub.bloomMinKgramRows"
+# SCRUB_DIAG.json / BASELINE.md round 11): once `dup` outgrows the
+# broadcast threshold, the occurrence join flips to SortMergeJoin and
+# the full k-gram frame starts shuffling — 1.68 GB of brand-new
+# exchange at sf10, ~17 GB at sf100. Most k-grams are NOT cross-doc
+# duplicated, so a Bloom bitmap over the duplicated set prunes the
+# probe exchange down to the true-match fraction (+~12% FPR at 8 bits).
+# Below this many staged k-gram rows the join broadcasts and the probe
+# never shuffles, so the prune would be pure tax — the gate keeps
+# small-SF plans byte-identical to the ungated form (EXPLAIN pins stay
+# stable at the generator's sf0.01).
 _SCRUB_MIN_KG_DEFAULT = 8_000_000  # between sf1.0 (2.4M, broadcast) and sf10 (24M, SMJ)
-
-
-def _scrub_bloom_bits(spark) -> int:
-    return int(spark.conf.get(SCRUB_BITS_CONF, "8"))
-
-
-def _scrub_gate(kg_staged: DataFrame, n_rows: int | None = None) -> bool:
-    """Whether the anchor-layer prunes engage: conf-enabled AND the
-    staged k-gram frame is past the broadcast->SMJ transition scale.
-    ``n_rows``: the frame's row count when the caller already has it
-    (round 11: dup_kgram_occurrences collects it as an observe metric
-    during the staging job); falls back to a cached-block count scan."""
-    spark = kg_staged.sparkSession
-    if _scrub_bloom_bits(spark) <= 0:
-        return False
-    min_rows = int(
-        spark.conf.get(SCRUB_MIN_KG_CONF, str(_SCRUB_MIN_KG_DEFAULT))
-    )
-    if n_rows is None:
-        n_rows = kg_staged.count()
-    return n_rows >= min_rows
 
 
 def normalized_text(col: str = "text"):
@@ -354,7 +330,6 @@ def dup_kgram_occurrences(
     k: int = 8,
     id_col: str = "doc_id",
     tokens_col: str = "w",
-    stage: bool = True,
 ) -> DataFrame:
     """Occurrences of CROSS-DOCUMENT duplicated k-grams — the anchor
     layer of exact substring-span dedup (Lee et al. 2022,
@@ -374,20 +349,19 @@ def dup_kgram_occurrences(
     viral boilerplate k-gram is one hot GROUP, never a hot JOIN bucket
     fanning out quadratically), and one equi join of occurrences back
     to the duplicated-hash set — Bloom-pruned past the broadcast->SMJ
-    transition (SCRUB_BITS_CONF gate) so the full k-gram frame never
-    shuffles for its duplicated minority. Span
-    assembly downstream is per-document windows (bounded by doc
-    length) — so the whole pipeline is linear in corpus size at any
-    duplication rate. Suffix arrays (the Lee et al. implementation)
-    find the same >= k-token cross-doc spans; the k-gram-cover form is
-    the shuffle-friendly equivalent for a cluster.
+    transition (``_SCRUB_MIN_KG_DEFAULT`` gate) so the full k-gram frame
+    never shuffles for its duplicated minority. Span assembly downstream
+    is per-document windows (bounded by doc length) — so the whole
+    pipeline is linear in corpus size at any duplication rate. Suffix
+    arrays (the Lee et al. implementation) find the same >= k-token
+    cross-doc spans; the k-gram-cover form is the shuffle-friendly
+    equivalent for a cluster.
 
     The signed k-gram frame feeds TWO lineages (the ownership aggregate
-    and the occurrence join); ``stage=True`` stages it (staging.stage) so the
+    and the occurrence join); it is staged (staging.stage) so the
     sha2-per-token signing runs ONCE per plan, matching the incremental
     twin (span_store._kgram_occurrences is checkpointed at append time).
-    On a cluster with elastic executors prefer reliable
-    checkpoint(dir); pass stage=False when the caller stages."""
+    On a cluster with elastic executors prefer reliable staging."""
     wcol = F.col(tokens_col)
     kg = toks.filter(F.size(wcol) >= k).select(
         id_col,
@@ -398,13 +372,10 @@ def dup_kgram_occurrences(
             )
         ).alias("_p0", "kh"),
     ).select(id_col, (F.col("_p0") + 1).alias("pos"), "kh")
-    kg_rows = None
-    if stage:
-        # the gate's row count rides the staging job as an observe
-        # metric (round 11) — no separate cached-block count scan
-        _kgn = Observation()
-        kg = stage_frame(kg.observe(_kgn, F.count(F.lit(1)).alias("n")))
-        kg_rows = _kgn.get["n"]
+    # the gate's row count rides the staging job as an observe metric
+    # (round 11) — no separate cached-block count scan
+    _kgn = Observation()
+    kg = stage_frame(kg.observe(_kgn, F.count(F.lit(1)).alias("n")))
     # "occurs in >= 2 distinct docs" == min(doc) != max(doc): the
     # countDistinct form Spark rewrites into TWO full (kh, doc)-grain
     # exchanges (the distinct-expand pair SCRUB_DIAG.json measured as
@@ -421,7 +392,7 @@ def dup_kgram_occurrences(
         .drop("_max_doc")
     )
     probe = kg
-    if stage and _scrub_gate(kg, kg_rows):
+    if _kgn.get["n"] >= _SCRUB_MIN_KG_DEFAULT:
         # Past the broadcast->SMJ transition the FULL k-gram frame
         # shuffles into this join (1.68 GB at sf10, ~17 GB at sf100)
         # though only the duplicated minority matches. Stage the
@@ -431,11 +402,7 @@ def dup_kgram_occurrences(
         # The bitmap sizing count rides the staging job (observe).
         _dupn = Observation()
         dup = stage_frame(dup.observe(_dupn, F.count(F.lit(1)).alias("n")))
-        probe = bloom_prune(
-            kg, dup, ["kh"], ["kh"],
-            bits_per_key=_scrub_bloom_bits(kg.sparkSession),
-            n_keys=_dupn.get["n"],
-        )
+        probe = bloom_prune(kg, dup, ["kh"], ["kh"], n_keys=_dupn.get["n"])
     return probe.join(dup, "kh").select(id_col, "pos", "kh", "owner_doc")
 
 

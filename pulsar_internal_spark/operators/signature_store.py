@@ -207,7 +207,7 @@ def _candidates(store: DataFrame, batch_id: int) -> DataFrame:
     # before the exchange. Result-identical (the equi-join stays);
     # self-disables below the min-history depth (batch_id IS the
     # history depth in batches here).
-    if should_prune(store.sparkSession, batch_id):
+    if should_prune(batch_id):
         # the prune reads `new` twice more (sizing count + bitmap
         # build) beyond its three join uses — stage it so those are
         # cached-block reads instead of five store rescans per batch.
@@ -427,7 +427,7 @@ def streaming_banded_dedup(
                 )
                 raw = candidates_for_batch_bucketed(spark, store_table, batch_id)
             else:
-                _advise_bucketed_store(spark, store_path, batch_id, query_name)
+                _advise_bucketed_store(store_path, batch_id, query_name)
                 append_banded_batch(
                     spark, bander(batch_df), store_path, batch_id=batch_id
                 )
@@ -475,12 +475,10 @@ def read_candidates_sink(
 _ADVISED_STORES: set[str] = set()
 
 
-def _advise_bucketed_store(
-    spark: SparkSession, store_path: str, batch_id: int, query_name: str
-) -> None:
+def _advise_bucketed_store(store_path: str, batch_id: int, query_name: str) -> None:
     """One-time loud advisory when a PATH-based streaming store crosses
-    the measured ingest crossover depth (the Bloom prune's min-history
-    conf doubles as the depth signal): past it, every micro-batch
+    the measured ingest crossover depth (the Bloom prune's minimum
+    history depth doubles as the depth signal): past it, every micro-batch
     re-shuffles the accumulated history — a linear-in-depth cost the
     prune only flattens (~15x slope cut, STREAM_r09_bloom) while the
     bucketed catalog form removes it entirely (zero-exchange history
@@ -489,12 +487,11 @@ def _advise_bucketed_store(
     is persisted as a marker file BESIDE the store (plus the in-process
     set as a fast path), so a restarting cadence job doesn't re-advise
     on every process launch (VERDICT r10 #8)."""
-    from .bloomjoin import STORE_MIN_HISTORY_CONF
+    from .bloomjoin import STORE_MIN_HISTORY_BATCHES
 
     if store_path in _ADVISED_STORES:
         return
-    min_hist = int(spark.conf.get(STORE_MIN_HISTORY_CONF, "4"))
-    if batch_id < min_hist:
+    if batch_id < STORE_MIN_HISTORY_BATCHES:
         return
     _ADVISED_STORES.add(store_path)
     marker = os.path.join(store_path, "_ADVISED_BUCKETED")

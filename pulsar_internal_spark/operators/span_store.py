@@ -461,9 +461,7 @@ def streaming_substring_dedup(
                 spark, kg, store_table, batch_id, k=k, id_col=id_col
             )
         else:
-            _advise_bucketed_store(
-                spark, store_path, batch_id, "substring_dedup"
-            )
+            _advise_bucketed_store(store_path, batch_id, "substring_dedup")
             _append_kg(
                 spark, kg, store_path, batch_id=batch_id, id_col=id_col
             )

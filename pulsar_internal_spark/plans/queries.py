@@ -816,10 +816,11 @@ def user_cooccurrence_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the user co-occurrence graph (edges =
     users with events in the same minute) — the pair-graph clustering
     step every near-dup pipeline needs after candidate generation
-    (operators/graph.py: min-label propagation + pointer jumping,
-    O(log n) rounds). Oracle computes the same components by recursive
-    transitive closure + MIN — tractable at oracle scale, quadratic at
-    ours, which is exactly why the iterative operator exists."""
+    (operators/graph.py: min-label propagation + pointer jumping; the
+    round count grows with chain length). Oracle computes the same
+    components by recursive transitive closure + MIN — tractable at
+    oracle scale, quadratic at ours, which is exactly why the iterative
+    operator exists."""
     from ..operators.graph import connected_components
 
     edges = _minute_cooccurrence_edges(_t(spark, sf_dir, "events"))
@@ -1955,7 +1956,7 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     connected components over the verified pair graph -> cluster id +
     size per member doc. This is the full shape of production corpus
     dedup (keep min doc_id per cluster); every stage is the scalable
-    operator form (banded self-join, candidates-only verify, O(log n)
+    operator form (banded self-join, candidates-only verify, iterative
     component rounds)."""
     from ..operators.graph import connected_components
 
@@ -2285,7 +2286,7 @@ def semantic_dedup_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding-space twin of near_dup_clusters/dedup_keep_best:
     paraphrases and re-encodings that share no k-gram still collide in
     embedding space. Every stage is the scalable form (sum-of-buckets
-    pair join, candidates-only cosine, O(log n) pointer-jumping CC,
+    pair join, candidates-only cosine, pointer-jumping CC,
     broadcast components join back to the corpus). CORRECTNESS/LADDER
     RUNG (round 9): sum-of-buckets is bounded only while the banding
     has headroom — the narrow 2 x 6-plane banding saturates its 128
@@ -7463,8 +7464,7 @@ def user_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/bloomjoin.bloom_prune, bitmap over the oriented edges,
     broadcast + bit test) now drops non-closing wedges in their
     producing stage, BEFORE the exchange; the exact semi join stays,
-    so false positives cost bytes, never correctness. Tunable via
-    spark.pulsar.triangles.bloomBitsPerKey (0 disables)."""
+    so false positives cost bytes, never correctness."""
     # The edge list feeds FOUR lineages below (degree table, the rank
     # join, both wedge sides, the closing-edge probe) — without a
     # materialization the events self-join would re-execute once per
@@ -7495,21 +7495,6 @@ def user_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(src_first, F.col("ddst")).otherwise(F.col("dsrc")).alias("dv"),
         ).observe(_ocount, F.count(F.lit(1)).alias("n"))
     )
-    # Optional explicit parallelism for the wedge-producing stage
-    # (spark.pulsar.triangles.wedgePartitions, 0 = leave to AQE).
-    # Same mechanism and rationale as dedup.hamming_banded_pairs'
-    # pairs.partitions knob: AQE coalesces the oriented exchange by
-    # its INPUT bytes (sf100: 2.5 GB -> 43 tasks) while the wedge
-    # explode blows output ~10x, overflowing each task's shuffle-write
-    # sorter (31.7 GB of the sf100 spill after the staging fix —
-    # SPILL_DIAG_triangle_sf100.json). An explicit keyed repartition
-    # is exempt from AQE coalescing; both self-join sides share the
-    # one exchange; rows untouched — result-exact.
-    wparts = int(
-        spark.conf.get("spark.pulsar.triangles.wedgePartitions", "0") or 0
-    )
-    if wparts > 0:
-        oriented = oriented.repartition(wparts, "u")
     o1, o2 = oriented.alias("o1"), oriented.alias("o2")
     wedges = o1.join(
         o2,
@@ -7522,20 +7507,11 @@ def user_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o1.u").alias("a"), F.col("o1.v").alias("b"), F.col("o2.v").alias("c")
     )
     closer = oriented.select(F.col("u").alias("b"), F.col("v").alias("c"))
-    bits = int(
-        spark.conf.get("spark.pulsar.triangles.bloomBitsPerKey", "8")
+    # n_keys comes from the observe metric collected during the staging
+    # materialization above — no extra count job
+    wedges = bloomjoin.bloom_prune(
+        wedges, closer, ["b", "c"], ["b", "c"], n_keys=_ocount.get["n"]
     )
-    if bits > 0:
-        # n_keys comes from the observe metric collected during the
-        # staging materialization above — no extra count job
-        wedges = bloomjoin.bloom_prune(
-            wedges,
-            closer,
-            ["b", "c"],
-            ["b", "c"],
-            bits_per_key=bits,
-            n_keys=_ocount.get["n"],
-        )
     # INNER, not left_semi, deliberately: (b, c) is unique in closer
     # (oriented maps the distinct edge list 1:1), so the multiplicity
     # is identical — but PushDownLeftSemiAntiJoin would push a

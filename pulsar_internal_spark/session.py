@@ -48,13 +48,10 @@ def get_spark(
     # actual shuffle bytes — ~cores at sf0.1, hundreds at sf10, with
     # per-task state bounded by the advisory size either way. The
     # ceiling covers initial*advisory = 64 GB per exchange before
-    # per-task state grows again; raise SPARK_GRAFT_INITIAL_PARTITIONS
-    # (or pass extra_conf) beyond that. shuffle.partitions stays low as
-    # the non-AQE floor (streaming state stores and any plan AQE cannot
-    # coalesce still use it).
-    initial_partitions = int(
-        os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS", str(max(cpus * 32, 1024)))
-    )
+    # per-task state grows again; pass extra_conf beyond that.
+    # shuffle.partitions stays low as the non-AQE floor (streaming state
+    # stores and any plan AQE cannot coalesce still use it).
+    initial_partitions = max(cpus * 32, 1024)
 
     # Python workers must import this package (pandas UDFs pickle by
     # reference). Exporting PYTHONPATH before the JVM launches covers
@@ -79,10 +76,6 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # 8 MiB ingest-message guard from the reference TCP server
-        # (reference: module/internal/misc/server/server.cpp:84-85) is kept
-        # as an engine conf so sources can consult it uniformly.
-        .config("spark.pulsar.ingest.maxMessageBytes", str(8 * 1024 * 1024))
         # Parquet vectorized reader + pushdown are defaults; pinned
         # explicitly because the whole engine depends on them at scale.
         # parquet TIMESTAMP(NANOS) (events.ts) reads as long nanos; the

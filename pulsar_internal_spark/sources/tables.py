@@ -108,7 +108,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Round-robin repartition iff the input is under-partitioned.
 
     Spark sizes scan partitions by BYTES (maxPartitionBytes), so a small
@@ -125,7 +125,7 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
         # sizing is the trigger's job) — pass through untouched
         return df
     sc = df.sparkSession.sparkContext
-    target = min_partitions or sc.defaultParallelism
+    target = sc.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)

@@ -15,10 +15,11 @@ runtime conf so the SAME code is correct on a laptop and a cluster:
   under executor loss/dynamic deallocation (a lost block kills the
   job, since lineage was truncated).
 - ``spark.pulsar.stage.mode=reliable``: ``checkpoint()`` to the
-  context's checkpoint directory (``spark.pulsar.stage.dir`` is used
-  to set it on first staging if unset) — survives executor loss, at
-  the cost of a write+read through the checkpoint filesystem
-  (hdfs://, s3a://, ... — anything the Hadoop FileSystem API serves).
+  context's checkpoint directory (set by Spark's own
+  ``spark.checkpoint.dir`` at context start, or by
+  ``SparkContext.setCheckpointDir``) — survives executor loss, at the
+  cost of a write+read through the checkpoint filesystem (hdfs://,
+  s3a://, ... — anything the Hadoop FileSystem API serves).
 
 Both are EAGER: the frame is computed at stage() time, which callers
 rely on for side-effect ordering (e.g. span/signature stores append
@@ -30,64 +31,49 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 MODE_CONF = "spark.pulsar.stage.mode"
-DIR_CONF = "spark.pulsar.stage.dir"
 LEVEL_CONF = "spark.pulsar.stage.level"
 
-_LEVELS = {
-    # default: Spark's localCheckpoint default (MEMORY_AND_DISK_DESER,
-    # deserialized row objects on heap — fastest re-read, fine for
-    # the suite's normal frame sizes)
-    "default": None,
-    # serialized in memory, overflow to disk — smaller + GC-friendly
-    # (pyspark 4.x: StorageLevel.MEMORY_AND_DISK IS the serialized one)
-    "memory_disk_ser": "MEMORY_AND_DISK",
-    # never holds staged partitions on heap; re-reads stream from
-    # local disk. REQUIRED for the heavy scale tiers: at sf100 the
-    # staged candidate-pair frame is tens of GB, and the deserialized
-    # default OOMs a 48g heap when BlockManager re-materializes a
-    # disk block into memory (maybeCacheDiskValuesInMemory pulling
-    # hundreds of millions of row objects — the round-11 image-keepers
-    # first-attempt failure)
-    "disk_only": "DISK_ONLY",
-}
+# ``default`` keeps Spark's localCheckpoint level (MEMORY_AND_DISK_DESER,
+# deserialized row objects on heap — fastest re-read, fine for the
+# suite's normal frame sizes). ``disk_only`` never holds staged
+# partitions on heap; re-reads stream from local disk. REQUIRED for the
+# heavy scale tiers: at sf100 the staged candidate-pair frame is tens
+# of GB, and the deserialized default OOMs a 48g heap when BlockManager
+# re-materializes a disk block into memory (maybeCacheDiskValuesInMemory
+# pulling hundreds of millions of row objects — the round-11
+# image-keepers first-attempt failure).
+_LEVELS = ("default", "disk_only")
 
 
 def stage(df: DataFrame) -> DataFrame:
     """Materialize ``df`` once for multi-consumer / iterative reuse.
     See module docstring for the mode switch; ``spark.pulsar.stage.level``
-    (default | memory_disk_ser | disk_only) picks the storage level in
-    local mode — heavy scale runs set disk_only so staged frames never
-    compete with execution memory."""
+    (default | disk_only) picks the storage level in local mode — heavy
+    scale runs set disk_only so staged frames never compete with
+    execution memory."""
     spark = df.sparkSession
     mode = spark.conf.get(MODE_CONF, "local")
     if mode == "local":
         level = spark.conf.get(LEVEL_CONF, "default")
         if level not in _LEVELS:
             raise ValueError(
-                f"{LEVEL_CONF} must be one of {sorted(_LEVELS)}, got {level!r}"
+                f"{LEVEL_CONF} must be one of {list(_LEVELS)}, got {level!r}"
             )
-        if _LEVELS[level] is None:
+        if level == "default":
             return df.localCheckpoint()
         from pyspark.storagelevel import StorageLevel
 
-        return df.localCheckpoint(
-            storageLevel=getattr(StorageLevel, _LEVELS[level])
-        )
+        return df.localCheckpoint(storageLevel=StorageLevel.DISK_ONLY)
     if mode != "reliable":
         raise ValueError(
             f"{MODE_CONF} must be 'local' or 'reliable', got {mode!r}"
         )
-    sc = spark.sparkContext
-    if sc.getCheckpointDir() is None:
-        d = spark.conf.get(DIR_CONF, None)
-        if d is None:
-            raise ValueError(
-                f"reliable staging needs {DIR_CONF} (or a prior "
-                "SparkContext.setCheckpointDir) to place checkpoints"
-            )
-        # setCheckpointDir creates a fresh random subdir per call —
-        # set it once per context, not per stage()
-        sc.setCheckpointDir(d)
+    if spark.sparkContext.getCheckpointDir() is None:
+        raise ValueError(
+            "reliable staging needs a checkpoint directory: start the "
+            "session with spark.checkpoint.dir or call "
+            "SparkContext.setCheckpointDir"
+        )
     return df.checkpoint()
 
 

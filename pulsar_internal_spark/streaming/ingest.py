@@ -34,7 +34,7 @@ def read_submission_stream(
     spark: SparkSession,
     path: str,
     max_files_per_trigger: int | None = 1,
-    max_message_bytes: int | None = None,
+    max_message_bytes: int = DEFAULT_MAX_MESSAGE_BYTES,
 ) -> DataFrame:
     """Streaming DataFrame of submissions: (submission_id, script, bytes,
     oversized). One file == one message; FIFO by file-modification order.
@@ -44,13 +44,6 @@ def read_submission_stream(
     flagged, not dropped — the guard filter is explicit downstream so the
     rejection is observable (the reference silently closes the socket).
     """
-    if max_message_bytes is None:
-        max_message_bytes = int(
-            spark.conf.get(
-                "spark.pulsar.ingest.maxMessageBytes",
-                str(DEFAULT_MAX_MESSAGE_BYTES),
-            )
-        )
     reader = (
         spark.readStream.format("text")
         .option("wholetext", "true")
@@ -76,7 +69,7 @@ def read_socket_submissions(
     spark: SparkSession,
     host: str = "127.0.0.1",
     port: int = 6969,
-    max_message_bytes: int | None = None,
+    max_message_bytes: int = DEFAULT_MAX_MESSAGE_BYTES,
 ) -> DataFrame:
     """TCP ingest, literally: Spark's socket source on the reference's
     loopback endpoint (server.cpp:18-22 listens on 127.0.0.1:6969).
@@ -89,13 +82,6 @@ def read_socket_submissions(
     (no replay); production ingest is the file-drop landing zone or a
     durable bus behind it.
     """
-    if max_message_bytes is None:
-        max_message_bytes = int(
-            spark.conf.get(
-                "spark.pulsar.ingest.maxMessageBytes",
-                str(DEFAULT_MAX_MESSAGE_BYTES),
-            )
-        )
     raw = (
         spark.readStream.format("socket")
         .option("host", host)

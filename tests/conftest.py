@@ -13,8 +13,16 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="session")
-def spark():
-    s = get_spark(app_name="pulsar_internal_spark_tests", shuffle_partitions=8)
+def spark(tmp_path_factory):
+    # managed tables (the bucketed-store tests) land in the warehouse, a
+    # static conf: point it at a temp dir so tests never write into the
+    # checkout
+    warehouse = str(tmp_path_factory.mktemp("spark-warehouse"))
+    s = get_spark(
+        app_name="pulsar_internal_spark_tests",
+        shuffle_partitions=8,
+        extra_conf={"spark.sql.warehouse.dir": warehouse},
+    )
     yield s
 
 

@@ -2124,9 +2124,9 @@ def test_stage_level_knob(spark):
     """staging.stage honors spark.pulsar.stage.level: disk_only staged
     blocks never occupy heap (the sf100 image-keepers OOM class:
     BlockManager re-materializing a tens-of-GB disk block as
-    deserialized row objects), memory_disk_ser stores serialized,
-    default keeps Spark's deserialized localCheckpoint level. Results
-    identical across levels; bogus level fails loudly."""
+    deserialized row objects), default keeps Spark's deserialized
+    localCheckpoint level. Results identical across levels; bogus
+    level fails loudly."""
     import pytest
 
     from pulsar_internal_spark import staging
@@ -2135,7 +2135,6 @@ def test_stage_level_knob(spark):
     want = 500
     expect = {
         "default": "StorageLevel(disk, memory, deserialized, 1 replicas)",
-        "memory_disk_ser": "StorageLevel(disk, memory, 1 replicas)",
         "disk_only": "StorageLevel(disk, 1 replicas)",
     }
     try:
@@ -2162,10 +2161,10 @@ def test_stage_level_knob(spark):
 
 def test_reliable_staging_mode(spark, tmp_path):
     """staging.stage honors spark.pulsar.stage.mode: 'reliable' routes
-    through RDD checkpoint() into spark.pulsar.stage.dir (surviving
-    executor loss on a cluster — the conf the docstrings point at),
-    produces identical results to the default localCheckpoint path,
-    and fails loudly on a bad mode or a missing dir."""
+    through RDD checkpoint() into the context's checkpoint dir
+    (surviving executor loss on a cluster — the conf the docstrings
+    point at), produces identical results to the default
+    localCheckpoint path, and fails loudly on a bad mode."""
     import os
 
     import pytest
@@ -2182,8 +2181,8 @@ def test_reliable_staging_mode(spark, tmp_path):
     }
     ckdir = str(tmp_path / "stage_ck")
     try:
+        spark.sparkContext.setCheckpointDir(ckdir)
         spark.conf.set(staging.MODE_CONF, "reliable")
-        spark.conf.set(staging.DIR_CONF, ckdir)
         reliable_cc = {
             (r.id, r.cluster_id)
             for r in G.connected_components(edges).collect()
@@ -2203,7 +2202,6 @@ def test_reliable_staging_mode(spark, tmp_path):
             staging.stage(edges)
     finally:
         spark.conf.set(staging.MODE_CONF, "local")
-        spark.conf.unset(staging.DIR_CONF)
 
 
 def test_store_maintenance_routes_uris_via_hadoop_fs(spark, tmp_path):
@@ -2970,14 +2968,13 @@ def test_swap_fence_aborts_loser_under_lost_lease(spark, tmp_path):
     assert store_fs.list_generations(store) == [cur]
 
 
-def test_scrub_bloom_gate_equivalence_and_escape(spark):
-    """The round-11 anchor-layer Bloom prunes (k-gram join prune +
-    token-position anti-join bypass, SCRUB_DIAG/BASELINE round 11) are
-    plan-only: forcing the gate on (min-kgram-rows=1) and switching it
-    off (bits=0) must both produce results identical to the default
+def test_scrub_bloom_gate_equivalence(spark, monkeypatch):
+    """The round-11 anchor-layer Bloom prune (k-gram join prune,
+    SCRUB_DIAG/BASELINE round 11) is plan-only: forcing the gate on
+    (k-gram row threshold 1) must produce results identical to the default
     plan for scrub AND span finding — exactness does not depend on the
     Bloom FPR because false negatives are impossible and false
-    positives ride into the exact joins."""
+    positives ride into the exact join."""
     from pulsar_internal_spark.operators import dedup as D
 
     planted = " ".join(f"dup{i}" for i in range(30))
@@ -3008,13 +3005,6 @@ def test_scrub_bloom_gate_equivalence_and_escape(spark):
         )
         return scrub, occ
 
-    conf = spark.conf
     base = snap()
-    try:
-        conf.set("spark.pulsar.scrub.bloomMinKgramRows", "1")
-        assert snap() == base, "forced-gate plan changed results"
-        conf.set("spark.pulsar.scrub.bloomBitsPerKey", "0")
-        assert snap() == base, "bits=0 escape hatch changed results"
-    finally:
-        conf.unset("spark.pulsar.scrub.bloomMinKgramRows")
-        conf.unset("spark.pulsar.scrub.bloomBitsPerKey")
+    monkeypatch.setattr(D, "_SCRUB_MIN_KG_DEFAULT", 1)
+    assert snap() == base, "forced-gate plan changed results"

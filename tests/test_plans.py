@@ -390,30 +390,6 @@ def test_triangle_counting_is_oriented_equi_joins(spark, sf_dir):
     assert "BatchEvalPython" not in plan, plan
 
 
-def test_triangle_wedge_partitions_knob(spark, sf_dir):
-    """spark.pulsar.triangles.wedgePartitions pins the wedge-producing
-    stage's task count via an explicit keyed repartition of the
-    oriented edge list — result-exact vs the default AQE path, and the
-    requested count must land in the plan (AQE sizes the stage by its
-    2.5 GB INPUT while the wedge explode writes ~13 GB: the residual
-    31.7 GB sf100 spill owner, SPILL_DIAG_triangle_sf100.json)."""
-    from pulsar_internal_spark.plans.queries import QUERIES
-
-    base = {
-        (r.user_id, r.n_triangles)
-        for r in QUERIES["user_triangle_counts"](spark, sf_dir).collect()
-    }
-    spark.conf.set("spark.pulsar.triangles.wedgePartitions", "9")
-    try:
-        df = QUERIES["user_triangle_counts"](spark, sf_dir)
-        pinned = {(r.user_id, r.n_triangles) for r in df.collect()}
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "hashpartitioning(u#" in plan and "9)" in plan, plan[:2000]
-    finally:
-        spark.conf.unset("spark.pulsar.triangles.wedgePartitions")
-    assert pinned == base, "wedge repartition changed the triangle counts"
-
-
 def test_triangle_bloom_prune_sits_below_wedge_exchange(spark, sf_dir):
     """The round-9 scale fix: the Bloom bit test (broadcast bitmap
     join) must execute in the wedge-producing stage, BELOW the (b, c)

@@ -72,6 +72,18 @@ def test_broadcast_join_avoids_big_side_shuffle(spark):
     assert out.count() == big.filter(F.col("key").isin("HOT", "k1")).count()
 
 
+def test_session_warehouse_outside_checkout(spark):
+    """Managed tables must not land in the checkout: the test session's
+    warehouse (where the bucketed-table tests write) sits outside the
+    repository root."""
+    import os
+
+    repo = os.path.realpath(os.path.dirname(os.path.dirname(__file__)))
+    loc = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    loc = os.path.realpath(loc)
+    assert os.path.commonpath([loc, repo]) != repo, loc
+
+
 def test_bucketed_join_is_shuffle_free(spark, tmp_path):
     # managed tables land in the session warehouse (static conf). A
     # fresh in-memory catalog can inherit ORPHANED files from a previous

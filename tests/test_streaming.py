@@ -1104,11 +1104,11 @@ def test_streaming_minhash_dedup_bucketed_matches_batch(spark, tmp_path):
         )
 
 
-def test_path_store_advisory_past_crossover_depth(spark, tmp_path):
+def test_path_store_advisory_past_crossover_depth(tmp_path):
     """The path-based streaming store must emit ONE loud advisory per
     store once history reaches the measured crossover depth (the Bloom
-    min-history conf), recommending the bucketed catalog form — and
-    stay silent below it."""
+    prune's min-history constant), recommending the bucketed catalog
+    form — and stay silent below it."""
     import warnings
 
     from pulsar_internal_spark.operators.signature_store import (
@@ -1119,11 +1119,11 @@ def test_path_store_advisory_past_crossover_depth(spark, tmp_path):
     store = str(tmp_path / "advise_store")
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        _advise_bucketed_store(spark, store, 3, "t")  # below depth 4
+        _advise_bucketed_store(store, 3, "t")  # below depth 4
         assert not w
-        _advise_bucketed_store(spark, store, 4, "t")
+        _advise_bucketed_store(store, 4, "t")
         assert len(w) == 1 and "store_table" in str(w[0].message)
-        _advise_bucketed_store(spark, store, 5, "t")  # once per store
+        _advise_bucketed_store(store, 5, "t")  # once per store
         assert len(w) == 1
     _ADVISED_STORES.discard(store)
 
@@ -1134,11 +1134,11 @@ def test_path_store_advisory_past_crossover_depth(spark, tmp_path):
     store2.mkdir()
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        _advise_bucketed_store(spark, str(store2), 4, "t")
+        _advise_bucketed_store(str(store2), 4, "t")
         assert len(w) == 1
         assert (store2 / "_ADVISED_BUCKETED").exists()
         _ADVISED_STORES.discard(str(store2))  # "new process"
-        _advise_bucketed_store(spark, str(store2), 5, "t")
+        _advise_bucketed_store(str(store2), 5, "t")
         assert len(w) == 1, "restarting cadence job must not re-advise"
     _ADVISED_STORES.discard(str(store2))
 

@@ -17,14 +17,14 @@ Usage:
   # conf A/B
   python tools/ab_bench.py \
       --var default:spark.pulsar.stage.level=default \
-      --var ser:spark.pulsar.stage.level=memory_disk_ser \
+      --var disk:spark.pulsar.stage.level=disk_only \
       --passes 5 -- winnowing_matches substring_scrub
   # build/exec split and job counts, every registered query
   python tools/ab_bench.py --passes 2 --sf-dir .scale/sf1.0
-  # Bloom prune off vs on across two decades
+  # AQE advisory partition size A/B across two decades
   python tools/ab_bench.py --passes 3 \
-      --var off:spark.pulsar.triangles.bloomBitsPerKey=0 \
-      --var on_8bits:spark.pulsar.triangles.bloomBitsPerKey=8 \
+      --var default: \
+      --var adv16m:spark.sql.adaptive.advisoryPartitionSizeInBytes=16m \
       --sf-dir .scale/sf1.0 --sf-dir .scale/sf10 user_triangle_counts
 """
 

@@ -272,7 +272,7 @@ def _run_mode(mode: str, sf_dir: str, tmp_base: str, result: dict) -> dict:
                 # the cluster pass runs the RELIABLE staging mode —
                 # the exact machinery local mode can't falsify
                 "spark.pulsar.stage.mode": "reliable",
-                "spark.pulsar.stage.dir": os.path.join(tmp_base, "ckpt"),
+                "spark.checkpoint.dir": os.path.join(tmp_base, "ckpt"),
             },
         )
     spark.sparkContext.setLogLevel("ERROR")

@@ -21,7 +21,7 @@ persistent exchange (same exchange, more bytes)?
 Writes SCRUB_DIAG.json and prints a ranked table.
 
 Run: python tools/scrub_diagnose.py  [sf dirs via SPARK_GRAFT_SCRUB_SFS,
-default ".scale/sf1.0,.scale/sf10"]
+default ".scale/sf1.0,.scale/sf10"; heavy tiers: SPARK_GRAFT_STAGE_LEVEL=disk_only]
 """
 
 from __future__ import annotations

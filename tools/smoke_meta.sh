@@ -3,7 +3,7 @@
 # the round-10 HEAD shipped red because the final commits skipped the
 # full suite; these gates collect in seconds and catch exactly that
 # class — an uncited registered query, a stale CORRECTNESS_local.json
-# registry hash, a drifted pinned plan shape, a broken bench contract).
+# registry hash, a drifted plan pin, a broken bench contract, a new knob).
 #
 # Usage: sh tools/smoke_meta.sh      (~60 s, one local Spark session)
 set -e
@@ -11,5 +11,6 @@ cd "$(dirname "$0")/.."
 exec python -m pytest -q \
   tests/test_queries_vs_oracle.py::test_every_query_documents_its_lineage \
   tests/test_queries_vs_oracle.py::test_every_query_has_entry \
+  tests/test_conf_surface.py \
   tests/test_correctness_artifact.py \
   tests/test_explain_drift.py

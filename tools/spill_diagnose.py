@@ -18,7 +18,8 @@ Run: SPARK_GRAFT_DRIVER_MEM=48g \
      SPARK_GRAFT_SPILL_OUT=SPILL_DIAG_triangle_sf100.json \
      python tools/spill_diagnose.py
 Optional: SPARK_GRAFT_SPILL_CONF="k=v,k=v" extra session confs
-(e.g. spark.sql.adaptive.advisoryPartitionSizeInBytes=16m).
+(e.g. spark.sql.adaptive.advisoryPartitionSizeInBytes=16m, or
+spark.pulsar.stage.level=disk_only for the heavy tiers).
 """
 
 from __future__ import annotations
@@ -152,9 +153,6 @@ def main() -> None:
             k, v = kv.split("=", 1)
             extra[k.strip()] = v.strip()
     spark = session("pulsar_internal_spark_spill_diag", extra)
-    lvl = os.environ.get("SPARK_GRAFT_STAGE_LEVEL")
-    if lvl:
-        spark.conf.set("spark.pulsar.stage.level", lvl)
 
     execs = _sql_executions(spark)
     last_id = max((e.get("id", -1) for e in execs), default=-1)
