@@ -62,7 +62,6 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "bloom_prune",
-    "bloom_split",
     "prune_history",
     "should_prune",
 ]
@@ -129,33 +128,6 @@ def bloom_prune(
     """
     if bits_per_key <= 0:
         return probe
-    keyed, words, names = _keyed_and_words(
-        probe, build, probe_cols, build_cols, bits_per_key, n_keys
-    )
-    bkt, widx, word = names
-    # Inner join: a probe word index absent from the bitmap means no
-    # build key hashes anywhere in those 64 buckets — drop the row.
-    return (
-        keyed.join(F.broadcast(words), widx)
-        .where(
-            F.expr(f"({word} & shiftleft(1L, cast({bkt} & 63 AS int))) != 0")
-        )
-        .select(*probe.columns)
-    )
-
-
-def _keyed_and_words(
-    probe: DataFrame,
-    build: DataFrame,
-    probe_cols: Sequence[str],
-    build_cols: Sequence[str],
-    bits_per_key: int,
-    n_keys: Optional[int],
-):
-    """Shared machinery for :func:`bloom_prune` / :func:`bloom_split`:
-    validates the key lists, builds the bit-packed word relation over
-    ``build``, and returns (probe keyed with bucket/word-index columns,
-    words frame, (bkt, widx, word) internal names)."""
     if len(probe_cols) != len(build_cols) or not probe_cols:
         raise ValueError(
             "probe_cols and build_cols must be equal-length and non-empty, "
@@ -197,52 +169,15 @@ def _keyed_and_words(
     keyed = probe.withColumn(bkt, _bucket(probe_cols, mask)).withColumn(
         widx, F.shiftright(bkt, 6)
     )
-    return keyed, words, (bkt, widx, word)
-
-
-def bloom_split(
-    probe: DataFrame,
-    build: DataFrame,
-    probe_cols: Sequence[str],
-    build_cols: Sequence[str],
-    *,
-    bits_per_key: int = 8,
-    n_keys: Optional[int] = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Split ``probe`` into ``(definitely_not_in_build, maybe_in_build)``
-    by the same one-hash Bloom bitmap :func:`bloom_prune` uses — the
-    LEFT ANTI exchange-bypass form.
-
-    For ``probe.join(build, keys, "left_anti")`` the negative split can
-    skip the join entirely (a build key always sets the exact bit its
-    probe twin tests, so Bloom false negatives are impossible) and only
-    the maybe split shuffles into the exact anti join:
-    ``neg UNION (maybe ANTI build) == probe ANTI build``, with the
-    anti-join exchange shrunk to the true-match fraction plus ~FPR.
-
-    Build-side duplicate keys are harmless (``bit_or`` is idempotent),
-    so callers may pass a PRE-distinct build lineage together with an
-    ``n_keys`` UPPER BOUND for sizing — an overestimate only makes the
-    bitmap larger (fewer false positives), never incorrect. With
-    ``bits_per_key <= 0`` returns ``(probe.limit(0), probe)`` — the
-    degenerate split that sends everything to the exact join.
-
-    The two returned frames share the probe lineage; callers whose
-    probe is expensive to recompute should stage it first (both splits
-    re-scan it once).
-    """
-    if bits_per_key <= 0:
-        return probe.limit(0), probe
-    keyed, words, names = _keyed_and_words(
-        probe, build, probe_cols, build_cols, bits_per_key, n_keys
+    # Inner join: a probe word index absent from the bitmap means no
+    # build key hashes anywhere in those 64 buckets — drop the row.
+    return (
+        keyed.join(F.broadcast(words), widx)
+        .where(
+            F.expr(f"({word} & shiftleft(1L, cast({bkt} & 63 AS int))) != 0")
+        )
+        .select(*probe.columns)
     )
-    bkt, widx, word = names
-    out_cols = probe.columns
-    tested = keyed.join(F.broadcast(words), widx, "left")
-    hit = F.expr(f"({word} & shiftleft(1L, cast({bkt} & 63 AS int))) != 0")
-    neg = tested.where(F.col(word).isNull() | ~hit).select(*out_cols)
-    maybe = tested.where(F.col(word).isNotNull() & hit).select(*out_cols)
-    return neg, maybe
 
 
 def prune_history(

@@ -1,18 +1,55 @@
 """Similarity search over embedding columns (array<float>).
 
-Driver-mandated extension (SURVEY.md §7 Phase 4). Two paths:
+Driver-mandated extension (SURVEY.md §7 Phase 4): exact, sign-LSH, IVF,
+PQ and IVF+PQ top-k, plus a persisted cell-partitioned IVF index. All
+math is JVM higher-order functions over plan literals or tiny broadcast
+relations — no Python in the loop. Every operator is a composition of
+one private kernel per job, each written once below:
 
-  - brute_force_topk: exact cosine top-k. The query set is broadcast
-    (small by contract); the corpus side streams through one narrow stage
-    — dot products via JVM higher-order functions (zip_with/aggregate),
-    no Python in the loop. Top-k per query via window row_number. At
-    100 TB the corpus scan is embarrassingly parallel; the only shuffle is
-    the per-query top-k, keyed by query id (bounded fan-in).
+  _d2              squared-L2 fold (aggregate over zip_with, index order)
+  _literal_cell    cell argmin: array_min of (d2, cell) structs over the
+                   centroid_struct_literal — a narrow map
+  _literal_probe   nprobe probe: array_sort of the same structs, slice,
+                   explode
+  _relation_probe  nearest cells over a (row x centroid) relation: one
+                   row_number window over (dist2, cell)
+  _adc_lut         M-term ADC lookup fold over a row's codes
+  _adc_topk        ADC score -> per-query shortlist -> exact re-rank
+  _scored          self-match filter + (query_id, neighbor_id, score)
+  _cos_sim         rounded exact cosine over precomputed norms
+  _cosine_topk     per-query top-k window over (cos_sim desc, neighbor_id)
+  _side            (query_id, qv[, qn]) / (neighbor_id, cv[, cn]) side
+                   projections (``_Q`` / ``_C``)
+  _subvectors      posexplode of a vector into its M subvectors
+  _train_cells     sampled-KMeans coarse-quantizer training
 
-  - lsh_bucketed_topk: approximate path — random-hyperplane (sign) LSH
-    computed with deterministic sha2-derived planes; candidates are pairs
-    sharing a bucket, then exact cosine re-rank within buckets. Trades
-    recall for pruning the cross product; bucket skew handled by AQE.
+The struct ordering (d2 first, then cell) and the window order
+(dist2, cell) break distance ties to the smaller cell in every form, so
+the literal and relation probes pick the same cells.
+
+  brute_force_topk   _cos_sim, _cosine_topk (broadcast queries, corpus
+                     streams through one narrow stage; its norms are
+                     withColumn over the aliased vectors, not _side's)
+  ivf_topk           _train_cells, _relation_probe over the exploded
+                     literal, _scored, _cosine_topk
+  ivf_fixed_topk     _literal_cell, _literal_probe, _scored, _cosine_topk
+  pq_fixed_topk      pq_encode, _pq_query_tables, _adc_topk (keyless
+                     broadcast of the query tables)
+  ivfpq_fixed_topk   pq_encode, _literal_cell, _literal_probe,
+                     _pq_query_tables, _adc_topk (ADC join keyed by cell)
+  lsh_bucketed_topk  banded sign-LSH sides, _scored, _cosine_topk
+  build_ivf_index    _train_cells, pq_encode (PQ-carrying index)
+  ivf_index_append   _relation_probe argmin, pq_encode
+  ivf_index_topk     _relation_probe, _scored, _cosine_topk
+  ivf_index_adc_topk _relation_probe, _pq_query_tables, _adc_topk
+  pq_encode          _subvectors, _unrolled_d2
+  pq_residuals       _subvectors, _unrolled_d2
+
+The exact tails score (query, neighbor) pairs excluding self-matches,
+round cosine to 6 places, and rank by (cos_sim desc, neighbor_id asc);
+the ADC tails shortlist by (score desc, neighbor_id asc) and re-rank
+the shortlist exactly, so approximation changes WHICH candidates are
+ranked, never the reported similarity.
 """
 
 from __future__ import annotations
@@ -44,6 +81,193 @@ def cosine(a, b):
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+# -- ANN kernels: one site each, composed by the operators below ----------
+
+_Q = ("query_id", "qv", "qn")
+_C = ("neighbor_id", "cv", "cn")
+
+
+def _side(df: DataFrame, id_col: str, vec_col: str, names) -> DataFrame:
+    """(id, vector[, norm]) projected under ``names`` (``_Q``/``_C``, or
+    their first two fields to skip the norm). Norms are per-vector, so
+    each side computes them once BEFORE any join."""
+    return df.select(
+        F.col(id_col).alias(names[0]),
+        F.col(vec_col).alias(names[1]),
+        *[_norm(F.col(vec_col)).alias(n) for n in names[2:]],
+    )
+
+
+def _d2(vec, cent):
+    """Squared L2 distance folded in index order — the fold the DuckDB
+    oracle twins replay."""
+    return F.aggregate(
+        F.zip_with(
+            vec, cent, lambda a, b: (a.cast("double") - b) * (a.cast("double") - b)
+        ),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def _cell_structs(vec, cent_lit):
+    # (d2, cell) per centroid: struct ordering is field order, so equal
+    # distances order by the smaller cell
+    return F.transform(
+        cent_lit,
+        lambda c: F.struct(
+            _d2(vec, c["centroid"]).alias("d2"), c["cell"].alias("cell")
+        ),
+    )
+
+
+def _literal_cell(vec, cent_lit):
+    """Nearest cell of ``vec`` over a centroid_struct_literal: a narrow
+    map (array_min) — no explode, no window, no shuffle."""
+    return F.array_min(_cell_structs(vec, cent_lit))["cell"]
+
+
+def _literal_probe(q: DataFrame, cent_lit, nprobe: int, keep) -> DataFrame:
+    """The ``nprobe`` nearest literal cells of each ``qv`` row: sort the
+    (d2, cell) structs, keep the head, explode. Returns (*keep, cell)."""
+    return (
+        q.withColumn(
+            "probed",
+            F.slice(F.array_sort(_cell_structs(F.col("qv"), cent_lit)), 1, nprobe),
+        )
+        .select(*keep, F.explode("probed").alias("_p"))
+        .select(*keep, F.col("_p.cell").alias("cell"))
+    )
+
+
+def _relation_probe(
+    pairs: DataFrame, key: str, vec: str, keep, nprobe: int | None = None
+) -> DataFrame:
+    """Nearest cells per ``key`` over a (row x (cell, centroid)) relation:
+    one row_number window over (dist2, cell). Keeps ranks <= ``nprobe``;
+    ``nprobe=None`` keeps the argmin (rank == 1), the assignment
+    ivf_index_append writes. Returns (*keep, cell)."""
+    rank = "_rn" if nprobe is None else "cell_rank"
+    ranked = pairs.withColumn("dist2", _d2(vec, "centroid")).withColumn(
+        rank,
+        F.row_number().over(
+            Window.partitionBy(key).orderBy(F.asc("dist2"), F.asc("cell"))
+        ),
+    )
+    kept = F.col(rank) == 1 if nprobe is None else F.col(rank) <= nprobe
+    return ranked.filter(kept).select(*keep, "cell")
+
+
+def _cos_sim(cv: str = "cv", cn: str = "cn"):
+    return F.round(
+        _dot(F.col("qv"), F.col(cv)) / (F.col("qn") * F.col(cn)), 6
+    ).alias("cos_sim")
+
+
+def _scored(pairs: DataFrame, score, nid: str = "neighbor_id") -> DataFrame:
+    """Drop self-matches and project (query_id, neighbor_id, score)."""
+    out = nid if nid == "neighbor_id" else F.col(nid).alias("neighbor_id")
+    return pairs.filter(F.col(nid) != F.col("query_id")).select(
+        "query_id", out, score
+    )
+
+
+def _cosine_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k by (cos_sim desc, neighbor_id asc) — the only
+    shuffle of every exact tail, keyed by query id."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _adc_lut(tabs, m: int):
+    # unrolled M-term fold of tabs[j][codes[j]] in j order (= aggregate's)
+    s = F.lit(0.0)
+    for j in range(m):
+        s = s + F.element_at(F.element_at(tabs, j + 1), F.col("codes").getItem(j) + 1)
+    return s
+
+
+def _adc_topk(
+    pairs: DataFrame,
+    codebooks,
+    shortlist: int,
+    vectors: DataFrame,
+    qvec: DataFrame,
+    k: int,
+    nid: str = "neighbor_id",
+) -> DataFrame:
+    """ADC tail over (query_id, ``nid``, codes, tables) pairs: a row's
+    approximate cosine is M table lookups over its codes divided by the
+    literal codebook-entry norms, a per-query shortlist of ``shortlist``
+    by (score desc, neighbor_id), then the shortlist (tiny) broadcasts
+    onto ``vectors`` (neighbor_id, cv, cn) to fetch TRUE vectors for the
+    survivors only and joins ``qvec`` (_Q) for the exact re-rank."""
+    m = len(codebooks)
+    norms_lit = norms_matrix_literal(codebooks)
+    score = _adc_lut(F.col("tables"), m) / F.sqrt(
+        F.greatest(_adc_lut(norms_lit, m), F.lit(1e-12))
+    )
+    adc = _scored(pairs, score.alias("score"), nid)
+    ws = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
+    short = (
+        adc.withColumn("rn", F.row_number().over(ws))
+        .filter(F.col("rn") <= shortlist)
+        .select("query_id", "neighbor_id")
+    )
+    rer = (
+        vectors.join(F.broadcast(short), "neighbor_id")
+        .join(F.broadcast(qvec), "query_id")
+        .select("query_id", "neighbor_id", _cos_sim())
+    )
+    return _cosine_topk(rer, k)
+
+
+def _subvectors(df: DataFrame, id_col: str, out_id: str, vec_col: str, m: int, dsub: int):
+    """(out_id, j, sv): each vector posexploded into its ``m``
+    contiguous ``dsub``-dim subvectors."""
+    return df.select(
+        F.col(id_col).alias(out_id),
+        F.posexplode(
+            F.array(*[F.slice(F.col(vec_col), j * dsub + 1, dsub) for j in range(m)])
+        ).alias("j", "sv"),
+    )
+
+
+def _features(vec_col: str):
+    from pyspark.ml.functions import array_to_vector
+
+    return array_to_vector(F.col(vec_col).cast("array<double>")).alias("_v")
+
+
+def _train_cells(
+    corpus: DataFrame, num_centroids: int, vec_col: str, seed: int, max_iter: int
+):
+    """Sampled-KMeans coarse quantizer: returns the fitted KMeansModel
+    (features ``_v`` from _features, prediction ``cell``). Deterministic
+    for a fixed seed.
+
+    Cells only partition space, so a few Lloyd iterations on a seeded
+    sample of max(num_centroids*128, 2048) points suffice (at 100 TB a
+    full-corpus fit is off the table). The count is of the raw input
+    (metadata-only for parquet), and training bypasses spread(): kmeans
+    init plus every Lloyd pass re-evaluates its input, and one partition
+    straight off the scan turns each of those jobs into a single task.
+    Random init: kmeans|| spends ~5 extra passes buying convergence
+    speed coarse cells don't need."""
+    from pyspark.ml.clustering import KMeans
+
+    n_corpus = corpus.count()
+    target = max(num_centroids * 128, 2048)
+    frac = min(1.0, target / max(n_corpus, 1))
+    sampled = corpus if frac >= 1.0 else corpus.sample(False, frac, seed)
+    train = sampled.select(_features(vec_col)).coalesce(1)
+    km = KMeans(
+        k=num_centroids, seed=seed, maxIter=max_iter, initMode="random",
+        featuresCol="_v", predictionCol="cell",
+    )
+    return km.fit(train)
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -53,31 +277,17 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact top-k neighbors per query vector (excluding self-matches).
     Returns (query_id, neighbor_id, cos_sim, rank)."""
-    # Norms are per-vector, so compute them once per side BEFORE the join
-    # (inside the join they'd be re-derived for every (query, neighbor)
-    # pair). spread(): cosine scoring is compute-bound, partition by cores.
+    # spread(): cosine scoring is compute-bound, partition by cores
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
     ).withColumn("qn", _norm(F.col("qv")))
     c = spread(corpus).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
     ).withColumn("cn", _norm(F.col("cv")))
-    scored = (
-        c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    scored = c.join(
+        F.broadcast(q), F.col("neighbor_id") != F.col("query_id")
+    ).select("query_id", "neighbor_id", _cos_sim())
+    return _cosine_topk(scored, k)
 
 
 def _plane_weights(p: int, dim: int) -> list[float]:
@@ -330,48 +540,16 @@ def ivf_topk(
     """IVF (inverted-file) approximate top-k: k-means coarse quantizer,
     then exact re-rank inside the ``nprobe`` closest cells per query.
 
-    The 100 TB shape: centroids are trained on a SAMPLE (kmeans over the
-    full corpus is unnecessary — cells only need to partition space),
+    The 100 TB shape: centroids are trained on a SAMPLE (_train_cells),
     the corpus is assigned once (narrow map vs a broadcast centroid
     table), and each query scans ~nprobe/num_centroids of the corpus.
     Recall rises with nprobe; nprobe == num_centroids degenerates to
     brute force. Deterministic for a fixed seed.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    # count the raw input (metadata-only for parquet) BEFORE spread():
-    # counting through the repartition would execute the exchange.
-    n_corpus = corpus.count()
-    raw_corpus = corpus
-    corpus = spread(corpus)
-    with_vec = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("_v"),
+    model = _train_cells(corpus, num_centroids, vec_col, seed, max_iter)
+    with_vec = spread(corpus).select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"), _features(vec_col)
     )
-    # cells only partition space — a few Lloyd iterations suffice; full
-    # convergence buys recall nothing nprobe doesn't buy cheaper. Train
-    # on a seeded sample: every Lloyd iteration is a full pass over the
-    # train set, and a few thousand points pin 16 cells as well as the
-    # whole corpus would (at 100 TB a full-corpus fit is off the table).
-    # Train lineage deliberately bypasses spread(): kmeans|| init plus
-    # every Lloyd pass re-evaluates its input, and the sample is a few
-    # thousand points — one partition straight off the raw scan turns
-    # each of those ~10 internal jobs into a single task.
-    target = max(num_centroids * 128, 2048)
-    frac = min(1.0, target / max(n_corpus, 1))
-    sampled = raw_corpus if frac >= 1.0 else raw_corpus.sample(False, frac, seed)
-    train = sampled.select(
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("_v")
-    ).coalesce(1)
-    # random init: kmeans|| spends ~5 extra passes buying convergence
-    # speed that coarse cells don't need
-    km = KMeans(
-        k=num_centroids, seed=seed, maxIter=max_iter, initMode="random",
-        featuresCol="_v", predictionCol="cell",
-    )
-    model = km.fit(train)
     c = model.transform(with_vec).select(
         "neighbor_id", "cv", F.col("cell"), _norm(F.col("cv")).alias("cn")
     )
@@ -380,47 +558,13 @@ def ivf_topk(
     # CONSTANTS, so inline them as a literal array-of-structs and explode
     # — no createDataFrame round-trip, no broadcast exchange.
     cent_lit = centroid_struct_literal(model.clusterCenters())
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        _norm(F.col(vec_col)).alias("qn"),
+    pairs = _side(queries, id_col, vec_col, _Q).select(
+        *_Q, F.explode(cent_lit).alias("_c")
+    ).select(
+        *_Q, F.col("_c.cell").alias("cell"), F.col("_c.centroid").alias("centroid")
     )
-    q_cells = (
-        q.select("query_id", "qv", "qn", F.explode(cent_lit).alias("_c"))
-        .select("query_id", "qv", "qn", F.col("_c.cell").alias("cell"), F.col("_c.centroid").alias("centroid"))
-        .withColumn(
-            "dist2",
-            F.aggregate(
-                F.zip_with(
-                    "qv", "centroid", lambda a, b: (a.cast("double") - b) * (a.cast("double") - b)
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-        )
-        .withColumn(
-            "cell_rank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(F.asc("dist2"), F.asc("cell"))
-            ),
-        )
-        .filter(F.col("cell_rank") <= nprobe)
-        .select("query_id", "qv", "qn", "cell")
-    )
-
-    scored = (
-        c.join(F.broadcast(q_cells), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    q_cells = _relation_probe(pairs, "query_id", "qv", _Q, nprobe)
+    return _cosine_topk(_scored(c.join(F.broadcast(q_cells), "cell"), _cos_sim()), k)
 
 
 def ivf_fixed_topk(
@@ -439,83 +583,20 @@ def ivf_fixed_topk(
     then served as plan literals, exactly like sign-LSH serves
     _plane_weights; nothing is trained per query.
 
-    Plan shape: corpus cell assignment is a NARROW map — argmin over the
-    inlined centroid literals via array_min of (dist2, cell) structs
-    (struct ordering = field order, so ties break to the smaller cell
-    deterministically) — no explode, no window, no shuffle. The query
-    side sorts the same literal array and keeps the nprobe closest
-    cells, then broadcasts onto the assigned corpus; exact cosine +
-    per-query top-k (the only shuffle, keyed by query id) finish it.
-    Unlike the kmeans twin (ivf_topk), every arithmetic step here is
+    Plan shape: corpus cell assignment is a NARROW map (_literal_cell);
+    the query side keeps its nprobe closest literal cells
+    (_literal_probe) and broadcasts onto the assigned corpus. Unlike
+    the kmeans twin (ivf_topk), every arithmetic step here is
     expressible in ANSI SQL over the same literals, which is what makes
     the ivf_cosine_topk query value-oracle-checkable."""
     cent_lit = centroid_struct_literal(centroids)
-
-    def d2(vec, cent):
-        return F.aggregate(
-            F.zip_with(
-                vec, cent, lambda a, b: (a.cast("double") - b) * (a.cast("double") - b)
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    assigned = spread(corpus).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        _norm(F.col(vec_col)).alias("cn"),
-    ).withColumn(
-        "cell",
-        F.array_min(
-            F.transform(
-                cent_lit,
-                lambda c: F.struct(
-                    d2(F.col("cv"), c["centroid"]).alias("d2"),
-                    c["cell"].alias("cell"),
-                ),
-            )
-        )["cell"],
+    assigned = _side(spread(corpus), id_col, vec_col, _C).withColumn(
+        "cell", _literal_cell(F.col("cv"), cent_lit)
     )
-
-    q_cells = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-            _norm(F.col(vec_col)).alias("qn"),
-        )
-        .withColumn(
-            "probed",
-            F.slice(
-                F.array_sort(
-                    F.transform(
-                        cent_lit,
-                        lambda c: F.struct(
-                            d2(F.col("qv"), c["centroid"]).alias("d2"),
-                            c["cell"].alias("cell"),
-                        ),
-                    )
-                ),
-                1,
-                nprobe,
-            ),
-        )
-        .select("query_id", "qv", "qn", F.explode("probed").alias("_p"))
-        .select("query_id", "qv", "qn", F.col("_p.cell").alias("cell"))
+    q_cells = _literal_probe(_side(queries, id_col, vec_col, _Q), cent_lit, nprobe, _Q)
+    return _cosine_topk(
+        _scored(assigned.join(F.broadcast(q_cells), "cell"), _cos_sim()), k
     )
-
-    scored = (
-        assigned.join(F.broadcast(q_cells), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def _codebook_frame(spark, codebooks: list[list[list[float]]]) -> DataFrame:
@@ -558,6 +639,16 @@ def _unrolled_d2(sv, ctr, dsub: int):
     return s
 
 
+def _book_rows(df: DataFrame, codebooks, vec_col: str, id_col: str) -> DataFrame:
+    """(_pq_id, j, sv, _book): every row's subvectors joined to the
+    16-row per-subspace book relation — the shared grain of pq_encode
+    and pq_residuals."""
+    m, dsub = len(codebooks), len(codebooks[0][0])
+    return _subvectors(df, id_col, "_pq_id", vec_col, m, dsub).join(
+        F.broadcast(_books_frame(df.sparkSession, codebooks)), "j"
+    )
+
+
 def pq_encode(
     df: DataFrame,
     codebooks: list[list[list[float]]],
@@ -575,8 +666,8 @@ def pq_encode(
     subvectors, broadcast-join the 16-row per-subspace book relation
     (_books_frame — see it for why a join beats an inlined literal),
     and take the per-(row, subspace) argmin as a NARROW MAP — array_min
-    of KSUB small unrolled-d2 structs, ivf_fixed_topk's cell-assign
-    discipline. The previous form (broadcast-join the M x KSUB
+    of KSUB small unrolled-d2 structs, _literal_cell's discipline. The
+    previous form (broadcast-join the M x KSUB
     relation, then min(struct) over the KSUB-times-larger grain)
     planned the argmin as a SortAggregate — min over a struct has no
     mutable agg buffer, so Spark SORTS the exploded grain: at 200k
@@ -602,14 +693,9 @@ def pq_encode(
 
     ``id_col`` must be a unique row key — codes are computed at
     (id, subspace) grain and joined back onto ``df``."""
-    m, dsub, ksub = len(codebooks), len(codebooks[0][0]), len(codebooks[0])
+    dsub, ksub = len(codebooks[0][0]), len(codebooks[0])
 
-    sub = df.select(
-        F.col(id_col).alias("_pq_id"),
-        F.posexplode(
-            F.array(*[F.slice(F.col(vec_col), j * dsub + 1, dsub) for j in range(m)])
-        ).alias("j", "sv"),
-    ).join(F.broadcast(_books_frame(df.sparkSession, codebooks)), "j")
+    sub = _book_rows(df, codebooks, vec_col, id_col)
     entries = [
         F.struct(
             _unrolled_d2(
@@ -645,12 +731,7 @@ def _pq_query_tables(
     two ordered collects. Returns (out_id, tables)."""
     m, dsub = len(codebooks), len(codebooks[0][0])
     cb = _codebook_frame(queries.sparkSession, codebooks)
-    qsub = queries.select(
-        F.col(id_col).alias(out_id),
-        F.posexplode(
-            F.array(*[F.slice(F.col(vec_col), j * dsub + 1, dsub) for j in range(m)])
-        ).alias("j", "sv"),
-    )
+    qsub = _subvectors(queries, id_col, out_id, vec_col, m, dsub)
     dp = F.lit(0.0)
     for t in range(dsub):
         dp = dp + F.col("sv").getItem(t).cast("double") * F.col("ctr").getItem(t)
@@ -664,6 +745,18 @@ def _pq_query_tables(
         F.transform(
             F.array_sort(F.collect_list(F.struct("j", "tj"))), lambda x: x["tj"]
         ).alias("tables")
+    )
+
+
+def _coded_corpus(corpus: DataFrame, codebooks, id_col: str, vec_col: str) -> DataFrame:
+    # (neighbor_id, cv, codes): the in-plan stand-in for the stored
+    # index column (at real scale this frame IS the persisted index,
+    # see ivf_index_adc_topk)
+    return pq_encode(
+        _side(spread(corpus), id_col, vec_col, _C[:2]),
+        codebooks,
+        vec_col="cv",
+        id_col="neighbor_id",
     )
 
 
@@ -681,105 +774,30 @@ def pq_fixed_topk(
     and IVF probing, and the MEMORY answer at 100 TB — the hot scan
     touches only M=16 4-bit codes per vector, never the floats.
 
-    Phases (all JVM-side; the corpus-side encode broadcast-joins the
-    16-row per-subspace book relation — literal inlining was rejected,
-    see _books_frame's CollapseProject note — and the query-side table
-    builder broadcasts the same M x KSUB relation; see pq_encode for
-    the codegen/spill tradeoffs):
-      1. encode — pq_encode's narrow-map argmin (offline at real
-         scale; in this one-plan demo it runs as its own staged
-         subplan);
-      2. ADC scan — each query precomputes an M x KSUB lookup table
-         (_pq_query_tables: dot of its j-th subvector with every
-         codebook entry, summed in index order) plus a shared literal
-         table of entry norms; a corpus row's approximate cosine is
-         then M table lookups (an unrolled j-ordered fold over its
-         codes), no per-pair float math. Queries are broadcast (small
-         by contract); per-query shortlist of ``shortlist`` by
-         (score desc, id) is the only shuffle, keyed by query id;
-      3. exact re-rank — the shortlist (Q x shortlist rows, tiny) is
-         broadcast back onto the corpus to fetch TRUE vectors for the
-         survivors only; exact cosine, top-``k``. Final scores are
-         exact, so approximation affects WHICH candidates are ranked,
-         never the reported similarity.
-
-    Every arithmetic step folds in index order over the same literals
-    the DuckDB oracle replays, so pq_adc_topk is value-checked
+    The corpus is encoded by pq_encode (offline at real scale), each
+    query builds its M x KSUB lookup table (_pq_query_tables), and the
+    tables broadcast KEYLESSLY onto every code row; _adc_topk finishes
+    it. Every arithmetic step folds in index order over the same
+    literals the DuckDB oracle replays, so pq_adc_topk is value-checked
     end-to-end (same discipline as _ivf_oracle_sql)."""
-    m = len(codebooks)
-
-    # literal M x KSUB table of codebook-entry squared norms, folded in
-    # index order (matches the oracle's list_sum over list_transform)
-    norms_lit = norms_matrix_literal(codebooks)
-
     # NEITHER join input is staged (round 11): each feeds exactly ONE
     # consumer (codes -> the ADC scan join, tables -> its broadcast), so
     # materializing them bought nothing and cost a localCheckpoint pass
     # each — inlining both subplans into the one AQE query measured
     # ~0.4-1.2 s faster per serving query at sf0.1 (median of 5,
-    # interleaved), results byte-identical. At real scale the codes
-    # frame isn't even computed here: it is the stored index column
-    # (ivf_index_adc_topk's layout).
-    coded = pq_encode(
-        spread(corpus).select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-        ),
-        codebooks,
-        vec_col="cv",
-        id_col="neighbor_id",
-    ).select("neighbor_id", "codes")
+    # interleaved), results byte-identical.
+    coded = _coded_corpus(corpus, codebooks, id_col, vec_col).select(
+        "neighbor_id", "codes"
+    )
     q_tabs = _pq_query_tables(queries, codebooks, id_col, vec_col)
-
-    def lut(tabs):  # unrolled M-term fold in j order (= aggregate's)
-        s = F.lit(0.0)
-        for j in range(m):
-            s = s + F.element_at(
-                F.element_at(tabs, j + 1), F.col("codes").getItem(j) + 1
-            )
-        return s
-
-    adc = (
-        coded.join(F.broadcast(q_tabs))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                lut(F.col("tables"))
-                / F.sqrt(F.greatest(lut(norms_lit), F.lit(1e-12)))
-            ).alias("score"),
-        )
+    return _adc_topk(
+        coded.join(F.broadcast(q_tabs)),
+        codebooks,
+        shortlist,
+        _side(corpus, id_col, vec_col, _C),
+        _side(queries, id_col, vec_col, _Q),
+        k,
     )
-    ws = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    short = (
-        adc.withColumn("rn", F.row_number().over(ws))
-        .filter(F.col("rn") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
-
-    cvec = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        _norm(F.col(vec_col)).alias("cn"),
-    )
-    qvec = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        _norm(F.col(vec_col)).alias("qn"),
-    )
-    rer = (
-        cvec.join(F.broadcast(short), "neighbor_id")
-        .join(F.broadcast(qvec), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6
-            ).alias("cos_sim"),
-        )
-    )
-    wk = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return rer.withColumn("rank", F.row_number().over(wk)).filter(F.col("rank") <= k)
 
 
 def ivfpq_fixed_topk(
@@ -801,134 +819,34 @@ def ivfpq_fixed_topk(
     at 8 bytes per row — both prunings compound, which is why this is
     the shape billion-vector deployments actually run.
 
-    Plan: cell assignment is a narrow map over the centroid literals;
-    PQ encode is pq_encode's staged relational argmin; the probed-cells
-    x ADC-tables query frame is broadcast and joined BY CELL (a keyed
-    BroadcastHashJoin — compare pq_fixed_topk's keyless scan of
-    everything); per-query shortlist window, then the tiny shortlist
-    broadcasts back to fetch true vectors for the exact cosine
-    re-rank. Deterministic end to end
-    over the same frozen literals the DuckDB twin replays
-    (_ivfpq_oracle_sql), so the query is value-checked, not
-    recall-checked."""
-    m = len(codebooks)
-
+    The probed-cells x ADC-tables query frame is broadcast and joined
+    BY CELL (a keyed BroadcastHashJoin — compare pq_fixed_topk's
+    keyless scan of everything). Deterministic end to end over the same
+    frozen literals the DuckDB twin replays (_ivfpq_oracle_sql), so the
+    query is value-checked, not recall-checked."""
     cent_lit = centroid_struct_literal(centroids)
-
-    def d2(vec, cent):
-        return F.aggregate(
-            F.zip_with(
-                vec, cent, lambda a, b: (a.cast("double") - b) * (a.cast("double") - b)
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    norms_lit = norms_matrix_literal(codebooks)
-
     # the encode subplan and the probed+tables subplan each feed ONE
-    # consumer (the cell join / its broadcast), so neither is staged
-    # (round 11 — see pq_fixed_topk's note: inlining the single-use
-    # subplans into one AQE query beat the localCheckpoint passes by
-    # ~0.5-0.9 s per query at sf0.1, results byte-identical; at real
-    # scale this frame IS the persisted index — see ivf_index_adc_topk)
-    coded = pq_encode(
-        spread(corpus).select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-        ),
-        codebooks,
-        vec_col="cv",
-        id_col="neighbor_id",
-    ).withColumn(
-        "cell",
-        F.array_min(
-            F.transform(
-                cent_lit,
-                lambda c: F.struct(
-                    d2(F.col("cv"), c["centroid"]).alias("d2"),
-                    c["cell"].alias("cell"),
-                ),
-            )
-        )["cell"],
-    ).select("neighbor_id", "cell", "codes")
-
-    q_probe = (
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-        )
-        .withColumn(
-            "probed",
-            F.slice(
-                F.array_sort(
-                    F.transform(
-                        cent_lit,
-                        lambda c: F.struct(
-                            d2(F.col("qv"), c["centroid"]).alias("d2"),
-                            c["cell"].alias("cell"),
-                        ),
-                    )
-                ),
-                1,
-                nprobe,
-            ),
-        )
-        .select("query_id", F.explode("probed").alias("_p"))
-        .select("query_id", F.col("_p.cell").alias("cell"))
+    # consumer, so neither is staged (round 11, see pq_fixed_topk:
+    # ~0.5-0.9 s per query at sf0.1, results byte-identical)
+    coded = (
+        _coded_corpus(corpus, codebooks, id_col, vec_col)
+        .withColumn("cell", _literal_cell(F.col("cv"), cent_lit))
+        .select("neighbor_id", "cell", "codes")
+    )
+    q_probe = _literal_probe(
+        _side(queries, id_col, vec_col, _Q[:2]), cent_lit, nprobe, _Q[:1]
     )
     q_side = q_probe.join(
         _pq_query_tables(queries, codebooks, id_col, vec_col), "query_id"
     )
-
-    def lut(tabs):  # unrolled M-term fold in j order (= aggregate's)
-        s = F.lit(0.0)
-        for j in range(m):
-            s = s + F.element_at(
-                F.element_at(tabs, j + 1), F.col("codes").getItem(j) + 1
-            )
-        return s
-
-    adc = (
-        coded.join(F.broadcast(q_side), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                lut(F.col("tables"))
-                / F.sqrt(F.greatest(lut(norms_lit), F.lit(1e-12)))
-            ).alias("score"),
-        )
+    return _adc_topk(
+        coded.join(F.broadcast(q_side), "cell"),
+        codebooks,
+        shortlist,
+        _side(corpus, id_col, vec_col, _C),
+        _side(queries, id_col, vec_col, _Q),
+        k,
     )
-    ws = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    short = (
-        adc.withColumn("rn", F.row_number().over(ws))
-        .filter(F.col("rn") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
-
-    cvec = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        _norm(F.col(vec_col)).alias("cn"),
-    )
-    qvec = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        _norm(F.col(vec_col)).alias("qn"),
-    )
-    rer = (
-        cvec.join(F.broadcast(short), "neighbor_id")
-        .join(F.broadcast(qvec), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6
-            ).alias("cos_sim"),
-        )
-    )
-    wk = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return rer.withColumn("rank", F.row_number().over(wk)).filter(F.col("rank") <= k)
 
 
 def _band_structs(projs_col, planes_per_band: int, num_bands: int):
@@ -1019,24 +937,10 @@ def lsh_bucketed_topk(
 
     c = sided(spread(corpus), "neighbor_id", "cv", "cn")
     q = sided(queries, "query_id", "qv", "qn")
-    scored = (
-        c.join(F.broadcast(q), ["band_idx", "band_key"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6
-            ).alias("cos_sim"),
-        )
-        .distinct()  # a pair sharing m bands scores m identical rows
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    scored = _scored(
+        c.join(F.broadcast(q), ["band_idx", "band_key"]), _cos_sim()
+    ).distinct()  # a pair sharing m bands scores m identical rows
+    return _cosine_topk(scored, k)
 
 
 def quantize_embeddings(
@@ -1092,9 +996,9 @@ def build_ivf_index(
     codebooks: list[list[list[float]]] | None = None,
     health_sample_mod: int = 1,
 ) -> None:
-    """Materialize an IVF index: train the coarse quantizer (sampled
-    kmeans, same recipe as ivf_topk), assign every corpus vector to its
-    cell ONCE, and write
+    """Materialize an IVF index: train the coarse quantizer
+    (_train_cells), assign every corpus vector to its cell ONCE, and
+    write
 
       {path}/centroids/  — (cell, centroid array<double>) — tiny
       {path}/cells/      — pointer-committed generation store (round 7,
@@ -1120,22 +1024,8 @@ def build_ivf_index(
     streaming_ivf_append); probes ignore the level entirely."""
     import os
 
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
     spark = corpus.sparkSession
-    n_corpus = corpus.count()
-    target = max(num_centroids * 128, 2048)
-    frac = min(1.0, target / max(n_corpus, 1))
-    sampled = corpus if frac >= 1.0 else corpus.sample(False, frac, seed)
-    train = sampled.select(
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("_v")
-    ).coalesce(1)
-    km = KMeans(
-        k=num_centroids, seed=seed, maxIter=max_iter, initMode="random",
-        featuresCol="_v", predictionCol="cell",
-    )
-    model = km.fit(train)
+    model = _train_cells(corpus, num_centroids, vec_col, seed, max_iter)
 
     cent_rows = [
         (i, [float(x) for x in ctr]) for i, ctr in enumerate(model.clusterCenters())
@@ -1148,7 +1038,7 @@ def build_ivf_index(
         spread(corpus).select(
             F.col(id_col).alias("vec_id"),
             F.col(vec_col).alias("embedding"),
-            array_to_vector(F.col(vec_col).cast("array<double>")).alias("_v"),
+            _features(vec_col),
         )
     ).select(
         "vec_id",
@@ -1164,16 +1054,9 @@ def build_ivf_index(
         # codes — the 8-byte column the ADC scan reads INSTEAD of the
         # embedding column, which parquet then never decodes on the
         # scan path (column pruning, plan-tested)
-        cb_rows = [
-            (j, c, [float(x) for x in ctr])
-            for j, book in enumerate(codebooks)
-            for c, ctr in enumerate(book)
-        ]
-        spark.createDataFrame(
-            cb_rows, "j INT, c INT, ctr ARRAY<DOUBLE>"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(path, "codebooks")
-        )
+        _codebook_frame(spark, codebooks).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(path, "codebooks"))
         assigned = pq_encode(assigned, codebooks, vec_col="embedding")
 
     # the cells dir is a pointer-committed generation store (round 7,
@@ -1198,6 +1081,20 @@ def build_ivf_index(
         )
 
 
+def _index_cells(spark, path: str) -> DataFrame:
+    """The live cells generation of a persisted IVF index."""
+    import os
+
+    from .signature_store import _read_store
+
+    cells = _read_store(spark, os.path.join(path, "cells"))
+    if cells is None:
+        raise FileNotFoundError(
+            f"IVF index {path} has no committed cells generation"
+        )
+    return cells
+
+
 def ivf_index_topk(
     spark,
     path: str,
@@ -1213,60 +1110,19 @@ def ivf_index_topk(
     DYNAMIC PARTITION PRUNING restricts the scan to the probed cell
     directories — the fraction of the index read per batch is
     nprobe/num_centroids regardless of corpus size, enforced by the
-    storage layout rather than a filter over a full scan. Exact cosine
-    re-rank inside the probed cells; returns (query_id, neighbor_id,
-    cos_sim, rank)."""
+    storage layout rather than a filter over a full scan. Returns
+    (query_id, neighbor_id, cos_sim, rank)."""
     import os
 
     cents = spark.read.parquet(os.path.join(path, "centroids"))
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        _norm(F.col(vec_col)).alias("qn"),
+    q = _side(queries, id_col, vec_col, _Q)
+    q_cells = _relation_probe(q.join(F.broadcast(cents)), "query_id", "qv", _Q, nprobe)
+    scored = _scored(
+        _index_cells(spark, path).join(F.broadcast(q_cells), "cell"),
+        _cos_sim("embedding", "norm"),
+        "vec_id",
     )
-    q_cells = (
-        q.join(F.broadcast(cents))
-        .withColumn(
-            "dist2",
-            F.aggregate(
-                F.zip_with(
-                    "qv", "centroid",
-                    lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-        )
-        .withColumn(
-            "cell_rank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(F.asc("dist2"), F.asc("cell"))
-            ),
-        )
-        .filter(F.col("cell_rank") <= nprobe)
-        .select("query_id", "qv", "qn", "cell")
-    )
-    from .signature_store import _read_store
-
-    cells = _read_store(spark, os.path.join(path, "cells"))
-    if cells is None:
-        raise FileNotFoundError(
-            f"IVF index {path} has no committed cells generation"
-        )
-    scored = (
-        cells.join(F.broadcast(q_cells), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(
-                _dot(F.col("qv"), F.col("embedding")) / (F.col("qn") * F.col("norm")),
-                6,
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _cosine_topk(scored, k)
 
 
 def _read_index_codebooks(spark, path: str) -> list[list[list[float]]] | None:
@@ -1302,9 +1158,10 @@ def ivf_index_append(
 ) -> int:
     """Append a vector batch to a persisted IVF index WITHOUT
     retraining or rewriting history: assign each new vector to its
-    nearest EXISTING centroid (broadcast distance argmin — the exact
-    ranking expression the probes use, so assignment and probing can
-    never disagree on a cell boundary) and land the rows under the
+    nearest EXISTING centroid (broadcast distance argmin — the relation
+    probe's own window, so assignment and probing can never disagree on
+    a cell boundary; tests/test_operators.py checks it against the
+    literal form too) and land the rows under the
     batch's (cell, batch_id) partitions. The coarse quantizer is
     FROZEN — the standard IVF ingestion trade: cells drift as the
     vector distribution shifts, which is monitored (cell-size skew)
@@ -1320,7 +1177,8 @@ def ivf_index_append(
     (cell, batch_id) leaves instead of double-appending vectors: the
     same exactly-once contract as append_signature_batch and the
     sketch store. ``batch_id=None`` appends under the next sequential
-    id. Returns the batch_id used.
+    id, read from the (cell, batch_id) directory names — no Spark job.
+    Returns the batch_id used.
 
     If the index was built WITH PQ codebooks ({path}/codebooks
     present), the batch's codes are computed here with those exact
@@ -1329,39 +1187,16 @@ def ivf_index_append(
     import os
 
     cents = spark.read.parquet(os.path.join(path, "centroids"))
-    staged = spread(new_vectors).select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("embedding"),
-        _norm(F.col(vec_col)).alias("norm"),
-    )
-    assigned = (
-        staged.join(F.broadcast(cents))
-        .withColumn(
-            "dist2",
-            F.aggregate(
-                F.zip_with(
-                    "embedding",
-                    "centroid",
-                    lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-        )
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy("vec_id").orderBy(F.asc("dist2"), F.asc("cell"))
-            ),
-        )
-        .filter(F.col("_rn") == 1)
-        .select("vec_id", "embedding", "norm", "cell")
+    row = ("vec_id", "embedding", "norm")
+    staged = _side(spread(new_vectors), id_col, vec_col, row)
+    assigned = _relation_probe(
+        staged.join(F.broadcast(cents)), "vec_id", "embedding", row
     )
     books = _read_index_codebooks(spark, path)
     if books is not None:
         assigned = pq_encode(assigned, books, vec_col="embedding")
     from . import store_fs
-    from .signature_store import _read_store, ensure_no_orphan_generation
+    from .signature_store import ensure_no_orphan_generation
 
     cells_base = os.path.join(path, "cells")
     ensure_no_orphan_generation(cells_base)
@@ -1372,12 +1207,17 @@ def ivf_index_append(
             "build_ivf_index first (appends never implicitly create an index)"
         )
     if batch_id is None:
-        prev = (
-            _read_store(spark, cells_base)
-            .agg(F.max("batch_id"))
-            .collect()[0][0]
+        # the max batch_id over every cell's partition directories: a
+        # listing, where reading the index's batch_id column is a scan
+        # of the whole index (see store_fs.max_partition_value for
+        # equivalence)
+        ids = (
+            store_fs.max_partition_value(store_fs.join(root, d), "batch_id")
+            for d in store_fs.list_subdirs(root)
+            if d.startswith("cell=")
         )
-        bid = 0 if prev is None else int(prev) + 1
+        prev = max((v for v in ids if v is not None), default=None)
+        bid = 0 if prev is None else prev + 1
     else:
         bid = int(batch_id)
     assigned = assigned.withColumn("batch_id", F.lit(bid).cast("int"))
@@ -1418,12 +1258,11 @@ def ivf_index_adc_topk(
     (vec_id, cell, codes) — parquet never decodes the embedding column
     on the hot path (column pruning + the partition pruning the cell
     layout already enforces: nprobe/num_cells of the index at ~8 bytes
-    per row) — scores by ADC over the index's OWN codebooks
+    per row) — and scores by ADC over the index's OWN codebooks
     (read back as plan literals via _read_index_codebooks, so the
-    probe can never drift from what appends encoded), shortlists per
-    query, and re-ranks exactly by fetching true vectors for the
-    shortlist ids alone. The in-plan twin is ivfpq_fixed_topk; this is
-    the same math over the persisted layout, equivalence-tested."""
+    probe can never drift from what appends encoded). The in-plan twin
+    is ivfpq_fixed_topk; this is the same math over the persisted
+    layout, equivalence-tested."""
     import os
 
     books = _read_index_codebooks(spark, path)
@@ -1432,106 +1271,31 @@ def ivf_index_adc_topk(
             f"IVF index {path} carries no PQ codebooks — build_ivf_index"
             " with codebooks=... first (or probe with ivf_index_topk)"
         )
-    m = len(books)
-
     cents = spark.read.parquet(os.path.join(path, "centroids"))
-
-    norms_lit = norms_matrix_literal(books)
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
+    q_cells = _relation_probe(
+        _side(queries, id_col, vec_col, _Q[:2]).join(F.broadcast(cents)),
+        "query_id", "qv", _Q[:1], nprobe,
     )
-    q_cells = (
-        q.join(F.broadcast(cents))
-        .withColumn(
-            "dist2",
-            F.aggregate(
-                F.zip_with(
-                    "qv", "centroid",
-                    lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-        )
-        .withColumn(
-            "cell_rank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(F.asc("dist2"), F.asc("cell"))
-            ),
-        )
-        .filter(F.col("cell_rank") <= nprobe)
-        .select("query_id", "cell")
+    # the probe + tables subplan feeds ONE consumer (the ADC join's
+    # broadcast), so staging it would only add a job
+    q_side = q_cells.join(
+        _pq_query_tables(queries, books, id_col, vec_col), "query_id"
     )
-    from ..staging import stage
-
-    # barrier: the probe + relational-tables subplan runs once and
-    # broadcasts; the codes side needs none — it is parquet, already
-    # data
-    q_cells = stage(
-        q_cells.join(
-            _pq_query_tables(queries, books, id_col, vec_col), "query_id"
-        )
+    cells = _index_cells(spark, path)
+    vectors = cells.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv"),
+        F.col("norm").alias("cn"),
     )
-
-    from .signature_store import _read_store
-
-    cells = _read_store(spark, os.path.join(path, "cells"))
-    if cells is None:
-        raise FileNotFoundError(
-            f"IVF index {path} has no committed cells generation"
-        )
-
-    def lut(tabs):  # unrolled M-term fold in j order (= aggregate's)
-        s = F.lit(0.0)
-        for j in range(m):
-            s = s + F.element_at(
-                F.element_at(tabs, j + 1), F.col("codes").getItem(j) + 1
-            )
-        return s
-
-    adc = (
+    return _adc_topk(
         cells.select("vec_id", "cell", "codes")  # embedding col PRUNED
-        .join(F.broadcast(q_cells), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (
-                lut(F.col("tables"))
-                / F.sqrt(F.greatest(lut(norms_lit), F.lit(1e-12)))
-            ).alias("score"),
-        )
+        .join(F.broadcast(q_side), "cell"),
+        books,
+        shortlist,
+        vectors,
+        _side(queries, id_col, vec_col, _Q),
+        k,
+        nid="vec_id",
     )
-    ws = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    short = (
-        adc.withColumn("rn", F.row_number().over(ws))
-        .filter(F.col("rn") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
-
-    qn = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        _norm(F.col(vec_col)).alias("qn"),
-    )
-    rer = (
-        cells.select(
-            F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv"),
-            F.col("norm").alias("cn"),
-        )
-        .join(F.broadcast(short), "neighbor_id")
-        .join(F.broadcast(qn), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6
-            ).alias("cos_sim"),
-        )
-    )
-    wk = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return rer.withColumn("rank", F.row_number().over(wk)).filter(F.col("rank") <= k)
 
 
 def compact_ivf_cells(spark, path: str) -> int:
@@ -1638,18 +1402,7 @@ def pq_residuals(
     for t in range(dsub):
         sv_t = F.col("sv").getItem(t).cast("double")
         sv2 = sv2 + sv_t * sv_t
-    sub = (
-        df.select(
-            F.col(id_col).alias("_pq_id"),
-            F.posexplode(
-                F.array(
-                    *[F.slice(F.col(vec_col), j * dsub + 1, dsub) for j in range(m)]
-                )
-            ).alias("j", "sv"),
-        )
-        .join(F.broadcast(_books_frame(df.sparkSession, codebooks)), "j")
-        .withColumn("_sv2", sv2)
-    )
+    sub = _book_rows(df, codebooks, vec_col, id_col).withColumn("_sv2", sv2)
 
     def entry(c: int):
         ctr = F.element_at(F.col("_book"), c + 1)

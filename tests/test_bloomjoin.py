@@ -235,82 +235,3 @@ def test_internal_names_do_not_collide_with_probe_columns(spark):
     )
     assert bad.count() == 0
 
-
-# ---- bloom_split: the LEFT ANTI exchange-bypass form (round 11) ----
-
-
-def test_bloom_split_partitions_probe_exactly(spark):
-    """neg + maybe is a PARTITION of probe (multiplicity-exact), neg
-    carries no build key (false negatives impossible), and the bypass
-    identity holds: neg UNION (maybe ANTI build) == probe ANTI build."""
-    from pulsar_internal_spark.operators.bloomjoin import bloom_split
-
-    probe, build = _probe(spark), _build(spark)
-    neg, maybe = bloom_split(probe, build, ["k1", "k2"], ["b1", "b2"])
-    assert neg.columns == probe.columns == maybe.columns
-    both = neg.unionByName(maybe)
-    assert both.exceptAll(probe).count() == 0
-    assert probe.exceptAll(both).count() == 0
-    # no false negatives: nothing in neg matches a build key
-    assert (
-        neg.join(
-            build, (neg.k1 == build.b1) & (neg.k2 == build.b2), "left_semi"
-        ).count()
-        == 0
-    )
-    exact_anti = probe.join(
-        build, (probe.k1 == build.b1) & (probe.k2 == build.b2), "left_anti"
-    )
-    via_bypass = neg.unionByName(
-        maybe.join(
-            build, (maybe.k1 == build.b1) & (maybe.k2 == build.b2), "left_anti"
-        )
-    )
-    assert exact_anti.exceptAll(via_bypass).count() == 0
-    assert via_bypass.exceptAll(exact_anti).count() == 0
-
-
-def test_bloom_split_disabled_is_degenerate(spark):
-    from pulsar_internal_spark.operators.bloomjoin import bloom_split
-
-    probe, build = _probe(spark), _build(spark)
-    neg, maybe = bloom_split(
-        probe, build, ["k1", "k2"], ["b1", "b2"], bits_per_key=0
-    )
-    assert neg.count() == 0
-    assert maybe.exceptAll(probe).count() == 0
-    assert probe.exceptAll(maybe).count() == 0
-
-
-def test_bloom_split_prediistinct_build_and_nkeys_upper_bound(spark):
-    """Duplicate build keys and an n_keys overestimate must not change
-    the contract — bit_or is idempotent and a larger bitmap only lowers
-    the FPR (the scrub caller passes a pre-distinct covered-position
-    lineage with an occurrences*k sizing bound)."""
-    from pulsar_internal_spark.operators.bloomjoin import bloom_split
-
-    probe = _probe(spark)
-    dup_build = _build(spark).unionByName(_build(spark))  # every key twice
-    neg, maybe = bloom_split(
-        probe, dup_build, ["k1", "k2"], ["b1", "b2"], n_keys=10_000_000
-    )
-    assert (
-        neg.join(
-            dup_build,
-            (neg.k1 == dup_build.b1) & (neg.k2 == dup_build.b2),
-            "left_semi",
-        ).count()
-        == 0
-    )
-    both = neg.unionByName(maybe)
-    assert both.exceptAll(probe).count() == 0
-    assert probe.exceptAll(both).count() == 0
-
-
-def test_bloom_split_type_mismatch_refused(spark):
-    from pulsar_internal_spark.operators.bloomjoin import bloom_split
-
-    probe = _probe(spark).withColumn("k1", F.col("k1").cast("int"))
-    build = _build(spark)
-    with pytest.raises(ValueError, match="type mismatch"):
-        bloom_split(probe, build, ["k1", "k2"], ["b1", "b2"])

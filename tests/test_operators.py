@@ -1270,6 +1270,64 @@ def test_ivf_recall_geometry_split(spark):
     assert r_clustered > r_random + 0.3, (r_clustered, r_random)
 
 
+@pytest.mark.parametrize("nprobe", [1, 3])
+def test_literal_and_relation_probes_pick_the_same_cells(spark, nprobe):
+    """The two IVF probe forms must pick the same (query_id, cell) sets:
+    the literal one (array_sort / array_min over centroid_struct_literal,
+    the frozen-quantizer serving path) and the relation one (row_number
+    over a joined centroid frame: ivf_topk, the persisted index's probes
+    and its appends). Their argmins agree too, so an index's assignment
+    and its probes never disagree on a cell boundary. Planted
+    equidistant ties go to the smaller cell in both forms."""
+    import numpy as np
+
+    from pulsar_internal_spark.operators import similarity as sim
+
+    # axis centroids: (1,0,0,0), (-1,0,0,0), (0,1,0,0), (0,-1,0,0), ...
+    cents = [[0.0] * 4 for _ in range(6)]
+    for i, (d, s) in enumerate([(0, 1), (0, -1), (1, 1), (1, -1), (2, 1), (3, 1)]):
+        cents[i][d] = float(s)
+    planted = {
+        # d2 = 0.5 to cells 0 and 2, 1.5 to cells 4 and 5, 2.5 to 1 and 3
+        1000: ([0.5, 0.5, 0.0, 0.0], {1: {0}, 3: {0, 2, 4}}),
+        # d2 = 0.5 to cells 1 and 3, 1.5 to cells 4 and 5, 2.5 to 0 and 2
+        1001: ([-0.5, -0.5, 0.0, 0.0], {1: {1}, 3: {1, 3, 4}}),
+        # d2 = 1 to every cell
+        1002: ([0.0, 0.0, 0.0, 0.0], {1: {0}, 3: {0, 1, 2}}),
+    }
+    rng = np.random.default_rng(5)
+    rows = [(int(i), [float(x) for x in v]) for i, v in enumerate(rng.normal(size=(40, 4)))]
+    rows += [(qid, v) for qid, (v, _) in planted.items()]
+    q = spark.createDataFrame(rows, "query_id long, qv array<float>")
+    cent_lit = sim.centroid_struct_literal(cents)
+    cent_df = spark.createDataFrame(
+        list(enumerate(cents)), "cell INT, centroid ARRAY<DOUBLE>"
+    )
+    pairs = q.join(F.broadcast(cent_df))
+
+    def cells(df):
+        got: dict[int, set[int]] = {}
+        for r in df.collect():
+            got.setdefault(r.query_id, set()).add(r.cell)
+        return got
+
+    literal = cells(sim._literal_probe(q, cent_lit, nprobe, ("query_id",)))
+    relation = cells(sim._relation_probe(pairs, "query_id", "qv", ("query_id",), nprobe))
+    assert literal == relation
+    assert len(literal) == len(rows) and all(len(c) == nprobe for c in literal.values())
+    for qid, (_, want) in planted.items():
+        assert literal[qid] == want[nprobe], (qid, literal[qid])
+
+    argmin_literal = cells(
+        q.select("query_id", sim._literal_cell(F.col("qv"), cent_lit).alias("cell"))
+    )
+    argmin_relation = cells(sim._relation_probe(pairs, "query_id", "qv", ("query_id",)))
+    assert argmin_literal == argmin_relation
+    assert {qid: c for qid, c in argmin_literal.items() if qid in planted} == {
+        qid: want[1] for qid, (_, want) in planted.items()
+    }
+
+
 def test_pq_adc_recall_planted_neighbors(spark):
     """PQ recall@5 gate (round 7, same planted-neighbor construction as
     the LSH/IVF gate): 20 base queries x 5 planted neighbors at tiered
@@ -2493,6 +2551,31 @@ def test_ivf_index_append_serves_new_vectors(spark, sf_dir, tmp_path):
     top = S.ivf_index_topk(spark, idx, queries, k=3, nprobe=3).collect()
     assert top and top[0].neighbor_id == probe_id, top[:3]
     assert math.isclose(top[0].cos_sim, 1.0, abs_tol=1e-4)
+
+
+def test_ivf_index_sequential_append_reads_batch_ids_from_listing(spark, tmp_path):
+    """``batch_id=None`` takes the next id from the (cell, batch_id)
+    directory names, not from a scan of the whole index: the append's
+    Spark jobs are pinned (centroid schema read, broadcast, the
+    assign-and-write stages; reading the index's batch_id column would
+    add a schema job and an aggregate), and the id follows the largest
+    batch in any cell, explicit ids included."""
+    import numpy as np
+
+    from tests.conftest import jobs_submitted
+
+    rng = np.random.default_rng(4)
+    rows = [(int(i), [float(x) for x in rng.normal(size=8)]) for i in range(60)]
+    df_a = spark.createDataFrame(rows[:30], "vec_id long, embedding array<float>")
+    df_b = spark.createDataFrame(rows[30:], "vec_id long, embedding array<float>")
+    idx = str(tmp_path / "ivf_seq")
+    sim.build_ivf_index(df_a, idx, num_centroids=4)
+
+    got = []
+    assert jobs_submitted(spark, lambda: got.append(sim.ivf_index_append(spark, df_b, idx))) == 4
+    assert got == [1]
+    assert sim.ivf_index_append(spark, df_b.limit(3), idx, batch_id=5) == 5
+    assert sim.ivf_index_append(spark, df_b.limit(3), idx) == 6
 
 
 def test_histogram_quantile_invariants(spark, sf_dir):

@@ -2,9 +2,10 @@
 """Regenerate pulsar_internal_spark/operators/ivf_frozen.py — the frozen
 IVF coarse-quantizer constants served by the ivf_cosine_topk query.
 
-Training recipe is ivf_topk's own (seeded, deterministic): pyspark.ml
-KMeans k=8 seed=42 maxIter=4 initMode=random over the sf0.01 embeddings
-(500 vectors — under ivf_topk's sample target, so the full table IS the
+Training is the engine's shared coarse-quantizer recipe
+(similarity._train_cells, seeded and deterministic: pyspark.ml KMeans
+k=8 seed=42 maxIter=4 initMode=random) over the sf0.01 embeddings (500
+vectors — under the recipe's sample target, so the full table IS the
 training sample). Run only if the embeddings fixture itself changes;
 the committed constants are otherwise stable by construction.
 """
@@ -19,23 +20,13 @@ sys.path.insert(0, REPO)
 
 
 def main() -> None:
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-    from pyspark.sql import functions as F
-
+    from pulsar_internal_spark.operators.similarity import _train_cells
     from pulsar_internal_spark.session import get_spark
 
     spark = get_spark(app_name="freeze_ivf_centroids")
     spark.sparkContext.setLogLevel("ERROR")
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    train = emb.select(
-        array_to_vector(F.col("embedding").cast("array<double>")).alias("_v")
-    ).coalesce(1)
-    km = KMeans(
-        k=8, seed=42, maxIter=4, initMode="random",
-        featuresCol="_v", predictionCol="cell",
-    )
-    model = km.fit(train)
+    model = _train_cells(emb, 8, "embedding", seed=42, max_iter=4)
     cents = [[round(float(x), 6) for x in c] for c in model.clusterCenters()]
 
     hdr = '''"""Frozen IVF coarse-quantizer centroids (VERDICT r6 #4).
