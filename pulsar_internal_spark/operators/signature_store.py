@@ -25,7 +25,9 @@ count at many batches and prunes nothing the join needs). Maintenance
 (compaction) writes the NEXT generation in full, then atomically
 replaces the pointer — directories are never renamed, the store path
 never transiently disappears, and on object stores the commit is one
-small PUT instead of a copy+delete dir rename (see store_fs).
+small PUT instead of a copy+delete dir rename. Every step of that
+protocol (append, read, compaction fold, expiry, the bucketed catalog
+append, the streaming sink step) lives in store_fs.
 
 Equivalence invariant (property-tested): for documents arriving in any
 batch split, the union over batches of ``candidates_for_batch`` equals
@@ -44,55 +46,21 @@ document lifetime (at append), never re-derived from text.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import store_fs
 from .dedup import banded_signatures
 
+# the store-maintenance primitives stay importable from here, the
+# signature store's public surface; they are defined in store_fs
+from .store_fs import (  # noqa: F401
+    ensure_no_orphan_generation,
+    maintenance_lease,
+    swap_in_generation,
+)
+
 STORE_SCHEMA = "id BIGINT, band_idx INT, band_key STRING, batch_id INT"
-
-
-def _read_store(spark: SparkSession, store_path: str) -> DataFrame | None:
-    """Read a generation store via its pointer: None = no committed
-    generation yet (first batch). A pointer that references a missing
-    directory is damage, not a fresh store — the read then fails
-    loudly instead of silently restarting batch numbering at 0."""
-    from . import store_fs
-
-    root = store_fs.resolve_current(store_path)
-    if root is None:
-        return None
-    return spark.read.parquet(root)
-
-
-def _begin_store_write(store_path: str) -> tuple[str, bool]:
-    """(directory the append writes parquet into, init?) for a
-    generation store. For an existing store this is the pointed
-    generation. For a FRESH store the write lands in gen-00000000 and
-    the caller commits the pointer with :func:`_commit_store_init`
-    only after the parquet write succeeds — so the pointer never
-    references an incomplete generation. A crashed first append
-    (gen-00000000 present, pointer never written) is REBUILT: its
-    caller never saw success, so by the replay contract the batch
-    comes again; stacking onto the leftover would double its rows.
-    ensure_no_orphan_generation (called by appenders first) has
-    already refused any other pointerless-generation state."""
-    from . import store_fs
-
-    root = store_fs.resolve_current(store_path)
-    if root is not None:
-        return root, False
-    root = store_fs.join(store_path, store_fs.FIRST_GEN)
-    store_fs.delete_dir(root, ignore_missing=True)
-    return root, True
-
-
-def _commit_store_init(store_path: str) -> None:
-    from . import store_fs
-
-    store_fs.write_pointer(store_path, store_fs.FIRST_GEN)
 
 
 def append_signature_batch(
@@ -147,33 +115,7 @@ def append_banded_batch(
     (similarity.embedding_banded_signatures) share one store
     implementation. The banding function is part of the store's
     identity, like the signature parameters above."""
-    from . import store_fs
-
-    ensure_no_orphan_generation(store_path)
-    root, init = _begin_store_write(store_path)
-    if batch_id is None:
-        # next sequential id from the partition directory NAMES — the
-        # former agg(max(batch_id)) ran a full store scan per append
-        # (round 11; see store_fs.max_partition_value for equivalence)
-        prev = None if init else store_fs.max_partition_value(root, "batch_id")
-        bid = 0 if prev is None else int(prev) + 1
-    else:
-        bid = int(batch_id)
-    out = banded.withColumn("batch_id", F.lit(bid))
-    if batch_id is None:
-        out.write.mode("append").partitionBy("batch_id").parquet(root)
-    else:
-        # per-write option scopes the dynamic overwrite to THIS write —
-        # no session-conf mutation to save/restore
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(root)
-        )
-    if init:
-        _commit_store_init(store_path)
-    return bid
+    return store_fs.append_batch(store_path, lambda _: banded, batch_id=batch_id)
 
 
 def candidates_for_batch(
@@ -185,7 +127,7 @@ def candidates_for_batch(
     against history — those pairs were emitted when their own batches
     arrived, which is what makes the increment O(new x matched), not
     O(corpus^2)."""
-    store = _read_store(spark, store_path)
+    store = store_fs.read_generation(spark, store_path)
     if store is None:
         raise FileNotFoundError(
             f"signature store {store_path} has no committed generation"
@@ -300,65 +242,6 @@ def streaming_minhash_dedup(
     )
 
 
-def _sink_write_batch(frame: DataFrame, sink_path: str) -> None:
-    """Land a micro-batch's output rows (already carrying their
-    batch_id column) in a streaming SINK — since round 8 a pointer-
-    committed generation store like the signature/sketch/span/cells
-    stores, so sinks get the same compaction/retention machinery
-    (VERDICT r7 #6: at streaming cadence a flat batch_id=N dir accrues
-    thousands of tiny partitions between consumers). Dynamic partition
-    overwrite keyed on batch_id keeps the exactly-once replay
-    contract unchanged."""
-    sink = sink_path.rstrip("/")
-    ensure_no_orphan_generation(sink)
-    root, init = _begin_store_write(sink)
-    (
-        frame.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(root)
-    )
-    if init:
-        _commit_store_init(sink)
-
-
-def _sink_delete_batch(sink_path: str, batch_id: int) -> None:
-    """Strict replace-on-replay for a zero-row replayed batch: remove
-    the partition a pre-crash attempt may have left in the sink's live
-    generation (no-op for an uncommitted sink)."""
-    from . import store_fs
-
-    root = store_fs.resolve_current(sink_path.rstrip("/"))
-    if root is not None:
-        store_fs.delete_dir(
-            store_fs.join(root, f"batch_id={batch_id}"), ignore_missing=True
-        )
-
-
-def _read_sink(spark: SparkSession, sink_path: str) -> DataFrame | None:
-    """Generation-aware sink read: None until the first non-empty batch
-    commits gen-0. A PRE-round-8 flat sink (batch_id=N dirs with no
-    pointer) must fail loudly instead of silently serving an empty
-    frame — recover by moving the batch_id=* dirs under
-    {sink}/gen-00000000/ and writing the pointer."""
-    from . import store_fs
-
-    sink = sink_path.rstrip("/")
-    got = _read_store(spark, sink)
-    if got is not None:
-        return got
-    if store_fs.is_dir(sink) and any(
-        d.startswith("batch_id=") for d in store_fs.list_subdirs(sink)
-    ):
-        raise RuntimeError(
-            f"sink {sink} holds flat batch_id=* partitions but no "
-            f"{store_fs.POINTER} pointer — a pre-generation (round <8) "
-            "sink layout; migrate by moving the batch_id=* dirs under "
-            f"{store_fs.FIRST_GEN}/ and writing the pointer"
-        )
-    return None
-
-
 def streaming_banded_dedup(
     stream: DataFrame,
     bander,
@@ -379,76 +262,32 @@ def streaming_banded_dedup(
     exactly-once dynamic-overwrite contract. Returns the
     StreamingQuery.
 
-    Zero-candidate batches SKIP the sink write (a partitioned zero-row
-    write leaves a schema-less directory that breaks readers — the
-    span-sink hazard class) but DELETE the batch's sink partition if a
-    pre-crash attempt left a non-empty one (strict replace-on-replay —
-    a replayed batch that now yields zero rows must not leave stale
-    pairs behind, possible if retention ran between attempts); consume
-    via read_candidates_sink, which serves a typed empty frame until
-    the sink exists. The candidates frame is STAGED before the
-    emptiness probe so the batch-vs-history join — the dominant
-    per-micro-batch work — executes once, not once for the probe and
-    again for the write. The sink is a pointer-committed generation
-    store (round 8) so it shares the stores' compaction/retention —
-    see compact_sink_batches / expire_sink_batches.
+    The sink step (staging, zero-row batches, replay deletes, block
+    release) is store_fs.stream_into_sink's; consume via
+    read_candidates_sink, which serves a typed empty frame until the
+    sink exists. The sink is a pointer-committed generation store
+    (round 8) so it shares the stores' compaction/retention — see
+    compact_sink_batches / expire_sink_batches.
 
     ``store_table`` (recommended at cadence): run the signature store
     as the BUCKETED catalog table instead of the path store —
     zero-exchange history reads (see streaming_minhash_dedup). Exactly
     one of ``store_path`` / ``store_table`` must be set."""
-    from ..staging import stage as stage_frame
 
-    if (store_path is None) == (store_table is None):
-        raise ValueError(
-            "exactly one of store_path / store_table must be set, got "
-            f"store_path={store_path!r} store_table={store_table!r}"
-        )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        from ..staging import persistent_rdd_ids, release_staged
-
-        spark = batch_df.sparkSession
-        # Every staged frame this batch creates (the candidates frame
-        # below, plus _candidates' pruning-path `new`) pins
-        # localCheckpoint blocks that DataFrame.unpersist cannot
-        # release; without a per-batch release the store leaks one
-        # batch's blocks per micro-batch once batch_id crosses the
-        # prune min-history — the block-manager-pressure failure mode.
-        # The sink write is eager, so by the finally the blocks are
-        # dead. keep= confines the release to this batch's additions
-        # (assumes one concurrent foreachBatch per session, the same
-        # single-writer contract the store maintenance documents).
-        before = persistent_rdd_ids(spark)
-        try:
-            if store_table is not None:
-                append_banded_batch_bucketed(
-                    spark, bander(batch_df), store_table, batch_id=batch_id
-                )
-                raw = candidates_for_batch_bucketed(spark, store_table, batch_id)
-            else:
-                _advise_bucketed_store(store_path, batch_id, query_name)
-                append_banded_batch(
-                    spark, bander(batch_df), store_path, batch_id=batch_id
-                )
-                raw = candidates_for_batch(spark, store_path, batch_id)
-            cands = (
-                raw.withColumn("batch_id", F.lit(batch_id))
-                .transform(stage_frame)
+    def produce(spark, batch_df: DataFrame, batch_id: int) -> DataFrame:
+        if store_table is not None:
+            append_banded_batch_bucketed(
+                spark, bander(batch_df), store_table, batch_id=batch_id
             )
-            if cands.isEmpty():
-                _sink_delete_batch(candidates_path, batch_id)
-                return
-            _sink_write_batch(cands, candidates_path)
-        finally:
-            release_staged(spark, keep=before)
+            return candidates_for_batch_bucketed(spark, store_table, batch_id)
+        append_banded_batch(spark, bander(batch_df), store_path, batch_id=batch_id)
+        return candidates_for_batch(spark, store_path, batch_id)
 
-    writer = stream.writeStream.queryName(query_name).option(
-        "checkpointLocation", checkpoint_dir
-    ).foreachBatch(process)
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return store_fs.stream_into_sink(
+        stream, candidates_path, checkpoint_dir, produce,
+        query_name=query_name, trigger=trigger,
+        store_path=store_path, store_table=store_table,
+    )
 
 
 def read_candidates_sink(
@@ -462,7 +301,7 @@ def read_candidates_sink(
     NAMES, so a bander emitting non-bigint ids (string content hashes,
     uuids) declares its type here and the pre-sink empty frame agrees
     with the sink once created — mirroring read_span_sink's id_col."""
-    got = _read_sink(spark, candidates_path)
+    got = store_fs.read_sink(spark, candidates_path)
     if got is not None:
         return got
     return spark.createDataFrame(
@@ -471,53 +310,6 @@ def read_candidates_sink(
 
 
 # -- bucketed-table store: shuffle-free history joins ---------------------
-
-_ADVISED_STORES: set[str] = set()
-
-
-def _advise_bucketed_store(store_path: str, batch_id: int, query_name: str) -> None:
-    """One-time loud advisory when a PATH-based streaming store crosses
-    the measured ingest crossover depth (the Bloom prune's minimum
-    history depth doubles as the depth signal): past it, every micro-batch
-    re-shuffles the accumulated history — a linear-in-depth cost the
-    prune only flattens (~15x slope cut, STREAM_r09_bloom) while the
-    bucketed catalog form removes it entirely (zero-exchange history
-    reads). Streams that should stay on the path store (demos, tests,
-    bounded backfills) see one warning per store — the advisory state
-    is persisted as a marker file BESIDE the store (plus the in-process
-    set as a fast path), so a restarting cadence job doesn't re-advise
-    on every process launch (VERDICT r10 #8)."""
-    from .bloomjoin import STORE_MIN_HISTORY_BATCHES
-
-    if store_path in _ADVISED_STORES:
-        return
-    if batch_id < STORE_MIN_HISTORY_BATCHES:
-        return
-    _ADVISED_STORES.add(store_path)
-    marker = os.path.join(store_path, "_ADVISED_BUCKETED")
-    try:
-        if os.path.exists(marker):
-            return
-        with open(marker, "w") as f:
-            f.write(
-                "advisory emitted once; delete this file to re-advise\n"
-            )
-    except OSError:
-        # non-local store filesystems (s3a://, hdfs://) won't open() —
-        # fall back to once-per-process, the round-10 behavior
-        pass
-    import warnings
-
-    warnings.warn(
-        f"streaming store {store_path!r} ({query_name}) has reached "
-        f"history depth {batch_id}: the path-based store re-shuffles "
-        "its full history every micro-batch (linear-in-depth ingest "
-        "cost). At cadence, pass store_table=<catalog table> instead — "
-        "the bucketed form reads history with zero exchange "
-        "(docs/OPERATIONS.md, 'Incremental stores at cadence').",
-        stacklevel=3,
-    )
-
 
 def append_signature_batch_bucketed(
     spark: SparkSession,
@@ -578,32 +370,17 @@ def append_banded_batch_bucketed(
     and the streaming twins need the generic form to run the
     zero-exchange catalog table at cadence. Same replace-on-replay
     contract as append_signature_batch_bucketed."""
-    if batch_id is None:
-        if spark.catalog.tableExists(table):
-            prev = spark.table(table).agg(F.max("batch_id")).collect()[0][0]
-            bid = 0 if prev is None else int(prev) + 1
-        else:
-            bid = 0
-    else:
-        bid = int(batch_id)
-        if spark.catalog.tableExists(table):
-            spark.sql(
-                f"ALTER TABLE {table} DROP IF EXISTS PARTITION (batch_id={bid})"
-            )
-    (
-        banded.select(
+    return store_fs.append_bucketed(
+        spark,
+        table,
+        lambda _: banded.select(
             "id",
             F.concat_ws(":", F.col("band_idx"), F.col("band_key")).alias("band"),
-        )
-        .withColumn("batch_id", F.lit(bid))
-        .write.mode("append")
-        .partitionBy("batch_id")
-        .bucketBy(num_buckets, "band")
-        .sortBy("band")
-        .format("parquet")
-        .saveAsTable(table)
+        ),
+        bucket_col="band",
+        batch_id=batch_id,
+        num_buckets=num_buckets,
     )
-    return bid
 
 
 def candidates_for_batch_bucketed(
@@ -634,159 +411,6 @@ def candidates_for_batch_bucketed(
     return within.unionByName(across).distinct()
 
 
-from contextlib import contextmanager
-
-
-@contextmanager
-def maintenance_lease(store_path: str):
-    """Advisory single-maintainer lease over a store: an atomic
-    create-exclusive marker at ``{store}.lease`` held for the duration
-    of a maintenance operation. A second maintainer (e.g. two cron'd
-    compactions overlapping) fails LOUDLY instead of interleaving
-    renames with the first one's swap. A maintainer that FAILS
-    mid-window — process crash OR in-process exception (a failed
-    rename mid-swap) — leaves the marker behind, deliberately: the
-    recovery message routes the operator through the orphan-generation
-    check before releasing, because an expired-TTL auto-steal (or an
-    auto-release on a half-done swap) could put two live maintainers
-    in the window, which is the exact failure the lease exists to
-    prevent. The marker is removed only on SUCCESSFUL completion of
-    the window's body. Atomic on local and HDFS; best-effort on S3
-    (see store_fs.create_exclusive)."""
-    from . import store_fs
-
-    lease = store_path.rstrip("/") + ".lease"
-    if not store_fs.create_exclusive(lease):
-        raise RuntimeError(
-            f"maintenance lease {lease} is already held — another "
-            "maintainer is active, or a previous one crashed mid-window. "
-            "Verify no maintenance job is running and the store passes "
-            "ensure_no_orphan_generation, then delete the marker to "
-            "recover."
-        )
-    yield
-    # reached only when the body completed without raising: a failed
-    # maintenance window keeps the lease so the next attempt is routed
-    # through the loud recovery path above instead of racing leftovers
-    store_fs.delete_file(lease)
-
-
-def ensure_no_orphan_generation(store_path: str) -> None:
-    """Damage guard shared by every store writer, re-derived for the
-    pointer layout (round 7). With pointer-committed generations there
-    is no crash window in which the LIVE generation is unreferenced —
-    the pointer is only ever written AFTER its target is complete, and
-    maintenance leftovers (generations without a pointer reference)
-    are inert and swept under the lease. What remains detectable is
-    MANUAL damage, and both shapes must refuse rather than silently
-    restart the store:
-
-      - pointer present but its generation dir missing (someone
-        deleted data out from under the pointer);
-      - generations BEYOND gen-00000000 present with no pointer
-        (someone deleted the pointer of a real store — gen-00000000
-        alone without a pointer is the one legitimate crash state, a
-        first append that died pre-commit, and is rebuilt by the
-        replay contract in _begin_store_write).
-
-    Probes run on the STORE'S OWN filesystem (store_fs) — an os probe
-    against hdfs:// would silently answer "absent" and evaporate this
-    guard."""
-    from . import store_fs
-
-    base = store_path.rstrip("/")
-    gen = store_fs.read_pointer(base)
-    if gen is not None:
-        if not store_fs.is_dir(store_fs.join(base, gen)):
-            raise RuntimeError(
-                f"store {base} pointer references {gen} but that "
-                "generation directory is missing — restore it or point "
-                f"{store_fs.POINTER} at a surviving {store_fs.GEN_PREFIX}* dir"
-            )
-        return
-    gens = store_fs.list_generations(base)
-    if [g for g in gens if g != store_fs.FIRST_GEN]:
-        raise RuntimeError(
-            f"store {base} has generations {gens} but no "
-            f"{store_fs.POINTER} pointer — a real store lost its pointer "
-            "file; recover by writing the live generation's name into it"
-        )
-
-
-def swap_in_generation(store_path: str, write_tmp) -> None:
-    """Shared generation commit for store compactions (this module,
-    operators/sketches.py, span_store, similarity's IVF cells — one
-    copy so the crash posture cannot drift). Round 7 replaced the
-    directory-rename swap with a POINTER COMMIT (VERDICT r6 #3): under
-    the maintenance lease, sweep unreferenced generation leftovers of
-    prior crashed runs, have ``write_tmp(next_gen_dir)`` materialize
-    the next generation IN FULL, atomically replace the ``current``
-    pointer, then delete the superseded generation.
-
-    Crash windows, all benign:
-      - died before the pointer flip: the pointer still names the old
-        generation; the half-built next one is unreferenced and inert,
-        swept by the next maintenance window;
-      - died after the flip, before cleanup: the store serves the new
-        generation; the old one is unreferenced and swept later;
-      - readers NEVER see an absent store path — both generations
-        exist across the flip and the pointer replace is atomic
-        (os.replace locally; ~20-byte create-overwrite via Hadoop,
-        whose only reader-visible hazard is the bounded empty-pointer
-        retry in store_fs.read_pointer). The pre-round-7
-        "PATH_NOT_FOUND between two renames" caveat is GONE.
-
-    On object stores the commit is one small PUT — generation dirs are
-    never renamed, so the old swap's copy+delete degradation no longer
-    exists; the lease alone remains advisory there (store_fs).
-
-    The single-MAINTAINER half of the window contract is ENFORCED, not
-    just documented: a second concurrent compaction fails loudly on
-    the lease instead of racing the pointer (maintainer-vs-APPEND
-    exclusion remains the operator's scheduling responsibility —
-    appends are not leased by design; see compact_store).
-
-    LEASE FENCING (round 8, VERDICT r7 #7): on S3 the lease's
-    create-exclusive is only best-effort, so two maintainers CAN both
-    enter the window under a lost lease. Two mechanisms remove every
-    SILENT failure path: (a) each attempt stages into its OWN
-    generation dir (per-attempt nonce — store_fs.next_generation), so
-    concurrent maintainers never interleave parquet writes in one
-    directory; (b) the swap re-reads the pointer immediately before
-    its flip and ABORTS loudly if it no longer names the generation
-    read at window start — the loser's half-built dir stays
-    unreferenced (inert, swept later) and the winner's commit is never
-    silently overwritten. The residue without a CAS primitive is the
-    ~20-byte PUT race between the fence check and the flip, and a
-    concurrent sweep deleting an in-progress staging dir — both of
-    which surface as loud job failures, never as silently wrong data."""
-    from . import store_fs
-
-    base = store_path.rstrip("/")
-    with maintenance_lease(base):
-        ensure_no_orphan_generation(base)
-        cur = store_fs.read_pointer(base)
-        if cur is None:
-            raise FileNotFoundError(
-                f"store {base} has no committed generation to compact"
-            )
-        store_fs.sweep_stale_generations(base, keep=cur)
-        nxt = store_fs.next_generation(cur)
-        write_tmp(store_fs.join(base, nxt))
-        fence = store_fs.read_pointer(base)
-        if fence != cur:
-            raise RuntimeError(
-                f"store {base} pointer moved {cur} -> {fence} during the "
-                "maintenance window — a concurrent maintainer committed "
-                "under a lost lease. Aborting WITHOUT flipping: the other "
-                "maintainer's generation stays live; this window's "
-                f"half-built {nxt} is unreferenced and will be swept by "
-                "the next successful window."
-            )
-        store_fs.write_pointer(base, nxt)
-        store_fs.delete_dir(store_fs.join(base, cur))
-
-
 def compact_store(spark: SparkSession, store_path: str) -> int:
     """Maintenance: fold every batch partition into a single base batch
     (id 0). Thousands of daily increments otherwise accumulate one
@@ -796,34 +420,10 @@ def compact_store(spark: SparkSession, store_path: str) -> int:
     joins hist = batch_id < N either way, and already-emitted pairs
     are never re-emitted (compaction changes no membership, only
     layout). Returns the number of batches folded. Staged safely:
-    write the compacted generation beside the store, then swap.
-
-    MAINTENANCE WINDOW CONTRACT: run from the single maintainer, not
-    concurrently with appends — an append landing between the read and
-    the pointer flip would vanish with the superseded generation.
-    Readers always see a COMPLETE generation (old or new, never torn
-    data) and the store path stays continuously present across the
-    flip (see swap_in_generation). The same contract as
-    sketches.compact_sketch_store and the lpframes spool's
-    single-committing-writer rule."""
-    store = _read_store(spark, store_path)
-    if store is None:
-        return 0
-    n_batches = store.select("batch_id").distinct().count()
-    if n_batches <= 1:
-        return n_batches
-
-    def _write(tmp: str) -> None:
-        (
-            store.select("id", "band_idx", "band_key")
-            .withColumn("batch_id", F.lit(0))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(tmp)
-        )
-
-    swap_in_generation(store_path, _write)
-    return n_batches
+    write the compacted generation beside the store, then swap; the
+    maintenance-window contract is store_fs.fold_generation's, the
+    same as the lpframes spool's single-committing-writer rule."""
+    return len(store_fs.fold_generation(spark, store_path))
 
 
 def expire_batches(store_path: str, keep_from_batch: int) -> list[int]:
@@ -832,18 +432,9 @@ def expire_batches(store_path: str, keep_from_batch: int) -> list[int]:
     directory-level delete, the same O(#partitions) metadata operation
     as rollup.expire_partitions. New batches then stop matching against
     the expired era; pairs already emitted are unaffected. Returns the
-    removed batch ids. Runs on the store's own filesystem (store_fs),
-    under the maintenance lease — an expiry sweep listing partitions
-    while a compaction swap renames the store away would race."""
-    from . import store_fs
-
-    with maintenance_lease(store_path):
-        root = store_fs.resolve_current(store_path)
-        if root is None:
-            return []
-        removed = store_fs.expire_prefixed_partitions(
-            root, "batch_id=", lambda v: int(v) < keep_from_batch
-        )
+    removed batch ids. Runs on the store's own filesystem, under the
+    maintenance lease (store_fs.expire_batches_below)."""
+    removed = store_fs.expire_batches_below(store_path, keep_from_batch)
     return [int(d.split("=", 1)[1]) for d in removed]
 
 
@@ -868,25 +459,14 @@ def compact_sink_batches(
     still replay. Same maintenance-window contract as compact_store:
     single maintainer, not concurrent with the streaming writer.
     Returns the number of partitions folded (0 or 1 = nothing to do)."""
-    sink = _read_sink(spark, sink_path)
-    if sink is None:
-        return 0
-    folded = sink.filter(F.col("batch_id") <= upto_batch)
-    n = folded.select("batch_id").distinct().count()
-    if n <= 1:
-        return n
-
-    def _write(tmp: str) -> None:
-        (
-            folded.withColumn("batch_id", F.lit(0))
-            .unionByName(sink.filter(F.col("batch_id") > upto_batch))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(tmp)
+    return len(
+        store_fs.fold_generation(
+            spark,
+            sink_path,
+            scope=lambda ids: [i for i in ids if i <= upto_batch],
+            read=store_fs.read_sink,
         )
-
-    swap_in_generation(sink_path, _write)
-    return n
+    )
 
 
 def expire_sink_batches(sink_path: str, keep_from_batch: int) -> list[int]:

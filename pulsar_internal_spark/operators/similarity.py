@@ -39,7 +39,7 @@ the literal and relation probes pick the same cells.
                      _pq_query_tables, _adc_topk (ADC join keyed by cell)
   lsh_bucketed_topk  banded sign-LSH sides, _scored, _cosine_topk
   build_ivf_index    _train_cells, pq_encode (PQ-carrying index)
-  ivf_index_append   _relation_probe argmin, pq_encode
+  ivf_index_append   _literal_cell, pq_encode
   ivf_index_topk     _relation_probe, _scored, _cosine_topk
   ivf_index_adc_topk _relation_probe, _pq_query_tables, _adc_topk
   pq_encode          _subvectors, _unrolled_d2
@@ -58,7 +58,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..sources.tables import spread
+from . import store_fs
+from ..sources.tables import read_parquet, spread
 
 
 def _dot(a, b):
@@ -141,21 +142,18 @@ def _literal_probe(q: DataFrame, cent_lit, nprobe: int, keep) -> DataFrame:
 
 
 def _relation_probe(
-    pairs: DataFrame, key: str, vec: str, keep, nprobe: int | None = None
+    pairs: DataFrame, key: str, vec: str, keep, nprobe: int
 ) -> DataFrame:
-    """Nearest cells per ``key`` over a (row x (cell, centroid)) relation:
-    one row_number window over (dist2, cell). Keeps ranks <= ``nprobe``;
-    ``nprobe=None`` keeps the argmin (rank == 1), the assignment
-    ivf_index_append writes. Returns (*keep, cell)."""
-    rank = "_rn" if nprobe is None else "cell_rank"
+    """The ``nprobe`` nearest cells per ``key`` over a
+    (row x (cell, centroid)) relation: one row_number window over
+    (dist2, cell). Returns (*keep, cell)."""
     ranked = pairs.withColumn("dist2", _d2(vec, "centroid")).withColumn(
-        rank,
+        "cell_rank",
         F.row_number().over(
             Window.partitionBy(key).orderBy(F.asc("dist2"), F.asc("cell"))
         ),
     )
-    kept = F.col(rank) == 1 if nprobe is None else F.col(rank) <= nprobe
-    return ranked.filter(kept).select(*keep, "cell")
+    return ranked.filter(F.col("cell_rank") <= nprobe).select(*keep, "cell")
 
 
 def _cos_sim(cv: str = "cv", cn: str = "cn"):
@@ -984,6 +982,9 @@ def quantize_embeddings(
 
 # -- persisted IVF index: build once, probe many --------------------------
 
+# the cells store nests each batch under its cell: cell=C/batch_id=B
+_CELL_PARTS = ("cell", "batch_id")
+
 
 def build_ivf_index(
     corpus: DataFrame,
@@ -1045,7 +1046,6 @@ def build_ivf_index(
         "embedding",
         _norm(F.col("embedding")).alias("norm"),
         "cell",
-        F.lit(0).cast("int").alias("batch_id"),
     )
     if codebooks is not None:
         # PQ-carrying index: the codebooks are INDEX STATE (written
@@ -1060,17 +1060,14 @@ def build_ivf_index(
         assigned = pq_encode(assigned, codebooks, vec_col="embedding")
 
     # the cells dir is a pointer-committed generation store (round 7,
-    # shared layout with the signature/sketch/span stores): a build is
-    # a full (re)create — clear any prior generations, write gen-0,
-    # commit the pointer only after the parquet write succeeds
-    from . import store_fs
-    from .signature_store import _begin_store_write, _commit_store_init
-
+    # shared protocol with the signature/sketch/span stores): a build is
+    # a full (re)create — clear any prior generations, then append
+    # batch 0 to the fresh store
     cells_base = os.path.join(path, "cells")
     store_fs.delete_dir(cells_base, ignore_missing=True)
-    root, _ = _begin_store_write(cells_base)
-    assigned.write.mode("overwrite").partitionBy("cell", "batch_id").parquet(root)
-    _commit_store_init(cells_base)
+    store_fs.append_batch(
+        cells_base, lambda _: assigned, batch_id=0, partition_by=_CELL_PARTS
+    )
     if codebooks is not None:
         # batch-0 health row: the codebooks' residual on the BUILD data
         # is the drift baseline every later batch is compared against
@@ -1085,9 +1082,7 @@ def _index_cells(spark, path: str) -> DataFrame:
     """The live cells generation of a persisted IVF index."""
     import os
 
-    from .signature_store import _read_store
-
-    cells = _read_store(spark, os.path.join(path, "cells"))
+    cells = store_fs.read_generation(spark, os.path.join(path, "cells"))
     if cells is None:
         raise FileNotFoundError(
             f"IVF index {path} has no committed cells generation"
@@ -1114,7 +1109,7 @@ def ivf_index_topk(
     (query_id, neighbor_id, cos_sim, rank)."""
     import os
 
-    cents = spark.read.parquet(os.path.join(path, "centroids"))
+    cents = read_parquet(spark, os.path.join(path, "centroids"))
     q = _side(queries, id_col, vec_col, _Q)
     q_cells = _relation_probe(q.join(F.broadcast(cents)), "query_id", "qv", _Q, nprobe)
     scored = _scored(
@@ -1133,12 +1128,10 @@ def _read_index_codebooks(spark, path: str) -> list[list[list[float]]] | None:
     become PLAN LITERALS so encode/ADC stay whole-stage-codegen'd."""
     import os
 
-    from . import store_fs
-
     cb_path = os.path.join(path, "codebooks")
     if not store_fs.is_dir(cb_path):
         return None
-    rows = spark.read.parquet(cb_path).collect()
+    rows = read_parquet(spark, cb_path).collect()
     m = 1 + max(r.j for r in rows)
     books: list[list[list[float]]] = []
     for j in range(m):
@@ -1158,16 +1151,17 @@ def ivf_index_append(
 ) -> int:
     """Append a vector batch to a persisted IVF index WITHOUT
     retraining or rewriting history: assign each new vector to its
-    nearest EXISTING centroid (broadcast distance argmin — the relation
-    probe's own window, so assignment and probing can never disagree on
-    a cell boundary; tests/test_operators.py checks it against the
-    literal form too) and land the rows under the
-    batch's (cell, batch_id) partitions. The coarse quantizer is
-    FROZEN — the standard IVF ingestion trade: cells drift as the
-    vector distribution shifts, which is monitored (cell-size skew)
-    and fixed by an offline rebuild, never by blocking ingest. At
+    nearest EXISTING centroid (_literal_cell over the stored centroids:
+    a narrow map, no join; its argmin and the probes' relation window
+    break ties the same way, so assignment and probing never disagree
+    on a cell boundary — tests/test_operators.py checks both forms)
+    and land the rows under the batch's (cell, batch_id) partitions.
+    The coarse quantizer is FROZEN — the standard IVF ingestion trade:
+    cells drift as the vector distribution shifts, which is monitored
+    (cell-size skew) and fixed by an offline rebuild, never by blocking
+    ingest. At
     100 TB this is the serving shape: a daily embedding batch costs
-    one broadcast join + one partitioned append, while probes keep
+    one narrow map + one partitioned append, while probes keep
     reading nprobe cell directories; appended files become visible
     per cell listing, so a concurrent probe sees the old or the new
     file set, never a torn cell.
@@ -1178,7 +1172,9 @@ def ivf_index_append(
     same exactly-once contract as append_signature_batch and the
     sketch store. ``batch_id=None`` appends under the next sequential
     id, read from the (cell, batch_id) directory names — no Spark job.
-    Returns the batch_id used.
+    Returns the batch_id used. Appends never implicitly create an
+    index: a path without a committed cells generation raises
+    (build_ivf_index first).
 
     If the index was built WITH PQ codebooks ({path}/codebooks
     present), the batch's codes are computed here with those exact
@@ -1186,52 +1182,28 @@ def ivf_index_append(
     because the quantizer IS index state, not a caller argument."""
     import os
 
-    cents = spark.read.parquet(os.path.join(path, "centroids"))
-    row = ("vec_id", "embedding", "norm")
-    staged = _side(spread(new_vectors), id_col, vec_col, row)
-    assigned = _relation_probe(
-        staged.join(F.broadcast(cents)), "vec_id", "embedding", row
+    cents = sorted(
+        read_parquet(spark, os.path.join(path, "centroids")).collect(),
+        key=lambda r: r.cell,
+    )
+    assigned = _side(
+        spread(new_vectors), id_col, vec_col, ("vec_id", "embedding", "norm")
+    ).withColumn(
+        "cell",
+        _literal_cell(
+            F.col("embedding"), centroid_struct_literal([r.centroid for r in cents])
+        ),
     )
     books = _read_index_codebooks(spark, path)
     if books is not None:
         assigned = pq_encode(assigned, books, vec_col="embedding")
-    from . import store_fs
-    from .signature_store import ensure_no_orphan_generation
-
-    cells_base = os.path.join(path, "cells")
-    ensure_no_orphan_generation(cells_base)
-    root = store_fs.resolve_current(cells_base)
-    if root is None:
-        raise FileNotFoundError(
-            f"IVF index {path} has no committed cells generation — "
-            "build_ivf_index first (appends never implicitly create an index)"
-        )
-    if batch_id is None:
-        # the max batch_id over every cell's partition directories: a
-        # listing, where reading the index's batch_id column is a scan
-        # of the whole index (see store_fs.max_partition_value for
-        # equivalence)
-        ids = (
-            store_fs.max_partition_value(store_fs.join(root, d), "batch_id")
-            for d in store_fs.list_subdirs(root)
-            if d.startswith("cell=")
-        )
-        prev = max((v for v in ids if v is not None), default=None)
-        bid = 0 if prev is None else prev + 1
-    else:
-        bid = int(batch_id)
-    assigned = assigned.withColumn("batch_id", F.lit(bid).cast("int"))
-    if batch_id is None:
-        assigned.write.mode("append").partitionBy("cell", "batch_id").parquet(
-            root
-        )
-    else:
-        (
-            assigned.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("cell", "batch_id")
-            .parquet(root)
-        )
+    bid = store_fs.append_batch(
+        os.path.join(path, "cells"),
+        lambda _: assigned,
+        batch_id=batch_id,
+        partition_by=_CELL_PARTS,
+        create=False,
+    )
     if books is not None:
         # per-batch health row with the batch's own exactly-once
         # contract: a replayed explicit batch_id replaces its own
@@ -1271,7 +1243,7 @@ def ivf_index_adc_topk(
             f"IVF index {path} carries no PQ codebooks — build_ivf_index"
             " with codebooks=... first (or probe with ivf_index_topk)"
         )
-    cents = spark.read.parquet(os.path.join(path, "centroids"))
+    cents = read_parquet(spark, os.path.join(path, "centroids"))
     q_cells = _relation_probe(
         _side(queries, id_col, vec_col, _Q[:2]).join(F.broadcast(cents)),
         "query_id", "qv", _Q[:1], nprobe,
@@ -1308,67 +1280,26 @@ def compact_ivf_cells(spark, path: str) -> int:
     small files. Semantics-preserving by construction: probes ignore
     the batch level entirely (ivf_index_topk reads (vec_id, embedding,
     norm, cell) only), and the fold changes no row — pure relayout.
-    Staged safely via swap_in_generation on the cells directory (the
-    centroids dir is untouched — the quantizer is not maintenance
+    Staged safely via store_fs.fold_generation on the cells directory
+    (the centroids dir is untouched — the quantizer is not maintenance
     state). Same single-maintainer window contract as the other
     stores. Returns the number of batches folded."""
-    import os
-
-    from .signature_store import _read_store, swap_in_generation
-
-    cells_path = os.path.join(path, "cells")
-    cells = _read_store(spark, cells_path)
-    if cells is None:
-        return 0
-    n_batches = cells.select("batch_id").distinct().count()
-    if n_batches <= 1:
-        return n_batches
-
-    # schema-preserving fold (a PQ-carrying index keeps its codes):
-    # only the batch level is rewritten, every data column rides along
-    folded = cells.drop("batch_id").withColumn(
-        "batch_id", F.lit(0).cast("int")
-    )
-
-    def _write(tmp: str) -> None:
-        folded.write.mode("overwrite").partitionBy("cell", "batch_id").parquet(
-            tmp
-        )
-
-    swap_in_generation(cells_path, _write)
-    return n_batches
+    cells = store_fs.join(path, "cells")
+    return len(store_fs.fold_generation(spark, cells, partition_by=_CELL_PARTS))
 
 
 def expire_ivf_batches(path: str, keep_from_batch: int) -> list[str]:
     """Retention: drop index vectors ingested in batches strictly below
     ``keep_from_batch`` (embeddings aged out of the serving horizon) —
     directory-level deletes of the batch_id leaves under every cell,
-    the same O(#partitions) metadata sweep as
-    signature_store.expire_batches, routed through store_fs so it
-    works on the index's own filesystem. Unlike the dedup stores,
+    the same leased O(#partitions) metadata sweep as every store
+    (store_fs.expire_batches_below), on the index's own filesystem. Unlike the dedup stores,
     expiry here CHANGES probe results (the expired vectors stop being
-    served) — that is the point of a TTL on an ANN index. Runs under
-    the shared maintenance lease (vs compact_ivf_cells' swap). Returns
-    the removed partition paths (cell-relative)."""
-    from . import store_fs
-    from .signature_store import maintenance_lease
-
-    cells_path = store_fs.join(path, "cells")
-    removed = []
-    with maintenance_lease(cells_path):
-        root = store_fs.resolve_current(cells_path)
-        if root is None:
-            return []
-        for cell_dir in store_fs.list_subdirs(root):
-            if not cell_dir.startswith("cell="):
-                continue
-            got = store_fs.expire_prefixed_partitions(
-                store_fs.join(root, cell_dir),
-                "batch_id=",
-                lambda v: int(v) < keep_from_batch,
-            )
-            removed.extend(f"{cell_dir}/{d}" for d in got)
-    return removed
+    served) — that is the point of a TTL on an ANN index. Returns the
+    removed partition paths (cell-relative)."""
+    return store_fs.expire_batches_below(
+        store_fs.join(path, "cells"), keep_from_batch, _CELL_PARTS
+    )
 
 
 def pq_residuals(
@@ -1548,8 +1479,8 @@ def streaming_ivf_append(
     codebooks: list[list[list[float]]] | None = None,
 ):
     """CONTINUOUS IVF ingestion — the streaming twin of
-    streaming_minhash_dedup / streaming_sketch, completing the
-    exactly-once contract across all three incremental stores: the
+    streaming_minhash_dedup / streaming_substring_dedup, with the same
+    exactly-once contract: the
     FIRST micro-batch trains the coarse quantizer and materializes the
     index (build is a full overwrite, so a replayed first batch is
     idempotent); every later micro-batch assigns against the FROZEN
@@ -1564,8 +1495,6 @@ def streaming_ivf_append(
     is always False, which would silently retrain the quantizer and
     full-overwrite the index on EVERY micro-batch, discarding all
     previously ingested cells."""
-    from .store_fs import is_dir as _store_is_dir
-    from .store_fs import join as _store_join
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -1575,7 +1504,7 @@ def streaming_ivf_append(
         # have nothing to assign either — skip both
         if batch_df.isEmpty():
             return
-        if not _store_is_dir(_store_join(path, "centroids")):
+        if not store_fs.is_dir(store_fs.join(path, "centroids")):
             # codebooks (if given) become INDEX STATE at first build;
             # appends then read them back and encode every batch, so a
             # PQ-carrying index streams with the same exactly-once

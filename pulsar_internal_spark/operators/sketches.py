@@ -6,8 +6,8 @@ sketch of a union is the cell-wise sum of the sketches of its parts.
 That single property gives the whole incremental story for free — each
 ingest batch is sketched ONCE (per-batch cells written under its
 batch_id, idempotently), and serving reads sum the cells — no batch
-ever re-reads another batch's tokens. Mirrors the layout and
-exactly-once contract of signature_store.py (hive-partitioned by
+ever re-reads another batch's tokens. Shares the layout and
+exactly-once contract of every store (store_fs: hive-partitioned by
 batch_id; dynamic partition overwrite makes a retried streaming batch
 replace its own partition), grown from the reference's incremental
 memo idiom (script.hpp:127-129: compute once, look up thereafter).
@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from . import store_fs
 
 # Enforced at read time (serve_sketch) so a layout drift in the writer
 # fails loudly instead of silently misreading cells.
@@ -93,37 +95,19 @@ def append_sketch_batch(
     reprocessed content became empty still REPLACES its old partition
     (the replace-on-retry contract would silently not hold for a
     zero-row dynamic overwrite)."""
-    from .signature_store import (
-        _begin_store_write,
-        _commit_store_init,
-        _read_store,
-        ensure_no_orphan_generation,
-    )
+    cells = _merged(spark, countmin_cells(tokens_df, token_col, depth=depth))
+    return store_fs.append_batch(store_path, lambda _: cells, batch_id=batch_id)
 
-    ensure_no_orphan_generation(store_path)
-    root, init = _begin_store_write(store_path)
-    if batch_id is None:
-        existing = None if init else _read_store(spark, store_path)
-        batch_id = (
-            0
-            if existing is None
-            else existing.select(F.max("batch_id")).first()[0] + 1
-        )
-    cells = countmin_cells(tokens_df, token_col, depth=depth)
+
+def _merged(spark: SparkSession, cells: DataFrame) -> DataFrame:
+    """Cell-wise sum of (r, bucket, cell) rows and the zero cell
+    (0, 0, 0), the additive identity, so the result is never empty."""
     zero = spark.createDataFrame([(0, 0, 0)], "r INT, bucket BIGINT, cell BIGINT")
-    cells = cells.unionByName(zero).groupBy("r", "bucket").agg(
-        F.sum("cell").cast("long").alias("cell")
+    return (
+        cells.unionByName(zero)
+        .groupBy("r", "bucket")
+        .agg(F.sum("cell").cast("long").alias("cell"))
     )
-    cells = cells.withColumn("batch_id", F.lit(batch_id).cast("int"))
-    (
-        cells.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(root)
-    )
-    if init:
-        _commit_store_init(store_path)
-    return batch_id
 
 
 def serve_sketch(spark: SparkSession, store_path: str) -> DataFrame:
@@ -137,9 +121,7 @@ def serve_sketch(spark: SparkSession, store_path: str) -> DataFrame:
     absent cell are the same sketch state (estimate_counts zero-fills
     on its left join), so serving stays bit-identical to the one-shot
     sketch."""
-    from .signature_store import _read_store
-
-    df = _read_store(spark, store_path)
+    df = store_fs.read_generation(spark, store_path)
     if df is None:
         raise FileNotFoundError(
             f"sketch store {store_path} has no committed generation"
@@ -196,43 +178,14 @@ def compact_sketch_store(spark: SparkSession, store_path: str) -> int:
     auto-increment monotone. Early-outs when the store has <= 2
     batches (nothing to fold). An all-sentinel history still writes
     the zero cell so the folded partition is never a bare _SUCCESS
-    dir (which would brick schema inference for the next auto
-    append). Returns the number of batches folded into the base.
-    Staging/swap and the crashed-swap recovery guard are shared with
-    signature_store (swap_in_generation — one copy of the crash
-    posture).
-
-    MAINTENANCE WINDOW CONTRACT (same as signature_store.compact_store):
-    run from the single maintainer, not concurrently with appends — an
-    append that lands between the merge read and the pointer flip would
-    vanish with the superseded generation. Readers see a complete
-    generation (old or new, never torn data) and the store stays
-    continuously readable across the flip (see swap_in_generation)."""
-    from .signature_store import _read_store, swap_in_generation
-
-    store = _read_store(spark, store_path)
-    if store is None:
-        return 0
-    ids = sorted(r.batch_id for r in store.select("batch_id").distinct().collect())
-    if len(ids) <= 2:
-        return 0
-    max_id = ids[-1]
-    hist = store.filter(F.col("batch_id") != max_id)
-    zero = spark.createDataFrame([(0, 0, 0)], "r INT, bucket BIGINT, cell BIGINT")
-    folded = (
-        hist.select("r", "bucket", "cell")
-        .unionByName(zero)
-        .groupBy("r", "bucket")
-        .agg(F.sum("cell").cast("long").alias("cell"))
-        .withColumn("batch_id", F.lit(0).cast("int"))
+    dir (which would brick schema inference for the next read).
+    Returns the number of batches folded into the base. Staging/swap,
+    the crashed-swap recovery guard and the maintenance-window
+    contract are store_fs.fold_generation's."""
+    folded = store_fs.fold_generation(
+        spark,
+        store_path,
+        lambda rows: _merged(spark, rows.select("r", "bucket", "cell")),
+        scope=lambda ids: ids[:-1],
     )
-    newest = store.filter(F.col("batch_id") == max_id).select(
-        "r", "bucket", "cell", "batch_id"
-    )
-    out = folded.unionByName(newest)
-
-    def _write(tmp: str) -> None:
-        out.write.mode("overwrite").partitionBy("batch_id").parquet(tmp)
-
-    swap_in_generation(store_path, _write)
-    return len(ids) - 1
+    return len(folded) if len(folded) > 1 else 0

@@ -9,8 +9,8 @@ k-grams against the store — the same incremental shape as
 signature_store.py (MinHash) and sketches.py (count-min), completing the
 family for the exact-substring tier.
 
-Store layout: pointer-committed generation store (see signature_store /
-store_fs, round 7) whose live generation holds parquet columns
+Store layout: pointer-committed generation store (the store_fs
+protocol, round 7) whose live generation holds parquet columns
 (kh, owner_doc, batch_id), hive-partitioned by ``batch_id`` — one row per
 k-gram hash FIRST SEEN in that batch (appends anti-join history, so the
 store is the distinct k-gram set, not the occurrence stream). History
@@ -45,19 +45,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import bloomjoin
+from . import bloomjoin, store_fs
 from .dedup import dup_span_intervals, tokenized
 from ..sources.tables import spread
 from ..staging import persistent_rdd_ids, release_staged, stage
-from .signature_store import (
-    _begin_store_write,
-    _commit_store_init,
-    _read_sink,
-    _read_store,
-    _sink_delete_batch,
-    _sink_write_batch,
-    ensure_no_orphan_generation,
-)
 
 SPAN_STORE_SCHEMA = "kh STRING, owner_doc BIGINT, batch_id INT"
 
@@ -134,22 +125,11 @@ def _append_kg(
     batch_id: int | None,
     id_col: str,
 ) -> int:
-    from . import store_fs
-
-    ensure_no_orphan_generation(store_path)
-    root, init = _begin_store_write(store_path)
-    store = None if init else _read_store(spark, store_path)
-    if batch_id is None:
-        # next sequential id from the partition directory NAMES — the
-        # former agg(max(batch_id)) ran a full store scan per append
-        # (round 11; see store_fs.max_partition_value for equivalence)
-        prev = None if init else store_fs.max_partition_value(root, "batch_id")
-        bid = 0 if prev is None else int(prev) + 1
-    else:
-        bid = int(batch_id)
-
-    firsts = kg.groupBy("kh").agg(F.min(id_col).alias("owner_doc"))
-    if store is not None:
+    def firsts(bid: int) -> DataFrame:
+        out = kg.groupBy("kh").agg(F.min(id_col).alias("owner_doc"))
+        store = store_fs.read_generation(spark, store_path)
+        if store is None:
+            return out
         hist_khs = store.filter(F.col("batch_id") < bid).select("kh")
         # a history kh the batch never produced cannot eliminate any
         # firsts row — prune history before its anti-join exchange
@@ -160,20 +140,9 @@ def _append_kg(
         hist_khs = bloomjoin.prune_history(
             hist_khs, kg.select("kh"), ["kh"], history_batches=bid
         )
-        firsts = firsts.join(hist_khs, "kh", "left_anti")
-    out = firsts.withColumn("batch_id", F.lit(bid).cast("int"))
-    if batch_id is None:
-        out.write.mode("append").partitionBy("batch_id").parquet(root)
-    else:
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(root)
-        )
-    if init:
-        _commit_store_init(store_path)
-    return bid
+        return out.join(hist_khs, "kh", "left_anti")
+
+    return store_fs.append_batch(store_path, firsts, batch_id=batch_id)
 
 
 def spans_for_batch(
@@ -211,7 +180,7 @@ def _spans_kg(
     k: int,
     id_col: str,
 ) -> DataFrame:
-    store = _read_store(spark, store_path)
+    store = store_fs.read_generation(spark, store_path)
     if store is None:
         raise FileNotFoundError(
             f"k-gram store {store_path} has no committed generation"
@@ -290,32 +259,18 @@ def append_kgram_batch_bucketed(
     (a metadata+data delete the catalog serves for datasource tables)
     followed by the bucketed append — a replayed batch replaces its
     own partition instead of double-appending first-seen rows."""
-    if batch_id is None:
-        if spark.catalog.tableExists(table):
-            prev = spark.table(table).agg(F.max("batch_id")).collect()[0][0]
-            bid = 0 if prev is None else int(prev) + 1
-        else:
-            bid = 0
-    else:
-        bid = int(batch_id)
-        if spark.catalog.tableExists(table):
-            spark.sql(
-                f"ALTER TABLE {table} DROP IF EXISTS PARTITION (batch_id={bid})"
-            )
-    firsts = kg.groupBy("kh").agg(F.min(id_col).alias("owner_doc"))
-    if spark.catalog.tableExists(table):
+
+    def firsts(bid: int) -> DataFrame:
+        out = kg.groupBy("kh").agg(F.min(id_col).alias("owner_doc"))
+        if not spark.catalog.tableExists(table):
+            return out
         hist = spark.table(table).filter(F.col("batch_id") < bid).select("kh")
-        firsts = firsts.join(hist, "kh", "left_anti")
-    (
-        firsts.withColumn("batch_id", F.lit(bid).cast("int"))
-        .write.mode("append")
-        .partitionBy("batch_id")
-        .bucketBy(num_buckets, "kh")
-        .sortBy("kh")
-        .format("parquet")
-        .saveAsTable(table)
+        return out.join(hist, "kh", "left_anti")
+
+    return store_fs.append_bucketed(
+        spark, table, firsts,
+        bucket_col="kh", batch_id=batch_id, num_buckets=num_buckets,
     )
-    return bid
 
 
 def incremental_substring_spans_bucketed(
@@ -374,28 +329,17 @@ def compact_span_store(spark: SparkSession, store_path: str) -> int:
     "does this kh exist, and who owns it", and first-arrival ownership
     survives the fold. Store rows are first-seen-distinct so the fold
     is mostly a relayout; shares the staged-swap crash posture with
-    the other stores (swap_in_generation). Returns batches folded."""
-    from .signature_store import swap_in_generation
-
-    store = _read_store(spark, store_path)
-    if store is None:
-        return 0
-    n_batches = store.select("batch_id").distinct().count()
-    if n_batches <= 1:
-        return n_batches
-
-    folded = (
-        store.groupBy("kh")
-        .agg(F.min(F.struct("batch_id", "owner_doc")).alias("_o"))
-        .select("kh", F.col("_o.owner_doc").alias("owner_doc"))
-        .withColumn("batch_id", F.lit(0).cast("int"))
+    the other stores (store_fs.fold_generation). Returns batches
+    folded."""
+    return len(
+        store_fs.fold_generation(
+            spark,
+            store_path,
+            lambda rows: rows.groupBy("kh")
+            .agg(F.min(F.struct("batch_id", "owner_doc")).alias("_o"))
+            .select("kh", F.col("_o.owner_doc").alias("owner_doc")),
+        )
     )
-
-    def _write(tmp: str) -> None:
-        folded.write.mode("overwrite").partitionBy("batch_id").parquet(tmp)
-
-    swap_in_generation(store_path, _write)
-    return n_batches
 
 
 def streaming_substring_dedup(
@@ -409,7 +353,7 @@ def streaming_substring_dedup(
 ):
     """CONTINUOUS exact-substring dedup — the streaming twin, same
     exactly-once contract as streaming_minhash_dedup /
-    streaming_sketch / streaming_ivf_append: each micro-batch's
+    streaming_ivf_append: each micro-batch's
     k-grams are idempotently registered under the STREAMING batch id
     (dynamic partition overwrite), and the batch's duplicated spans
     land in ``spans_path`` partitioned by batch_id (also
@@ -423,32 +367,11 @@ def streaming_substring_dedup(
     The path form stays for quick starts and emits a one-time advisory
     past the measured crossover depth. Exactly one of ``store_path`` /
     ``store_table`` must be set."""
-    from .signature_store import _advise_bucketed_store
+    k = params.get("k", 8)
+    id_col = params.get("id_col", "doc_id")
+    text_col = params.get("text_col", "text")
 
-    if (store_path is None) == (store_table is None):
-        raise ValueError(
-            "exactly one of store_path / store_table must be set, got "
-            f"store_path={store_path!r} store_table={store_table!r}"
-        )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        k = params.get("k", 8)
-        id_col = params.get("id_col", "doc_id")
-        text_col = params.get("text_col", "text")
-        # kg and spans are staged (localCheckpoint) per micro-batch;
-        # release them when the batch's eager sink write is done or the
-        # batch dies, else the stream pins one batch of blocks per tick
-        # (same leak class append_kgram_batch fixed in round 10).
-        # keep= assumes one concurrent foreachBatch per session — the
-        # stores' standing single-writer contract.
-        before = persistent_rdd_ids(spark)
-        try:
-            _process_inner(spark, batch_df, batch_id, k, id_col, text_col)
-        finally:
-            release_staged(spark, keep=before)
-
-    def _process_inner(spark, batch_df, batch_id, k, id_col, text_col):
+    def produce(spark, batch_df: DataFrame, batch_id: int) -> DataFrame:
         kg = _kgram_occurrences(batch_df, k, id_col, text_col).transform(stage)
         if store_table is not None:
             append_kgram_batch_bucketed(
@@ -457,44 +380,17 @@ def streaming_substring_dedup(
                 num_buckets=params.get("num_buckets", 16),
                 id_col=id_col,
             )
-            raw = _spans_kg_bucketed(
+            return _spans_kg_bucketed(
                 spark, kg, store_table, batch_id, k=k, id_col=id_col
             )
-        else:
-            _advise_bucketed_store(store_path, batch_id, "substring_dedup")
-            _append_kg(
-                spark, kg, store_path, batch_id=batch_id, id_col=id_col
-            )
-            raw = _spans_kg(
-                spark, kg, store_path, batch_id, k=k, id_col=id_col
-            )
-        # staged so the owner join + islands windows run once, not once
-        # for the emptiness probe and again for the write
-        spans = (
-            raw.withColumn("batch_id", F.lit(batch_id))
-            .transform(stage)
-        )
-        # a zero-span batch would write a partitioned dir with NO data
-        # files (partition dirs derive from rows), leaving a sink that
-        # spark.read.parquet rejects with "unable to infer schema"
-        # until a non-empty batch lands. Skip the write instead — the
-        # sink path simply not existing yet is the clear signal — and
-        # point consumers at read_span_sink, which returns a TYPED
-        # empty frame for a not-yet-created sink. A pre-crash attempt's
-        # non-empty partition is deleted (strict replace-on-replay).
-        # The sink is a generation store since round 8 — it shares the
-        # stores' compaction/retention (compact_sink_batches).
-        if spans.isEmpty():
-            _sink_delete_batch(spans_path, batch_id)
-            return
-        _sink_write_batch(spans, spans_path)
+        _append_kg(spark, kg, store_path, batch_id=batch_id, id_col=id_col)
+        return _spans_kg(spark, kg, store_path, batch_id, k=k, id_col=id_col)
 
-    writer = docs_stream.writeStream.queryName("substring_dedup").option(
-        "checkpointLocation", checkpoint_dir
-    ).foreachBatch(process)
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return store_fs.stream_into_sink(
+        docs_stream, spans_path, checkpoint_dir, produce,
+        query_name="substring_dedup", trigger=trigger,
+        store_path=store_path, store_table=store_table,
+    )
 
 
 def read_span_sink(
@@ -508,5 +404,5 @@ def read_span_sink(
     schema = (
         f"{id_col} BIGINT, span_start BIGINT, span_end BIGINT, batch_id INT"
     )
-    got = _read_sink(spark, spans_path)
+    got = store_fs.read_sink(spark, spans_path)
     return got if got is not None else spark.createDataFrame([], schema)

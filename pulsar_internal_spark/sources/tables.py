@@ -10,12 +10,15 @@ the driver. At 100 TB the same call reads a partitioned directory tree —
 callers never assume single-file layout.
 
 Schema memo: a bare ``spark.read.parquet`` runs one footer-reading
-Spark job per call to infer the schema. ``load_table`` keeps the schema
-Spark inferred on the first read of a table file and reads it again with
-``spark.read.schema(...)``, which submits no job. The memo is keyed on
-the file's identity (path, and size and mtime of every file under it),
-so a rewritten table is re-inferred, and on the parquet confs that shape
-inference, so a session with other settings never sees a stale schema.
+Spark job per call to infer the schema. ``read_parquet`` keeps the
+schema Spark inferred on the first read of a path and reads it again
+with ``spark.read.schema(...)``, which submits no job. The memo holds
+one entry per path, checked against the path's identity (size and mtime
+of every file under it), so a rewritten table or a store generation
+that gained a batch is re-inferred, and against the parquet confs that
+shape inference, so a session with other settings never sees a stale
+schema. ``load_table``, the persisted IVF index's metadata and every
+generation-store read go through it.
 """
 
 from __future__ import annotations
@@ -49,13 +52,14 @@ _SCHEMA_CONFS = (
     "spark.sql.caseSensitive",
 )
 
-_schemas: dict[tuple, StructType] = {}
+_schemas: dict[str, tuple[tuple, StructType]] = {}
 
 
 def _schema_key(spark: SparkSession, path: str) -> tuple | None:
-    """Identity of a table file (or of every file under a table
-    directory) plus the inference confs in effect; None for a path that
-    does not exist (the read then fails with Spark's own error)."""
+    """Identity of a parquet file (or of every file under a directory)
+    plus the inference confs in effect; None for a path that does not
+    exist on the local filesystem (a URI path, or one Spark then fails
+    to find with its own error): such reads always infer."""
     if not os.path.exists(path):
         return None
     if os.path.isdir(path):
@@ -71,7 +75,21 @@ def _schema_key(spark: SparkSession, path: str) -> tuple | None:
         st = os.stat(f)
         stats.append((f, st.st_size, st.st_mtime_ns))
     confs = tuple(spark.conf.get(c) for c in _SCHEMA_CONFS)
-    return path, tuple(stats), confs
+    return tuple(stats), confs
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema only when the
+    path's files or the inference confs changed since the last read of
+    ``path`` (module docstring)."""
+    key = _schema_key(spark, path)
+    hit = _schemas.get(path)
+    if key is not None and hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if key is not None:
+        _schemas[path] = (key, df.schema)
+    return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -87,14 +105,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # factory sets it, but the driver hands entry()/queries() a
         # session of ITS OWN — be self-sufficient on foreign sessions.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    key = _schema_key(spark, path)
-    schema = _schemas.get(key)
-    if schema is None:
-        df = spark.read.parquet(path)
-        if key:
-            _schemas[key] = df.schema
-    else:
-        df = spark.read.schema(schema).parquet(path)
+    df = read_parquet(spark, path)
     # With spark.sql.legacy.parquet.nanosAsLong, TIMESTAMP(NANOS) columns
     # surface as LongType nanos; normalize to TimestampType by truncating
     # to micros (identical to DuckDB's ns -> us conversion). Applies only

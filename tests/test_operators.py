@@ -1115,30 +1115,97 @@ def test_incremental_minhash_empty_and_single_batches(spark, tmp_path):
     assert S.candidates_for_batch(spark, store, 1).count() == 0
 
 
-def test_store_next_batch_id_from_partition_listing(spark, tmp_path):
+def _signature_append(spark, store, rows, batch_id=None):
+    from pulsar_internal_spark.operators import signature_store as S
+
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    return S.append_signature_batch(spark, docs, store, batch_id=batch_id)
+
+
+def _kgram_append(spark, store, rows, batch_id=None):
+    from pulsar_internal_spark.operators import span_store as SS
+
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    return SS.append_kgram_batch(spark, docs, store, batch_id=batch_id, k=3)
+
+
+def _sketch_append(spark, store, rows, batch_id=None):
+    from pulsar_internal_spark.operators import sketches
+
+    toks = spark.createDataFrame(
+        [(w,) for _, text in rows for w in text.split()], "w string"
+    )
+    return sketches.append_sketch_batch(spark, toks, store, batch_id=batch_id)
+
+
+def _sink_append(spark, store, rows, batch_id=None):
+    from pulsar_internal_spark.operators import store_fs
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i, _ in rows], "id_a BIGINT, id_b BIGINT"
+    )
+    return store_fs.append_batch(store, lambda _: pairs, batch_id=batch_id)
+
+
+# every generation store appends through store_fs.append_batch; each
+# call gets fresh documents so the k-gram store's first-seen anti-join
+# always leaves rows (a batch with no rows writes no partition)
+_STORE_APPENDS = pytest.mark.parametrize(
+    "append",
+    [_signature_append, _kgram_append, _sketch_append, _sink_append],
+    ids=["signature", "kgram", "sketch", "candidates_sink"],
+)
+
+
+def _fresh_docs(tag: int) -> list[tuple[int, str]]:
+    return [
+        (i, f"t{tag}w{i} t{tag}w{i + 1} t{tag}w{i + 2} alpha beta gamma delta")
+        for i in range(6)
+    ]
+
+
+@_STORE_APPENDS
+def test_store_next_batch_id_from_partition_listing(spark, tmp_path, append):
     """Sequential batch-id assignment now reads the partition directory
     names (store_fs.max_partition_value) instead of an agg(max) scan
     per append (round 11) — pin the equivalence: sequencing across
     appends, gap-free after an explicit high id, and None on a fresh
     root."""
-    from pulsar_internal_spark.operators import signature_store as S
     from pulsar_internal_spark.operators import store_fs
 
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta"),
-         (2, "alpha beta gamma delta epsilon zeta")],
-        ["doc_id", "text"],
-    )
-    store = str(tmp_path / "sigstore_listing")
-    assert S.append_signature_batch(spark, docs, store) == 0
-    assert S.append_signature_batch(spark, docs, store) == 1
+    store = str(tmp_path / "store_listing")
+    assert append(spark, store, _fresh_docs(0)) == 0
+    assert append(spark, store, _fresh_docs(1)) == 1
     # explicit high id, then sequential resumes after it (same as the
     # old agg(max) + 1 rule)
-    S.append_signature_batch(spark, docs, store, batch_id=7)
-    assert S.append_signature_batch(spark, docs, store) == 8
+    append(spark, store, _fresh_docs(2), batch_id=7)
+    assert append(spark, store, _fresh_docs(3)) == 8
     root = store_fs.resolve_current(store)
     assert store_fs.max_partition_value(root, "batch_id") == 8
     assert store_fs.max_partition_value(root, "nope") is None
+
+
+def test_sketch_auto_batch_id_submits_no_extra_jobs(spark, tmp_path):
+    """append_sketch_batch(batch_id=None) takes its id from the
+    directory listing like the other stores: it submits exactly the
+    jobs of an explicit-id append (a scan for max(batch_id) would add
+    a schema job and an aggregate)."""
+    from pulsar_internal_spark.operators import sketches
+    from tests.conftest import jobs_submitted
+
+    toks = spark.createDataFrame([(w,) for w in "a b c a b a".split()], "w string")
+    store = str(tmp_path / "cms_auto")
+    got = []
+    sketches.append_sketch_batch(spark, toks, store)
+    sketches.append_sketch_batch(spark, toks, store, batch_id=5)  # warm
+    auto = jobs_submitted(
+        spark, lambda: got.append(sketches.append_sketch_batch(spark, toks, store))
+    )
+    explicit = jobs_submitted(
+        spark, lambda: sketches.append_sketch_batch(spark, toks, store, batch_id=9)
+    )
+    assert got == [6]
+    assert auto == explicit
 
 
 def test_ann_recall_regression_planted_neighbors(spark, tmp_path):
@@ -1274,10 +1341,11 @@ def test_ivf_recall_geometry_split(spark):
 def test_literal_and_relation_probes_pick_the_same_cells(spark, nprobe):
     """The two IVF probe forms must pick the same (query_id, cell) sets:
     the literal one (array_sort / array_min over centroid_struct_literal,
-    the frozen-quantizer serving path) and the relation one (row_number
-    over a joined centroid frame: ivf_topk, the persisted index's probes
-    and its appends). Their argmins agree too, so an index's assignment
-    and its probes never disagree on a cell boundary. Planted
+    the frozen-quantizer serving path and the persisted index's appends)
+    and the relation one (row_number over a joined centroid frame:
+    ivf_topk and the persisted index's probes). The literal argmin
+    agrees with the relation probe at nprobe=1, so an index's
+    assignment and its probes never disagree on a cell boundary. Planted
     equidistant ties go to the smaller cell in both forms."""
     import numpy as np
 
@@ -1321,7 +1389,7 @@ def test_literal_and_relation_probes_pick_the_same_cells(spark, nprobe):
     argmin_literal = cells(
         q.select("query_id", sim._literal_cell(F.col("qv"), cent_lit).alias("cell"))
     )
-    argmin_relation = cells(sim._relation_probe(pairs, "query_id", "qv", ("query_id",)))
+    argmin_relation = cells(sim._relation_probe(pairs, "query_id", "qv", ("query_id",), 1))
     assert argmin_literal == argmin_relation
     assert {qid: c for qid, c in argmin_literal.items() if qid in planted} == {
         qid: want[1] for qid, (_, want) in planted.items()
@@ -1948,7 +2016,8 @@ def test_append_kgram_batch_releases_its_staged_blocks(spark, tmp_path):
     assert not persistent_rdd_ids(spark)
 
 
-def test_crashed_first_append_is_rebuilt(spark, tmp_path):
+@_STORE_APPENDS
+def test_crashed_first_append_is_rebuilt(spark, tmp_path, append):
     """A first append that died AFTER creating gen-00000000 but BEFORE
     the pointer commit leaves the one legitimate pointerless state; by
     the replay contract its caller never saw success, so the retry
@@ -1957,13 +2026,8 @@ def test_crashed_first_append_is_rebuilt(spark, tmp_path):
     (covered by the damage-guard tests)."""
     import os
 
-    from pulsar_internal_spark.operators import signature_store as S
     from pulsar_internal_spark.operators import store_fs
 
-    docs = spark.createDataFrame(
-        [(i, f"w{i} w{i + 1} w{i + 2} alpha beta gamma delta") for i in range(6)],
-        "doc_id long, text string",
-    )
     store = str(tmp_path / "crashed_first")
     leftover = os.path.join(store, store_fs.FIRST_GEN)
     os.makedirs(os.path.join(leftover, "batch_id=0"))
@@ -1971,13 +2035,13 @@ def test_crashed_first_append_is_rebuilt(spark, tmp_path):
         f.write("partial crashed write")
     assert store_fs.read_pointer(store) is None
 
-    assert S.append_signature_batch(spark, docs, store) == 0
+    assert append(spark, store, _fresh_docs(0)) == 0
     assert store_fs.read_pointer(store) == store_fs.FIRST_GEN
     assert not os.path.exists(
         os.path.join(leftover, "batch_id=0", "_junk")
     ), "retry must rebuild gen-0, not stack onto the crashed leftover"
     # and the rebuilt store is a normal store: next append increments
-    assert S.append_signature_batch(spark, docs, store) == 1
+    assert append(spark, store, _fresh_docs(1)) == 1
 
 
 def test_maintenance_lease_blocks_concurrent_maintainers(spark, tmp_path):
@@ -2556,10 +2620,11 @@ def test_ivf_index_append_serves_new_vectors(spark, sf_dir, tmp_path):
 def test_ivf_index_sequential_append_reads_batch_ids_from_listing(spark, tmp_path):
     """``batch_id=None`` takes the next id from the (cell, batch_id)
     directory names, not from a scan of the whole index: the append's
-    Spark jobs are pinned (centroid schema read, broadcast, the
-    assign-and-write stages; reading the index's batch_id column would
-    add a schema job and an aggregate), and the id follows the largest
-    batch in any cell, explicit ids included."""
+    Spark jobs are pinned (centroid schema read, centroid collect for
+    the literal cell argmin, the assign-and-write stage; reading the
+    index's batch_id column would add a schema job and an aggregate),
+    and the id follows the largest batch in any cell, explicit ids
+    included."""
     import numpy as np
 
     from tests.conftest import jobs_submitted
@@ -2572,10 +2637,40 @@ def test_ivf_index_sequential_append_reads_batch_ids_from_listing(spark, tmp_pat
     sim.build_ivf_index(df_a, idx, num_centroids=4)
 
     got = []
-    assert jobs_submitted(spark, lambda: got.append(sim.ivf_index_append(spark, df_b, idx))) == 4
+    assert jobs_submitted(spark, lambda: got.append(sim.ivf_index_append(spark, df_b, idx))) == 3
     assert got == [1]
     assert sim.ivf_index_append(spark, df_b.limit(3), idx, batch_id=5) == 5
     assert sim.ivf_index_append(spark, df_b.limit(3), idx) == 6
+
+
+def test_ivf_index_warm_probe_infers_no_metadata_schema(spark, tmp_path):
+    """A warm ivf_index_adc_topk reads centroids/, codebooks/ and the
+    cells generation through the schema memo
+    (sources.tables.read_parquet): the first call infers the three
+    schemas, a repeat submits exactly three jobs fewer, and the warm
+    job count is pinned."""
+    import numpy as np
+
+    from pulsar_internal_spark.operators.pq_frozen import CODEBOOKS
+    from tests.conftest import jobs_submitted
+
+    rng = np.random.default_rng(11)
+    rows = [
+        (int(i), [float(x) for x in v / np.linalg.norm(v)])
+        for i, v in enumerate(rng.normal(size=(300, 64)))
+    ]
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    queries = corpus.filter("vec_id < 5")
+    idx = str(tmp_path / "ivfpq_warm")
+    sim.build_ivf_index(corpus, idx, num_centroids=8, codebooks=CODEBOOKS)
+
+    def run():
+        sim.ivf_index_adc_topk(spark, idx, queries, k=5, nprobe=3).collect()
+
+    cold = jobs_submitted(spark, run)
+    warm = jobs_submitted(spark, run)
+    assert cold - warm == 3
+    assert warm == 13
 
 
 def test_histogram_quantile_invariants(spark, sf_dir):
@@ -2941,7 +3036,7 @@ def test_sink_compaction_and_retention(spark, tmp_path):
             [(10 * b + i, 10 * b + i + 1, b) for i in range(3)],
             "id_a BIGINT, id_b BIGINT, batch_id INT",
         )
-        S._sink_write_batch(frame, sink)
+        store_fs.append_batch(sink, lambda _: frame, batch_id=b)
 
     before = {
         (r.id_a, r.id_b) for r in S.read_candidates_sink(spark, sink).collect()
@@ -3015,7 +3110,7 @@ def test_swap_fence_aborts_loser_under_lost_lease(spark, tmp_path):
         S.append_banded_batch(spark, frame, store, batch_id=b)
     want = {
         (r.id, r.band_idx, r.band_key, 0)
-        for r in S._read_store(spark, store).drop("batch_id").collect()
+        for r in store_fs.read_generation(spark, store).drop("batch_id").collect()
     }
 
     loser_dirs: list[str] = []
@@ -3023,7 +3118,7 @@ def test_swap_fence_aborts_loser_under_lost_lease(spark, tmp_path):
     def loser_write(tmp: str) -> None:
         loser_dirs.append(tmp)
         # stage the loser's generation in full...
-        S._read_store(spark, store).withColumn(
+        store_fs.read_generation(spark, store).withColumn(
             "batch_id", F.lit(0)
         ).write.mode("overwrite").partitionBy("batch_id").parquet(tmp)
         # ...then simulate the lost lease: the marker evaporates (S3
@@ -3039,7 +3134,7 @@ def test_swap_fence_aborts_loser_under_lost_lease(spark, tmp_path):
     assert cur is not None and os.path.join(store, cur) != loser_dirs[0]
     got = {
         (r.id, r.band_idx, r.band_key, r.batch_id)
-        for r in S._read_store(spark, store).collect()
+        for r in store_fs.read_generation(spark, store).collect()
     }
     assert got == want, "winner's compacted store must serve identically"
     # the loser's uniquely-named staging dir was unreferenced from the

@@ -1111,7 +1111,7 @@ def test_path_store_advisory_past_crossover_depth(tmp_path):
     form — and stay silent below it."""
     import warnings
 
-    from pulsar_internal_spark.operators.signature_store import (
+    from pulsar_internal_spark.operators.store_fs import (
         _ADVISED_STORES,
         _advise_bucketed_store,
     )

@@ -64,6 +64,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from pulsar_internal_spark.operators import signature_store as sig  # noqa: E402
 from pulsar_internal_spark.operators import span_store as spans  # noqa: E402
 from pulsar_internal_spark.operators import similarity as sim  # noqa: E402
+from pulsar_internal_spark.operators import store_fs  # noqa: E402
 from tools.measure import measure, session  # noqa: E402
 
 STRIDE = 1_000_000_000  # gen_scale_fixture.py's copy stride
@@ -212,7 +213,7 @@ def main() -> None:
     feed_t0 = time.perf_counter()
     for b in range(SINK_BATCHES):
         frame = pair_src.filter(F.col("batch_id") == b)
-        sig._sink_write_batch(frame, sink)
+        store_fs.append_batch(sink, lambda _: frame, batch_id=b)
     feed_s = round(time.perf_counter() - feed_t0, 3)
 
     files_before = _count_parquet_files(sink)
