@@ -10,6 +10,15 @@ sf fixture, so path/statistics differences never enter the hash (the
 normalizer strips session-variant tokens: expression ids, partition
 counts, file paths — see tools/gen_explain.normalize_plan).
 
+The pins hold at any core count of 2 or more. The only core-count tokens
+in these plans are the `RoundRobinPartitioning(N)` exchange that
+`sources.tables.spread()` adds and the `Range (..., splits=N)` of
+`spark.range`; both counts follow `sc.defaultParallelism` and are
+stripped, while the exchange node itself still enters the hash. At
+SPARK_GRAFT_CPUS=1, `spread()` is a no-op on sf0.01's one-partition
+scans, so the 24 pins with a `spread()` exchange differ there in plan
+shape, not in a count, and fail.
+
 On failure: `python tools/gen_explain.py` (regenerates EXPLAIN.md and
 the hash sidecar in one step — the stamp then matches the regeneration
 commit by construction).
@@ -22,7 +31,7 @@ import os
 
 import pytest
 
-from tools.gen_explain import HEADLINERS, SF_DIR, plan_hash
+from tools.gen_explain import HEADLINERS, SF_DIR, normalize_plan, plan_hash
 
 from pulsar_internal_spark.plans.queries import QUERIES
 
@@ -49,6 +58,44 @@ def test_explain_md_has_a_section_per_headliner():
         md = f.read()
     missing = [name for name, _ in HEADLINERS if f"## {name}" not in md]
     assert not missing, f"EXPLAIN.md missing sections: {missing}"
+
+
+def _spread_plan(cores: int, spread: bool = True) -> str:
+    """A static plan in Spark's own text form: a `spread()` exchange over
+    a one-partition scan, broadcast-joined to a `spark.range` probe."""
+    scan = (
+        "FileScan parquet [doc_id#12L,text#13] Batched: true, Format: "
+        "Parquet, Location: InMemoryFileIndex(1 paths)"
+        "[file:/data/sf0.01/documents.parquet], ReadSchema: "
+        "struct<doc_id:bigint,text:string>"
+    )
+    lines = [
+        "BroadcastHashJoin [doc_id#12L], [probe_id#41L], LeftSemi, BuildRight, false",
+        ":- Project [doc_id#12L, length(text#13) AS n#20]",
+    ]
+    if spread:
+        lines.append(
+            f":  +- Exchange RoundRobinPartitioning({cores}), "
+            "REPARTITION_BY_NUM, [plan_id=51]"
+        )
+    lines += [
+        f":     +- {scan}",
+        "+- BroadcastExchange HashedRelationBroadcastMode(List(input[0, "
+        "bigint, false]),false), [plan_id=60]",
+        "   +- Project [(id#40L * 5) AS probe_id#41L]",
+        f"      +- Range (0, 40, step=1, splits={cores})",
+    ]
+    return "\n".join(lines)
+
+
+def test_normalizer_drops_core_counts_but_keeps_the_exchange():
+    # the round-robin and Range counts follow sc.defaultParallelism, so
+    # the same plan built at 4 and at 32 cores must hash the same ...
+    assert normalize_plan(_spread_plan(4)) == normalize_plan(_spread_plan(32))
+    # ... while a query that gains or loses its spread() exchange must not
+    assert normalize_plan(_spread_plan(32, spread=False)) != normalize_plan(
+        _spread_plan(32)
+    )
 
 
 @pytest.mark.parametrize("name", [n for n, _ in HEADLINERS])

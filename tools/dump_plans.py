@@ -18,9 +18,11 @@ FORMATTED static physical plan (what code changes move); building a
 query's DataFrame also runs its eager staging jobs, so generation
 doubles as a smoke run at the chosen SF (SPARK_GRAFT_PLANS_SF, default
 gen_explain's sf0.01 — plan SHAPE is SF-invariant for every suite
-query; AQE runtime re-planning is out of scope here). Plans depend on
-the core count (`spread()`), so compare dumps taken at the same
-SPARK_GRAFT_CPUS.
+query; AQE runtime re-planning is out of scope here). The hashes agree
+across core counts of 2 and more: the normalizer strips the
+`spread()` round-robin and `spark.range` split counts, the only tokens
+that follow the core count. The formatted `.txt` dumps still carry those
+counts, so diff `.txt` dumps taken at the same SPARK_GRAFT_CPUS.
 """
 
 from __future__ import annotations

@@ -97,8 +97,12 @@ def normalize_plan(plan: str) -> str:
     """Strip run- and session-variant tokens from a physical-plan string
     so its hash is stable across sessions: expression/plan ids, exchange
     reuse ids, partition counts (the test session runs 8 shuffle
-    partitions, the generator 32), filesystem paths (sf dirs, demo-store
-    uuid tempdirs, checkpoint RDD names), and file-index statistics."""
+    partitions, the generator 32; `RoundRobinPartitioning(N)` from
+    `spread()` and `Range (..., splits=N)` from `spark.range` follow
+    `sc.defaultParallelism`, i.e. the core count), filesystem paths (sf
+    dirs, demo-store uuid tempdirs, checkpoint RDD names), and file-index
+    statistics. Only counts go: the exchange node itself, and its place
+    in the tree, still enter the hash."""
     import re
 
     s = plan
@@ -124,6 +128,8 @@ def normalize_plan(plan: str) -> str:
     s = re.sub(r"\[plan_id=N\]", "[plan_id=N]", s)
     s = re.sub(r"(hashpartitioning|rangepartitioning)\((.*?), \d+\)", r"\1(\2, N)", s)
     s = re.sub(r"coalesce\(\d+\)", "coalesce(N)", s)
+    s = re.sub(r"RoundRobinPartitioning\(\d+\)", "RoundRobinPartitioning(N)", s)
+    s = re.sub(r"splits=\d+", "splits=N", s)
     s = re.sub(r"(file:)?/[^\s,)\]]*", "PATH", s)
     s = re.sub(r"InMemoryFileIndex\([^)]*\)", "InMemoryFileIndex(N)", s)
     s = re.sub(r"\d+ paths", "N paths", s)
