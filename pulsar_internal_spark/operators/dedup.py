@@ -530,7 +530,6 @@ def hamming_banded_pairs(
     band_bits: int = 4,
     max_hamming: int = 2,
     max_df: int = 4096,
-    stage: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs under Hamming distance over an integer
     fingerprint column (SimHash/pHash family), banded so the join is an
@@ -558,18 +557,17 @@ def hamming_banded_pairs(
     ``hashes`` feeds THREE lineages (drop_hot_keys' count plus both
     self-join sides); when it is expensive upstream — the perceptual
     queries decode real BMP/WAV/AVI bytes via mapInPandas to produce
-    it — an un-staged plan re-runs that decode 3-4x. ``stage=True``
-    stages (staging.stage) the narrow (id, hash) projection so the decode
-    runs ONCE and only the cheap band explode replays per consumer
-    (spark.pulsar.stage.mode=reliable on clusters). Pass stage=False for cheap
-    inputs or caller-staged frames."""
+    it — an un-staged plan re-runs that decode 3-4x. So the narrow
+    (id, hash) projection is staged (staging.stage): the decode runs
+    ONCE and only the cheap band explode replays per consumer
+    (spark.pulsar.stage.mode=reliable on clusters)."""
     assert bits % band_bits == 0
     bands = bits // band_bits
     assert max_hamming < bands, "banding recall is only exact below #bands"
     mask = (1 << band_bits) - 1
-    narrow = hashes.select(F.col(id_col).alias("id"), F.col(hash_col).alias("h"))
-    if stage:
-        narrow = narrow.transform(stage_frame)
+    narrow = stage_frame(
+        hashes.select(F.col(id_col).alias("id"), F.col(hash_col).alias("h"))
+    )
     banded = narrow.select(
         "id",
         "h",

@@ -152,8 +152,14 @@ def max_partition_value(root: str, column: str) -> int | None:
     has its directory; an empty batch writes none and is invisible to
     the aggregate too — identical semantics). None = no such partition
     directory (fresh or empty store)."""
+    return _max_partition(list_subdirs(root), column)
+
+
+def _max_partition(names, column: str) -> int | None:
+    """Max integer value N over hive-partition names ``column=N`` (a
+    directory listing or a catalog's SHOW PARTITIONS rows)."""
     vals = []
-    for name in list_subdirs(root):
+    for name in names:
         if name.startswith(f"{column}="):
             try:
                 vals.append(int(name.split("=", 1)[1]))
@@ -688,7 +694,9 @@ def append_bucketed(
     batch_id and bucketed (and sorted) on ``bucket_col``, so joins
     against history read the store side pre-hash-partitioned with zero
     exchange (path parquet cannot persist bucketing metadata; a catalog
-    table can). ``batch_id=None`` appends under max(batch_id) + 1. An
+    table can). ``batch_id=None`` appends under max(batch_id) + 1, read
+    from the catalog's partition listing like max_partition_value reads
+    the path stores' directories (no Spark job). An
     EXPLICIT batch_id is replace-on-replay: the batch's partition is
     dropped (ALTER TABLE DROP PARTITION — bucketed catalog writes
     cannot use dynamic partition overwrite without losing the bucketing
@@ -698,8 +706,9 @@ def append_bucketed(
 
     exists = spark.catalog.tableExists(table)
     if batch_id is None:
-        prev = spark.table(table).agg(F.max(BATCH)).collect()[0][0] if exists else None
-        bid = 0 if prev is None else int(prev) + 1
+        parts = spark.sql(f"SHOW PARTITIONS {table}").collect() if exists else []
+        prev = _max_partition((r[0] for r in parts), BATCH)
+        bid = 0 if prev is None else prev + 1
     else:
         bid = int(batch_id)
         if exists:

@@ -1208,6 +1208,48 @@ def test_sketch_auto_batch_id_submits_no_extra_jobs(spark, tmp_path):
     assert auto == explicit
 
 
+@pytest.mark.parametrize(
+    "appender", ["append_signature_batch_bucketed", "append_kgram_batch_bucketed"]
+)
+def test_bucketed_auto_batch_id_submits_no_extra_jobs(spark, appender):
+    """The bucketed catalog stores take the next batch id from the
+    catalog's partition listing, as the path stores take it from their
+    directories: an auto-id append submits exactly the jobs of an
+    explicit-id append (an aggregate over the table for max(batch_id)
+    would add its own), and ids continue from the largest partition."""
+    from pulsar_internal_spark.operators import signature_store as S
+    from pulsar_internal_spark.operators import span_store as SS
+    from tests.conftest import jobs_submitted
+
+    table = f"auto_id_{appender}"
+    batches = iter(range(10))
+
+    def append(**kw):
+        # fresh words per batch, so every k-gram batch has first-seen rows
+        b = next(batches)
+        docs = spark.createDataFrame(
+            [
+                (b * 10 + i, " ".join(f"w{b}x{j}" for j in range(i, i + 12)))
+                for i in range(4)
+            ],
+            "doc_id long, text string",
+        )
+        if appender == "append_signature_batch_bucketed":
+            return S.append_signature_batch_bucketed(spark, docs, table, **kw)
+        kg = SS._kgram_occurrences(docs, 8, "doc_id", "text")
+        return SS.append_kgram_batch_bucketed(spark, kg, table, **kw)
+
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    try:
+        ids = [append(), append()]
+        explicit = jobs_submitted(spark, lambda: ids.append(append(batch_id=7)))
+        auto = jobs_submitted(spark, lambda: ids.append(append()))
+        assert ids == [0, 1, 7, 8]
+        assert auto == explicit
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
 def test_ann_recall_regression_planted_neighbors(spark, tmp_path):
     """ANN recall@5 gate (fixed-seed planted-neighbor corpus): 20 base
     queries, each with FIVE planted neighbors at tiered similarity

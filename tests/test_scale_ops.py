@@ -1117,7 +1117,7 @@ def test_fingerprint_width_sets_banding_capacity(spark):
     # max_df=20 < cluster-size 30: the 16-bit form's 64 buckets each
     # hold >= one 30-member cluster -> every bucket over cap -> empty.
     out16 = hamming_banded_pairs(
-        narrow, bits=16, band_bits=4, max_hamming=2, max_df=20, stage=False
+        narrow, bits=16, band_bits=4, max_hamming=2, max_df=20
     )
     assert out16.count() == 0, "saturated 16-bit banding must excise all"
 
@@ -1125,7 +1125,7 @@ def test_fingerprint_width_sets_banding_capacity(spark):
     # 63 bits spread 40 clusters across 65,536 values per band, so
     # each bucket holds ~one cluster and nothing is excised.
     out64 = hamming_banded_pairs(
-        wide, bits=64, band_bits=16, max_hamming=2, max_df=64, stage=False
+        wide, bits=64, band_bits=16, max_hamming=2, max_df=64
     )
     assert out64.count() == planted, "wide banding must keep planted pairs"
 
@@ -1134,7 +1134,7 @@ def test_fingerprint_width_sets_banding_capacity(spark):
     # (75 docs) exceed the cap and their pairs are excised — strictly
     # fewer results than the wide form finds on the same corpus.
     out16b = hamming_banded_pairs(
-        narrow, bits=16, band_bits=4, max_hamming=2, max_df=64, stage=False
+        narrow, bits=16, band_bits=4, max_hamming=2, max_df=64
     )
     n16 = out16b.count()
     assert n16 < planted, (

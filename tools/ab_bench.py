@@ -26,6 +26,10 @@ Usage:
       --var default: \
       --var adv16m:spark.sql.adaptive.advisoryPartitionSizeInBytes=16m \
       --sf-dir .scale/sf1.0 --sf-dir .scale/sf10 user_triangle_counts
+
+The counters say how much a cell shuffles and spills; which plan node
+or stage owns those bytes is tools/plan_diagnose.py, with the same
+--sf-dir flags and the variant's confs as --conf.
 """
 
 from __future__ import annotations

@@ -171,8 +171,12 @@ def settle(spark) -> None:
 def sample(spark, build) -> dict:
     """One timed window. ``build()`` returns a DataFrame, which is
     materialized, or does its own writes and returns anything else.
-    The ledger is read after the window closes and the session is
-    settled, so neither is billed to the window."""
+    The ledger is read after the window closes, the session is settled
+    and the listener bus has delivered every event of the window to
+    the status stores (their task and SQL metrics are filled in
+    asynchronously), so none of that is billed to the window.
+    ``marks`` are the window's ledger marks, for readers of the same
+    stores (tools/plan_diagnose.py)."""
     ledger = Ledger(spark)
     m0 = ledger.mark()
     t0 = time.perf_counter()
@@ -184,6 +188,7 @@ def sample(spark, build) -> dict:
     t2 = time.perf_counter()
     m1 = ledger.mark()
     settle(spark)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     work = ledger.work(m0, m1)
     return {
         "secs": t2 - t0,
@@ -191,6 +196,7 @@ def sample(spark, build) -> dict:
         "exec_s": t2 - t1,
         "build_jobs": m_built[0] - m0[0],
         **{k: work[k] for k in COUNTERS},
+        "marks": (m0, m1),
     }
 
 
