@@ -38,13 +38,12 @@ a build key always sets the exact bit its probe twin tests, because
 both sides hash the same column list with the same xxhash64 seed.
 
 Sizing: one hash function, so FPR = 1 - exp(-n/m) (~n/m for m >> n).
-``bits_per_key=8`` (default) gives ~11.8% FPR for ~1 byte of bitmap
+``BITS_PER_KEY = 8`` gives ~11.8% FPR for ~1 byte of bitmap
 per build key — a 53 GB probe exchange drops to ~12% + true matches,
 and the broadcast stays ~n/8 words (two longs each), roughly an order
 of magnitude lighter than broadcasting the build rows themselves into
-a hash relation. More bits buy a lower FPR linearly in broadcast size;
-callers with a known build count should pass ``n_keys`` to skip the
-count job.
+a hash relation. Callers with a known build count should pass
+``n_keys`` to skip the count job.
 
 At 100 TB: the bitmap is linear in the BUILD side (the small side by
 construction — callers choose which side blows up), the probe side
@@ -80,6 +79,10 @@ __all__ = [
 # correctness runs, and freshly-bootstrapped production stores.
 STORE_MIN_HISTORY_BATCHES = 4
 
+# Bitmap bits per build key: the FPR/broadcast trade-off in the module
+# docstring's sizing note.
+BITS_PER_KEY = 8
+
 # Floor on the bitmap size: 2^16 bits = 1024 words. Below this the
 # bitmap is noise-sized anyway and a power-of-two floor keeps the mask
 # arithmetic branch-free for empty/tiny build sides.
@@ -110,7 +113,6 @@ def bloom_prune(
     probe_cols: Sequence[str],
     build_cols: Sequence[str],
     *,
-    bits_per_key: int = 8,
     n_keys: Optional[int] = None,
 ) -> DataFrame:
     """Return ``probe`` minus (most) rows whose ``probe_cols`` key does
@@ -119,15 +121,12 @@ def bloom_prune(
 
     Guarantees: result is a subset of ``probe`` (same schema, no
     reorder of columns) and a superset of
-    ``probe.join(build, keys, "left_semi")``. With ``bits_per_key <= 0``
-    the prune is disabled and ``probe`` is returned unchanged.
+    ``probe.join(build, keys, "left_semi")``.
 
     ``n_keys``: build-side row count if the caller already knows it
     (e.g. a staged frame whose count is a cached-block scan); when
     omitted, one count job runs over ``build``.
     """
-    if bits_per_key <= 0:
-        return probe
     if len(probe_cols) != len(build_cols) or not probe_cols:
         raise ValueError(
             "probe_cols and build_cols must be equal-length and non-empty, "
@@ -148,7 +147,7 @@ def bloom_prune(
             )
     if n_keys is None:
         n_keys = build.count()
-    m_bits = max(_MIN_BITS, 1 << max(1, int(n_keys) * bits_per_key - 1).bit_length())
+    m_bits = max(_MIN_BITS, 1 << max(1, int(n_keys) * BITS_PER_KEY - 1).bit_length())
     mask = m_bits - 1
 
     out_cols = probe.columns

@@ -471,8 +471,7 @@ def scrub_duplicated_spans(
     doc-grain join, and sizing); staging.stage materializes the
     tokenize once instead of re-splitting the corpus per consumer —
     measured ~25% wall-clock at sf0.1 (the reindex/graph-CC idiom; set
-    spark.pulsar.stage.mode=reliable on clusters with elastic
-    executors)."""
+    spark.checkpoint.dir on clusters with elastic executors)."""
     toks = docs.select(id_col, tokenized(text_col).alias("w")).transform(stage_frame)
     occ = dup_kgram_occurrences(toks, k=k, id_col=id_col)
     noc = occ.filter(F.col("owner_doc") != F.col(id_col)).select(id_col, "pos")
@@ -560,7 +559,7 @@ def hamming_banded_pairs(
     it — an un-staged plan re-runs that decode 3-4x. So the narrow
     (id, hash) projection is staged (staging.stage): the decode runs
     ONCE and only the cheap band explode replays per consumer
-    (spark.pulsar.stage.mode=reliable on clusters)."""
+    (set spark.checkpoint.dir on clusters)."""
     assert bits % band_bits == 0
     bands = bits // band_bits
     assert max_hamming < bands, "banding recall is only exact below #bands"

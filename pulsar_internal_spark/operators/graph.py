@@ -17,8 +17,8 @@ min-label propagation plus pointer jumping:
 Propagation alone needs O(diameter) rounds; the hop step contracts
 label chains. Each round stages via staging.stage (lineage would
 otherwise compound per round — the same discipline as
-operators/tree.descendants); on a cluster swap for
-spark.pulsar.stage.mode=reliable (staging.stage).
+operators/tree.descendants); on a cluster set spark.checkpoint.dir
+for reliable staging (staging.stage).
 
 Convergence is detected with a monotone checksum: labels only ever
 decrease, so sum(label) strictly decreases on any change. The checksum

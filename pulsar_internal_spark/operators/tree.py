@@ -136,7 +136,7 @@ def descendants(
     # Each round's state is materialized with an eager staging.stage:
     # without it, round k's plan re-derives rounds 1..k-1 and the final
     # materialization re-runs the whole loop. On a cluster set
-    # spark.pulsar.stage.mode=reliable if executors may be lost.
+    # spark.checkpoint.dir if executors may be lost.
     e = edges.select(
         F.col(child_col).alias("id"), F.col(parent_col).alias("_parent")
     )

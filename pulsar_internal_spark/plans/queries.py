@@ -7469,7 +7469,7 @@ def user_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join, both wedge sides, the closing-edge probe) — without a
     # materialization the events self-join would re-execute once per
     # consumer. Same staging.stage idiom as tree.reindex/graph CC;
-    # on a cluster set spark.pulsar.stage.mode=reliable.
+    # on a cluster set spark.checkpoint.dir.
     edges = _minute_cooccurrence_edges(_t(spark, sf_dir, "events")).transform(stage)
     deg = (
         edges.select(F.col("src").alias("id"))

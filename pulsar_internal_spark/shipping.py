@@ -13,6 +13,7 @@ is called from every query path that executes a UDF.
 
 from __future__ import annotations
 
+import atexit
 import os
 import tempfile
 import zipfile
@@ -28,8 +29,12 @@ def package_root() -> str:
 
 def build_zip() -> str:
     """Zip the package (top-level dir = pulsar_internal_spark) so the
-    zip itself is a valid sys.path entry."""
-    out = os.path.join(tempfile.gettempdir(), "pulsar_internal_spark_pkg.zip")
+    zip itself is a valid sys.path entry. The path is per process: two
+    engine processes on one host must not overwrite each other's zip,
+    or Spark refuses the second one's file as not matching the first's."""
+    out = os.path.join(
+        tempfile.gettempdir(), f"pulsar_internal_spark_pkg_{os.getpid()}.zip"
+    )
     src = package_root()
     with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as z:
         for dirpath, _dirnames, filenames in os.walk(src):
@@ -43,7 +48,15 @@ def build_zip() -> str:
                     "pulsar_internal_spark", os.path.relpath(full, src)
                 )
                 z.write(full, rel)
+    atexit.register(_remove, out)
     return out
+
+
+def _remove(path: str) -> None:
+    try:
+        os.remove(path)
+    except OSError:
+        pass
 
 
 def ensure_shipped(spark: SparkSession) -> None:

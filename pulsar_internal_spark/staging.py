@@ -1,4 +1,4 @@
-"""Multi-consumer frame staging — one switch for the whole repo.
+"""Multi-consumer frame staging — one idiom for the whole repo.
 
 Several operators materialize an expensive intermediate frame exactly
 once because it feeds multiple plan lineages (decoded fingerprints,
@@ -6,20 +6,23 @@ signed k-grams, iterative frontiers): re-deriving it per consumer
 multiplies the dominant cost, and iterative operators additionally
 need the lineage CUT (fold-of-fold plans compound across rounds).
 
-``stage(df)`` is the single idiom every such site uses, governed by a
-runtime conf so the SAME code is correct on a laptop and a cluster:
+``stage(df)`` is the single idiom every such site uses. The deployment
+decides how it stages, through Spark's own checkpoint directory, so the
+SAME code is correct on a laptop and a cluster:
 
-- ``spark.pulsar.stage.mode=local`` (default): ``localCheckpoint()``
-  — blocks cached on the executors, no distributed filesystem needed.
-  Right for local[*] and for clusters with stable executors; NOT safe
-  under executor loss/dynamic deallocation (a lost block kills the
-  job, since lineage was truncated).
-- ``spark.pulsar.stage.mode=reliable``: ``checkpoint()`` to the
-  context's checkpoint directory (set by Spark's own
-  ``spark.checkpoint.dir`` at context start, or by
-  ``SparkContext.setCheckpointDir``) — survives executor loss, at the
-  cost of a write+read through the checkpoint filesystem (hdfs://,
-  s3a://, ... — anything the Hadoop FileSystem API serves).
+- no checkpoint directory (the default): ``localCheckpoint()`` at
+  ``DISK_ONLY`` — blocks on the executors' local disks, never on heap,
+  so staged frames do not compete with execution memory (at sf100 the
+  staged candidate-pair frame is tens of GB, and the deserialized
+  default level OOMed a 48g heap). No distributed filesystem needed;
+  right for local[*] and for clusters with stable executors, NOT safe
+  under executor loss (lineage was truncated, so a lost block kills
+  the job).
+- a checkpoint directory (``spark.checkpoint.dir`` at context start,
+  or ``SparkContext.setCheckpointDir``): ``checkpoint()`` into it —
+  reliable staging that survives executor loss, at the cost of a
+  write+read through the checkpoint filesystem (hdfs://, s3a://, ...
+  — anything the Hadoop FileSystem API serves).
 
 Both are EAGER: the frame is computed at stage() time, which callers
 rely on for side-effect ordering (e.g. span/signature stores append
@@ -29,52 +32,16 @@ the staged batch before deriving its candidates).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-MODE_CONF = "spark.pulsar.stage.mode"
-LEVEL_CONF = "spark.pulsar.stage.level"
-
-# ``default`` keeps Spark's localCheckpoint level (MEMORY_AND_DISK_DESER,
-# deserialized row objects on heap — fastest re-read, fine for the
-# suite's normal frame sizes). ``disk_only`` never holds staged
-# partitions on heap; re-reads stream from local disk. REQUIRED for the
-# heavy scale tiers: at sf100 the staged candidate-pair frame is tens
-# of GB, and the deserialized default OOMs a 48g heap when BlockManager
-# re-materializes a disk block into memory (maybeCacheDiskValuesInMemory
-# pulling hundreds of millions of row objects — the round-11
-# image-keepers first-attempt failure).
-_LEVELS = ("default", "disk_only")
+from pyspark.storagelevel import StorageLevel
 
 
 def stage(df: DataFrame) -> DataFrame:
-    """Materialize ``df`` once for multi-consumer / iterative reuse.
-    See module docstring for the mode switch; ``spark.pulsar.stage.level``
-    (default | disk_only) picks the storage level in local mode — heavy
-    scale runs set disk_only so staged frames never compete with
-    execution memory."""
-    spark = df.sparkSession
-    mode = spark.conf.get(MODE_CONF, "local")
-    if mode == "local":
-        level = spark.conf.get(LEVEL_CONF, "default")
-        if level not in _LEVELS:
-            raise ValueError(
-                f"{LEVEL_CONF} must be one of {list(_LEVELS)}, got {level!r}"
-            )
-        if level == "default":
-            return df.localCheckpoint()
-        from pyspark.storagelevel import StorageLevel
-
-        return df.localCheckpoint(storageLevel=StorageLevel.DISK_ONLY)
-    if mode != "reliable":
-        raise ValueError(
-            f"{MODE_CONF} must be 'local' or 'reliable', got {mode!r}"
-        )
-    if spark.sparkContext.getCheckpointDir() is None:
-        raise ValueError(
-            "reliable staging needs a checkpoint directory: start the "
-            "session with spark.checkpoint.dir or call "
-            "SparkContext.setCheckpointDir"
-        )
-    return df.checkpoint()
+    """Materialize ``df`` once for multi-consumer / iterative reuse:
+    reliable ``checkpoint()`` when the context has a checkpoint
+    directory, else a ``DISK_ONLY`` ``localCheckpoint()``."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint()
+    return df.localCheckpoint(storageLevel=StorageLevel.DISK_ONLY)
 
 
 def persistent_rdd_ids(spark) -> set:

@@ -65,22 +65,17 @@ def test_prune_then_exact_join_equals_semi_join(spark):
 
 
 def test_actually_prunes_most_nonmatches(spark):
-    """With 16 bits/key over 50 build keys the bitmap is far below
-    saturation — the prune must remove the bulk of the 90% of probe
+    """Over 50 build keys the bitmap sits at its 65,536-bit floor, far
+    below saturation — the prune must remove the bulk of the 90% of probe
     rows that never match (false positives allowed, a no-op prune is
     a regression)."""
     probe, build = _probe(spark), _build(spark)
-    pruned = bloom_prune(probe, build, ["k1", "k2"], ["b1", "b2"], bits_per_key=16)
+    pruned = bloom_prune(probe, build, ["k1", "k2"], ["b1", "b2"])
     n_probe, n_pruned = probe.count(), pruned.count()
     n_exact = probe.join(
         build, (probe.k1 == build.b1) & (probe.k2 == build.b2), "left_semi"
     ).count()
     assert n_exact <= n_pruned < n_probe * 0.5, (n_exact, n_pruned, n_probe)
-
-
-def test_disabled_returns_probe_unchanged(spark):
-    probe, build = _probe(spark), _build(spark)
-    assert bloom_prune(probe, build, ["k1"], ["b1"], bits_per_key=0) is probe
 
 
 def test_empty_build_prunes_everything(spark):

@@ -1,8 +1,10 @@
 """The engine's own conf surface, pinned. Every independent knob doubles
 the configurations tests and scale runs must cover, so a new
 ``spark.pulsar.*`` conf or engine env var has to be added here on
-purpose. The tools measure with the Spark UI off, like the benchmark.
-Pure Python: no Spark session."""
+purpose. Spark accepts an unknown ``spark.pulsar.*`` conf without a
+word, so the tools and docs may name only the kept confs too: a
+leftover one would silently do nothing. The tools measure with the
+Spark UI off, like the benchmark. Pure Python: no Spark session."""
 
 from __future__ import annotations
 
@@ -13,14 +15,15 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(REPO, "pulsar_internal_spark")
 TOOLS = os.path.join(REPO, "tools")
 
-KEPT_CONFS = {
-    "spark.pulsar.stage.mode",
-    "spark.pulsar.stage.level",
-    "spark.pulsar.pairs.partitions",
-}
+KEPT_CONFS = {"spark.pulsar.pairs.partitions"}
+CONF = re.compile(r"spark\.pulsar(?:\.\w+)+")
 
 
 def _sources(top=PKG, exts=(".py",)):
+    if os.path.isfile(top):
+        with open(top, encoding="utf-8") as fh:
+            yield os.path.basename(top), fh.read()
+        return
     for root, dirs, files in os.walk(top):
         dirs[:] = [d for d in dirs if d != "__pycache__"]
         for f in files:
@@ -33,11 +36,26 @@ def _sources(top=PKG, exts=(".py",)):
 def test_engine_names_exactly_the_kept_confs():
     found = {}
     for rel, text in _sources():
-        for name in re.findall(r"spark\.pulsar(?:\.\w+)+", text):
+        for name in CONF.findall(text):
             found.setdefault(name, set()).add(rel)
     assert set(found) == KEPT_CONFS, {
         k: sorted(v) for k, v in found.items() if k not in KEPT_CONFS
     }
+
+
+def test_tools_and_docs_name_only_kept_confs():
+    hits = [
+        f"{rel}: {name}"
+        for top, exts in (
+            (TOOLS, (".py", ".sh")),
+            (os.path.join(REPO, "docs"), (".md",)),
+            (os.path.join(REPO, "README.md"), ()),
+        )
+        for rel, text in _sources(top, exts)
+        for name in CONF.findall(text)
+        if name not in KEPT_CONFS
+    ]
+    assert not hits, hits
 
 
 def test_engine_reads_no_initial_partitions_env():

@@ -519,3 +519,36 @@ def test_http_fetch_distributed_null_method_body(spark):
         srv.shutdown()
     assert rows["echo"].Body == "echo:data"
     assert rows["ok"].StatusCode == 200 and '"hello"' in rows["ok"].Body
+
+
+# ---------------------------------------------------------------- shipping
+
+
+def test_shipped_zip_is_per_process():
+    """Two engine processes on one host build distinct package zips, so
+    neither overwrites the zip the other's executors fetch. No Spark."""
+    import subprocess
+    import sys
+    import zipfile
+
+    from pulsar_internal_spark.shipping import build_zip, package_root
+
+    init = "pulsar_internal_spark/__init__.py"
+    # the child's zip is removed when it exits, so it reads its own
+    child = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "import zipfile; from pulsar_internal_spark.shipping import "
+            "build_zip; p = build_zip(); "
+            "print(p, %r in zipfile.ZipFile(p).namelist())" % init,
+        ],
+        cwd=os.path.dirname(package_root()),
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout.split()
+    mine = build_zip()
+    assert child[0] != mine
+    assert child[1] == "True"
+    assert init in zipfile.ZipFile(mine).namelist()

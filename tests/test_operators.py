@@ -2285,55 +2285,37 @@ def test_ivf_store_compaction_and_expiry(spark, tmp_path):
 
 
 def test_stage_level_knob(spark):
-    """staging.stage honors spark.pulsar.stage.level: disk_only staged
-    blocks never occupy heap (the sf100 image-keepers OOM class:
-    BlockManager re-materializing a tens-of-GB disk block as
-    deserialized row objects), default keeps Spark's deserialized
-    localCheckpoint level. Results identical across levels; bogus
-    level fails loudly."""
-    import pytest
-
+    """With no checkpoint dir staging.stage localCheckpoints at
+    DISK_ONLY: staged blocks never occupy heap (the sf100 image-keepers
+    OOM class: BlockManager re-materializing a tens-of-GB disk block as
+    deserialized row objects), and the staged frame's rows are
+    unchanged."""
     from pulsar_internal_spark import staging
 
     df = spark.range(500).selectExpr("id", "id * 2 AS v")
-    want = 500
-    expect = {
-        "default": "StorageLevel(disk, memory, deserialized, 1 replicas)",
-        "disk_only": "StorageLevel(disk, 1 replicas)",
-    }
+    before = staging.persistent_rdd_ids(spark)
     try:
-        for lvl, level_str in expect.items():
-            before = staging.persistent_rdd_ids(spark)
-            spark.conf.set(staging.LEVEL_CONF, lvl)
-            staged = staging.stage(df)
-            assert staged.count() == want
-            new = {
-                rid: j.getStorageLevel().toString()
-                for rid, j in dict(
-                    spark.sparkContext._jsc.getPersistentRDDs()
-                ).items()
-                if rid not in before
-            }
-            assert level_str in new.values(), (lvl, new)
-            staging.release_staged(spark, keep=before)
-        spark.conf.set(staging.LEVEL_CONF, "bogus")
-        with pytest.raises(ValueError, match="stage.level"):
-            staging.stage(df)
+        staged = staging.stage(df)
+        assert staged.count() == 500
+        new = {
+            rid: j.getStorageLevel().toString()
+            for rid, j in dict(
+                spark.sparkContext._jsc.getPersistentRDDs()
+            ).items()
+            if rid not in before
+        }
+        assert "StorageLevel(disk, 1 replicas)" in new.values(), new
     finally:
-        spark.conf.unset(staging.LEVEL_CONF)
+        staging.release_staged(spark, keep=before)
 
 
 def test_reliable_staging_mode(spark, tmp_path):
-    """staging.stage honors spark.pulsar.stage.mode: 'reliable' routes
-    through RDD checkpoint() into the context's checkpoint dir
-    (surviving executor loss on a cluster — the conf the docstrings
-    point at), produces identical results to the default
-    localCheckpoint path, and fails loudly on a bad mode."""
+    """A checkpoint dir on the context makes staging.stage route through
+    RDD checkpoint() into it (surviving executor loss on a cluster —
+    what the docstrings' "set spark.checkpoint.dir" points at), with
+    results identical to the local DISK_ONLY localCheckpoint path."""
     import os
 
-    import pytest
-
-    from pulsar_internal_spark import staging
     from pulsar_internal_spark.operators import graph as G
 
     edges = spark.createDataFrame(
@@ -2344,9 +2326,9 @@ def test_reliable_staging_mode(spark, tmp_path):
         for r in G.connected_components(edges).collect()
     }
     ckdir = str(tmp_path / "stage_ck")
+    sc = spark.sparkContext
     try:
-        spark.sparkContext.setCheckpointDir(ckdir)
-        spark.conf.set(staging.MODE_CONF, "reliable")
+        sc.setCheckpointDir(ckdir)
         reliable_cc = {
             (r.id, r.cluster_id)
             for r in G.connected_components(edges).collect()
@@ -2360,12 +2342,12 @@ def test_reliable_staging_mode(spark, tmp_path):
             if f.startswith("part-")
         ]
         assert found, "reliable staging must write checkpoint files"
-
-        spark.conf.set(staging.MODE_CONF, "bogus")
-        with pytest.raises(ValueError, match="stage.mode"):
-            staging.stage(edges)
     finally:
-        spark.conf.set(staging.MODE_CONF, "local")
+        # later tests in the shared session stage locally again
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(
+            sc._jvm.scala.Option.apply(None)
+        )
+        assert sc.getCheckpointDir() is None
 
 
 def test_store_maintenance_routes_uris_via_hadoop_fs(spark, tmp_path):

@@ -16,9 +16,9 @@ returned frame), build jobs, and the median of each work counter
 Usage:
   # conf A/B
   python tools/ab_bench.py \
-      --var default:spark.pulsar.stage.level=default \
-      --var disk:spark.pulsar.stage.level=disk_only \
-      --passes 5 -- winnowing_matches substring_scrub
+      --var default: \
+      --var pairs512:spark.pulsar.pairs.partitions=512 \
+      --passes 5 -- image_near_dup audio_near_dup
   # build/exec split and job counts, every registered query
   python tools/ab_bench.py --passes 2 --sf-dir .scale/sf1.0
   # AQE advisory partition size A/B across two decades

@@ -22,8 +22,8 @@ and verifies:
    expected and not a correctness signal).
 2. **Store cycles under reliable staging**: a signature-store
    append x5 / candidates / compact / re-read cycle and a span-store
-   incremental cycle run on the cluster with
-   ``spark.pulsar.stage.mode=reliable`` (distributed checkpoint
+   incremental cycle run on the cluster with ``spark.checkpoint.dir``
+   set, so staging.stage checkpoints reliably (distributed checkpoint
    through the Hadoop FileSystem API) — hashes must equal the local
    run's.
 3. **Executor-loss survival**: with reliable staging, a staged frame
@@ -269,9 +269,8 @@ def _run_mode(mode: str, sf_dir: str, tmp_base: str, result: dict) -> dict:
                 "spark.cores.max": "16",
                 "spark.driver.host": "127.0.0.1",
                 "spark.pyspark.python": sys.executable,
-                # the cluster pass runs the RELIABLE staging mode —
-                # the exact machinery local mode can't falsify
-                "spark.pulsar.stage.mode": "reliable",
+                # a checkpoint dir makes the cluster pass stage
+                # RELIABLY — the machinery local staging can't falsify
                 "spark.checkpoint.dir": os.path.join(tmp_base, "ckpt"),
             },
         )
@@ -320,7 +319,7 @@ def main() -> None:
             "memory_per_worker": mem,
             "worker_env": "scrubbed (no PYTHONPATH — package reaches "
             "executors via shipping.ensure_shipped only)",
-            "cluster_staging": "spark.pulsar.stage.mode=reliable",
+            "cluster_staging": "reliable (spark.checkpoint.dir)",
         },
         "sf_dir": sf_dir,
     }

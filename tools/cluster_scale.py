@@ -223,12 +223,6 @@ def main() -> None:
             },
         )
         spark.sparkContext.setLogLevel("ERROR")
-        # scale-run posture (round 11): staged blocks DISK_ONLY —
-        # deserialized staged blocks on the executors' heaps were 2/3
-        # of the triangle sf100 spill (SPILL_DIAG_triangle_sf100.json)
-        stage_lvl = os.environ.get("SPARK_GRAFT_STAGE_LEVEL", "disk_only")
-        spark.conf.set("spark.pulsar.stage.level", stage_lvl)
-        result["topology"]["stage_level"] = stage_lvl
         ensure_shipped(spark)
         poller = ScratchPoller(spark, scratch)
         poller.start()

@@ -36,7 +36,7 @@ Usage:
       --out SCRUB_DIAG.json substring_scrub
   # which operator spills at sf100 (a 12g heap OOMs there)
   SPARK_GRAFT_DRIVER_MEM=48g python tools/plan_diagnose.py \\
-      --sf-dir .scale/sf100 --conf spark.pulsar.stage.level=disk_only \\
+      --sf-dir .scale/sf100 \\
       --out SPILL_DIAG_triangle_sf100.json user_triangle_counts
   # force spill at a small scale: session-start confs
   python tools/plan_diagnose.py --sf-dir /root/testdata/sf0.01 \\

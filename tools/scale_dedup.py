@@ -245,15 +245,7 @@ def main() -> None:
     cand_budget = float(os.environ.get("SPARK_GRAFT_IMAGE_CAND_BUDGET", "1.5e9"))
     skips = os.environ.get("SPARK_GRAFT_DEDUP_SKIP", "").split(",")
 
-    spark = session(
-        "pulsar_internal_spark_scale_dedup",
-        # staged frames at this tier are tens of GB (the sf100
-        # candidate-pair frame); the deserialized default OOMed a 48g
-        # heap on re-read (BlockManager pulling a disk block back as row
-        # objects) — disk_only keeps staged blocks off the heap
-        # entirely, heap stays execution-only
-        {"spark.pulsar.stage.level": "disk_only"},
-    )
+    spark = session("pulsar_internal_spark_scale_dedup")
     # SPARK_GRAFT_PAIRS_PARTITIONS > 0 pins the banded pair-producing
     # stages' task count (spark.pulsar.pairs.partitions — see
     # SPILL_DIAG_imgxwide_sf100_pairs512.json: sf100 xwide keepers
@@ -280,7 +272,6 @@ def main() -> None:
             "budget_gb": budget / GB,
             "target_occupancy": TARGET_OCCUPANCY,
             "image_candidate_budget": cand_budget,
-            "stage_level": "disk_only",
             "scouts": {},
             "decisions": {},
             "queries": {},

@@ -3,7 +3,8 @@
 # the round-10 HEAD shipped red because the final commits skipped the
 # full suite; these gates collect in seconds and catch exactly that
 # class — an uncited registered query, a stale CORRECTNESS_local.json
-# registry hash, a drifted plan pin, a broken bench contract, a new knob).
+# registry hash, a drifted plan pin, a broken bench contract, a new knob,
+# staging that no longer picks its level from the checkpoint directory).
 #
 # Usage: sh tools/smoke_meta.sh      (~60 s, one local Spark session)
 set -e
@@ -12,5 +13,7 @@ exec python -m pytest -q \
   tests/test_queries_vs_oracle.py::test_every_query_documents_its_lineage \
   tests/test_queries_vs_oracle.py::test_every_query_has_entry \
   tests/test_conf_surface.py \
+  tests/test_operators.py::test_stage_level_knob \
+  tests/test_operators.py::test_reliable_staging_mode \
   tests/test_correctness_artifact.py \
   tests/test_explain_drift.py
