@@ -59,7 +59,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from . import store_fs
-from ..sources.tables import read_parquet, spread
+from ..sources.tables import collect_parquet, read_parquet, spread
 
 
 def _dot(a, b):
@@ -1125,13 +1125,16 @@ def _read_index_codebooks(spark, path: str) -> list[list[list[float]]] | None:
     into the nested-list literal form pq_encode consumes, or None for
     a plain IVF index. The collect is O(M x KSUB) rows (256 for the
     suite's 16x16 config) — driver-side by design: the codebooks must
-    become PLAN LITERALS so encode/ADC stay whole-stage-codegen'd."""
+    become PLAN LITERALS so encode/ADC stay whole-stage-codegen'd. Only
+    a rebuild rewrites them, so the rows are memoized on the files'
+    identity (sources.tables.collect_parquet): a repeat call submits no
+    job."""
     import os
 
     cb_path = os.path.join(path, "codebooks")
     if not store_fs.is_dir(cb_path):
         return None
-    rows = read_parquet(spark, cb_path).collect()
+    rows = collect_parquet(spark, cb_path)
     m = 1 + max(r.j for r in rows)
     books: list[list[list[float]]] = []
     for j in range(m):
@@ -1183,7 +1186,7 @@ def ivf_index_append(
     import os
 
     cents = sorted(
-        read_parquet(spark, os.path.join(path, "centroids")).collect(),
+        collect_parquet(spark, os.path.join(path, "centroids")),
         key=lambda r: r.cell,
     )
     assigned = _side(

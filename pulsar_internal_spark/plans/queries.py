@@ -90,7 +90,7 @@ from ..operators import textops
 from ..operators import tree as tree_ops
 from ..shipping import ensure_shipped
 from ..staging import stage
-from ..sources.tables import load_table, spread, table_rows
+from ..sources.tables import load_table, spread, table_rows, task_count
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -4733,7 +4733,11 @@ def iscached_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         seq_col="ts",
         payload_cols=["event_id", "event_type"],
     ).filter(F.col("event_type") != "error")
-    probes = spark.range(0, 40).select((F.col("id") * 5).alias("probe_id"))
+    # 40 probe keys: spread()'s rule sizes their partitions, so the
+    # plan's tasks do not follow the core count
+    probes = spark.range(
+        0, 40, numPartitions=task_count(spark.sparkContext, 40)
+    ).select((F.col("id") * 5).alias("probe_id"))
     # Scale shape: the BIG compacted side streams through a LEFT SEMI
     # against the broadcast probe list (BroadcastHashJoin supports semi
     # with build-right; a broadcast LEFT side of a left-outer does not

@@ -19,11 +19,17 @@ that gained a batch is re-inferred, and against the parquet confs that
 shape inference, so a session with other settings never sees a stale
 schema. ``load_table``, the persisted IVF index's metadata and every
 generation-store read go through it.
+
+Partitioning: ``spread`` sizes a compute-heavy frame's partitions from
+its rows, read from parquet footers (memoized per file identity like
+the schemas), not from the host's core count; see its docstring.
 """
 
 from __future__ import annotations
 
 import os
+from urllib.parse import urlparse
+from urllib.request import url2pathname
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -92,6 +98,25 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
+_collected: dict[str, tuple[tuple, tuple]] = {}
+
+
+def collect_parquet(spark: SparkSession, path: str) -> tuple:
+    """The rows of ``read_parquet(spark, path)``, collected by a Spark
+    job only when the path's files or the inference confs changed since
+    the last collect of ``path`` (the schema memo's key). For small
+    tables that only a rewrite changes, such as an IVF index's
+    centroids and codebooks."""
+    key = _schema_key(spark, path)
+    hit = _collected.get(path)
+    if key is not None and hit is not None and hit[0] == key:
+        return hit[1]
+    rows = tuple(read_parquet(spark, path).collect())
+    if key is not None:
+        _collected[path] = (key, rows)
+    return rows
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table. Accepts either ``<dir>/<name>.parquet``
     (driver layout) or a partitioned directory ``<dir>/<name>/``.
@@ -119,25 +144,118 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def spread(df: DataFrame) -> DataFrame:
-    """Round-robin repartition iff the input is under-partitioned.
+# Rows one task of a spread() frame is sized for; spread()'s docstring
+# derives the value.
+ROWS_PER_TASK = 1024
 
-    Spark sizes scan partitions by BYTES (maxPartitionBytes), so a small
-    parquet file of heavy rows (documents to shingle+hash, embeddings to
-    score) lands in ONE task and serializes the whole pipeline on one
-    core. Compute-heavy operators call this before their expensive
-    projection: a 5k-row shuffle is microseconds; a 31-core idle stage is
-    seconds. At 100 TB the scan already yields >= parallelism partitions
-    and this is a no-op — the check keeps it from ever ADDING a shuffle
-    to a well-partitioned input.
+_footer_rows: dict[str, tuple[tuple[int, int], int]] = {}
+
+
+def task_count(sc, rows: int) -> int:
+    """Tasks for a frame of ``rows`` rows: one per ROWS_PER_TASK rows,
+    at least one, at most ``sc.defaultParallelism``."""
+    return max(1, min(sc.defaultParallelism, -(-rows // ROWS_PER_TASK)))
+
+
+def _file_rows(uri: str) -> int | None:
+    """Row count of one parquet file from its footer, memoized by the
+    file's identity (size and mtime, as ``read_parquet``'s schema memo);
+    None for a file off the local filesystem."""
+    parsed = urlparse(uri)
+    if parsed.scheme not in ("", "file"):
+        return None
+    path = url2pathname(parsed.path)
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    key = (st.st_size, st.st_mtime_ns)
+    hit = _footer_rows.get(path)
+    if hit is not None and hit[0] == key:
+        return hit[1]
+    import pyarrow.parquet as pq
+
+    rows = pq.read_metadata(path).num_rows
+    _footer_rows[path] = (key, rows)
+    return rows
+
+
+def _scan_rows(df: DataFrame, cap: int) -> int | None:
+    """An upper bound on ``df``'s rows from parquet footers, with no
+    Spark job: the sum of the footer row counts of ``df.inputFiles()``
+    when the optimized plan is Projects and Filters over one parquet
+    file scan (those nodes never add rows); None for any other plan.
+    Stops reading footers once the sum passes ``cap``."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    while plan.nodeName() in ("Project", "Filter"):
+        plan = plan.child()
+    if plan.nodeName() != "LogicalRelation":
+        return None
+    rel = plan.relation()
+    if (
+        rel.getClass().getSimpleName() != "HadoopFsRelation"
+        or rel.fileFormat().getClass().getSimpleName() != "ParquetFileFormat"
+    ):
+        return None
+    rows = 0
+    for uri in df.inputFiles():
+        n = _file_rows(uri)
+        if n is None:
+            return None
+        rows += n
+        if rows > cap:
+            break
+    return rows
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """Round-robin repartition a frame that has fewer partitions than
+    its rows need; returns ``df`` itself when it does not repartition.
+
+    Spark sizes scan partitions by BYTES (maxPartitionBytes), so a
+    parquet file of heavy rows (documents to shingle and hash,
+    embeddings to score) lands in ONE task and serializes the whole
+    pipeline on one core. Compute-heavy operators call this before
+    their expensive projection. The target is sized from the input,
+    not the host: ``task_count`` of the frame's rows, i.e. one task per
+    ROWS_PER_TASK rows, capped at ``sc.defaultParallelism``. The rows
+    come from parquet footers (``_scan_rows``), so sizing submits no
+    job; a frame whose rows no footer bounds (joins, aggregates,
+    generators, in-memory frames, and staged frames and ``foreachBatch``
+    micro-batches, which are ``LogicalRDD``s) targets
+    ``sc.defaultParallelism``. So a frame of a few hundred rows stays
+    in its one partition on every host instead of paying a task's fixed
+    cost per core, and a plan's tasks follow the core count only above
+    ``defaultParallelism * ROWS_PER_TASK`` rows.
+
+    ROWS_PER_TASK = 1,024 weighs the fixed cost of a task against the
+    cost of its rows. One Python-worker task (mapInPandas, pandas UDF)
+    costs about 0.28 s of CPU before it sees a row, most of it pyspark's
+    per-task ``importlib.invalidate_caches()``, after which CPython's
+    zipimport re-reads the shipped pyspark.zip directory once per
+    zipimporter (docs/OPERATIONS.md "Shuffle partitioning"). The
+    heaviest per-row Python work in the engine, the multimodal decode,
+    costs about 0.15 ms a row, so a task breaks even on its fixed cost
+    near 1,900 rows. 1,024 keeps frames below that in one task (the
+    500-row documents and embeddings tables), while frames of thousands
+    of rows (sf0.1's 5,000 documents) still spread to every core, where
+    JVM-only consumers such as shingling and cosine scoring pay
+    milliseconds per task.
+
+    At 100 TB the scan
+    already yields at least the target's partitions and this is a
+    no-op: the check never ADDS a shuffle to a well-partitioned input.
+    A streaming frame passes through untouched (it has no ``.rdd`` to
+    probe, and micro-batch sizing is the trigger's job).
     """
     if df.isStreaming:
-        # a streaming DataFrame has no .rdd to probe (and micro-batch
-        # sizing is the trigger's job) — pass through untouched
         return df
     sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
+    rows = _scan_rows(df, sc.defaultParallelism * ROWS_PER_TASK)
+    target = sc.defaultParallelism if rows is None else task_count(sc, rows)
+    # .rdd plans the query through javaToPython: skip it when one
+    # partition is all the frame needs
+    if target == 1 or df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
 

@@ -10,14 +10,14 @@ sf fixture, so path/statistics differences never enter the hash (the
 normalizer strips session-variant tokens: expression ids, partition
 counts, file paths — see tools/gen_explain.normalize_plan).
 
-The pins hold at any core count of 2 or more. The only core-count tokens
-in these plans are the `RoundRobinPartitioning(N)` exchange that
-`sources.tables.spread()` adds and the `Range (..., splits=N)` of
-`spark.range`; both counts follow `sc.defaultParallelism` and are
-stripped, while the exchange node itself still enters the hash. At
-SPARK_GRAFT_CPUS=1, `spread()` is a no-op on sf0.01's one-partition
-scans, so the 24 pins with a `spread()` exchange differ there in plan
-shape, not in a count, and fail.
+The pins hold at any core count, 1 included. The only core-count
+tokens these plans could carry are the `RoundRobinPartitioning(N)`
+exchange that `sources.tables.spread()` adds and the
+`Range (..., splits=N)` of `spark.range`; both counts are stripped,
+while the exchange node itself still enters the hash. `spread()` sizes
+its target from the input's parquet footer rows, so the 500-row sf0.01
+documents and embeddings stay in their one scan partition at every core
+count, and no pinned plan gains or loses an exchange with the host.
 
 On failure: `python tools/gen_explain.py` (regenerates EXPLAIN.md and
 the hash sidecar in one step — the stamp then matches the regeneration

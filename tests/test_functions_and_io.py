@@ -389,6 +389,89 @@ def test_spread_passes_streaming_df_through(spark, tmp_path):
     assert out is sdf  # untouched, no repartition injected
 
 
+def _write_rows(path: str, n: int, start: int = 0) -> None:
+    import pandas as pd
+
+    pd.DataFrame({"k": range(start, start + n), "v": ["x" * 8] * n}).to_parquet(path)
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _core_count_rule(df, out) -> None:
+    """The fallback: round-robin to ``sc.defaultParallelism`` unless the
+    frame already has that many partitions."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() >= target:
+        assert out is df
+    else:
+        assert out.rdd.getNumPartitions() == target
+
+
+def test_spread_keeps_a_small_parquet_frame_whole(spark, tmp_path):
+    """A 500-row parquet frame fits one task (ROWS_PER_TASK), so spread()
+    returns the frame itself, adds no exchange, and sizes it from the
+    footer with no Spark job."""
+    from pulsar_internal_spark.sources.tables import (
+        ROWS_PER_TASK,
+        read_parquet,
+        spread,
+    )
+    from tests.conftest import jobs_submitted
+
+    assert ROWS_PER_TASK >= 500
+    path = str(tmp_path / "small.parquet")
+    _write_rows(path, 500)
+    df = read_parquet(spark, path).where("k % 3 = 0").select("k")
+    got = []
+    assert jobs_submitted(spark, lambda: got.append(spread(df))) == 0
+    assert got[0] is df
+    assert "RoundRobinPartitioning" not in _executed_plan(got[0])
+
+
+def test_spread_sizes_a_large_parquet_frame_from_its_rows(spark, tmp_path):
+    """Footer rows summed over every input file size the target:
+    min(defaultParallelism, ceil(rows / ROWS_PER_TASK)) partitions."""
+    from pulsar_internal_spark.sources.tables import (
+        ROWS_PER_TASK,
+        read_parquet,
+        spread,
+    )
+
+    d = tmp_path / "large"
+    d.mkdir()
+    half = 2 * ROWS_PER_TASK
+    _write_rows(str(d / "a.parquet"), half)
+    _write_rows(str(d / "b.parquet"), half + 1, start=half)
+    rows = 2 * half + 1
+    df = read_parquet(spark, str(d)).select("k", "v")
+    out = spread(df)
+    want = min(spark.sparkContext.defaultParallelism, -(-rows // ROWS_PER_TASK))
+    if df.rdd.getNumPartitions() >= want:
+        assert out is df
+    else:
+        assert out.rdd.getNumPartitions() == want
+        assert "RoundRobinPartitioning" in _executed_plan(out)
+    assert out.count() == rows
+
+
+def test_spread_keeps_the_core_count_rule_without_footer_rows(spark, tmp_path):
+    """Frames whose rows no parquet footer bounds (a join of two scans,
+    an in-memory frame) still target sc.defaultParallelism."""
+    from pulsar_internal_spark.sources.tables import read_parquet, spread
+
+    path = str(tmp_path / "side.parquet")
+    _write_rows(path, 500)
+    scan = read_parquet(spark, path)
+    joined = scan.join(scan.select("k"), "k")
+    _core_count_rule(joined, spread(joined))
+    local = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (3, "c")], "k long, v string"
+    ).coalesce(1)
+    _core_count_rule(local, spread(local))
+
+
 # -- HTTP ingestion (D7 records, http.hpp:139-294/450-496) ----------------
 
 

@@ -2648,7 +2648,9 @@ def test_ivf_index_sequential_append_reads_batch_ids_from_listing(spark, tmp_pat
     the literal cell argmin, the assign-and-write stage; reading the
     index's batch_id column would add a schema job and an aggregate),
     and the id follows the largest batch in any cell, explicit ids
-    included."""
+    included. A warm append reads the centroids from the memos
+    (sources.tables.read_parquet and collect_parquet) and submits only
+    its assign-and-write job."""
     import numpy as np
 
     from tests.conftest import jobs_submitted
@@ -2665,14 +2667,19 @@ def test_ivf_index_sequential_append_reads_batch_ids_from_listing(spark, tmp_pat
     assert got == [1]
     assert sim.ivf_index_append(spark, df_b.limit(3), idx, batch_id=5) == 5
     assert sim.ivf_index_append(spark, df_b.limit(3), idx) == 6
+    # the centroids are unchanged since the first append: their schema
+    # and rows come from the memos, leaving the assign-and-write job
+    assert jobs_submitted(spark, lambda: got.append(sim.ivf_index_append(spark, df_b, idx))) == 1
+    assert got == [1, 7]
 
 
 def test_ivf_index_warm_probe_infers_no_metadata_schema(spark, tmp_path):
     """A warm ivf_index_adc_topk reads centroids/, codebooks/ and the
     cells generation through the schema memo
-    (sources.tables.read_parquet): the first call infers the three
-    schemas, a repeat submits exactly three jobs fewer, and the warm
-    job count is pinned."""
+    (sources.tables.read_parquet) and the codebook rows through the row
+    memo (sources.tables.collect_parquet): the first call infers the
+    three schemas and collects the codebooks, a repeat submits exactly
+    four jobs fewer, and the warm job count is pinned."""
     import numpy as np
 
     from pulsar_internal_spark.operators.pq_frozen import CODEBOOKS
@@ -2693,8 +2700,8 @@ def test_ivf_index_warm_probe_infers_no_metadata_schema(spark, tmp_path):
 
     cold = jobs_submitted(spark, run)
     warm = jobs_submitted(spark, run)
-    assert cold - warm == 3
-    assert warm == 13
+    assert cold - warm == 4
+    assert warm == 12
 
 
 def test_histogram_quantile_invariants(spark, sf_dir):
