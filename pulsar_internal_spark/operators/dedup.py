@@ -13,10 +13,16 @@ Scale posture:
   - minhash-LSH: shingling + signatures are narrow (no shuffle); the only
     shuffle is the band-bucket self-join, whose fan-out is controlled by
     (bands, rows-per-band). Candidate verification is a second narrow map.
+  - band_pairs is the one band-bucket pair join (MinHash, sign-LSH and
+    both signature-store forms); _pair_stage is the one read of
+    spark.pulsar.pairs.partitions (sign-LSH and Hamming self-joins).
   - n-gram Jaccard runs on LSH candidates only — never all-pairs.
 """
 
 from __future__ import annotations
+
+import functools
+import operator
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
@@ -169,6 +175,67 @@ def banded_signatures(
     )
 
 
+def band_pairs(
+    new: DataFrame, keys: tuple[str, ...], hist: DataFrame | None = None
+) -> DataFrame:
+    """The band-bucket pair join every LSH form shares: distinct
+    (id_a, id_b), id_a < id_b, for rows of ``new`` (id plus the
+    ``keys`` columns) that agree on every ``keys`` value. With ``hist``
+    (rows of the same shape that arrived earlier), also the pairs
+    between a ``new`` row and a ``hist`` row, ordered by ``least`` /
+    ``greatest`` with equal ids excluded, unioned with the within-batch
+    pairs before the one ``distinct`` (a pair sharing several bands
+    meets in several buckets). History is never joined with itself:
+    its pairs came out when its own rows were ``new``, which is what
+    keeps an increment O(new x matched). MinHash bands and sign-LSH
+    embedding bands key on ``(band_idx, band_key)``, the bucketed
+    catalog store on its one ``band`` column."""
+
+    def on(l, r, ids):
+        return functools.reduce(
+            operator.and_,
+            [F.col(f"{l}.{k}") == F.col(f"{r}.{k}") for k in keys] + [ids],
+        )
+
+    a, b = new.alias("a"), new.alias("b")
+    pairs = a.join(b, on("a", "b", F.col("a.id") < F.col("b.id"))).select(
+        F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
+    )
+    if hist is not None:
+        n, h = new.alias("n"), hist.alias("h")
+        pairs = pairs.unionByName(
+            n.join(h, on("n", "h", F.col("n.id") != F.col("h.id"))).select(
+                F.least("n.id", "h.id").alias("id_a"),
+                F.greatest("n.id", "h.id").alias("id_b"),
+            )
+        )
+    return pairs.distinct()
+
+
+def _pair_stage(banded: DataFrame, keys: tuple[str, ...]) -> DataFrame:
+    """``banded`` repartitioned on ``keys`` to
+    ``spark.pulsar.pairs.partitions`` partitions when that conf is above
+    0, else ``banded`` itself (the default: AQE sizes the stage). The
+    one read of the conf; lsh_blocked_pairs and hamming_banded_pairs
+    call it on the frame their self-join reads.
+
+    AQE sizes the pair-producing stage by the banded exchange's INPUT
+    bytes (sf100: 332 MB -> ~33 tasks), but the self-join explodes
+    ~50x on the way to the pair exchange, so each task's shuffle-write
+    sorter overflows: 97 GB of memory spill attributed to that one
+    stage (SPILL_DIAG_imgxwide_sf100_adv16m.json; the same mechanism
+    as the triangle wedge stage, SPILL_DIAG_triangle_sf100.json). A
+    keyed repartition with an explicit count is exempt from AQE
+    coalescing and sets that stage's task count directly
+    (SPILL_DIAG_imgxwide_sf100_pairs512.json); both self-join sides
+    share the one exchange, and rows are untouched, so the pairs are
+    the same."""
+    nparts = int(
+        banded.sparkSession.conf.get("spark.pulsar.pairs.partitions", "0") or 0
+    )
+    return banded.repartition(nparts, *keys) if nparts > 0 else banded
+
+
 def minhash_lsh_candidates(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -181,21 +248,13 @@ def minhash_lsh_candidates(
 
     bands = num_hashes / band_size; two docs are candidates if any band of
     their signatures matches exactly. Returns (id_a, id_b) with id_a < id_b.
-    The self-join shuffles on (band_idx, band_key) — the classic LSH
-    bucket join; bucket skew (a viral band) is handled by AQE skew-join.
+    The band_pairs self-join shuffles on (band_idx, band_key) — the
+    classic LSH bucket join; bucket skew (a viral band) is handled by
+    AQE skew-join.
     """
-    banded = banded_signatures(df, id_col, text_col, num_hashes, band_size, shingle_n)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
+    return band_pairs(
+        banded_signatures(df, id_col, text_col, num_hashes, band_size, shingle_n),
+        ("band_idx", "band_key"),
     )
 
 
@@ -559,7 +618,8 @@ def hamming_banded_pairs(
     it — an un-staged plan re-runs that decode 3-4x. So the narrow
     (id, hash) projection is staged (staging.stage): the decode runs
     ONCE and only the cheap band explode replays per consumer
-    (set spark.checkpoint.dir on clusters)."""
+    (set spark.checkpoint.dir on clusters). The banded frame goes
+    through _pair_stage before the self-join."""
     assert bits % band_bits == 0
     bands = bits // band_bits
     assert max_hamming < bands, "banding recall is only exact below #bands"
@@ -584,25 +644,12 @@ def hamming_banded_pairs(
             )
         ).alias("band"),
     ).select("id", "h", "band.band_idx", "band.band_val")
-    banded = drop_hot_keys(banded, ["band_idx", "band_val"], max_df)
-    # Optional explicit parallelism for the pair-PRODUCING stage
-    # (spark.pulsar.pairs.partitions, default 0 = leave to AQE).
-    # Why AQE alone is not enough at the third decade: AQE coalesces
-    # the banded exchange by its INPUT bytes (sf100: 332 MB -> ~33
-    # tasks), but the self-join below explodes ~50x on the way to the
-    # pair exchange, so each task's shuffle-WRITE sorter overflows —
-    # 97 GB of memory spill attributed to that single stage
-    # (SPILL_DIAG_imgxwide_sf100_adv16m.json; same mechanism as the
-    # triangle wedge stage, SPILL_DIAG_triangle_sf100.json). A keyed
-    # repartition with an explicit count is exempt from AQE coalescing
-    # and sets that stage's task count directly; both self-join sides
-    # share the one exchange, and rows are untouched — result-exact.
-    nparts = int(
-        hashes.sparkSession.conf.get("spark.pulsar.pairs.partitions", "0")
-        or 0
+    banded = _pair_stage(
+        drop_hot_keys(banded, ["band_idx", "band_val"], max_df),
+        ("band_idx", "band_val"),
     )
-    if nparts > 0:
-        banded = banded.repartition(nparts, "band_idx", "band_val")
+    # band_pairs' self-join, written out because it carries h and keeps
+    # only the joined rows within max_hamming
     a, b = banded.alias("a"), banded.alias("b")
     ham = F.bit_count(F.col("a.h").bitwiseXOR(F.col("b.h")))
     return (

@@ -50,7 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import store_fs
-from .dedup import banded_signatures
+from .dedup import band_pairs, banded_signatures
 
 # the store-maintenance primitives stay importable from here, the
 # signature store's public surface; they are defined in store_fs
@@ -126,7 +126,8 @@ def candidates_for_batch(
     Returns (id_a, id_b), id_a < id_b, distinct. Never joins history
     against history — those pairs were emitted when their own batches
     arrived, which is what makes the increment O(new x matched), not
-    O(corpus^2)."""
+    O(corpus^2). The pairs come from dedup.band_pairs, the join the
+    one-shot minhash_lsh_candidates runs on the whole corpus."""
     store = store_fs.read_generation(spark, store_path)
     if store is None:
         raise FileNotFoundError(
@@ -162,28 +163,7 @@ def _candidates(store: DataFrame, batch_id: int) -> DataFrame:
             hist, new, ["band_idx", "band_key"], history_batches=batch_id
         )
 
-    a, b = new.alias("a"), new.alias("b")
-    within = a.join(
-        b,
-        (F.col("a.band_idx") == F.col("b.band_idx"))
-        & (F.col("a.band_key") == F.col("b.band_key"))
-        & (F.col("a.id") < F.col("b.id")),
-    ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-
-    n, h = new.alias("n"), hist.alias("h")
-    across = (
-        n.join(
-            h,
-            (F.col("n.band_idx") == F.col("h.band_idx"))
-            & (F.col("n.band_key") == F.col("h.band_key"))
-            & (F.col("n.id") != F.col("h.id")),
-        )
-        .select(
-            F.least("n.id", "h.id").alias("id_a"),
-            F.greatest("n.id", "h.id").alias("id_b"),
-        )
-    )
-    return within.unionByName(across).distinct()
+    return band_pairs(new, ("band_idx", "band_key"), hist)
 
 
 def incremental_minhash_dedup(
@@ -393,22 +373,7 @@ def candidates_for_batch_bucketed(
     store = spark.table(table)
     new = store.filter(F.col("batch_id") == batch_id)
     hist = store.filter(F.col("batch_id") < batch_id)
-
-    a, b = new.alias("a"), new.alias("b")
-    within = a.join(
-        b,
-        (F.col("a.band") == F.col("b.band")) & (F.col("a.id") < F.col("b.id")),
-    ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-
-    n, h = new.alias("n"), hist.alias("h")
-    across = n.join(
-        h,
-        (F.col("n.band") == F.col("h.band")) & (F.col("n.id") != F.col("h.id")),
-    ).select(
-        F.least("n.id", "h.id").alias("id_a"),
-        F.greatest("n.id", "h.id").alias("id_b"),
-    )
-    return within.unionByName(across).distinct()
+    return band_pairs(new, ("band",), hist)
 
 
 def compact_store(spark: SparkSession, store_path: str) -> int:

@@ -22,6 +22,13 @@ one private kernel per job, each written once below:
                    projections (``_Q`` / ``_C``)
   _subvectors      posexplode of a vector into its M subvectors
   _train_cells     sampled-KMeans coarse-quantizer training
+  _band_struct_array  memoized exploded (band_idx, band_key) structs over
+                   the staged sign-LSH projections
+  band_pairs       (dedup.py) the band-bucket pair join, id_a < id_b,
+                   shared with MinHash and both signature-store forms
+  _pair_stage      (dedup.py) the one read of
+                   spark.pulsar.pairs.partitions: keyed repartition of
+                   the banded frame before its self-join
 
 The struct ordering (d2 first, then cell) and the window order
 (dist2, cell) break distance ties to the smaller cell in every form, so
@@ -37,7 +44,9 @@ the literal and relation probes pick the same cells.
                      broadcast of the query tables)
   ivfpq_fixed_topk   pq_encode, _literal_cell, _literal_probe,
                      _pq_query_tables, _adc_topk (ADC join keyed by cell)
-  lsh_bucketed_topk  banded sign-LSH sides, _scored, _cosine_topk
+  lsh_bucketed_topk  _band_struct_array sides, _scored, _cosine_topk
+  embedding_banded_signatures  _band_struct_array (the store's schema)
+  lsh_blocked_pairs  embedding_banded_signatures, _pair_stage, band_pairs
   build_ivf_index    _train_cells, pq_encode (PQ-carrying index)
   ivf_index_append   _literal_cell, pq_encode
   ivf_index_topk     _relation_probe, _scored, _cosine_topk
@@ -59,6 +68,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from . import store_fs
+from .dedup import _pair_stage, band_pairs
 from ..sources.tables import collect_parquet, read_parquet, spread
 
 
@@ -453,21 +463,10 @@ def embedding_banded_signatures(
         .select(F.col(id_col).alias("id"), F.col(vec_col).alias("_v"))
         .select("id", projs.alias("_projs"))
     )
-    bands = [
-        F.struct(
-            F.lit(b).alias("band_idx"),
-            F.array_join(
-                F.transform(
-                    F.slice("_projs", b * planes_per_band + 1, planes_per_band),
-                    lambda p: F.when(p >= 0, F.lit("1")).otherwise(F.lit("0")),
-                ),
-                "",
-            ).alias("band_key"),
-        )
-        for b in range(num_bands)
-    ]
     return (
-        staged.select("id", F.explode(F.array(*bands)).alias("_b"))
+        staged.select(
+            "id", _band_struct_array(planes_per_band, num_bands).alias("_b")
+        )
         .select(
             "id",
             F.col("_b.band_idx").alias("band_idx"),
@@ -498,30 +497,8 @@ def lsh_blocked_pairs(
     banded = embedding_banded_signatures(
         df, id_col, vec_col, planes_per_band, num_bands, dim
     )
-    # spark.pulsar.pairs.partitions (0 = leave to AQE): same knob and
-    # mechanism as dedup.hamming_banded_pairs — AQE sizes the
-    # pair-producing stage by the banded frame's INPUT bytes while the
-    # self-join explodes orders of magnitude more output, overflowing
-    # per-task shuffle-write sorters at the third decade (see
-    # SPILL_DIAG_imgxwide_sf100_pairs512.json for the measured fix on
-    # the perceptual twin). Explicit keyed repartition is exempt from
-    # AQE coalescing; result-exact.
-    nparts = int(
-        df.sparkSession.conf.get("spark.pulsar.pairs.partitions", "0") or 0
-    )
-    if nparts > 0:
-        banded = banded.repartition(nparts, "band_idx", "band_key")
-    a, b2 = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b2,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    keys = ("band_idx", "band_key")
+    return band_pairs(_pair_stage(banded, keys), keys)
 
 
 def ivf_topk(

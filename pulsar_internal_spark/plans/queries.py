@@ -2182,20 +2182,13 @@ def _lsh_pairs_oracle_sql(
     )
 
 
-def _lsh_verified_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    planes_per_band: int,
-    num_bands: int,
-    threshold: float = 0.35,
+def _cosine_verified(
+    pairs: DataFrame, emb: DataFrame, threshold: float
 ) -> DataFrame:
-    """Banded sign-LSH blocking + exact-cosine verification — the Spark
-    twin of _lsh_verified_pairs_cte, shared by the narrow (2x6) and wide
-    (8x12) embedding near-dup tiers."""
-    emb = _t(spark, sf_dir, "embeddings")
-    pairs = sim_ops.lsh_blocked_pairs(
-        emb, planes_per_band=planes_per_band, num_bands=num_bands
-    )
+    """(id_a, id_b, cos_sim) for the candidate ``pairs`` whose exact
+    cosine, rounded to 6 places, is at least ``threshold``: each side's
+    vector and norm joined on by id. The verify step of the banded
+    sign-LSH pair queries, one-shot and incremental."""
     v = spread(emb).select(
         F.col("vec_id"),
         F.col("embedding"),
@@ -2223,6 +2216,23 @@ def _lsh_verified_pairs(
     return jb.select("id_a", "id_b", cos.alias("cos_sim")).filter(
         F.col("cos_sim") >= threshold
     )
+
+
+def _lsh_verified_pairs(
+    spark: SparkSession,
+    sf_dir: str,
+    planes_per_band: int,
+    num_bands: int,
+    threshold: float = 0.35,
+) -> DataFrame:
+    """Banded sign-LSH blocking + exact-cosine verification — the Spark
+    twin of _lsh_verified_pairs_cte, shared by the narrow (2x6) and wide
+    (8x12) embedding near-dup tiers."""
+    emb = _t(spark, sf_dir, "embeddings")
+    pairs = sim_ops.lsh_blocked_pairs(
+        emb, planes_per_band=planes_per_band, num_bands=num_bands
+    )
+    return _cosine_verified(pairs, emb, threshold)
 
 
 @_register("embedding_near_dup", _lsh_pairs_oracle_sql())
@@ -2545,32 +2555,7 @@ def incremental_semantic_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         banded = sim_ops.embedding_banded_signatures(emb.filter(pred))
         bid = sig_store.append_banded_batch(spark, banded, store)
         parts.append(sig_store.candidates_for_batch(spark, store, bid))
-    cand = parts[0].unionByName(parts[1])
-    v = spread(emb).select(
-        "vec_id", "embedding", sim_ops._norm(F.col("embedding")).alias("nrm")
-    )
-    ja = cand.join(
-        v.select(
-            F.col("vec_id").alias("id_a"),
-            F.col("embedding").alias("va"),
-            F.col("nrm").alias("na"),
-        ),
-        "id_a",
-    )
-    jb = ja.join(
-        v.select(
-            F.col("vec_id").alias("id_b"),
-            F.col("embedding").alias("vb"),
-            F.col("nrm").alias("nb"),
-        ),
-        "id_b",
-    )
-    cos = F.round(
-        sim_ops._dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6
-    )
-    return jb.select("id_a", "id_b", cos.alias("cos_sim")).filter(
-        F.col("cos_sim") >= 0.35
-    )
+    return _cosine_verified(parts[0].unionByName(parts[1]), emb, 0.35)
 
 
 def _ivf_oracle_sql(k: int = 5, nprobe: int = 3) -> str:

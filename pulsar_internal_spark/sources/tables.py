@@ -23,6 +23,7 @@ generation-store read go through it.
 Partitioning: ``spread`` sizes a compute-heavy frame's partitions from
 its rows, read from parquet footers (memoized per file identity like
 the schemas), not from the host's core count; see its docstring.
+``table_rows`` counts a fixture table from the same memoized footers.
 """
 
 from __future__ import annotations
@@ -117,14 +118,18 @@ def collect_parquet(spark: SparkSession, path: str) -> tuple:
     return rows
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table. Accepts either ``<dir>/<name>.parquet``
-    (driver layout) or a partitioned directory ``<dir>/<name>/``.
-    Only the first read of a given file infers its schema (module
-    docstring)."""
+def _table_path(sf_dir: str, name: str) -> str:
+    """``<dir>/<name>.parquet`` (the generated fixtures' single-file
+    layout) when that file exists, else the partitioned directory
+    ``<dir>/<name>/``."""
     file_path = os.path.join(sf_dir, f"{name}.parquet")
-    dir_path = os.path.join(sf_dir, name)
-    path = file_path if os.path.exists(file_path) else dir_path
+    return file_path if os.path.exists(file_path) else os.path.join(sf_dir, name)
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load one fixture table (``_table_path``). Only the first read of
+    a given file infers its schema (module docstring)."""
+    path = _table_path(sf_dir, name)
     if name == "events":
         # TIMESTAMP(NANOS) columns need this runtime conf; our session
         # factory sets it, but the driver hands entry()/queries() a
@@ -266,14 +271,22 @@ def table_rows(sf_dir: str, name: str) -> int:
     input table; counting through the DataFrame executed a whole job
     (and, when the frame was already spread(), its round-robin exchange
     too) to learn a number every parquet footer already stores. Same
-    value as COUNT(*) by the parquet spec; at 100 TB this is a
-    footers-only metadata read, exactly what a catalog would serve."""
-    import pyarrow.dataset as pads
-
-    file_path = os.path.join(sf_dir, f"{name}.parquet")
-    dir_path = os.path.join(sf_dir, name)
-    path = file_path if os.path.exists(file_path) else dir_path
-    return pads.dataset(path, format="parquet").count_rows()
+    value as COUNT(*) by the parquet spec: the sum of the memoized
+    ``_file_rows`` over the table's files, skipping files and
+    directories whose names start with ``_`` or ``.`` (``_SUCCESS``,
+    ``.crc`` checksums), as Spark's and pyarrow's listings do."""
+    path = _table_path(sf_dir, name)
+    if not os.path.isdir(path):
+        return _file_rows(path)
+    rows = 0
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        rows += sum(
+            _file_rows(os.path.join(root, f))
+            for f in files
+            if not f.startswith(("_", "."))
+        )
+    return rows
 
 
 def load_tables(

@@ -61,9 +61,9 @@ def release_staged(spark, keep: set | None = None) -> None:
     block manager, and a long-running process that measures many
     queries back-to-back (bench.py, tools/scale_bench.py) must release
     each query's intermediates or later queries run storage-starved
-    (see scale_bench for the measured pathology). Queries never reuse
-    another query's staged frames, so releasing between measurements
-    is always safe.
+    (tools/measure.settle records the measured pathology). Queries
+    never reuse another query's staged frames, so releasing between
+    measurements is always safe.
 
     ``keep``: a :func:`persistent_rdd_ids` snapshot taken before the
     staging being released — those ids survive, everything added since

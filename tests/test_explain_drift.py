@@ -98,6 +98,37 @@ def test_normalizer_drops_core_counts_but_keeps_the_exchange():
     )
 
 
+def _store_scan(tmpdir: str, batch: int = 0) -> str:
+    """A store-generation FileScan as Spark prints it: metadata values
+    longer than 100 chars are cut to 97 plus "..."."""
+    loc = (
+        "InMemoryFileIndex(1 paths)[file:"
+        f"{tmpdir}/pulsar_demo_stores_yu6p8nsx/sigstore_91ed241e8720/gen-00000000]"
+    )
+    if len(loc) > 100:
+        loc = loc[:97] + "..."
+    return (
+        "FileScan parquet [id#3L,band_idx#4,band_key#5,batch_id#6] Batched: "
+        f"true, DataFilters: [], Format: Parquet, Location: {loc}, "
+        f"PartitionFilters: [isnotnull(batch_id#6), (batch_id#6 = {batch})], "
+        "PushedFilters: [], ReadSchema: struct<id:bigint,band_idx:int,band_key:string>"
+    )
+
+
+def test_normalizer_maps_cut_and_whole_locations_alike():
+    # a store under /tmp prints its whole path, one under a longer
+    # TMPDIR is cut: both must normalize (and so hash) the same ...
+    whole = _store_scan("/tmp")
+    assert whole.count("...") == 0
+    for tmpdir in ("/var/tmp/pulsar-tests/tmphash/short", "/t" * 55):
+        cut = _store_scan(tmpdir)
+        assert cut.endswith("ReadSchema: struct<id:bigint,band_idx:int,band_key:string>")
+        assert "gen-00000000]" not in cut
+        assert normalize_plan(cut) == normalize_plan(whole)
+    # ... while what follows the Location still enters the hash
+    assert normalize_plan(_store_scan("/tmp", 1)) != normalize_plan(whole)
+
+
 @pytest.mark.parametrize("name", [n for n, _ in HEADLINERS])
 def test_plan_matches_recorded_hash(spark, name):
     want = _hashes()[name]

@@ -472,6 +472,28 @@ def test_spread_keeps_the_core_count_rule_without_footer_rows(spark, tmp_path):
     _core_count_rule(local, spread(local))
 
 
+def test_table_rows_equals_count_for_file_and_partitioned_tables(spark, tmp_path):
+    """table_rows sums parquet footer rows with no Spark job and equals
+    COUNT(*) for the fixtures' single-file layout and for a partitioned
+    directory; the directory's _SUCCESS and .crc files are skipped."""
+    from pulsar_internal_spark.sources.tables import load_table, table_rows
+    from tests.conftest import jobs_submitted
+
+    _write_rows(str(tmp_path / "flat.parquet"), 700)
+    spark.range(0, 1300).selectExpr("id AS k", "id % 3 AS p").write.partitionBy(
+        "p"
+    ).parquet(str(tmp_path / "parted"))
+    names = {f for _, _, fs in os.walk(tmp_path / "parted") for f in fs}
+    assert "_SUCCESS" in names and any(f.startswith(".") for f in names)
+    for name, rows in (("flat", 700), ("parted", 1300)):
+        got = []
+        jobs = jobs_submitted(
+            spark, lambda: got.append(table_rows(str(tmp_path), name))
+        )
+        assert jobs == 0
+        assert got == [rows] == [load_table(spark, str(tmp_path), name).count()]
+
+
 # -- HTTP ingestion (D7 records, http.hpp:139-294/450-496) ----------------
 
 

@@ -1686,6 +1686,59 @@ def test_image_group_identity_copy_decorrelated(spark):
     assert len(set(sf100_groups)) == len(copies), sf100_groups
 
 
+def _band_pairs_mirror(new, hist=()):
+    """band_pairs in pure Python over (id, *keys) tuples."""
+    pairs = {
+        (x[0], y[0]) for x in new for y in new if x[1:] == y[1:] and x[0] < y[0]
+    }
+    pairs |= {
+        (min(x[0], y[0]), max(x[0], y[0]))
+        for x in new
+        for y in hist
+        if x[1:] == y[1:] and x[0] != y[0]
+    }
+    return pairs
+
+
+@pytest.mark.parametrize(
+    "schema,new,hist,want",
+    [
+        (
+            "id long, band_idx int, band_key string",
+            # 1 and 2 share both bands; 3 shares band 1 with them; 5's
+            # key "z" recurs in history only under another band_idx
+            [(1, 0, "a"), (1, 1, "b"), (2, 0, "a"), (2, 1, "b"),
+             (3, 0, "c"), (3, 1, "b"), (5, 0, "z")],
+            # id 1 is in both sides under the same band: no (1, 1)
+            [(1, 0, "a"), (4, 0, "c"), (6, 1, "q"), (5, 1, "z")],
+            {(1, 2), (1, 3), (2, 3), (3, 4)},
+        ),
+        (
+            "id long, band string",
+            [(10, "0:a"), (11, "0:a"), (12, "1:a")],
+            [(9, "0:a"), (11, "0:a"), (12, "1:b")],
+            {(10, 11), (9, 10), (9, 11)},
+        ),
+    ],
+    ids=["band_idx,band_key", "band"],
+)
+def test_band_pairs_matches_python_mirror(spark, schema, new, hist, want):
+    """The shared band-bucket pair join against a pure-Python mirror, in
+    both key shapes, with and without a history side: every pair once,
+    id_a < id_b, no self-pair for an id that is in both sides."""
+    from pulsar_internal_spark.operators.dedup import band_pairs
+
+    keys = tuple(c.split()[0] for c in schema.split(", ")[1:])
+    new_df = spark.createDataFrame(new, schema)
+    hist_df = spark.createDataFrame(hist, schema)
+    for h_df, h_rows in ((None, ()), (hist_df, hist)):
+        rows = [(r.id_a, r.id_b) for r in band_pairs(new_df, keys, h_df).collect()]
+        assert len(rows) == len(set(rows)), rows
+        assert set(rows) == _band_pairs_mirror(new, h_rows)
+        assert all(a < b for a, b in rows)
+    assert set(rows) == want
+
+
 def test_hamming_banded_pairs_caps_mega_bucket(spark):
     """Adversarial mono-hash cluster: 500 identical fingerprints would
     go quadratic (125k pairs); drop_hot_keys with a low cap must excise

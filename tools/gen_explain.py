@@ -106,6 +106,11 @@ def normalize_plan(plan: str) -> str:
     import re
 
     s = plan
+    # A FileScan Location value is cut at the same 100 chars, so a path
+    # that fits prints as "[file:/...]" while a longer one (a store
+    # under a longer TMPDIR) prints as "[file:/...": collapse both forms
+    # to one "[PATH]" first, or the hash follows the temp dir's length.
+    s = re.sub(r"(Location: \w+\([^)]*\))\[[^\]]*?(?:\]|\.\.\.)", r"\1[PATH]", s)
     # FileScan metadata values (DataFilters/PushedFilters/Location...)
     # are HARD-truncated at 100 chars with a trailing "..." — and the
     # cut position shifts with attribute-id WIDTH (ts#8 vs ts#871),

@@ -5,7 +5,9 @@
 # class — an uncited registered query, a stale CORRECTNESS_local.json
 # registry hash, a drifted plan pin, a broken bench contract, a new knob,
 # staging that no longer picks its level from the checkpoint directory,
-# a spread() that no longer sizes its target from the input's rows).
+# a spread() that no longer sizes its target from the input's rows, a
+# pair join that stops reading spark.pulsar.pairs.partitions, a plan
+# normalizer whose hash follows the temp dir's length).
 #
 # Usage: sh tools/smoke_meta.sh      (~60 s, one local Spark session)
 set -e
@@ -20,5 +22,8 @@ exec python -m pytest -q \
   tests/test_functions_and_io.py::test_spread_keeps_a_small_parquet_frame_whole \
   tests/test_functions_and_io.py::test_spread_sizes_a_large_parquet_frame_from_its_rows \
   tests/test_functions_and_io.py::test_spread_keeps_the_core_count_rule_without_footer_rows \
+  tests/test_operators.py::test_hamming_banded_pairs_explicit_partitions \
+  tests/test_plans.py::test_lsh_blocked_pairs_partitions_knob \
+  tests/test_explain_drift.py::test_normalizer_maps_cut_and_whole_locations_alike \
   tests/test_correctness_artifact.py \
   tests/test_explain_drift.py
