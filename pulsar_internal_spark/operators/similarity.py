@@ -3,9 +3,30 @@
 Driver-mandated extension (SURVEY.md §7 Phase 4): exact, sign-LSH, IVF,
 PQ and IVF+PQ top-k, plus a persisted cell-partitioned IVF index. All
 math is JVM higher-order functions over plan literals or tiny broadcast
-relations — no Python in the loop. Every operator is a composition of
-one private kernel per job, each written once below:
+relations — no Python in the loop.
 
+Every large expression, a plan constant or an unrolled fold, is SQL
+text that ``_parsed`` turns into a Column: one py4j call per (live
+context, text), where the Column API pays several round trips per term.
+``_sql_double``, ``_sql_array`` and ``_sum`` write the text's literals
+and index-order folds. Only the small lambda helpers (``_d2``, ``_dot``,
+``_norm``, ``_cell_structs``) are still built through the Column API.
+Every operator is a composition of one private kernel per job, each
+written once below:
+
+  _parsed          the one builder of large expressions (text -> Column,
+                   memoized per context)
+  centroid_struct_literal  (cell, centroid) array-of-structs literal
+  _projections     sign-LSH plane dots: a transform over the ±1
+                   plane-matrix literal
+  _band_struct_array  exploded (band_idx, band_key) structs over the
+                   staged sign-LSH projections
+  _unrolled_d2     one codebook entry's squared-L2 fold (text)
+  _adc_lut         M-term ADC lookup fold over a row's codes (text: over
+                   the tables column and the codebook-norm literal)
+  _subvectors      posexplode of a vector into its M subvector slices
+  _pq_query_tables per-query ADC tables: the subvector-entry dot fold
+                   (text), two ordered collects
   _d2              squared-L2 fold (aggregate over zip_with, index order)
   _literal_cell    cell argmin: array_min of (d2, cell) structs over the
                    centroid_struct_literal — a narrow map
@@ -13,17 +34,13 @@ one private kernel per job, each written once below:
                    explode
   _relation_probe  nearest cells over a (row x centroid) relation: one
                    row_number window over (dist2, cell)
-  _adc_lut         M-term ADC lookup fold over a row's codes
   _adc_topk        ADC score -> per-query shortlist -> exact re-rank
   _scored          self-match filter + (query_id, neighbor_id, score)
   _cos_sim         rounded exact cosine over precomputed norms
   _cosine_topk     per-query top-k window over (cos_sim desc, neighbor_id)
   _side            (query_id, qv[, qn]) / (neighbor_id, cv[, cn]) side
                    projections (``_Q`` / ``_C``)
-  _subvectors      posexplode of a vector into its M subvectors
   _train_cells     sampled-KMeans coarse-quantizer training
-  _band_struct_array  memoized exploded (band_idx, band_key) structs over
-                   the staged sign-LSH projections
   band_pairs       (dedup.py) the band-bucket pair join, id_a < id_b,
                    shared with MinHash and both signature-store forms
   _pair_stage      (dedup.py) the one read of
@@ -44,15 +61,18 @@ the literal and relation probes pick the same cells.
                      broadcast of the query tables)
   ivfpq_fixed_topk   pq_encode, _literal_cell, _literal_probe,
                      _pq_query_tables, _adc_topk (ADC join keyed by cell)
-  lsh_bucketed_topk  _band_struct_array sides, _scored, _cosine_topk
-  embedding_banded_signatures  _band_struct_array (the store's schema)
+  lsh_bucketed_topk  _projections, _band_struct_array sides, _scored,
+                     _cosine_topk
+  embedding_banded_signatures  _projections, _band_struct_array (the
+                     store's schema)
   lsh_blocked_pairs  embedding_banded_signatures, _pair_stage, band_pairs
   build_ivf_index    _train_cells, pq_encode (PQ-carrying index)
   ivf_index_append   _literal_cell, pq_encode
   ivf_index_topk     _relation_probe, _scored, _cosine_topk
   ivf_index_adc_topk _relation_probe, _pq_query_tables, _adc_topk
-  pq_encode          _subvectors, _unrolled_d2
-  pq_residuals       _subvectors, _unrolled_d2
+  pq_encode          _subvectors, _unrolled_d2 (d2, code) entries
+  pq_residuals       _subvectors, _unrolled_d2 plus the entry's dot and
+                     norm folds and the per-subspace sums
 
 The exact tails score (query, neighbor) pairs excluding self-matches,
 round cosine to 6 places, and rank by (cos_sim desc, neighbor_id asc);
@@ -63,6 +83,9 @@ ranked, never the reported similarity.
 
 from __future__ import annotations
 
+import functools
+
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -70,6 +93,64 @@ from pyspark.sql.window import Window
 from . import store_fs
 from .dedup import _pair_stage, band_pairs
 from ..sources.tables import collect_parquet, read_parquet, spread
+
+
+# -- the one way to build a large expression: SQL text, parsed once -------
+
+
+def _parsed(text: str):
+    """The Column of one SQL expression text, parsed JVM-side in ONE
+    py4j call and memoized per (live context, text).
+
+    Every plan constant (plane matrix, centroid structs, codebook-norm
+    matrix) and every unrolled fold below is built as text and comes
+    through here. The Column-API form of the same fold costs several
+    py4j round trips per term: at sf0.001 a warm pq_adc_topk build sent
+    10,445 calls that way, most of them in the per-entry d2 folds, and
+    sends 1,370 as text. The parsed tree is the Column-built one node
+    for node, so plans and results do not move, provided the text keeps
+    four rules:
+
+    - doubles carry a ``D`` suffix (_sql_double): a bare ``0.0`` parses
+      as DECIMAL;
+    - structs that replace F.struct of aliased Columns are
+      ``struct(<e> AS name, ...)``, not ``named_struct``;
+    - lambda variables are named like ``x_0``, the form pyspark gives
+      its own and the plan normalizer maps to one token;
+    - folds keep the index order (_sum), which the DuckDB twins replay.
+
+    A Column wraps a py4j handle into its context's JVM, so a cached one
+    outliving a stop()/recreate cycle would fail opaquely on next use.
+    The memo is keyed on the SparkContext OBJECT: a recreated context is
+    a new object and rebuilds its Columns, the cache's own reference
+    keeps a key's identity from being reused, and a lookup makes no
+    py4j call."""
+    return _parsed_for(SparkContext._active_spark_context, text)
+
+
+@functools.lru_cache(maxsize=128)
+def _parsed_for(sc, text: str):
+    return F.expr(text)
+
+
+def _sql_double(x) -> str:
+    """A SQL double literal that parses back to EXACTLY this float:
+    repr() is the shortest string that round-trips through correctly
+    rounded decimal->binary conversion, and the JVM's parseDouble is
+    correctly rounded — so the parsed Literal is bit-identical to the
+    F.lit(float) it replaces."""
+    return f"{float(x)!r}D"
+
+
+def _sql_array(xs) -> str:
+    return "array(" + ",".join(_sql_double(x) for x in xs) + ")"
+
+
+def _sum(terms) -> str:
+    """``(0.0 + t0 + t1 + ...)``: SQL ``+`` is left-associative, so this
+    is the index-order fold ``aggregate`` runs and the DuckDB twins
+    replay."""
+    return "(" + " + ".join(["0.0D", *terms]) + ")"
 
 
 def _dot(a, b):
@@ -187,12 +268,11 @@ def _cosine_topk(scored: DataFrame, k: int) -> DataFrame:
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
-def _adc_lut(tabs, m: int):
+def _adc_lut(tabs: str, m: int) -> str:
     # unrolled M-term fold of tabs[j][codes[j]] in j order (= aggregate's)
-    s = F.lit(0.0)
-    for j in range(m):
-        s = s + F.element_at(F.element_at(tabs, j + 1), F.col("codes").getItem(j) + 1)
-    return s
+    return _sum(
+        f"element_at(element_at({tabs}, {j + 1}), codes[{j}] + 1)" for j in range(m)
+    )
 
 
 def _adc_topk(
@@ -211,11 +291,15 @@ def _adc_topk(
     onto ``vectors`` (neighbor_id, cv, cn) to fetch TRUE vectors for the
     survivors only and joins ``qvec`` (_Q) for the exact re-rank."""
     m = len(codebooks)
-    norms_lit = norms_matrix_literal(codebooks)
-    score = _adc_lut(F.col("tables"), m) / F.sqrt(
-        F.greatest(_adc_lut(norms_lit, m), F.lit(1e-12))
+    # the M x KSUB codebook-entry squared norms, a plan literal
+    norms = "array(" + ",".join(
+        _sql_array(sum(x * x for x in ctr) for ctr in book) for book in codebooks
+    ) + ")"
+    score = _parsed(
+        f"{_adc_lut('tables', m)} / sqrt(greatest({_adc_lut(norms, m)}, 1e-12D))"
+        " AS score"
     )
-    adc = _scored(pairs, score.alias("score"), nid)
+    adc = _scored(pairs, score, nid)
     ws = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
     short = (
         adc.withColumn("rn", F.row_number().over(ws))
@@ -233,11 +317,9 @@ def _adc_topk(
 def _subvectors(df: DataFrame, id_col: str, out_id: str, vec_col: str, m: int, dsub: int):
     """(out_id, j, sv): each vector posexploded into its ``m``
     contiguous ``dsub``-dim subvectors."""
+    slices = ",".join(f"slice({vec_col}, {j * dsub + 1}, {dsub})" for j in range(m))
     return df.select(
-        F.col(id_col).alias(out_id),
-        F.posexplode(
-            F.array(*[F.slice(F.col(vec_col), j * dsub + 1, dsub) for j in range(m)])
-        ).alias("j", "sv"),
+        F.col(id_col).alias(out_id), _parsed(f"posexplode(array({slices})) AS (j, sv)")
     )
 
 
@@ -314,122 +396,32 @@ def _plane_weights(p: int, dim: int) -> list[float]:
     ]
 
 
-import functools
-
-
-def _context_key() -> str | None:
-    """Cache key component tying memoized Column expressions to the
-    LIVE SparkContext: a Column wraps a py4j handle into the context's
-    JVM, so a cached one outliving a stop()/recreate cycle would fail
-    opaquely on next use. Nothing in this repo bounces sessions
-    in-process, but a long-lived driver might — keying on the context's
-    applicationId (unique per context lifetime, unlike id() which can
-    be reused after GC) makes a recreated context rebuild its literals
-    instead."""
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    return sc.applicationId if sc is not None else None
-
-
-@functools.lru_cache(maxsize=16)
-def _plane_matrix_for(ctx_key, num_planes: int, dim: int):
-    # ONE py4j call: a SQL array-of-arrays literal parsed JVM-side.
-    # The former F.lit(list-of-lists) expanded into num_planes*dim
-    # element-wise py4j round trips — measured 24.6 s of pure
-    # Python-side plan build for the 96x64 wide-tier matrix on this
-    # box (round 11), landing on whichever query first used each
-    # geometry per session. ConstantFolding collapses the parsed
-    # CreateArray tree into the SAME single Literal the F.lit form
-    # produced (verified plan-identical modulo expression ids), so
-    # execution and results are unchanged; weights are exactly ±1.0,
-    # so the %r rendering is exact.
-    rows = (
-        "array(" + ",".join(f"{x!r}D" for x in _plane_weights(p, dim)) + ")"
-        for p in range(num_planes)
-    )
-    return F.expr("array(" + ",".join(rows) + ")")
-
-
-def _sql_double(x) -> str:
-    """A SQL double literal that parses back to EXACTLY this float:
-    repr() is the shortest string that round-trips through correctly
-    rounded decimal->binary conversion, and the JVM's parseDouble is
-    correctly rounded — so the parsed Literal is bit-identical to the
-    F.lit(float) it replaces."""
-    return f"{float(x)!r}D"
-
-
-@functools.lru_cache(maxsize=32)
-def _centroid_struct_literal_for(ctx_key, cents_key):
-    body = ",".join(
-        f"named_struct('cell',{i},'centroid',array("
-        + ",".join(_sql_double(x) for x in ctr)
-        + "))"
-        for i, ctr in enumerate(cents_key)
-    )
-    return F.expr(f"array({body})")
-
-
 def centroid_struct_literal(centroids):
-    """The (cell, centroid) array-of-structs plan literal, built by ONE
-    JVM-parsed expression and memoized per (context, values). The
-    per-element F.lit form cost ~1.4 s of py4j round trips per QUERY
-    INVOCATION at 8 cells x 64 dims (round 11) — pure driver-side plan
-    build, re-paid on every call because nothing memoized it. Same
-    folded Literal, same execution (see _plane_matrix_for)."""
-    return _centroid_struct_literal_for(
-        _context_key(), tuple(tuple(float(x) for x in c) for c in centroids)
+    """The (cell, centroid) array-of-structs plan literal. The per-element
+    F.lit form cost ~1.4 s of py4j round trips per QUERY INVOCATION at
+    8 cells x 64 dims (round 11); as parsed text it is one call, and
+    Catalyst constant-folds it into the same single Literal."""
+    return _parsed(
+        "array("
+        + ",".join(
+            f"named_struct('cell',{i},'centroid',{_sql_array(ctr)})"
+            for i, ctr in enumerate(centroids)
+        )
+        + ")"
     )
 
 
-@functools.lru_cache(maxsize=32)
-def _norms_matrix_literal_for(ctx_key, norms_key):
-    body = ",".join(
-        "array(" + ",".join(_sql_double(x) for x in row) + ")"
-        for row in norms_key
-    )
-    return F.expr(f"array({body})")
-
-
-def norms_matrix_literal(codebooks):
-    """The M x KSUB codebook-entry squared-norm matrix as one
-    JVM-parsed literal, memoized per (context, values) — the ADC
-    denominator table every PQ serving call folds over. Norms are
-    computed driver-side in the same index order as before; only the
-    literal's CONSTRUCTION changed (one parse instead of M x KSUB
-    py4j round trips)."""
-    return _norms_matrix_literal_for(
-        _context_key(),
-        tuple(
-            tuple(float(sum(x * x for x in ctr)) for ctr in book)
-            for book in codebooks
-        ),
-    )
-
-
-def _plane_matrix(num_planes: int, dim: int):
-    """All plane weights as ONE 2-D array literal, MEMOIZED per
-    (context, planes, dim) AND built by a single JVM-parsed expression
-    (see _plane_matrix_for — the per-element F.lit form cost ~25 s of
-    py4j round trips at 96x64). Column objects are unresolved
-    expressions, safely reusable across DataFrames within one
-    SparkContext, so the cache pays the construction once per context
-    (see _context_key). Catalyst constant-folds the tree into a single
-    Literal; execution is identical."""
-    return _plane_matrix_for(_context_key(), num_planes, dim)
-
-
-def _projections(vec_col, weights_2d):
-    """dot(v, plane) per plane via one transform over the folded weight
-    matrix (JVM higher-order functions, no UDF)."""
-    return F.transform(
-        weights_2d,
-        lambda w: F.aggregate(
-            F.zip_with(vec_col, w, lambda x, wx: x.cast("double") * wx),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
+def _projections(num_planes: int, dim: int):
+    """dot(_v, plane) per plane via one transform over the ±1 weight
+    matrix literal (JVM higher-order functions, no UDF). The matrix was
+    once F.lit(list-of-lists): num_planes*dim element-wise py4j round
+    trips, 24.6 s of plan build for the 96x64 wide-tier matrix (round
+    11). Catalyst folds the parsed array tree into the same single
+    Literal; weights are exactly ±1.0, so the text is exact."""
+    planes = ",".join(_sql_array(_plane_weights(p, dim)) for p in range(num_planes))
+    return _parsed(
+        f"transform(array({planes}), x_0 -> aggregate(zip_with(_v, x_0,"
+        " (x_1, y_1) -> CAST(x_1 AS DOUBLE) * y_1), 0.0D, (x_2, y_2) -> x_2 + y_2))"
     )
 
 
@@ -452,12 +444,10 @@ def embedding_banded_signatures(
     retention from the same tested machinery as MinHash dedup.
 
     All projections staged once (single folded weight-matrix literal,
-    see _plane_matrix), then sliced per band — the signature pipeline
+    see _projections), then sliced per band — the signature pipeline
     is evaluated once per row, and Spark's exchange reuse computes it
     once for both sides of a self-join."""
-    projs = _projections(
-        F.col("_v"), _plane_matrix(num_bands * planes_per_band, dim)
-    )
+    projs = _projections(num_bands * planes_per_band, dim)
     staged = (
         spread(df)
         .select(F.col(id_col).alias("id"), F.col(vec_col).alias("_v"))
@@ -604,14 +594,12 @@ def _books_frame(spark, codebooks: list[list[list[float]]]) -> DataFrame:
     return spark.createDataFrame(rows, "j INT, _book ARRAY<ARRAY<DOUBLE>>")
 
 
-def _unrolled_d2(sv, ctr, dsub: int):
-    """(0.0 + d1*d1) + d2*d2 + ... over sv/ctr item pairs — aggregate's
-    fold order, so the DuckDB oracle twins stay bit-identical."""
-    s = F.lit(0.0)
-    for t in range(dsub):
-        d = sv.getItem(t).cast("double") - F.element_at(ctr, t + 1)
-        s = s + d * d
-    return s
+def _unrolled_d2(ctr: str, dsub: int) -> str:
+    """(0.0 + d1*d1) + d2*d2 + ... over the items of the ``sv`` column
+    and the entry ``ctr`` (SQL text) — aggregate's fold order, so the
+    DuckDB oracle twins stay bit-identical."""
+    d = [f"(CAST(sv[{t}] AS DOUBLE) - element_at({ctr}, {t + 1}))" for t in range(dsub)]
+    return _sum(f"{x} * {x}" for x in d)
 
 
 def _book_rows(df: DataFrame, codebooks, vec_col: str, id_col: str) -> DataFrame:
@@ -669,19 +657,12 @@ def pq_encode(
     ``id_col`` must be a unique row key — codes are computed at
     (id, subspace) grain and joined back onto ``df``."""
     dsub, ksub = len(codebooks[0][0]), len(codebooks[0])
-
-    sub = _book_rows(df, codebooks, vec_col, id_col)
-    entries = [
-        F.struct(
-            _unrolled_d2(
-                F.col("sv"), F.element_at(F.col("_book"), c + 1), dsub
-            ).alias("d2"),
-            F.lit(c).alias("code"),
-        )
+    entries = ",".join(
+        f"struct({_unrolled_d2(f'element_at(_book, {c + 1})', dsub)} AS d2, {c} AS code)"
         for c in range(ksub)
-    ]
-    best = sub.select(
-        "_pq_id", "j", F.array_min(F.array(*entries))["code"].alias("code")
+    )
+    best = _book_rows(df, codebooks, vec_col, id_col).select(
+        "_pq_id", "j", _parsed(f"array_min(array({entries}))['code'] AS code")
     )
     codes = best.groupBy("_pq_id").agg(
         F.transform(
@@ -707,11 +688,9 @@ def _pq_query_tables(
     m, dsub = len(codebooks), len(codebooks[0][0])
     cb = _codebook_frame(queries.sparkSession, codebooks)
     qsub = _subvectors(queries, id_col, out_id, vec_col, m, dsub)
-    dp = F.lit(0.0)
-    for t in range(dsub):
-        dp = dp + F.col("sv").getItem(t).cast("double") * F.col("ctr").getItem(t)
+    dp = _sum(f"CAST(sv[{t}] AS DOUBLE) * ctr[{t}]" for t in range(dsub))
     qdot = qsub.join(F.broadcast(cb), "j").select(
-        out_id, "j", F.struct(F.col("c"), dp.alias("dp")).alias("s")
+        out_id, "j", _parsed(f"struct(c, {dp} AS dp) AS s")
     )
     qtabj = qdot.groupBy(out_id, "j").agg(
         F.transform(F.array_sort(F.collect_list("s")), lambda x: x["dp"]).alias("tj")
@@ -824,38 +803,18 @@ def ivfpq_fixed_topk(
     )
 
 
-def _band_structs(projs_col, planes_per_band: int, num_bands: int):
-    """(band_idx, band_key) structs from a staged projection array —
-    band b's key is the sign-bit string of planes
-    [b*planes_per_band, (b+1)*planes_per_band)."""
-    return [
-        F.struct(
-            F.lit(b).alias("band_idx"),
-            F.array_join(
-                F.transform(
-                    F.slice(projs_col, b * planes_per_band + 1, planes_per_band),
-                    lambda p: F.when(p >= 0, F.lit("1")).otherwise(F.lit("0")),
-                ),
-                "",
-            ).alias("band_key"),
-        )
-        for b in range(num_bands)
-    ]
-
-
-@functools.lru_cache(maxsize=16)
-def _band_struct_array_for(ctx_key, planes_per_band: int, num_bands: int):
-    return F.explode(
-        F.array(*_band_structs(F.col("_projs"), planes_per_band, num_bands))
-    )
-
-
 def _band_struct_array(planes_per_band: int, num_bands: int):
-    """Memoized exploded-band expression over the staged ``_projs``
-    column — same plan-build-cost and context-keying rationale as
-    _plane_matrix (the per-band slice/transform lambdas cost ~0.3 s of
-    py4j round-trips per call otherwise)."""
-    return _band_struct_array_for(_context_key(), planes_per_band, num_bands)
+    """Exploded (band_idx, band_key) structs over the staged ``_projs``
+    column: band b's key is the sign-bit string of planes
+    [b*planes_per_band, (b+1)*planes_per_band). As Column lambdas the
+    per-band slice/transform cost ~0.3 s of py4j round trips per call."""
+    bands = ",".join(
+        f"struct({b} AS band_idx, array_join(transform(slice(_projs,"
+        f" {b * planes_per_band + 1}, {planes_per_band}),"
+        " x_0 -> CASE WHEN x_0 >= 0 THEN '1' ELSE '0' END), '') AS band_key)"
+        for b in range(num_bands)
+    )
+    return _parsed(f"explode(array({bands}))")
 
 
 def lsh_bucketed_topk(
@@ -887,8 +846,7 @@ def lsh_bucketed_topk(
     the query side is broadcast, so the corpus never shuffles; the
     cross-band duplicate candidates collapse with one distinct at
     (query, neighbor) grain BEFORE the ranking window."""
-    n_planes = num_bands * planes_per_band
-    projs = _projections(F.col("_v"), _plane_matrix(n_planes, dim))
+    projs = _projections(num_bands * planes_per_band, dim)
 
     def sided(df, idn, vecn, normn):
         staged = df.select(
@@ -1309,32 +1267,25 @@ def pq_residuals(
     """
     m, dsub, ksub = len(codebooks), len(codebooks[0][0]), len(codebooks[0])
 
-    sv2 = F.lit(0.0)
-    for t in range(dsub):
-        sv_t = F.col("sv").getItem(t).cast("double")
-        sv2 = sv2 + sv_t * sv_t
-    sub = _book_rows(df, codebooks, vec_col, id_col).withColumn("_sv2", sv2)
+    sv = [f"CAST(sv[{t}] AS DOUBLE)" for t in range(dsub)]
+    sv2 = _sum(f"{x} * {x}" for x in sv)
+    sub = _book_rows(df, codebooks, vec_col, id_col).withColumn("_sv2", _parsed(sv2))
 
-    def entry(c: int):
-        ctr = F.element_at(F.col("_book"), c + 1)
-        dp = F.lit(0.0)
-        n2 = F.lit(0.0)
-        for t in range(dsub):
-            sv_t = F.col("sv").getItem(t).cast("double")
-            ctr_t = F.element_at(ctr, t + 1)
-            dp = dp + sv_t * ctr_t
-            n2 = n2 + ctr_t * ctr_t
-        return F.struct(
-            _unrolled_d2(F.col("sv"), ctr, dsub).alias("d2"),
-            F.lit(c).alias("code"),
-            dp.alias("dp"),
-            n2.alias("n2"),
+    def entry(c: int) -> str:
+        ctr = f"element_at(_book, {c + 1})"
+        ctr_t = [f"element_at({ctr}, {t + 1})" for t in range(dsub)]
+        dp = _sum(f"{x} * {y}" for x, y in zip(sv, ctr_t))
+        n2 = _sum(f"{y} * {y}" for y in ctr_t)
+        return (
+            f"struct({_unrolled_d2(ctr, dsub)} AS d2, {c} AS code, {dp} AS dp,"
+            f" {n2} AS n2)"
         )
 
+    entries = ",".join(entry(c) for c in range(ksub))
     best = sub.select(
         "_pq_id",
         "j",
-        F.array_min(F.array(*[entry(c) for c in range(ksub)])).alias("s"),
+        _parsed(f"array_min(array({entries})) AS s"),
         F.col("_sv2").alias("sv2"),
     )
     terms = best.groupBy("_pq_id").agg(
@@ -1342,24 +1293,15 @@ def pq_residuals(
             F.collect_list(F.struct("j", "s.dp", "s.n2", "sv2"))
         ).alias("ts")
     )
-    dot_v = F.lit(0.0)
-    n2_r = F.lit(0.0)
-    n2_v = F.lit(0.0)
-    for j in range(m):
-        dot_v = dot_v + F.col("ts").getItem(j)["dp"]
-        n2_r = n2_r + F.col("ts").getItem(j)["n2"]
-        n2_v = n2_v + F.col("ts").getItem(j)["sv2"]
+    dot_v, n2_r, n2_v = (
+        _sum(f"ts[{j}]['{f}']" for j in range(m)) for f in ("dp", "n2", "sv2")
+    )
     res = terms.select(
         "_pq_id",
-        F.floor(
-            (
-                F.lit(1.0)
-                - dot_v / F.sqrt(F.greatest(n2_v * n2_r, F.lit(1e-12)))
-            )
-            * F.lit(1e6)
-        )
-        .cast("long")
-        .alias(out_col),
+        _parsed(
+            f"CAST(FLOOR((1.0D - {dot_v} / sqrt(greatest({n2_v} * {n2_r}, 1e-12D)))"
+            f" * 1000000.0D) AS BIGINT) AS {out_col}"
+        ),
     )
     return df.join(res, F.col(id_col) == F.col("_pq_id")).drop("_pq_id")
 

@@ -28,9 +28,12 @@ def get_spark(
 
     ``master``/``shuffle_partitions`` default from env (SPARK_GRAFT_CPUS)
     so the same code runs under the driver harness and on a cluster where
-    ``master`` is supplied by spark-submit.
+    ``master`` is supplied by spark-submit. With SPARK_GRAFT_CPUS unset
+    the core count is the CPUs this process may run on (the rule
+    perfbench/run.py uses), so a tool run without it does not run
+    32-task stages on a 4-vCPU host.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

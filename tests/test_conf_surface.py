@@ -86,3 +86,41 @@ def test_no_tool_turns_the_spark_ui_on():
         if rule.search(text)
     ]
     assert not hits, hits
+
+
+def test_unset_core_count_defaults_to_the_host(monkeypatch):
+    """With SPARK_GRAFT_CPUS unset, get_spark sizes local mode to the
+    CPUs this process may run on. The builder is a stand-in that records
+    its settings, so no second session starts."""
+    from pulsar_internal_spark import session
+
+    class Builder:
+        conf: dict = {}
+
+        def appName(self, _):
+            return self
+
+        def master(self, m):
+            self.conf["master"] = m
+            return self
+
+        def config(self, k, v):
+            self.conf[k] = v
+            return self
+
+        def getOrCreate(self):
+            return self.conf
+
+    class FakeSession:
+        builder = Builder()
+
+    monkeypatch.setattr(session, "SparkSession", FakeSession)
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    # get_spark exports the package on PYTHONPATH; undo that afterwards
+    monkeypatch.setenv("PYTHONPATH", os.environ.get("PYTHONPATH", ""))
+    conf = session.get_spark()
+    host = len(os.sched_getaffinity(0))
+    assert conf["master"] == f"local[{host}]"
+    assert conf["spark.sql.shuffle.partitions"] == str(max(host, 32))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert session.get_spark()["master"] == "local[3]"

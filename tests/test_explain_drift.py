@@ -31,7 +31,7 @@ import os
 
 import pytest
 
-from tools.gen_explain import HEADLINERS, SF_DIR, normalize_plan, plan_hash
+from tools.gen_explain import HEADLINERS, SF_DIR, mask_plan, normalize_plan, plan_hash
 
 from pulsar_internal_spark.plans.queries import QUERIES
 
@@ -127,6 +127,46 @@ def test_normalizer_maps_cut_and_whole_locations_alike():
         assert normalize_plan(cut) == normalize_plan(whole)
     # ... while what follows the Location still enters the hash
     assert normalize_plan(_store_scan("/tmp", 1)) != normalize_plan(whole)
+
+
+def _final_plan(ids: int, store: str) -> str:
+    """A final AQE plan as Spark prints it, its run-variant numbers
+    offset by ``ids`` and its demo store named ``store``."""
+    return "\n".join([
+        "AdaptiveSparkPlan isFinalPlan=true",
+        "+- == Final Plan ==",
+        f"   *({3 + ids}) Project [doc_id#{12 + ids}L, transform(v#{13 + ids}, "
+        f"lambdafunction((lambda x_{40 + ids}#{41 + ids} * 2.0), "
+        f"lambda x_{40 + ids}#{41 + ids}, false)) AS w#{20 + ids}]",
+        f"   +- *({3 + ids}) BroadcastHashJoin [doc_id#{12 + ids}L], "
+        f"[id#{30 + ids}L], Inner, BuildRight, false",
+        f"      :- ShuffleQueryStage {7 + ids}",
+        f"      :  +- Exchange hashpartitioning(doc_id#{12 + ids}L, 8), "
+        f"ENSURE_REQUIREMENTS, [plan_id={51 + ids}]",
+        f"      :     +- Scan ExistingRDD[doc_id#{12 + ids}L,v#{13 + ids}]"
+        f" MapPartitionsRDD[{90 + ids}]",
+        f"      +- BroadcastQueryStage {8 + ids}",
+        f"         +- FileScan parquet [id#{30 + ids}L] Location: "
+        f"InMemoryFileIndex(1 paths)[file:/tmp/{store}/gen-00000000]",
+    ])
+
+
+def test_mask_plan_hides_run_numbers_and_keeps_the_shape():
+    # the same plan from two runs (other ids, another demo store) masks
+    # to the same section, line for line ...
+    a = _final_plan(0, "pulsar_demo_stores_yu6p8nsx/sigstore_91ed241e8720")
+    b = _final_plan(700, "pulsar_demo_stores_fszg_i_p/sigstore_411333f5cbc3")
+    assert a != b
+    assert mask_plan(a) == mask_plan(b)
+    assert mask_plan(a).count("\n") == a.count("\n")
+    masked = mask_plan(a)
+    for token in ("*(N) Project", "doc_id#NL", "lambda x_N#N", "ShuffleQueryStage N",
+                  "BroadcastQueryStage N", "[plan_id=N]", "MapPartitionsRDD[N]",
+                  "pulsar_demo_stores_XXXXXXXX/sigstore_XXXXXXXXXXXX"):
+        assert token in masked, token
+    # ... while a node that moved still shows
+    moved = a.replace("BuildRight", "BuildLeft")
+    assert mask_plan(moved) != masked
 
 
 @pytest.mark.parametrize("name", [n for n, _ in HEADLINERS])

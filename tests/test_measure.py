@@ -8,16 +8,21 @@ import os
 import subprocess
 import sys
 
+import pytest
+
 from perfbench.ledger import COUNTERS
+from pulsar_internal_spark.plans.queries import QUERIES
+from pulsar_internal_spark.staging import release_staged
 from tests.conftest import SF_DIR
+from tools.measure import py4j_calls
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_ab_bench_reports_wall_and_ledger(tmp_path):
     """Two passes of one iterative query: exit 0, exactly one JSON line
-    on stdout, both wall samples, every ledger counter, and at least
-    one job per components round."""
+    on stdout, both wall samples, every ledger counter, the build's
+    py4j call count, and at least one job per components round."""
     out = subprocess.run(
         [
             sys.executable,
@@ -39,8 +44,25 @@ def test_ab_bench_reports_wall_and_ledger(tmp_path):
     ]
     assert len(cell["secs_all"]) == 2
     assert set(COUNTERS) <= set(cell)
+    # building the plan and submitting its staging jobs talks to the JVM
+    assert isinstance(cell["build_py4j_calls"], int)
+    assert cell["build_py4j_calls"] > 0
     # the components loop runs one job per round
     assert cell["jobs"] >= 2
+
+
+@pytest.mark.parametrize("name", ["pq_adc_topk", "pq_residual_drift"])
+def test_ann_warm_build_py4j_budget(spark, name):
+    """A warm build of a frozen-quantizer ANN query sends at most 3,000
+    py4j commands. Its plan literals and unrolled PQ folds are SQL text
+    parsed once per context (operators/similarity._parsed); built from
+    Column-API folds, the same warm builds sent 10,445 and 16,339."""
+    QUERIES[name](spark, SF_DIR)  # cold: fills the parse memo
+    release_staged(spark)
+    with py4j_calls(spark) as calls:
+        QUERIES[name](spark, SF_DIR)
+    release_staged(spark)
+    assert 0 < calls[0] <= 3000, calls[0]
 
 
 def test_plan_diagnose_attributes_shuffle_and_spill(tmp_path):

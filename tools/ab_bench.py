@@ -9,8 +9,8 @@ INSIDE the pass, so a host CPU-steal burst lands on all variants
 equally. Every cell reports its raw walls, min and median wall, the
 build/exec split (the Python call — eager staging jobs, driver
 collects, plan construction — vs the noop materialization of the
-returned frame), build jobs, and the median of each work counter
-(tools/measure.py). Prints ONE JSON line on stdout:
+returned frame), build jobs, build py4j calls, and the median of each
+work counter (tools/measure.py). Prints ONE JSON line on stdout:
 {query: {variant: {sf: cell}}}.
 
 Usage:

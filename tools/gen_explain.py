@@ -145,6 +145,28 @@ def normalize_plan(plan: str) -> str:
     return s
 
 
+def mask_plan(plan: str) -> str:
+    """A final AQE plan as an EXPLAIN.md section shows it: line for line,
+    with the numbers that change from run to run masked — expression ids
+    (`doc_id#12L`), lambda-variable counters (`x_12`), AQE query-stage
+    ids (`ShuffleQueryStage 7`), whole-stage codegen ids (`*(40)`),
+    exchange plan ids, RDD ids and the random names of the demo stores.
+    A regeneration at an unchanged HEAD then rewrites no line, and a
+    re-pin's diff shows only the nodes that moved. Hashes never see
+    this: they come from normalize_plan."""
+    import re
+
+    s = re.sub(r"#\d+", "#N", plan)
+    s = re.sub(r"\b([a-z]{1,2})_\d+#N", r"\1_N#N", s)
+    s = re.sub(r"QueryStage \d+", "QueryStage N", s)
+    s = re.sub(r"\*\(\d+\)", "*(N)", s)
+    s = re.sub(r"plan_id=\d+", "plan_id=N", s)
+    s = re.sub(r"RDD\[\d+\]", "RDD[N]", s)
+    # demo stores: tempfile.mkdtemp's 8-char suffix, a 12-hex uuid per store
+    s = re.sub(r"(pulsar_demo_stores_)\w{8}", r"\1XXXXXXXX", s)
+    return re.sub(r"(store_)[0-9a-f]{12}", r"\1XXXXXXXXXXXX", s)
+
+
 def initial_plan_string(df) -> str:
     """The STATIC physical plan (pre-AQE-execution) — what code changes
     move; runtime-only AQE decisions are deliberately out of scope for
@@ -205,7 +227,7 @@ def main() -> None:
         # sf0.01, and the final plan is the one that shows real AQE
         # decisions (coalesced reads, skew splits, reused exchanges)
         df.collect()
-        plan = df._jdf.queryExecution().executedPlan().toString().rstrip()
+        plan = mask_plan(df._jdf.queryExecution().executedPlan().toString().rstrip())
         # keep the plan readable: truncate pathological single lines
         lines = [
             (line if len(line) <= 400 else line[:397] + "...")

@@ -15,13 +15,21 @@ benchmark number mean the same thing. Counter names are
 - ``shuffle_read_bytes`` / ``shuffle_write_bytes``: exchange bytes;
 - ``spill_bytes``: memory PLUS disk spill (older ``SCALE_*.json``
   artifacts recorded memory spill alone as ``spill_mb``).
+
+Beside the ledger, ``build_py4j_calls`` counts the py4j commands the
+driver sends while the window's ``build()`` runs: plan construction
+plus the eager ``stage()`` jobs' submission, no ledger reads
+(``py4j_calls``). Like the ledger counters it repeats exactly from run
+to run of the same tree.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 import statistics
 import sys
+import threading
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -168,6 +176,32 @@ def settle(spark) -> None:
     _warm_pool(spark)
 
 
+@contextlib.contextmanager
+def py4j_calls(spark):
+    """Count the py4j commands this thread sends inside the block:
+    yields a one-item list whose value is the count so far. Every JVM
+    call of the driver (Column construction, DataFrame methods, job
+    submission) goes through the gateway client's ``send_command``.
+    py4j's finalizer thread sends the releases of garbage-collected
+    proxies through it too, whenever Python's GC runs; those are not
+    counted, or the count would follow GC timing."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    owner = threading.get_ident()
+    n = [0]
+
+    def counted(*args, **kwargs):
+        if threading.get_ident() == owner:
+            n[0] += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counted
+    try:
+        yield n
+    finally:
+        client.send_command = send
+
+
 def sample(spark, build) -> dict:
     """One timed window. ``build()`` returns a DataFrame, which is
     materialized, or does its own writes and returns anything else.
@@ -180,7 +214,8 @@ def sample(spark, build) -> dict:
     ledger = Ledger(spark)
     m0 = ledger.mark()
     t0 = time.perf_counter()
-    df = build()
+    with py4j_calls(spark) as calls:
+        df = build()
     t1 = time.perf_counter()
     m_built = ledger.mark()
     if isinstance(df, DataFrame):
@@ -195,6 +230,7 @@ def sample(spark, build) -> dict:
         "build_s": t1 - t0,
         "exec_s": t2 - t1,
         "build_jobs": m_built[0] - m0[0],
+        "build_py4j_calls": calls[0],
         **{k: work[k] for k in COUNTERS},
         "marks": (m0, m1),
     }
@@ -210,7 +246,7 @@ def summarize(samples: list[dict]) -> dict:
         "secs_min": round(min(secs), 3),
         "secs_median": round(statistics.median(secs), 3),
     }
-    for k in ("build_s", "exec_s", "build_jobs", *COUNTERS):
+    for k in ("build_s", "exec_s", "build_jobs", "build_py4j_calls", *COUNTERS):
         med = statistics.median(s[k] for s in samples)
         out[k] = round(med, 3) if k.endswith("_s") or med % 1 else int(med)
     return out
